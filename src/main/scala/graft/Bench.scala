@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // Host-load stamp: three consecutive rounds (r9 q121/q122, r10
     // q28/q72/q94, r11 ten movers) burned a judge median-of-5 adjudication
     // cycle proving driver-bench drift was ambient host load. Reading
@@ -15,22 +14,7 @@ object Bench {
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val loadBefore = load1()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // native vec_dot/vec_sqnorm expressions (graft.functions.VecExprs)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // 80+ queries in one session accumulate dead broadcasts, shuffle
-      // files and checkpoint blocks that the ContextCleaner only reclaims
-      // after a GC notices them; the default periodic GC (30 min) never
-      // fires inside a bench run, so late queries pay the debris as heap
-      // pressure. One forced GC a minute keeps the session flat.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Fail loudly ONCE on fixture drift before benching into it (see
     // Tables.smokeCheck; r7's re-encoded ts column produced 35 repeated
@@ -68,28 +52,12 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
       only.forall(_.exists(name.contains))
     }
-    // Variance discipline: SPARK_GRAFT_REPEATS=N runs each query N times
-    // and reports the MEDIAN (lower-middle — deterministic for even N) as
-    // the headline number plus the min alongside. A single-shot timing on
-    // a shared host cannot distinguish a 2× regression from a neighbor's
-    // compile job; the median of 5 can. Default stays 1 — the driver's
-    // recorded run is untouched — and the per-query mins map is emitted
-    // only when N > 1 so the one-line JSON stays inside the ~2000-char
-    // window the harness records on full-suite runs.
-    val repeats = sys.env.get("SPARK_GRAFT_REPEATS")
-      .map(_.trim.toInt).filter(_ >= 1).getOrElse(1)
     val results = selected.map { case (name, fn) =>
-      val runs = (1 to repeats).map { _ =>
-        val t0 = System.nanoTime()
-        val err = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
-        } catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n')) }
-        ((System.nanoTime() - t0) / 1e9, err)
-      }
-      val ok = runs.collect { case (t, None) => t }.sorted
-      val median = if (ok.nonEmpty) ok((ok.size - 1) / 2) else runs.head._1
-      val min = if (ok.nonEmpty) ok.head else runs.head._1
-      (name, median, min, runs.collectFirst { case (_, Some(e)) => e })
+      val t0 = System.nanoTime()
+      val err = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
+      } catch { case e: Throwable => Some(e.toString.takeWhile(_ != '\n')) }
+      (name, (System.nanoTime() - t0) / 1e9, err)
     }
     // ms precision, Locale.ROOT: a wall-clock timing carries no more than
     // 3 digits, and 9-digit doubles pushed the line past the ~2000-char
@@ -104,7 +72,7 @@ object Bench {
     val prefixes = results.map(_._1.takeWhile(_ != '_'))
     require(prefixes.distinct.size == prefixes.size,
       s"duplicate qNN prefixes: ${prefixes.diff(prefixes.distinct).mkString(",")}")
-    val qs = results.map { case (k, v, _, _) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
+    val qs = results.map { case (k, v, _) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // A failed query must surface as a failure, not as a fast timing line —
     // but bounded: r7's 35 full exception strings blew the ~2000-char
@@ -113,18 +81,12 @@ object Bench {
     // Truncate each message to 80 chars, emit at most 8 entries, and fold
     // the overflow into a single "_more" count so a systemic failure reads
     // as one line instead of eating the JSON.
-    val failed = results.collect { case (k, _, _, Some(e)) => (k, e.take(80)) }
+    val failed = results.collect { case (k, _, Some(e)) => (k, e.take(80)) }
     val errs = (failed.take(8).map { case (k, e) =>
       "\"" + k + "\":\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     } ++ (if (failed.size > 8) Seq(s""""_more":${failed.size - 8}""") else Nil))
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, None) => v }.sum
-    val minsJson = if (repeats > 1) {
-      val ms = results.map { case (k, _, mn, _) =>
-        "\"" + k.takeWhile(_ != '_') + "\":" + fmt(mn)
-      }.mkString("{", ",", "}")
-      s""","mins":$ms""" // repeats itself now rides the always-on load stamp
-    } else ""
+    val total = results.collect { case (_, v, None) => v }.sum
     // Record the active filter: a filtered run saved as BENCH_rNN.json must
     // be distinguishable from a full-suite run. Escaped like the errors
     // map — a stray quote in the env var must not corrupt the one JSON
@@ -132,14 +94,12 @@ object Bench {
     def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val onlyJson = only.map(o => s""","only":"${esc(o.mkString(","))}"""").getOrElse("")
     // The stamp rides BOTH emitted lines (compact + detail) so whichever
-    // artifact a reader holds self-adjudicates; repeats is always present
-    // (1 = the driver's single-shot convention) so a median-of-N record
-    // is distinguishable without consulting the mins map.
+    // artifact a reader holds self-adjudicates.
     val loadAfter = load1()
     val loadJson =
-      s""","load1_before":${fmt(loadBefore)},"load1_after":${fmt(loadAfter)},"repeats":$repeats"""
+      s""","load1_before":${fmt(loadBefore)},"load1_after":${fmt(loadAfter)}"""
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs$onlyJson$minsJson$loadJson,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs$onlyJson$loadJson,"sf":"${esc(sfDir)}"}"""
     // The full line (233 timings ≈ 3.4k chars) overflows the ~2000-char
     // stdout tail window the harness records — BENCH_r07 and r08 both came
     // back "parsed": null despite clean runs. Persist the full map to a

@@ -3,23 +3,27 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
-/** Scratch directories for operators that stage data on disk (bucketed
-  * layouts, roundtrip sinks, edge-list materialization). Every directory is
-  * registered for recursive deletion at JVM exit, so repeated bench/verify
-  * rounds in one process — or many processes on a shared machine — don't
-  * accumulate full table copies in /tmp. (A cluster deployment would point
-  * this at a job-scoped staging prefix and let the platform's TTL policy
-  * reap it; the lifecycle contract — scratch data dies with the job — is
-  * the same.)
+import org.apache.spark.sql.DataFrame
+
+/** Scratch staging for operators that persist intermediates on disk. The
+  * staging decision lives here, once: parquet, written with mode
+  * `overwrite` into a fresh temp directory that is registered for
+  * recursive deletion at JVM exit, so repeated bench/verify rounds in one
+  * process — or many processes on a shared machine — don't accumulate full
+  * table copies in /tmp. (A cluster deployment would point this at a
+  * job-scoped staging prefix and let the platform's TTL policy reap it; the
+  * lifecycle contract — scratch data dies with the job — is the same.)
   *
-  * == The per-JVM staging-memo contract (shared by every *Cache map) ==
-  * Several operator modules memoize a staged artifact per INPUT DIR for
-  * the JVM's lifetime (Graph.lpaCache/lpaEdgeCache/lpacEdpCache/triCache/
-  * hbCache, Similarity.knnGraphCache/kcenterCache, Dedup's pair/CC
-  * stagings, …): the first query touching a family pays the build, every
-  * later query reads the parquet leaf. Two assumptions make that sound,
-  * and they are the CONTRACT, stated here once rather than per cache:
+  *  - [[write]] / [[stage]]: write a frame once to a fresh dir and return
+  *    the dir / read it back (a lineage cut: every later reference is a
+  *    parquet leaf scan, not a re-execution of the plan).
+  *  - [[PerDir]]: a per-INPUT-DIR memo of a staged artifact for the JVM's
+  *    lifetime — one instance per artifact family. The first query touching
+  *    a family pays the build, every later query reads the parquet leaf.
+  *  - [[dir]] / [[drop]]: the raw dirs, for layouts that are themselves the
+  *    operator (bucketing, partitioning, streaming checkpoints, subdirs).
   *
+  * == The per-JVM staging-memo contract ([[PerDir]]) ==
   *  1. '''Fixture data is immutable per JVM.''' The driver's testdata
   *     dirs are generated once and read-only; regenerating data at the
   *     same path mid-session would serve stale artifacts. A dev loop that
@@ -30,8 +34,8 @@ import scala.collection.mutable
   *     sequence no harness run performs.
   *  2. '''Input-dir cardinality is tiny.''' Keys are the 3–4 sf dirs, so
   *     the unbounded-map growth mode is bounded by the harness's world.
-  *     A long-lived service would swap these maps for a TTL'd cache keyed
-  *     on a snapshot/version id — the memo call sites are the seam.
+  *     A long-lived service would swap [[PerDir]] for a TTL'd cache keyed
+  *     on a snapshot/version id — this class is the seam.
   */
 object Scratch {
   private val created = mutable.ArrayBuffer.empty[Path]
@@ -69,4 +73,34 @@ object Scratch {
     * second delete is a no-op).
     */
   def drop(dir: String): Unit = deleteRecursively(Paths.get(dir))
+
+  /** Write `df` once to a fresh scratch dir; returns the dir. */
+  def write(prefix: String, df: DataFrame): String = {
+    val d = dir(prefix)
+    df.write.mode("overwrite").parquet(d)
+    d
+  }
+
+  /** Write `df` once to a fresh scratch dir and read it back in `df`'s
+    * session.
+    */
+  def stage(prefix: String, df: DataFrame): DataFrame =
+    df.sparkSession.read.parquet(write(prefix, df))
+
+  /** A per-input-dir memo for ONE artifact family (contract above).
+    *
+    *  - One build per key: concurrent callers on the same dir block on
+    *    the first build (`computeIfAbsent`).
+    *  - A build that throws records no entry; the next call rebuilds.
+    *  - Nested builds must target a DIFFERENT family's instance:
+    *    `ConcurrentHashMap` rejects a recursive update of its own map.
+    *  - Never store a DataFrame: it is bound to the building session and
+    *    every client runs its own `newSession()`. Store the dir path (read
+    *    it back in the caller's session) or another session-free value.
+    */
+  final class PerDir[V <: AnyRef] {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def apply(inputDir: String)(build: => V): V =
+      entries.computeIfAbsent(inputDir, _ => build)
+  }
 }

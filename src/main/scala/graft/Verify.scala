@@ -50,19 +50,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy TIMESTAMP(NANOS) fixture encoding; see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // native vec_dot/vec_sqnorm expressions (graft.functions.VecExprs)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // see Bench: reclaim dead broadcasts/shuffles across 80+ queries
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Fail loudly ONCE on fixture drift before running 177 queries into it
     // (r7: one re-encoded column → 35 buried per-query AnalysisExceptions).

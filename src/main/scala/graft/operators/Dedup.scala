@@ -38,16 +38,13 @@ object Dedup extends QueryModule {
     * with the corpus, so a larger corpus raises rowsPerBand (the band
     * collision probability is s^R — a higher R sharpens the S-curve and
     * prunes sub-threshold candidates harder) and then numBands to buy
-    * recall at the threshold back (recall = 1−(1−s^R)^B). Env-overridable because the right
+    * recall at the threshold back (recall = 1−(1−s^R)^B). The right
     * value is a property of the DEPLOYMENT's corpus, not of the code —
     * and every DuckDB oracle below is generated from these same values,
-    * so an override re-derives the oracle with it: the correctness gate
-    * follows the knob instead of pinning its default.
+    * so changing them re-derives the oracle with them.
     */
-  private val numBands =
-    sys.env.get("GRAFT_MH_BANDS").map(_.toInt).getOrElse(3)
-  private val rowsPerBand =
-    sys.env.get("GRAFT_MH_ROWS_PER_BAND").map(_.toInt).getOrElse(6)
+  private val numBands = 3
+  private val rowsPerBand = 6
   private val numHashes = numBands * rowsPerBand
 
   /** Jaccard-distance acceptance threshold for a verified near-dup. */
@@ -122,16 +119,15 @@ object Dedup extends QueryModule {
     * candidates, then exact-Jaccard verification. Shared by the per-document
     * verdict (q37) and the transitive clustering (q59).
     */
-  /** The UNVERIFIED band-join candidate list, staged once per input dir
-    * per JVM (the [[stagedPairs]] contract): the minhash projection +
+  /** The UNVERIFIED band-join candidate list, memoized per input dir:
+    * the minhash projection +
     * band bucket-join is the pipeline's most expensive stage, and TWO
     * consumers need its output — the verify join ([[verifiedPairs]], ⊂
     * q37/q59/q123) and the recall audit (q204, which must see the
     * candidates BEFORE verification). Staging the pair ids (two longs a
     * row) costs a fraction of recomputing 18 md5 minhashes per document.
     */
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val candCache = new graft.Scratch.PerDir[String]
 
   /** The unstaged candidate band-join — bucket-join: equi-join on (band,
     * signature); a pair colliding in several bands appears once thanks to
@@ -155,33 +151,21 @@ object Dedup extends QueryModule {
       .distinct()
   }
 
-  private def stagedCands(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val path = candCache.computeIfAbsent(d, _ => {
-      val tmp = graft.Scratch.dir("graft_mh_cands")
-      candJoin(s, d).write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-    s.read.parquet(path)
-  }
+  private def stagedCands(s: org.apache.spark.sql.SparkSession, d: String) =
+    s.read.parquet(candCache(d)(graft.Scratch.write("graft_mh_cands", candJoin(s, d))))
 
-  /** [[hashedSets]] staged once per input dir per JVM: an unstaged plan
+  /** [[hashedSets]] memoized per input dir: an unstaged plan
     * that references the hashed-set table k times re-tokenizes and
     * re-hashes the corpus k times (Catalyst reuses exchanges, not
     * arbitrary subtrees under differing projections — the q37 lesson).
     * The verify join reads it twice (both pair sides) and the recall
     * audit three times (token explode + both sides).
     */
-  private val hsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val hsCache = new graft.Scratch.PerDir[String]
 
-  private def stagedHashedSets(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val path = hsCache.computeIfAbsent(d, _ => {
-      val tmp = graft.Scratch.dir("graft_mh_hs")
-      hashedSets(tokenSets(s, d)).write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-    s.read.parquet(path)
-  }
+  private def stagedHashedSets(s: org.apache.spark.sql.SparkSession, d: String) =
+    s.read.parquet(hsCache(d)(
+      graft.Scratch.write("graft_mh_hs", hashedSets(tokenSets(s, d)))))
 
   private[graft] def verifiedPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
     val th = stagedHashedSets(s, d)
@@ -217,7 +201,7 @@ object Dedup extends QueryModule {
     *    downstream stages honest leaf statistics. A 100 TB dedup pipeline
     *    stages its edge list between pair generation and consumption anyway.
     *
-    * Staged ONCE PER INPUT DIR per JVM (same contract as [[Memo]]): the
+    * Memoized per input dir ([[graft.Scratch.PerDir]]): the
     * pair list is the dedup family's shared intermediate — generation runs
     * once and both consumers (q37's verdict, q59's clustering) read the
     * same staged artifact, exactly as a production pipeline wires it. The
@@ -227,17 +211,11 @@ object Dedup extends QueryModule {
     * dir, so different scale factors never cross; deterministic input ⇒
     * identical artifact either way.
     */
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedCache = new graft.Scratch.PerDir[String]
 
-  private def stagedPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val path = stagedCache.computeIfAbsent(d, _ => {
-      val tmp = graft.Scratch.dir("graft_mh_pairs") // reaped at JVM exit
-      verifiedPairs(s, d).write.mode("overwrite").parquet(tmp)
-      tmp
-    })
-    s.read.parquet(path)
-  }
+  private def stagedPairs(s: org.apache.spark.sql.SparkSession, d: String) =
+    s.read.parquet(stagedCache(d)(
+      graft.Scratch.write("graft_mh_pairs", verifiedPairs(s, d))))
 
   /** q37 — per-document near-dup verdict: how many verified neighbors at
     * Jaccard ≥ 0.9, and the canonical (least) doc_id of the neighborhood —
@@ -361,26 +339,20 @@ object Dedup extends QueryModule {
   }
 
   /** Connected-component labels (doc_id, label = component minimum) over
-    * the verified near-dup graph — the CC loop's result, staged to parquet
-    * once per input dir per JVM exactly like [[stagedPairs]]: the label
+    * the verified near-dup graph — the CC loop's result, memoized per
+    * input dir exactly like [[stagedPairs]]: the label
     * table is the dedup family's second shared intermediate (q59's
     * clustering and q123's leakage-safe split both consume it, and a
     * production pipeline stores it next to the pair list).
     */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val labelCache = new graft.Scratch.PerDir[String]
 
   // private[graft]: q234's end-to-end pipeline composition (Pipeline.scala)
   // consumes the SAME staged label table the dedup family shares — the
   // integration point is the artifact, not a recomputation.
-  private[graft] def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val path = labelCache.computeIfAbsent(d, _ => {
-      val out = graft.Scratch.dir("graft_cc_labels") // reaped at JVM exit
-      computeLabels(s, d).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+  private[graft] def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String) =
+    s.read.parquet(labelCache(d)(
+      graft.Scratch.write("graft_cc_labels", computeLabels(s, d))))
 
   private def computeLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
@@ -423,7 +395,6 @@ object Dedup extends QueryModule {
       nodes: org.apache.spark.sql.DataFrame,
       dirEdges: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"[cc] pairs staged t=${System.nanoTime() / 1000000}")
     // Edge layout, decided ONCE before the loop: hash-partitioned by src,
     // sorted within partitions on src, and cached. Every propagation round
     // joins edges⋈labels on src = doc_id; the cached layout satisfies BOTH
@@ -513,7 +484,6 @@ object Dedup extends QueryModule {
       prevSum = sumNow
       traj += sumNow
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG")) println(s"[cc] round=$rounds sum=$sumNow t=${System.nanoTime() / 1000000}")
     }
     require(converged, s"label propagation did not converge in $rounds rounds")
     // finally, not fall-through: a non-converged require (or a failed
@@ -586,24 +556,20 @@ object Dedup extends QueryModule {
   private def isDelta: Column = col("doc_id") % 10 === 7
 
   /** Corpus-side minhash index — band signatures + hashed token sets of
-    * the NON-delta documents, staged to parquet once per input dir per JVM
-    * (same contract as [[stagedPairs]]). This is the artifact an
+    * the NON-delta documents, memoized per input dir like
+    * [[stagedPairs]]. This is the artifact an
     * incremental dedup pipeline keeps between runs: the index is built
     * when the corpus is ingested, and each new batch only PROBES it —
     * never re-scans the corpus.
     */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val indexCache = new graft.Scratch.PerDir[(String, String)]
 
   private def corpusIndex(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val (sigDir, setDir) = indexCache.computeIfAbsent(d, _ => {
-      val sp = graft.Scratch.dir("graft_mh_index_sigs") // reaped at JVM exit
-      val tp = graft.Scratch.dir("graft_mh_index_sets")
+    val (sigDir, setDir) = indexCache(d) {
       val t = tokenSets(s, d).filter(!isDelta)
-      bandSigs(s, t).write.mode("overwrite").parquet(sp)
-      hashedSets(t).write.mode("overwrite").parquet(tp)
-      (sp, tp)
-    })
+      (graft.Scratch.write("graft_mh_index_sigs", bandSigs(s, t)),
+        graft.Scratch.write("graft_mh_index_sets", hashedSets(t)))
+    }
     (s.read.parquet(sigDir), s.read.parquet(setDir))
   }
 

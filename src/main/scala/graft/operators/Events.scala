@@ -1120,11 +1120,9 @@ object Events extends QueryModule {
   val seqPatterns: Q = (s, d) => {
     val ev = Tables.events(s, d).select(col("user_id"),
       col("event_type").as("t"), unix_micros(col("ts")).as("ts"))
-    val tmp = graft.Scratch.dir("graft_seq")
-    ev.groupBy("user_id", "t")
-      .agg(min("ts").as("tmin"), max("ts").as("tmax"))
-      .write.mode("overwrite").parquet(tmp)
-    val ut = s.read.parquet(tmp)
+    val ut = graft.Scratch.stage("graft_seq",
+      ev.groupBy("user_id", "t")
+        .agg(min("ts").as("tmin"), max("ts").as("tmax")))
     val nu = ut.select("user_id").distinct()
       .agg(count(lit(1)).as("n_users"))
     val a = ut.select(col("user_id"), col("t").as("ta"),

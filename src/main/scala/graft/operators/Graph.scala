@@ -43,14 +43,10 @@ object Graph extends QueryModule {
       .select(col("o").as("src"), (col("p") + lit(partOffset)).as("dst"))
     val withDeg = raw.join(
       raw.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
-    val tmp = graft.Scratch.dir("graft_pr_edges") // reaped at JVM exit
-    withDeg.write.mode("overwrite").parquet(tmp)
-    val edges = s.read.parquet(tmp)
+    val edges = graft.Scratch.stage("graft_pr_edges", withDeg)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
-    val tmpN = graft.Scratch.dir("graft_pr_nodes")
-    nodes.write.mode("overwrite").parquet(tmpN)
-    val stagedNodes = s.read.parquet(tmpN)
+    val stagedNodes = graft.Scratch.stage("graft_pr_nodes", nodes)
 
     var ranks = stagedNodes.select(col("node"), lit(initRank).as("pr"))
     for (_ <- 1 to iters) {
@@ -90,9 +86,7 @@ object Graph extends QueryModule {
     val bi = raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
     val withDeg = bi.join(
       bi.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
-    val tmp = graft.Scratch.dir("graft_ppr_edges")
-    withDeg.write.mode("overwrite").parquet(tmp)
-    val edges = s.read.parquet(tmp)
+    val edges = graft.Scratch.stage("graft_ppr_edges", withDeg)
     val seeds = Tables.orders(s, d)
       .join(broadcast(Tables.customer(s, d)
           .filter(col("c_nationkey") === pprSeedNation)
@@ -102,9 +96,7 @@ object Graph extends QueryModule {
     val nodes = bi.select(col("src").as("node")).distinct()
       .join(seeds.withColumn("is_seed", lit(1)), Seq("node"), "left")
       .select(col("node"), coalesce(col("is_seed"), lit(0)).as("is_seed"))
-    val tmpN = graft.Scratch.dir("graft_ppr_nodes")
-    nodes.write.mode("overwrite").parquet(tmpN)
-    val stagedNodes = s.read.parquet(tmpN)
+    val stagedNodes = graft.Scratch.stage("graft_ppr_nodes", nodes)
 
     var ranks = stagedNodes.select(col("node"),
       (col("is_seed").cast("long") * lit(initRank)).as("pr"))
@@ -168,16 +160,12 @@ object Graph extends QueryModule {
     // discipline): both references become leaf scans, the plan is linear
     // in rounds, and the arithmetic is unchanged.
     for (i <- 1 to iters) {
-      val arDir = graft.Scratch.dir(s"graft_hits_a$i")
-      edges.join(hub, "o").groupBy("p").agg(sum("h").as("ar"))
-        .write.mode("overwrite").parquet(arDir)
-      val ar = s.read.parquet(arDir)
+      val ar = graft.Scratch.stage(s"graft_hits_a$i",
+        edges.join(hub, "o").groupBy("p").agg(sum("h").as("ar")))
       auth = ar.crossJoin(broadcast(ar.agg(max("ar").as("amax"))))
         .select(col("p"), renorm("ar", "amax").as("a"))
-      val hrDir = graft.Scratch.dir(s"graft_hits_h$i")
-      edges.join(auth, "p").groupBy("o").agg(sum("a").as("hr"))
-        .write.mode("overwrite").parquet(hrDir)
-      val hr = s.read.parquet(hrDir)
+      val hr = graft.Scratch.stage(s"graft_hits_h$i",
+        edges.join(auth, "p").groupBy("o").agg(sum("a").as("hr")))
       hub = hr.crossJoin(broadcast(hr.agg(max("hr").as("hmax"))))
         .select(col("o"), renorm("hr", "hmax").as("h"))
     }
@@ -212,31 +200,27 @@ object Graph extends QueryModule {
     * the two formulations is itself part of the check. cc_ppm =
     * (3·T·10⁶) div wedges, exact integer arithmetic in both engines.
     */
-  /** The distinct (order, part) purchase-pair leaf, staged ONCE per input
-    * dir per JVM (the staging-memo contract, Scratch.scala): the bipartite
+  /** The distinct (order, part) purchase-pair leaf, memoized per input
+    * dir ([[graft.Scratch.PerDir]]): the bipartite
     * base every graph in this module is built from. Before round 17 each
     * graph query re-ran the lineitem scan + DISTINCT shuffle for itself —
     * q106/q261/q262 directly, and every co-purchase consumer inside its
     * own self-join build; one staged leaf turns those repeated passes into
     * leaf scans (guide §2.4: remove shuffles outright — the distinct is
     * computed once, not once per query). */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val pairCache = new graft.Scratch.PerDir[String]
 
   private[graft] def purchasePairsDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    pairCache.computeIfAbsent(d, _ => {
-      val tmp = graft.Scratch.dir("graft_op_pairs")
-      Tables.lineitem(s, d)
+    pairCache(d) {
+      graft.Scratch.write("graft_op_pairs", Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-        .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+        .distinct())
+    }
 
   /** The co-purchase pair AGGREGATE — (u < v part pair, m = number of
     * shared orders, m_base = shared orders outside q255's delta slice) —
-    * staged ONCE per input dir per JVM. This is the module's single most
+    * memoized per input dir. This is the module's single most
     * expensive shared build (basket self-join + hash aggregate over every
     * order's item-pair mass), and before round 17 it was rebuilt from
     * scratch by SEVEN independent queries (q148 kcore, q159 gnn-sample,
@@ -249,12 +233,11 @@ object Graph extends QueryModule {
     * want (u, v). Carrying m_base here is sound because [[incSliceMod]] /
     * [[incSliceRem]] are JVM constants — the leaf is a pure function of
     * the input dir, the memo key. */
-  private val coPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val coPairCache = new graft.Scratch.PerDir[String]
 
   private[graft] def coPairsDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    coPairCache.computeIfAbsent(d, _ => {
+    coPairCache(d) {
       val items = s.read.parquet(purchasePairsDir(s, d))
       val pm = items.alias("a").join(items.alias("b"),
           col("a.o") === col("b.o") && col("a.p") < col("b.p"))
@@ -262,10 +245,8 @@ object Graph extends QueryModule {
         .agg(count(lit(1)).as("m"),
           sum(when(col("a.o") % incSliceMod =!= incSliceRem, 1L)
             .otherwise(0L)).as("m_base"))
-      val tmp = graft.Scratch.dir("graft_copairs")
-      pm.write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+      graft.Scratch.write("graft_copairs", pm)
+    }
 
   /** The REPEAT co-purchase edge list (pairs sharing ≥ 2 orders) off the
     * shared leaf — a pruned-column leaf scan plus a cheap filter, replacing
@@ -275,24 +256,22 @@ object Graph extends QueryModule {
     s.read.parquet(coPairsDir(s, d)).filter(col("m") >= 2).select("u", "v")
 
   /** q138/q265 shared artifacts — (canonical co-purchase edge dir,
-    * degree-ORIENTED edge dir) — staged once per input dir per JVM (the
-    * hyperBallArtifacts memo contract): the global transitivity (q138)
+    * degree-ORIENTED edge dir) — memoized per input dir: the global
+    * transitivity (q138)
     * and the per-node coefficients (q265) are two reads of the SAME
     * oriented adjacency, so the O(m)-wide joins run once. Staged because
     * each leaf is scanned repeatedly (orientation, adjacency build,
     * closure probe) — the PR edge-list lineage discipline. */
-  private val triCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val triCache = new graft.Scratch.PerDir[(String, String)]
 
   private[graft] def triArtifacts(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) =
-    triCache.computeIfAbsent(d, _ => {
+    triCache(d) {
       // canonical (u < v) edges = the m ≥ 1 projection of the shared
       // co-purchase leaf; staged narrow (two columns) because the loops
       // and walks downstream scan this leaf many times
       val rawEdges = s.read.parquet(coPairsDir(s, d)).select("u", "v")
-      val tmpE = graft.Scratch.dir("graft_tri_edges")
-      rawEdges.write.mode("overwrite").parquet(tmpE)
+      val tmpE = graft.Scratch.write("graft_tri_edges", rawEdges)
       val edges = s.read.parquet(tmpE)
       val deg = edges.select(col("u").as("x"))
         .union(edges.select(col("v").as("x")))
@@ -304,10 +283,8 @@ object Graph extends QueryModule {
         .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
         .select(when(lowFirst, col("u")).otherwise(col("v")).as("s"),
           when(lowFirst, col("v")).otherwise(col("u")).as("t"))
-      val tmpD = graft.Scratch.dir("graft_tri_dir")
-      dir.write.mode("overwrite").parquet(tmpD)
-      (tmpE, tmpD)
-    })
+      (tmpE, graft.Scratch.write("graft_tri_dir", dir))
+    }
 
   val triangleCount: Q = (s, d) => {
     val (edgeDir, orientedDir) = triArtifacts(s, d)
@@ -514,8 +491,7 @@ object Graph extends QueryModule {
     // keeps the organic sparse structure where peeling means something.
     // Read off the shared staged co-purchase leaf (no per-query self-join).
     val rawEdges = repeatEdges(s, d)
-    val edgeDir = graft.Scratch.dir("graft_truss_a0")
-    rawEdges.write.mode("overwrite").parquet(edgeDir)
+    val edgeDir = graft.Scratch.write("graft_truss_a0", rawEdges)
     def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)),
         sum(expr("(u * 524287 + v) % 1000000007"))).collect()(0)
@@ -540,8 +516,7 @@ object Graph extends QueryModule {
           .agg(count(lit(1)).as("sup"))
         val next = alive.join(sup, Seq("u", "v"))
           .filter(col("sup") >= trussK - 2).select("u", "v")
-        val dir2 = graft.Scratch.dir(s"graft_truss_a$r")
-        next.write.mode("overwrite").parquet(dir2)
+        val dir2 = graft.Scratch.write(s"graft_truss_a$r", next)
         val (n, ck) = stats(s.read.parquet(dir2))
         val removed = prevN - n
         aliveDir = dir2
@@ -585,9 +560,7 @@ object Graph extends QueryModule {
   private[graft] val ktrussDelta: Q = (s, d) => {
     import s.implicits._
     val rawEdges = repeatEdges(s, d) // shared staged co-purchase leaf
-    val edgeDir = graft.Scratch.dir("graft_trussd_a0")
-    rawEdges.write.mode("overwrite").parquet(edgeDir)
-    val alive0 = s.read.parquet(edgeDir)
+    val alive0 = graft.Scratch.stage("graft_trussd_a0", rawEdges)
     val k2 = (trussK - 2).toLong
     val canon3 = array(
       struct(least(col("a"), col("b")).as("u"),
@@ -602,8 +575,7 @@ object Graph extends QueryModule {
           .agg(count(lit(1)).as("sup")),
         Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))
-    var supDir = graft.Scratch.dir("graft_trussd_s1")
-    sup1.write.mode("overwrite").parquet(supDir)
+    var supDir = graft.Scratch.write("graft_trussd_s1", sup1)
     var prevAlive = alive0.count()
     var converged = false
     var constN = 0L
@@ -643,12 +615,10 @@ object Graph extends QueryModule {
           val decr = tR.select(explode(canon3).as("e"))
             .groupBy(col("e.u").as("u"), col("e.v").as("v"))
             .agg(count(lit(1)).as("d"))
-          val nextDir = graft.Scratch.dir(s"graft_trussd_s${r + 1}")
-          keep.join(decr, Seq("u", "v"), "left")
-            .select(col("u"), col("v"),
-              (col("sup") - coalesce(col("d"), lit(0L))).as("sup"))
-            .write.mode("overwrite").parquet(nextDir)
-          supDir = nextDir
+          supDir = graft.Scratch.write(s"graft_trussd_s${r + 1}",
+            keep.join(decr, Seq("u", "v"), "left")
+              .select(col("u"), col("v"),
+                (col("sup") - coalesce(col("d"), lit(0L))).as("sup")))
         }
         (r, removed, n, ck)
       }
@@ -695,8 +665,7 @@ object Graph extends QueryModule {
     val edges = repeatEdges(s, d)
     val nodes = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x"))).distinct()
-    var aliveDir = graft.Scratch.dir("graft_core_alive0")
-    nodes.write.mode("overwrite").parquet(aliveDir)
+    var aliveDir = graft.Scratch.write("graft_core_alive0", nodes)
     var prevN = s.read.parquet(aliveDir).count()
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
     var fixpoint: Option[(Long, Long)] = None // (n_alive, checksum)
@@ -718,8 +687,7 @@ object Graph extends QueryModule {
             .union(live.select(col("v").as("x")))
             .groupBy("x").agg(count(lit(1)).as("c"))
           val next = deg.filter(col("c") >= coreK).select("x")
-          val nextDir = graft.Scratch.dir(s"graft_core_alive$r")
-          next.write.mode("overwrite").parquet(nextDir)
+          val nextDir = graft.Scratch.write(s"graft_core_alive$r", next)
           val row = s.read.parquet(nextDir).agg(
             count(lit(1)).as("n_alive"),
             coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
@@ -762,21 +730,19 @@ object Graph extends QueryModule {
     * not a 3-round lineage tree.
     */
   /** q155/q202 shared artifacts — (both-direction edge list, round-3 label
-    * table) — staged ONCE per input dir per JVM (Dedup.stagedPairs'
-    * contract): community detection and its quality audit read the SAME
+    * table) — memoized per input dir: community detection and its
+    * quality audit read the SAME
     * staged labels, exactly as a production graph pipeline wires detection
     * and evaluation, and the 3-round loop runs once per session instead of
     * once per consumer.
     */
-  private val lpaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val lpaCache = new graft.Scratch.PerDir[(String, String)]
 
   /** The staged BOTH-DIRECTION repeat-co-purchase adjacency alone —
     * split out of [[lpaArtifacts]] so consumers that need only the graph
     * (q167's bounded BFS, q250's convergent BFS) don't pay the 3 LPA
     * rounds, while q155/q202/q223 still share one staging. */
-  private val lpaEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lpaEdgeCache = new graft.Scratch.PerDir[String]
 
   /** The staged adjacency's location, exposed for AnalyticsSpec's q253
     * fidelity pin (the spec recomputes exact Σ|component|² on the SAME
@@ -786,12 +752,10 @@ object Graph extends QueryModule {
 
   private def lpaEdgesDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    lpaEdgeCache.computeIfAbsent(d, _ => {
+    lpaEdgeCache(d) {
       val e2 = repeatEdges(s, d) // shared staged co-purchase leaf
-      val tmpE = graft.Scratch.dir("graft_lpa_edges")
-      e2.select("u", "v")
-        .union(e2.select(col("v").as("u"), col("u").as("v")))
-        .write.mode("overwrite").parquet(tmpE)
+      val tmpE = graft.Scratch.write("graft_lpa_edges", e2.select("u", "v")
+        .union(e2.select(col("v").as("u"), col("u").as("v"))))
       // Loud precondition for the packed argmax q155/q251 run over this
       // adjacency (cnt * 1e12 + (1e12 − lbl)): Spark BIGINT wraps SILENTLY
       // (non-ANSI) once a node's packed vote reaches ~9.2e18, while the
@@ -819,17 +783,16 @@ object Graph extends QueryModule {
       require(ext.getLong(1) >= 0L && ext.getLong(2) < 1000000000000L,
         s"LPA pack domain: node ids must lie in [0, 1e12), got [${ext.getLong(1)}, ${ext.getLong(2)}]")
       tmpE
-    })
+    }
 
   private def lpaArtifacts(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) =
-    lpaCache.computeIfAbsent(d, _ => {
+    lpaCache(d) {
       val tmpE = lpaEdgesDir(s, d)
       val ed = s.read.parquet(tmpE) // both directions: undirected adjacency
-      var labelsDir = graft.Scratch.dir("graft_lpa_l0")
-      ed.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl"))
-        .write.mode("overwrite").parquet(labelsDir)
+      var labelsDir = graft.Scratch.write("graft_lpa_l0",
+        ed.select(col("u").as("node")).distinct()
+          .select(col("node"), col("node").as("lbl")))
       for (r <- 1 to lpaRounds) {
         val labels = s.read.parquet(labelsDir)
         val next = ed
@@ -839,12 +802,11 @@ object Graph extends QueryModule {
           .groupBy("node")
           .agg(expr("""1000000000000 - (max(cnt * 1000000000000
                  + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
-        val nextDir = graft.Scratch.dir(s"graft_lpa_l$r")
-        next.write.mode("overwrite").parquet(nextDir)
+        val nextDir = graft.Scratch.write(s"graft_lpa_l$r", next)
         labelsDir = nextDir
       }
       (tmpE, labelsDir)
-    })
+    }
 
   val labelPropagation: Q = (s, d) => {
     val (_, labelsDir) = lpaArtifacts(s, d)
@@ -1008,10 +970,9 @@ object Graph extends QueryModule {
     // the LAST slice (a direct leaf read, no filter over the full set),
     // and per-round write volume drops from |visited| to |fresh| — total
     // bytes written over the loop fall from O(rounds·n) to O(n).
-    var dirs = Vector(graft.Scratch.dir("graft_bfs_v0"))
-    nodes.filter(col("x") % bfsSeedMod === 0)
-      .select(col("x"), lit(0).as("dist"))
-      .write.mode("overwrite").parquet(dirs.head)
+    var dirs = Vector(graft.Scratch.write("graft_bfs_v0",
+      nodes.filter(col("x") % bfsSeedMod === 0)
+        .select(col("x"), lit(0).as("dist"))))
     for (r <- 1 to bfsRounds) {
       val visited = s.read.parquet(dirs: _*)
       // fixed-round loop: a late round CAN have an empty frontier, and a
@@ -1023,8 +984,7 @@ object Graph extends QueryModule {
         .select(col("v").as("x")).distinct()
       val fresh = nbrs.join(visited, Seq("x"), "left_anti")
         .select(col("x"), lit(r).as("dist"))
-      val nextDir = graft.Scratch.dir(s"graft_bfs_v$r")
-      fresh.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_bfs_v$r", fresh)
       dirs :+= nextDir
     }
     val visited = s.read.parquet(dirs: _*)
@@ -1084,10 +1044,9 @@ object Graph extends QueryModule {
     // q40/q41) dies with NotSerializableException. The per-round count is
     // instead a count() on the freshly written FRESH slice — parquet
     // footer metadata only, no data scan, and the slice is small.
-    var dirs = Vector(graft.Scratch.dir("graft_bfsc_v0"))
-    nodes.filter(col("x") % bfsSeedMod === 0)
-      .select(col("x"), lit(0).as("dist"))
-      .write.mode("overwrite").parquet(dirs.head)
+    var dirs = Vector(graft.Scratch.write("graft_bfsc_v0",
+      nodes.filter(col("x") % bfsSeedMod === 0)
+        .select(col("x"), lit(0).as("dist"))))
     var frontierN = s.read.parquet(dirs.head).count()
     val traj = Seq.newBuilder[Long]
     traj += frontierN
@@ -1103,8 +1062,7 @@ object Graph extends QueryModule {
         .select(col("v").as("x")).distinct()
       val fresh = nbrs.join(visited, Seq("x"), "left_anti")
         .select(col("x"), lit(r).as("dist"))
-      val nextDir = graft.Scratch.dir(s"graft_bfsc_v$r")
-      fresh.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_bfsc_v$r", fresh)
       dirs :+= nextDir
       // footer-only count; schema given explicitly because the FINAL
       // slice is empty (0 part files — nothing to infer from)
@@ -1159,23 +1117,19 @@ object Graph extends QueryModule {
     */
   val lpaConverged: Q = (s, d) => lpaConvergedRun(s, d)._1
 
-  /** q251's self-loop-extended adjacency, staged ONCE per input dir per
-    * JVM: the loop's rounds must scan a parquet leaf (the q59 lineage
+  /** q251's self-loop-extended adjacency, memoized per input dir: the
+    * loop's rounds must scan a parquet leaf (the q59 lineage
     * discipline), not re-run the node distinct + union every round. */
-  private val lpacEdpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lpacEdpCache = new graft.Scratch.PerDir[String]
 
   private def lpaSelfLoopEdgesDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    lpacEdpCache.computeIfAbsent(d, _ => {
+    lpacEdpCache(d) {
       val ed = s.read.parquet(lpaEdgesDir(s, d))
-      val dir = graft.Scratch.dir("graft_lpac_edp")
       // self-loops: the self-vote is just one more (u, u) adjacency row
-      ed.unionByName(ed.select(col("u")).distinct()
-          .select(col("u"), col("u").as("v")))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+      graft.Scratch.write("graft_lpac_edp", ed.unionByName(
+        ed.select(col("u")).distinct().select(col("u"), col("u").as("v"))))
+    }
 
   /** The q251 body, returning the changed-count trajectory for the
     * spec's convergence pin (last entry 0, all earlier entries > 0). */
@@ -1183,10 +1137,9 @@ object Graph extends QueryModule {
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
     val ed = s.read.parquet(lpaEdgesDir(s, d))
     val edp = s.read.parquet(lpaSelfLoopEdgesDir(s, d))
-    var labelsDir = graft.Scratch.dir("graft_lpac_l0")
-    ed.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .write.mode("overwrite").parquet(labelsDir)
+    var labelsDir = graft.Scratch.write("graft_lpac_l0",
+      ed.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl")))
     val traj = Seq.newBuilder[Long]
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
     var changed = -1L
@@ -1206,7 +1159,6 @@ object Graph extends QueryModule {
         .groupBy("node")
         .agg(expr("""1000000000000 - (max(cnt * 1000000000000
                + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
-      val nextDir = graft.Scratch.dir(s"graft_lpac_l$r")
       // The previous label rides the staged round as plbl (one keyed join
       // folded into the round's OWN write pass), so the per-round stats
       // sync aggregates the fresh leaf alone — the old form re-joined the
@@ -1214,8 +1166,8 @@ object Graph extends QueryModule {
       // round's reader prunes plbl (parquet column pruning). countDistinct
       // cannot ride an observed metric, so the 1-row stats sync itself
       // stays (q250's contract), minus its join.
-      next.join(labels.withColumnRenamed("lbl", "plbl"), "node")
-        .write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_lpac_l$r",
+        next.join(labels.withColumnRenamed("lbl", "plbl"), "node"))
       val row = s.read.parquet(nextDir)
         .agg(sum(when(col("lbl") =!= col("plbl"), 1L).otherwise(0L))
             .as("n_changed"),
@@ -1264,9 +1216,8 @@ object Graph extends QueryModule {
   private[graft] def kcoreConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
     val ed = s.read.parquet(lpaEdgesDir(s, d))
-    var aliveDir = graft.Scratch.dir("graft_kcorec_a0")
-    ed.select(col("u").as("x")).distinct()
-      .write.mode("overwrite").parquet(aliveDir)
+    var aliveDir = graft.Scratch.write("graft_kcorec_a0",
+      ed.select(col("u").as("x")).distinct())
     var prevN = s.read.parquet(aliveDir).count()
     val traj = Seq.newBuilder[Long]
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
@@ -1285,8 +1236,7 @@ object Graph extends QueryModule {
       val next = live.groupBy(col("u").as("x"))
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= coreK).select("x")
-      val nextDir = graft.Scratch.dir(s"graft_kcorec_a$r")
-      next.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_kcorec_a$r", next)
       val row = s.read.parquet(nextDir).agg(
         count(lit(1)).as("n_alive"),
         coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
@@ -1343,9 +1293,7 @@ object Graph extends QueryModule {
       .union(baseEdges.select(col("d2").as("doc_id"))).distinct()
     // the staged artifact a production pipeline keeps between ingests
     val baseLabels = Dedup.ccMinLabels(s, baseNodes, baseEdges)
-    val tmpBl = graft.Scratch.dir("graft_inccc_base")
-    baseLabels.write.mode("overwrite").parquet(tmpBl)
-    val bl = s.read.parquet(tmpBl) // (doc_id, label)
+    val bl = graft.Scratch.stage("graft_inccc_base", baseLabels) // (doc_id, label)
     // collapse new edges onto the component graph: O(new edges) rows
     val mergeEdges = newEdges
       .join(bl.select(col("doc_id").as("u"), col("label").as("lu")), Seq("u"), "left")
@@ -1420,18 +1368,18 @@ object Graph extends QueryModule {
   val hyperBall: Q = (s, d) => hyperBallRun(s, d)._1
 
   /** q253/q258 shared artifacts — (per-round (round, changed, checksum,
-    * N-estimate) stats, per-round staged register dirs r0..R) — computed
-    * ONCE per input dir per JVM (lpaArtifacts' contract): the
+    * N-estimate) stats, per-round staged register dirs r0..R) — memoized
+    * per input dir: the
     * neighborhood-function read (q253) and the harmonic-centrality read
     * (q258) are two summaries of the SAME register propagation, so the
     * O(m·64)-per-round loop runs once and both consumers scan its staged
     * leaves. */
-  private val hbCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Vector[(Int, (Long, Long, Long))], Vector[String])]()
+  private val hbCache =
+    new graft.Scratch.PerDir[(Vector[(Int, (Long, Long, Long))], Vector[String])]
 
   private[graft] def hyperBallArtifacts(s: org.apache.spark.sql.SparkSession,
       d: String): (Vector[(Int, (Long, Long, Long))], Vector[String]) =
-    hbCache.computeIfAbsent(d, _ => hyperBallLoop(s, d))
+    hbCache(d)(hyperBallLoop(s, d))
 
   /** The q253 trajectory view over [[hyperBallArtifacts]], returning the
     * changed-register trajectory for the spec's convergence pin (last
@@ -1461,8 +1409,7 @@ object Graph extends QueryModule {
       .select(col("node"), col("bucket"),
         when(col("w") === 0, lit(33))
           .otherwise(lit(33) - length(bin(col("w")))).as("m"))
-    var regsDir = graft.Scratch.dir("graft_hb_r0")
-    init.write.mode("overwrite").parquet(regsDir)
+    var regsDir = graft.Scratch.write("graft_hb_r0", init)
     val dirs = Vector.newBuilder[String]
     dirs += regsDir
     // One driver sync per round: the register bank never loses a
@@ -1512,8 +1459,7 @@ object Graph extends QueryModule {
             .select(col("u").as("node"), col("bucket"), col("m"))
             .withColumn("pm", lit(null).cast("long")))
         .groupBy("node", "bucket").agg(max("m").as("m"), max("pm").as("pm"))
-      val nextDir = graft.Scratch.dir(s"graft_hb_r$r")
-      next.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_hb_r$r", next)
       val stats = roundStats(s.read.parquet(nextDir),
         when(col("pm").isNull || col("pm") =!= col("m"), 1L).otherwise(0L))
       changed = stats._1
@@ -1683,8 +1629,8 @@ object Graph extends QueryModule {
     * evidence. Output: the non-trivial classes (≥ 2 members), largest
     * first, top 20.
     */
-  /** The q210/q245 bought-before edge list, staged ONCE per input dir per
-    * JVM (the lpaArtifacts contract): the fixed-depth contract query and
+  /** The q210/q245 bought-before edge list, memoized per input dir: the
+    * fixed-depth contract query and
     * its convergent variant read the SAME staged graph, exactly as a
     * production pipeline runs the cheap bounded pass and routes horizon
     * classes to the full fixpoint without re-deriving edges.
@@ -1695,12 +1641,11 @@ object Graph extends QueryModule {
     * per customer (count ≡ distinct customers, no countDistinct), and
     * the per-customer mass is items², not (items×orders)².
     */
-  private val sccEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val sccEdgeCache = new graft.Scratch.PerDir[String]
 
   private def sccEdgesDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    sccEdgeCache.computeIfAbsent(d, _ => {
+    sccEdgeCache(d) {
       val cp = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey").as("c"),
           col("o_orderdate").as("dt"))
@@ -1714,10 +1659,8 @@ object Graph extends QueryModule {
         .groupBy(col("a.p").as("u"), col("b.p").as("v"))
         .agg(count(lit(1)).as("m")).filter(col("m") >= 2)
         .select("u", "v")
-      val tmpE = graft.Scratch.dir("graft_scc_edges")
-      e.write.mode("overwrite").parquet(tmpE)
-      tmpE
-    })
+      graft.Scratch.write("graft_scc_edges", e)
+    }
 
   val sccClasses: Q = (s, d) => {
     val ed = s.read.parquet(sccEdgesDir(s, d))
@@ -1729,10 +1672,9 @@ object Graph extends QueryModule {
     def propagate(rev: Boolean, tag: String) = {
       val edges = if (rev) ed.select(col("v").as("src"), col("u").as("dst"))
                   else ed.select(col("u").as("src"), col("v").as("dst"))
-      var cur = graft.Scratch.dir(s"graft_scc_${tag}0")
+      var cur = graft.Scratch.write(s"graft_scc_${tag}0",
+        nodes.select(col("node"), col("node").as("lbl")))
       var prev = cur
-      nodes.select(col("node"), col("node").as("lbl"))
-        .write.mode("overwrite").parquet(cur)
       for (r <- 1 to sccRounds) {
         val labels = s.read.parquet(cur)
         val inMin = edges
@@ -1741,8 +1683,7 @@ object Graph extends QueryModule {
         val next = labels.join(inMin, Seq("node"), "left")
           .select(col("node"),
             least(col("lbl"), coalesce(col("inmin"), col("lbl"))).as("lbl"))
-        val nd = graft.Scratch.dir(s"graft_scc_$tag$r")
-        next.write.mode("overwrite").parquet(nd)
+        val nd = graft.Scratch.write(s"graft_scc_$tag$r", next)
         prev = cur
         cur = nd
       }
@@ -1828,8 +1769,7 @@ object Graph extends QueryModule {
       val edges = if (rev) ed2.select(col("v").as("src"), col("u").as("dst"))
                   else ed2.select(col("u").as("src"), col("v").as("dst"))
       val (lbl, traj) = Dedup.minLabelFixpoint(s2, nodes2, edges)
-      val dir = graft.Scratch.dir(s"graft_sccc_$tag")
-      lbl.write.mode("overwrite").parquet(dir)
+      val dir = graft.Scratch.write(s"graft_sccc_$tag", lbl)
       (dir, traj)
     }
     val fF = Future(run(rev = false, "f"))
@@ -1930,10 +1870,8 @@ object Graph extends QueryModule {
   val walkCorpus: Q = (s, d) => {
     val (canonDir, _) = triArtifacts(s, d)
     val canon = s.read.parquet(canonDir)
-    val tmpW = graft.Scratch.dir("graft_walk_ed")
-    canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))
-      .write.mode("overwrite").parquet(tmpW)
-    walkRun(s, tmpW)
+    walkRun(s, graft.Scratch.write("graft_walk_ed",
+      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))))
   }
 
   /** The q280 engine over an arbitrary staged both-direction edge list,
@@ -1943,10 +1881,8 @@ object Graph extends QueryModule {
       edDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ed = s.read.parquet(edDir)
-    var posDir = graft.Scratch.dir("graft_walk_p0")
-    ed.select(col("u").as("o")).distinct()
-      .select(col("o"), col("o").as("x"))
-      .write.mode("overwrite").parquet(posDir)
+    var posDir = graft.Scratch.write("graft_walk_p0",
+      ed.select(col("u").as("o")).distinct().select(col("o"), col("o").as("x")))
     val steps = (0 to walkLen).map { t =>
       if (t > 0) {
         val cur = s.read.parquet(posDir)
@@ -1958,8 +1894,7 @@ object Graph extends QueryModule {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
           .select(col("o"), col("v").as("x"))
-        val nextDir = graft.Scratch.dir(s"graft_walk_p$t")
-        next.write.mode("overwrite").parquet(nextDir)
+        val nextDir = graft.Scratch.write(s"graft_walk_p$t", next)
         posDir = nextDir
       }
       s.read.parquet(posDir)
@@ -2025,10 +1960,9 @@ object Graph extends QueryModule {
     // count rides the staging write as an observed metric. The old form
     // re-wrote the whole visited set every round (O(rounds·reach) bytes)
     // and re-counted it in a second job.
-    var dirs = Vector(graft.Scratch.dir(s"graft_${tag}_v0"))
     val seeds0 = srcs.select(col("s"), col("s").as("x"), lit(0).as("dist"),
       lit(1L).as("sigma"))
-    seeds0.write.mode("overwrite").parquet(dirs.head)
+    var dirs = Vector(graft.Scratch.write(s"graft_${tag}_v0", seeds0))
     var frontierN = s.read.parquet(dirs.head).count() // footer-only
     var r = 0
     while (frontierN > 0) {
@@ -2045,8 +1979,7 @@ object Graph extends QueryModule {
       val fresh = nbrs
         .join(visited.select(col("s"), col("x")), Seq("s", "x"), "left_anti")
         .select(col("s"), col("x"), lit(r).as("dist"), col("sigma"))
-      val nextDir = graft.Scratch.dir(s"graft_${tag}_v$r")
-      fresh.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_${tag}_v$r", fresh)
       dirs :+= nextDir
       // footer-only count, explicit schema (the final slice is empty —
       // no part files to infer from); see bfsConvergedRun's sync note
@@ -2092,8 +2025,7 @@ object Graph extends QueryModule {
         .select(col("s"), col("u").as("x"),
           expr("us * (1000000 + wdel) div ws").as("c"))
         .groupBy("s", "x").agg(sum("c").as("delta"))
-      val nextDir = graft.Scratch.dir(s"graft_${tag}_b${d - 1}")
-      contrib.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_${tag}_b${d - 1}", contrib)
       deltaDirs += nextDir
       lvlDeltaDir = Some(nextDir)
     }
@@ -2140,9 +2072,8 @@ object Graph extends QueryModule {
   val betweenness: Q = (s, d) => {
     val (canonDir, _) = triArtifacts(s, d)
     val canon = s.read.parquet(canonDir)
-    val tmpB = graft.Scratch.dir("graft_btw_ed")
-    canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))
-      .write.mode("overwrite").parquet(tmpB)
+    val tmpB = graft.Scratch.write("graft_btw_ed",
+      canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
     val srcs = s.read.parquet(tmpB).select(col("u").as("x")).distinct()
       .orderBy(md5(col("x").cast("string")), col("x"))
       .limit(brandesK).select(col("x").as("s"))

@@ -234,9 +234,7 @@ object Multimodal extends QueryModule {
           .reduce(_ + _).as("phash"),
         array((0 until phashSlices).map(i =>
           struct(lit(i).as("band"), col(s"b$i").as("byte_v"))): _*).as("bands"))
-    val tmp = graft.Scratch.dir("graft_phash")
-    hashed.write.mode("overwrite").parquet(tmp)
-    val h = s.read.parquet(tmp)
+    val h = graft.Scratch.stage("graft_phash", hashed)
     val banded = h.select(col("doc_id"), col("phash"),
       explode(col("bands")).as("bb"))
       .select(col("doc_id"), col("phash"),
@@ -323,9 +321,7 @@ object Multimodal extends QueryModule {
       .select(col("doc_id"), col("i"), col("ti"), col("n"),
         (col("bin") * (afpBins * 8L) + col("bin_t") * 8L +
           (col("ti") - col("i"))).as("h"))
-    val tmp = graft.Scratch.dir("graft_afp")
-    lm.write.mode("overwrite").parquet(tmp)
-    val index = s.read.parquet(tmp)
+    val index = graft.Scratch.stage("graft_afp", lm)
     val query = index
       .filter(col("doc_id") % afpProbeMod === afpProbeRes)
       .filter(col("i") >= expr("n div 3") && col("ti") < expr("(2 * n) div 3"))

@@ -481,19 +481,15 @@ object Pipeline extends QueryModule {
     * equals its quota exactly (conservation).
     */
   /** The (doc_id, source, ce_micro) difficulty table — q185's scoring
-    * pass staged once per input dir per JVM and shared by q293 (three
+    * pass memoized per input dir and shared by q293 (three
     * consumers: weights, quotas, selection — PlanSpec caught 3 copies of
     * the corpus-sized scoring subtree before staging, the q286 lesson)
-    * and q296 (domain losses). Keyed on the input dir path under the
-    * [[graft.Scratch]] staging-memo contract (fixtures immutable per
-    * JVM; tiny key cardinality) — a regenerated fixture at the same
-    * path requires a JVM restart, as every *Cache in the repo does. */
-  private val ceScoredCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * and q296 (domain losses). */
+  private val ceScoredCache = new graft.Scratch.PerDir[String]
 
   private def ceScoredDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    ceScoredCache.computeIfAbsent(d, _ => {
+    ceScoredCache(d) {
       val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
       val terms = docs.select(col("doc_id"), explode(toks).as("term"))
       val freq = terms.groupBy("term").agg(count(lit(1)).as("cnt"))
@@ -504,13 +500,11 @@ object Pipeline extends QueryModule {
             .as("mu"))
       val per = mu.groupBy("doc_id")
         .agg(count(lit(1)).as("n_tokens"), sum("mu").as("sum_mu"))
-      val dir = graft.Scratch.dir("graft_ce_scored")
-      docs.select("doc_id", "source").join(per, Seq("doc_id"))
-        .select(col("doc_id"), col("source"),
-          expr("sum_mu div n_tokens").as("ce_micro"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+      graft.Scratch.write("graft_ce_scored",
+        docs.select("doc_id", "source").join(per, Seq("doc_id"))
+          .select(col("doc_id"), col("source"),
+            expr("sum_mu div n_tokens").as("ce_micro")))
+    }
 
   val curriculum: Q = (s, d) => {
     val scored = s.read.parquet(ceScoredDir(s, d))
@@ -646,16 +640,14 @@ object Pipeline extends QueryModule {
     // and the scoring join are three plan branches — against the raw
     // frame Spark would re-run the corpus tokenize per branch (the
     // q307 staging lesson)
-    val tmp = graft.Scratch.dir("graft_dsir")
-    Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), col("source"), col("lang"),
-        explode(toks).as("term"))
-      .select(col("doc_id"), col("source"), col("lang"),
-        graft.functions.Hashing.md5Bucket(col("term"), dsirBuckets).as("b"))
-      .groupBy("doc_id", "source", "lang", "b")
-      .agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(tmp)
-    val db = s.read.parquet(tmp)
+    val db = graft.Scratch.stage("graft_dsir",
+      Tables.fanOut(Tables.documents(s, d), "doc_id")
+        .select(col("doc_id"), col("source"), col("lang"),
+          explode(toks).as("term"))
+        .select(col("doc_id"), col("source"), col("lang"),
+          graft.functions.Hashing.md5Bucket(col("term"), dsirBuckets).as("b"))
+        .groupBy("doc_id", "source", "lang", "b")
+        .agg(count(lit(1)).as("cnt")))
     val raw = db.groupBy("b").agg(sum("cnt").as("cr"))
     val tgt = db.filter(col("lang") === "en")
       .groupBy("b").agg(sum("cnt").as("ct"))
@@ -850,10 +842,8 @@ object Pipeline extends QueryModule {
         col("s_n") && col("doc_id") >= 10 && col("is_cont").isNull)
     // stage the chain verdicts ONCE: the expensive scans (quality,
     // digests, shingles, label join) must not re-run per consumer
-    val verdictPath = graft.Scratch.dir("graft_e2e_verdict")
-    f3.select("doc_id", "lang", "n_tok", "label", "s_q", "s_e", "s_n", "s_de")
-      .write.mode("overwrite").parquet(verdictPath)
-    val f = s.read.parquet(verdictPath)
+    val f = graft.Scratch.stage("graft_e2e_verdict",
+      f3.select("doc_id", "lang", "n_tok", "label", "s_q", "s_e", "s_n", "s_de"))
     // q103's temperature mix over the decontaminated survivors
     val surv = f.filter(col("s_de"))
     val weights = surv.groupBy("lang").agg(count(lit(1)).as("n_docs"))
@@ -875,10 +865,8 @@ object Pipeline extends QueryModule {
     // consumer (the plan would otherwise recompute the subtree 3x:
     // Catalyst reuses exchanges, not twice-referenced subtrees — the
     // q37 lesson)
-    val fmPath = graft.Scratch.dir("graft_e2e_final")
-    f.join(mixedFlags, Seq("doc_id"), "left")
-      .write.mode("overwrite").parquet(fmPath)
-    val fm = s.read.parquet(fmPath)
+    val fm = graft.Scratch.stage("graft_e2e_final",
+      f.join(mixedFlags, Seq("doc_id"), "left"))
     val mixed = fm.filter(coalesce(col("s_m"), lit(false)))
       .select("doc_id", "lang", "n_tok", "label")
     def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
@@ -977,9 +965,7 @@ object Pipeline extends QueryModule {
         col("c_mktsegment").as("mkt"),
         (dec2(col("c_acctbal")) * 100).cast("long").as("cents"),
         coalesce(col("sens"), lit("NONE")).as("sens"))
-    val tmp = graft.Scratch.dir("graft_kanon")
-    base.write.mode("overwrite").parquet(tmp)
-    val st = s.read.parquet(tmp)
+    val st = graft.Scratch.stage("graft_kanon", base)
     def level(lv: Int, width: Int, qi: org.apache.spark.sql.Column) =
       st.groupBy(qi.as("qi"))
         .agg(count(lit(1)).as("n"), countDistinct("sens").as("ldiv"))
@@ -1069,20 +1055,19 @@ object Pipeline extends QueryModule {
     * with passage df, never corpus².
     */
   /** The staged (doc_id, chunk, tok) passage assignment — q273's ≤2-chunk
-    * rule materialized once per input dir per JVM (the graft.Scratch memo
-    * contract) and shared by q278's serving read and q259's sparse leg.
+    * rule memoized per input dir and shared by q278's serving read and
+    * q259's sparse leg.
     * STAGED, not shared lineage: tf and pl both derive from asg, and
     * joining them re-resolves the shared union subtree per consumer —
     * observed: pl's aggregate came back SPLIT BY UNION LEG (two rows
     * pl=4/pl=20 for one (doc, chunk) instead of 24), silently wrong
     * scores. A parquet leaf gives every consumer the same, final rows
     * (and the token fan-out is scanned four times per query anyway). */
-  private val passageAsgCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val passageAsgCache = new graft.Scratch.PerDir[String]
 
   private def passageAsgDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    passageAsgCache.computeIfAbsent(d, _ => {
+    passageAsgCache(d) {
       val over = chunkBudget - chunkStride
       val tk = Tables.fanOut(Tables.documents(s, d), "doc_id")
         .select(col("doc_id"), posexplode(toks).as(Seq("i", "tok")))
@@ -1093,10 +1078,8 @@ object Pipeline extends QueryModule {
           .filter(col("i") % chunkStride < over && col("i") >= chunkStride)
           .select(col("doc_id"), expr(s"i div $chunkStride - 1").as("chunk"),
             col("tok")))
-      val tmp = graft.Scratch.dir("graft_passage_asg")
-      asgRaw.write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+      graft.Scratch.write("graft_passage_asg", asgRaw)
+    }
 
   val passageRetrieval: Q = (s, d) => {
     val asg = s.read.parquet(passageAsgDir(s, d))

@@ -153,13 +153,12 @@ object Similarity extends QueryModule {
     * candidates; verify joins are shuffle-hash (broadcast dies at 100 TB,
     * sort-merge would sort the candidate mass twice).
     */
-  /** The staged mutual-kNN edge list (canonical u < v), built once per
-    * input dir per JVM (the stagedPairs contract): the degree audit
+  /** The staged mutual-kNN edge list (canonical u < v), memoized per
+    * input dir: the degree audit
     * (q189) and the graph-ANN search (q246) read the SAME staged graph —
     * exactly the artifact split a serving deployment runs, where the
     * index BUILD is offline and searches only load the edge list. */
-  private val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val knnGraphCache = new graft.Scratch.PerDir[String]
 
   /** The kNN-graph BUILD dataflow (candidate join → scoring → top-5
     * rank → mutuality join), exposed separately from the staged artifact
@@ -207,11 +206,7 @@ object Similarity extends QueryModule {
 
   private def knnGraphDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    knnGraphCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_knn_graph")
-      knnGraphBuild(s, d).write.mode("overwrite").parquet(dir)
-      dir
-    })
+    knnGraphCache(d)(graft.Scratch.write("graft_knn_graph", knnGraphBuild(s, d)))
 
   val knnGraph: Q = (s, d) => {
     val b = base(s, d)
@@ -611,23 +606,20 @@ object Similarity extends QueryModule {
     // Stage the ≤ recallSampleN·beamWidth-row beam per hop instead (the
     // q106/q250 loop lineage discipline): each hop is then one join +
     // one score + one rank over a parquet leaf, linear in hops.
-    var beamDir = graft.Scratch.dir("graft_annr_b0")
-    score(routed.unionByName(floor).distinct())
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9")
-      .write.mode("overwrite").parquet(beamDir)
+    var beamDir = graft.Scratch.write("graft_annr_b0",
+      score(routed.unionByName(floor).distinct())
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
     for (h <- 1 to beamHops) {
       val beam = s.read.parquet(beamDir)
       val nbrs = beam.join(ed, beam("node") === ed("u"))
         .select(col("q_id"), col("v").as("node"))
         .filter(col("node") =!= col("q_id"))
       val cand = beam.select("q_id", "node").unionByName(nbrs).distinct()
-      val nextDir = graft.Scratch.dir(s"graft_annr_b$h")
-      score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9")
-        .write.mode("overwrite").parquet(nextDir)
-      beamDir = nextDir
+      beamDir = graft.Scratch.write(s"graft_annr_b$h",
+        score(cand)
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
     }
     val beam = s.read.parquet(beamDir)
     val top1 = beam.withColumn("rn", row_number().over(w))
@@ -779,39 +771,34 @@ object Similarity extends QueryModule {
   private def isDeltaVec = col("vec_id") % 10 === 7
 
   /** Corpus-side IVF index for q235 — pivots + HOME-cell assignments of
-    * the NON-delta vectors, staged to parquet once per input dir per JVM
-    * (the q114 corpusIndex contract on the embedding side): the index is
+    * the NON-delta vectors, memoized per input dir (the q114 corpusIndex
+    * shape on the embedding side): the index is
     * built when the corpus is ingested; each delta batch only PROBES it.
     * Pivots are the corpus vectors with vec_id < 64 (deterministic,
     * DuckDB-reproducible — k-means centroids swap in via ivfIndex's
     * pivot-agnostic contract at scale).
     */
-  private val embIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val embIndexCache = new graft.Scratch.PerDir[(String, String)]
 
   private def embCorpusIndex(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val (pivDir, homeDir) = embIndexCache.computeIfAbsent(d, _ => {
-      val pp = graft.Scratch.dir("graft_ivf_pivots") // reaped at JVM exit
-      val hp = graft.Scratch.dir("graft_ivf_cells")
+    val (pivDir, homeDir) = embIndexCache(d) {
       val corpus = base(s, d).filter(!isDeltaVec)
-      corpus.filter(col("vec_id") < 64).select(
+      val pp = graft.Scratch.write("graft_ivf_pivots",
+        corpus.filter(col("vec_id") < 64).select(
           col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-          col("sq").as("p_sq"))
-        .write.mode("overwrite").parquet(pp)
+          col("sq").as("p_sq")))
       val pivots = s.read.parquet(pp)
       val psim = cosineWithNorms(
         dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(col("psim9").desc, col("pivot_id"))
-      corpus.crossJoin(broadcast(pivots))
+      (pp, graft.Scratch.write("graft_ivf_cells", corpus.crossJoin(broadcast(pivots))
         .withColumn("psim9", round(psim, 9))
         .withColumn("arn", row_number().over(wAssign))
         .filter(col("arn") === 1)
         .select(col("vec_id"), col("embedding"), col("sq"),
-          col("pivot_id").as("cell_id"))
-        .write.mode("overwrite").parquet(hp)
-      (pp, hp)
-    })
+          col("pivot_id").as("cell_id"))))
+    }
     (s.read.parquet(pivDir), s.read.parquet(homeDir))
   }
 
@@ -1071,8 +1058,7 @@ object Similarity extends QueryModule {
     // discipline: the loop must consume LEAF scans (the live
     // assignment/window subtree re-planned under the loop's narrow
     // shuffle width compounded per round and blew up past ~8 rounds)
-    val tmpE = graft.Scratch.dir("graft_sem_edges")
-    edges.write.mode("overwrite").parquet(tmpE)
+    val tmpE = graft.Scratch.write("graft_sem_edges", edges)
     val nodes = corpus.select(col("vec_id").as("doc_id"))
     val labels = Dedup.ccMinLabels(s, nodes, s.read.parquet(tmpE))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
@@ -1172,21 +1158,19 @@ object Similarity extends QueryModule {
 
   /** q263/q272 shared artifacts — (staged micro-integerized vector dir,
     * the k chosen centers in selection order with selection-time radius²,
-    * the final min-dist dir, the covering radius²) — run ONCE per input
-    * dir per JVM (the triArtifacts memo contract): the selection readout
+    * the final min-dist dir, the covering radius²) — memoized per input
+    * dir: the selection readout
     * (q263) and the coverage audit (q272) consume the same traversal. */
-  private val kcenterCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Vector[(Long, Seq[Long], Long)], String, Long)]()
+  private val kcenterCache =
+    new graft.Scratch.PerDir[(String, Vector[(Long, Seq[Long], Long)], String, Long)]
 
   private[graft] def kcenterArtifacts(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Vector[(Long, Seq[Long], Long)], String, Long) =
-    kcenterCache.computeIfAbsent(d, _ => {
-      val tmp = graft.Scratch.dir("graft_kcenter_vecs")
-      Tables.embeddings(s, d)
+    kcenterCache(d) {
+      val tmp = graft.Scratch.write("graft_kcenter_vecs", Tables.embeddings(s, d)
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
-            .as("qv"))
-        .write.mode("overwrite").parquet(tmp)
+            .as("qv")))
       val vecs = s.read.parquet(tmp)
       val seed = vecs
         .select(col("vec_id"), col("qv"),
@@ -1194,9 +1178,8 @@ object Similarity extends QueryModule {
         .orderBy(col("sq").desc, col("vec_id")).limit(1)
         .select("vec_id", "qv").collect()(0)
       var chosen = Vector((seed.getLong(0), seed.getSeq[Long](1), -1L))
-      var mindDir = graft.Scratch.dir("graft_kcenter_d0")
-      vecs.select(col("vec_id"), kcenterDistExpr(chosen.head._2).as("d"))
-        .write.mode("overwrite").parquet(mindDir)
+      var mindDir = graft.Scratch.write("graft_kcenter_d0",
+        vecs.select(col("vec_id"), kcenterDistExpr(chosen.head._2).as("d")))
       for (r <- 1 until kcenterK) {
         val mind = s.read.parquet(mindDir)
         val pick = mind
@@ -1205,15 +1188,13 @@ object Similarity extends QueryModule {
           .join(vecs, "vec_id").select("vec_id", "d", "qv").collect()
         require(pick.nonEmpty, s"k-center round $r: corpus exhausted below k=$kcenterK")
         chosen = chosen :+ ((pick(0).getLong(0), pick(0).getSeq[Long](2), pick(0).getLong(1)))
-        val next = graft.Scratch.dir(s"graft_kcenter_d$r")
-        kcenterRoundUpdate(vecs, mind, chosen.last._2)
-          .write.mode("overwrite").parquet(next)
-        mindDir = next
+        mindDir = graft.Scratch.write(s"graft_kcenter_d$r",
+          kcenterRoundUpdate(vecs, mind, chosen.last._2))
       }
       val covering = s.read.parquet(mindDir).agg(max("d"))
         .collect()(0).getLong(0)
       (tmp, chosen, mindDir, covering)
-    })
+    }
 
   val kcenterCoreset: Q = (s, d) => {
     import s.implicits._
@@ -1292,16 +1273,14 @@ object Similarity extends QueryModule {
     * same-cell candidates, complement) and q287 twice; without staging
     * each consumer re-runs the O(n·64) broadcast assignment cross
     * (observed: 6 redundant nested-loop subtrees in q286's plan).
-    * Memoized per input dir per JVM (the [[graft.Scratch]] staging-memo
-    * contract: fixtures immutable per JVM, tiny key cardinality) so
-    * q286 and q287 genuinely read the SAME leaf — one assignment cross
+    * Memoized per input dir ([[graft.Scratch.PerDir]]) so q286 and q287
+    * genuinely read the SAME leaf — one assignment cross
     * per run, not one per consumer query. */
-  private val homeCellsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val homeCellsCache = new graft.Scratch.PerDir[String]
 
   private def homeCellsDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    homeCellsCache.computeIfAbsent(d, _ => {
+    homeCellsCache(d) {
       val corpus = base(s, d)
       val pivots = corpus.filter(col("vec_id") < 64).select(
         col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
@@ -1310,16 +1289,13 @@ object Similarity extends QueryModule {
         dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
       val wAssign = Window.partitionBy("vec_id")
         .orderBy(col("psim9").desc, col("pivot_id"))
-      val dir = graft.Scratch.dir("graft_home_cells")
-      corpus.crossJoin(broadcast(pivots))
+      graft.Scratch.write("graft_home_cells", corpus.crossJoin(broadcast(pivots))
         .withColumn("psim9", round(psim, 9))
         .withColumn("arn", row_number().over(wAssign))
         .filter(col("arn") === 1)
         .select(col("vec_id"), col("embedding"), col("sq"),
-          col("pivot_id").as("cell_id"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+          col("pivot_id").as("cell_id")))
+    }
 
   val tripletMining: Q = (s, d) => {
     val assigned = s.read.parquet(homeCellsDir(s, d))

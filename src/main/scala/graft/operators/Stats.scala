@@ -1072,20 +1072,17 @@ object Stats extends QueryModule {
     * var(Y−θX) = var(Y) − cov²/var(X).
     */
   /** The staged q308 per-user metric frame (pre/post purchases x/y, md5
-    * arm, first-seen assignment day d0, full-window clicks cl), MEMOIZED
-    * per input dir (the [[graft.Scratch]] staging-memo contract — fixture
-    * dirs are immutable per JVM): q308's moments + adjusted passes,
+    * arm, first-seen assignment day d0, full-window clicks cl), memoized
+    * per input dir ([[graft.Scratch.PerDir]]): q308's moments + adjusted passes,
     * q322's power analysis, q329's rank-sum, q331's SRM audit, q332's
     * ratio-metric delta method, and q333's arm totals ALL read the ONE
     * per-user corpus reduce instead of each re-running the event scan
     * (each consumer prunes the columns it needs at the leaf scan). */
-  private val cupedLeafCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cupedLeafCache = new graft.Scratch.PerDir[String]
 
   private def cupedLeaf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val leaf = cupedLeafCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_cuped")
+    val leaf = cupedLeafCache(d) {
       val ev = Tables.events(s, d)
         .select(col("user_id"), to_date(col("ts")).as("day"),
           when(col("event_type") === "purchase", 1L).otherwise(0L).as("p"),
@@ -1094,7 +1091,7 @@ object Stats extends QueryModule {
         .select(expr(
           "date_add(d0, CAST((datediff(d1, d0) + 1) div 2 AS INT))")
           .as("split"))
-      ev.crossJoin(broadcast(bounds))
+      graft.Scratch.write("graft_cuped", ev.crossJoin(broadcast(bounds))
         .groupBy("user_id")
         .agg(sum(when(col("day") < col("split"), col("p")).otherwise(0L))
             .as("x"),
@@ -1103,10 +1100,8 @@ object Stats extends QueryModule {
           min("day").as("d0"),
           sum("c").as("cl"))
         .withColumn("arm",
-          graft.functions.Hashing.md5Bucket(col("user_id"), 2))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+          graft.functions.Hashing.md5Bucket(col("user_id"), 2)))
+    }
     s.read.parquet(leaf)
   }
 
@@ -3395,30 +3390,26 @@ object Stats extends QueryModule {
   /** The shared q187/q315 two-sample value histogram: order totals in
     * cents, base = first half of the date range vs current = second,
     * collapsed to one (value, base count, current count) row per
-    * DISTINCT value (q173's cardinality discipline). STAGED and
-    * memoized per input dir per JVM (the [[graft.Scratch]] contract):
-    * the cumulative pass and the totals pass of either statistic — and
+    * DISTINCT value (q173's cardinality discipline). Memoized per input
+    * dir ([[graft.Scratch.PerDir]]): the cumulative pass and the totals
+    * pass of either statistic — and
     * both statistics in one run — read the leaf, so the corpus is
     * scanned ONCE. */
-  private val driftHistCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val driftHistCache = new graft.Scratch.PerDir[String]
 
   private def driftHist(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val leaf = driftHistCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_drift")
+    val leaf = driftHistCache(d) {
       val o = Tables.orders(s, d).select(to_date(col("o_orderdate")).as("dt"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("pq"))
       val span = o.agg(min("dt").as("dmin"), max("dt").as("dmax"))
-      o.crossJoin(broadcast(span))
+      graft.Scratch.write("graft_drift", o.crossJoin(broadcast(span))
         .select(col("pq"),
           when(col("dt") <= expr(
             "date_add(dmin, CAST(datediff(dmax, dmin) div 2 AS INT))"),
             lit(1L)).otherwise(lit(0L)).as("is_base"))
         .groupBy("pq").agg(
-          sum("is_base").as("b"), sum(lit(1L) - col("is_base")).as("c"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+          sum("is_base").as("b"), sum(lit(1L) - col("is_base")).as("c")))
+    }
     s.read.parquet(leaf)
   }
 
@@ -3586,30 +3577,26 @@ object Stats extends QueryModule {
   private val kmCensorDays = 90
 
   /** The staged per-customer survival frame (duration t, churn flag, md5
-    * arm), MEMOIZED per input dir (the [[graft.Scratch]] staging-memo
-    * contract — fixture dirs are immutable per JVM): q267's Kaplan–Meier
+    * arm), memoized per input dir ([[graft.Scratch.PerDir]]): q267's
+    * Kaplan–Meier
     * and q330's log-rank both read the ONE per-customer reduce instead
     * of each re-running the orders scan. The arm column costs q267
     * nothing (pruned at its scan) and gives q330 its two samples. */
-  private val survivalLeafCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val survivalLeafCache = new graft.Scratch.PerDir[String]
 
   private def survivalLeaf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val leaf = survivalLeafCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_survival")
+    val leaf = survivalLeafCache(d) {
       val cust = Tables.orders(s, d)
         .groupBy("o_custkey")
         .agg(min(to_date(col("o_orderdate"))).as("f"),
           max(to_date(col("o_orderdate"))).as("l"))
       val horizon = cust.agg(max("l").as("dmax"))
-      cust.crossJoin(broadcast(horizon))
+      graft.Scratch.write("graft_survival", cust.crossJoin(broadcast(horizon))
         .select(datediff(col("l"), col("f")).cast("long").as("t"),
           (col("l") < date_sub(col("dmax"), kmCensorDays)).as("churn"),
-          graft.functions.Hashing.md5Bucket(col("o_custkey"), 2).as("arm"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+          graft.functions.Hashing.md5Bucket(col("o_custkey"), 2).as("arm")))
+    }
     s.read.parquet(leaf)
   }
 
@@ -4057,29 +4044,25 @@ object Stats extends QueryModule {
     * deviation²) stays far from the epoch-month-code overflow edge.
     * Calendar-bounded: ≤ a few hundred rows for decades of data at ANY
     * corpus scale. */
-  /** The staged monthly leaf, memoized per input dir per JVM (the
-    * [[graft.Scratch]] staging-memo contract — fixture dirs are
-    * immutable for a JVM's lifetime): SIX consumers (q277, q300, q303,
+  /** The staged monthly leaf, memoized per input dir
+    * ([[graft.Scratch.PerDir]]): SIX consumers (q277, q300, q303,
     * q306, q307, q313) and every self-join branch inside them share ONE
     * corpus rollup instead of re-running it per plan branch. */
-  private val monthlyLeafCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val monthlyLeafCache = new graft.Scratch.PerDir[String]
 
   private def monthlyFrame(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val leaf = monthlyLeafCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_monthly")
+    val leaf = monthlyLeafCache(d) {
       val raw = Tables.orders(s, d)
         .select(((year(to_date(col("o_orderdate"))) * 12) +
           month(to_date(col("o_orderdate"))) - 1).cast("long").as("m"),
           (graft.functions.Exact.dec2(col("o_totalprice")) * 100)
             .cast("long").as("cents"))
         .groupBy("m").agg(sum("cents").as("c"))
-      raw.crossJoin(broadcast(raw.agg(min("m").as("m0"))))
-        .select((col("m") - col("m0")).as("m"), col("c"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
+      graft.Scratch.write("graft_monthly",
+        raw.crossJoin(broadcast(raw.agg(min("m").as("m0"))))
+        .select((col("m") - col("m0")).as("m"), col("c")))
+    }
     s.read.parquet(leaf)
   }
 
@@ -5173,9 +5156,7 @@ object Stats extends QueryModule {
         col("o_custkey") === col("c_custkey"))
       .select(col("key"), col("seg"), col("cents"),
         graft.functions.Hashing.md5Bucket(col("key"), 100).as("b"))
-    val tmp = graft.Scratch.dir("graft_conf")
-    base.write.mode("overwrite").parquet(tmp)
-    val st = s.read.parquet(tmp)
+    val st = graft.Scratch.stage("graft_conf", base)
     val train = st.filter(col("b") < 50).groupBy("seg")
       .agg(expr("CAST(sum(CAST(cents AS DECIMAL(38,0))) div count(1) AS BIGINT)")
           .as("yhat"),

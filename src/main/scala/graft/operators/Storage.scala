@@ -153,13 +153,12 @@ object Storage extends QueryModule {
     val factDir = graft.Scratch.dir("graft_dpp_fact")
     Tables.orders(s, d).repartition(col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(factDir)
-    val dimDir = graft.Scratch.dir("graft_dpp_dim")
     import s.implicits._
-    Seq(("F", "closed"), ("O", "open"), ("P", "closed"))
-      .toDF("status", "lifecycle")
-      .write.mode("overwrite").parquet(dimDir)
+    val dim = graft.Scratch.stage("graft_dpp_dim",
+        Seq(("F", "closed"), ("O", "open"), ("P", "closed"))
+          .toDF("status", "lifecycle"))
+      .filter(col("lifecycle") === "closed")
     val fact = s.read.parquet(factDir)
-    val dim = s.read.parquet(dimDir).filter(col("lifecycle") === "closed")
     fact.join(broadcast(dim), fact("o_orderstatus") === dim("status"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -907,16 +906,14 @@ object Storage extends QueryModule {
       min("l_suppkey").as("smin"), max("l_suppkey").as("smax"))
     // stage the ≤64-cell histogram: the two layout branches of the
     // union would otherwise each re-run the corpus aggregate
-    val tmp = graft.Scratch.dir("graft_hilbert")
-    li.crossJoin(broadcast(ext))
-      .select(expr(
-        "CAST(((l_partkey - pmin) * 8) div (pmax - pmin + 1) AS INT)")
-        .as("pb"),
-        expr("CAST(((l_suppkey - smin) * 8) div (smax - smin + 1) AS INT)")
-          .as("sb"))
-      .groupBy("pb", "sb").agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(tmp)
-    val cells = s.read.parquet(tmp)
+    val cells = graft.Scratch.stage("graft_hilbert",
+      li.crossJoin(broadcast(ext))
+        .select(expr(
+          "CAST(((l_partkey - pmin) * 8) div (pmax - pmin + 1) AS INT)")
+          .as("pb"),
+          expr("CAST(((l_suppkey - smin) * 8) div (smax - smin + 1) AS INT)")
+            .as("sb"))
+        .groupBy("pb", "sb").agg(count(lit(1)).as("cnt")))
     val coded = cells.select(col("pb"), col("sb"), col("cnt"),
       expr(hilbertExpr("div")).as("h"), expr(mortonExpr).as("z"))
     val man = coded
@@ -1289,19 +1286,15 @@ object Storage extends QueryModule {
   }
 
   /** The q295 stored index: snapshot A's full digest tree (level, node,
-    * digest, n_rows) staged to parquet once per input dir per JVM (the
-    * Scratch memo contract) — the artifact a maintenance job owns
+    * digest, n_rows) memoized per input dir — the artifact a maintenance
+    * job owns
     * between CDC batches. */
-  private val merkleTreeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val merkleTreeCache = new graft.Scratch.PerDir[String]
 
   private[graft] def merkleTreeDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    merkleTreeCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_merkle_tree")
-      merkleLevels(merkleKeyed(s, d)).write.mode("overwrite").parquet(dir)
-      dir
-    })
+    merkleTreeCache(d)(
+      graft.Scratch.write("graft_merkle_tree", merkleLevels(merkleKeyed(s, d))))
 
   /** q295 — INCREMENTAL MERKLE MAINTENANCE: the repair-job regime
     * q281's Scaladoc names — instead of REBUILDING snapshot B's tree

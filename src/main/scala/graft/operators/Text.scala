@@ -1123,14 +1123,12 @@ object Text extends QueryModule {
     val nDocs = Tables.documents(s, d).agg(count(lit(1)).as("nd"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
       .filter(col("df") <= cosDfCut)
-    val wDir = graft.Scratch.dir("graft_tfidf_w")
-    tf.join(df, "term").crossJoin(broadcast(nDocs))
-      .select(col("doc_id"), col("term"),
-        (col("tf") *
-          expr("CAST(round(ln(CAST(nd AS DOUBLE) / df) * 1000) AS BIGINT)"))
-          .as("w"))
-      .write.mode("overwrite").parquet(wDir)
-    val w = s.read.parquet(wDir)
+    val w = graft.Scratch.stage("graft_tfidf_w",
+      tf.join(df, "term").crossJoin(broadcast(nDocs))
+        .select(col("doc_id"), col("term"),
+          (col("tf") *
+            expr("CAST(round(ln(CAST(nd AS DOUBLE) / df) * 1000) AS BIGINT)"))
+            .as("w")))
     val norms = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("n2"))
     val dot = w.select(col("doc_id").as("d1"), col("term"), col("w").as("w1"))
       .join(w.select(col("doc_id").as("d2"), col("term"), col("w").as("w2"))
@@ -1180,9 +1178,7 @@ object Text extends QueryModule {
       count(lit(1)).as("df"),
       sort_array(collect_list(col("doc_id"))).as("posting"))
       .filter(col("df") >= 2)
-    val tmp = graft.Scratch.dir("graft_inv_index")
-    index.write.mode("overwrite").parquet(tmp)
-    val staged = s.read.parquet(tmp)
+    val staged = graft.Scratch.stage("graft_inv_index", index)
     val terms = staged.orderBy(col("df").desc, col("t")).limit(4)
       .select(col("t"), col("df"), col("posting"))
     terms.alias("a").join(terms.alias("b"), col("a.t") < col("b.t"))
@@ -1433,11 +1429,9 @@ object Text extends QueryModule {
     // that would each re-run the corpus tokenize+trigram against the
     // raw aggregate (the q307 staging lesson); the leaf is
     // vocabulary-sized, not corpus-sized
-    val tmp = graft.Scratch.dir("graft_kn")
-    tri.filter(col("bk") < 80)
-      .groupBy("g2", "g3").agg(count(lit(1)).as("c3"))
-      .write.mode("overwrite").parquet(tmp)
-    val c3 = s.read.parquet(tmp)
+    val c3 = graft.Scratch.stage("graft_kn",
+      tri.filter(col("bk") < 80)
+        .groupBy("g2", "g3").agg(count(lit(1)).as("c3")))
     val ctx = c3.groupBy("g2")
       .agg(sum("c3").as("c2"), count(lit(1)).as("n3"))
     val suf = c3.select(expr("concat_ws(' ', split(g3, ' ')[1], split(g3, ' ')[2])")
@@ -1746,9 +1740,7 @@ object Text extends QueryModule {
           lit("q247: word contains the U+0001 token delimiter")))
           .otherwise(col("w")).as("w"),
         col("f"))
-    val tmp = graft.Scratch.dir("graft_bpe_wf") // reaped at JVM exit
-    wf.write.mode("overwrite").parquet(tmp)
-    val wfS = s.read.parquet(tmp)
+    val wfS = graft.Scratch.stage("graft_bpe_wf", wf)
     var merges = Vector.empty[(String, String, Long)]
     for (round <- 1 to bpeTrainRounds) {
       val chars = s"regexp_replace(w, '(.)', '$m$$1$m')"
@@ -1828,9 +1820,7 @@ object Text extends QueryModule {
       rnd: Int, dpRounds: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val m = bpeDelim
     val wfS = s.read.parquet(wfDir)
-    val vDir = graft.Scratch.dir(s"graft_uni_v$rnd")
-    vocab.write.mode("overwrite").parquet(vDir)
-    val v = s.read.parquet(vDir)
+    val v = graft.Scratch.stage(s"graft_uni_v$rnd", vocab)
     val edges = wfS.select(col("w"), explode(expr(
         s"""flatten(transform(sequence(1, length(w)), i ->
            |  transform(sequence(1, least($unigramPieceMaxLen, length(w) - i + 1)), L ->
@@ -1839,12 +1829,9 @@ object Text extends QueryModule {
       .select(col("w"), col("e.i").as("i"), col("e.j").as("j"),
         col("e.piece").as("piece"))
       .join(broadcast(v), "piece")
-    val eDir = graft.Scratch.dir(s"graft_uni_e$rnd")
-    edges.write.mode("overwrite").parquet(eDir)
-    val edS = s.read.parquet(eDir)
-    var stDir = graft.Scratch.dir(s"graft_uni_dp${rnd}_0")
-    wfS.select(col("w"), lit(1).as("pos"), lit("00").as("packed"))
-      .write.mode("overwrite").parquet(stDir)
+    val edS = graft.Scratch.stage(s"graft_uni_e$rnd", edges)
+    var stDir = graft.Scratch.write(s"graft_uni_dp${rnd}_0",
+      wfS.select(col("w"), lit(1).as("pos"), lit("00").as("packed")))
     // dpRounds = the corpus's measured max word length (<= the cap): the
     // DP reaches its fixpoint once every word's full-length path exists,
     // so rounds past it are provable no-ops — the ORACLE still unrolls
@@ -1872,8 +1859,7 @@ object Text extends QueryModule {
     while (k <= dpRounds) {
       val st = s.read.parquet(stDir)
       val fused = if (k + 1 <= dpRounds) step(step(st)) else step(st)
-      val nextDir = graft.Scratch.dir(s"graft_uni_dp${rnd}_$k")
-      fused.write.mode("overwrite").parquet(nextDir)
+      val nextDir = graft.Scratch.write(s"graft_uni_dp${rnd}_$k", fused)
       stDir = nextDir
       k += (if (k + 1 <= dpRounds) 2 else 1)
     }
@@ -1921,8 +1907,7 @@ object Text extends QueryModule {
       .select(when(instr(col("w"), m) > 0,
           raise_error(lit("q279: word contains the U+0001 piece delimiter")))
         .otherwise(col("w")).as("w"), col("f"))
-    val tmp = graft.Scratch.dir("graft_uni_wf")
-    wf.write.mode("overwrite").parquet(tmp)
+    val tmp = graft.Scratch.write("graft_uni_wf", wf)
     val wfS = s.read.parquet(tmp)
     val maxLen = wfS.agg(max(length(col("w")))).head().getInt(0)
     require(maxLen <= unigramMaxWordLen,
@@ -2007,13 +1992,9 @@ object Text extends QueryModule {
     val bi = und.select(col("l").as("u"), col("r").as("v"), col("wt"))
       .unionByName(und.select(col("r").as("u"), col("l").as("v"), col("wt")))
     val ed = bi.join(bi.groupBy("u").agg(sum("wt").as("wsum")), "u")
-    val tmpE = graft.Scratch.dir("graft_textrank_e")
-    ed.write.mode("overwrite").parquet(tmpE)
-    val edges = s.read.parquet(tmpE)
-    val tmpN = graft.Scratch.dir("graft_textrank_n")
-    edges.select(col("u").as("node")).distinct()
-      .write.mode("overwrite").parquet(tmpN)
-    val nodes = s.read.parquet(tmpN)
+    val edges = graft.Scratch.stage("graft_textrank_e", ed)
+    val nodes = graft.Scratch.stage("graft_textrank_n",
+      edges.select(col("u").as("node")).distinct())
     var ranks = nodes.select(col("node"), lit(1000000L).as("pr"))
     for (_ <- 1 to textrankIters) {
       val inbound = edges.join(ranks, edges("u") === ranks("node"))
@@ -2679,17 +2660,15 @@ object Text extends QueryModule {
     * leaf → Laplace-smoothed micro log scores per held-out doc and
     * class. See [[naiveBayes]] for the full scoring notes. */
   /** The trained (class, term) count leaf and the |classes|-row literal
-    * table, staged/collected ONCE per input dir per JVM (the staging-memo
-    * contract, Scratch.scala): FIVE queries consume the identical trained
+    * table, staged/collected ONCE per input dir ([[graft.Scratch.PerDir]]):
+    * FIVE queries consume the identical trained
     * filter (q320 confusion, q356 reliability, q358 conformal, q360
     * Mondrian, q363 isotonic) and before round 17 each re-tokenized the
     * train fold, re-aggregated the count leaf and re-collected the class
     * table for itself. The train fold (bk < 80) is a JVM constant, so
     * both artifacts are pure functions of the input dir — the memo key. */
-  private val nbNtcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val nbClassesCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Long, Long)]]()
+  private val nbNtcCache = new graft.Scratch.PerDir[String]
+  private val nbClassesCache = new graft.Scratch.PerDir[Seq[(String, Long, Long, Long)]]
 
   private def nbScored(s: org.apache.spark.sql.SparkSession,
       d: String, foldLo: Int = 90): org.apache.spark.sql.DataFrame = {
@@ -2697,21 +2676,16 @@ object Text extends QueryModule {
     val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), col("lang"),
         filter(toks, t => length(t) > 0).as("tk"), bucket.as("bk"))
-    val tmp = nbNtcCache.computeIfAbsent(d, _ => {
-      val dir = graft.Scratch.dir("graft_nb")
+    val ntc = s.read.parquet(nbNtcCache(d)(graft.Scratch.write("graft_nb",
       docs.filter(col("bk") < 80)
         .select(col("lang").as("cls"), explode(col("tk")).as("term"))
-        .groupBy("cls", "term").agg(count(lit(1)).as("ntc"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    })
-    val ntc = s.read.parquet(tmp)
+        .groupBy("cls", "term").agg(count(lit(1)).as("ntc")))))
     // the class table is language-taxonomy-bounded (one row per class),
     // so it is collected ONCE (the q298 metadata-sync rule) and
     // re-broadcast as a literal — without this, the contrib and scored
     // branches would each re-run the leaf aggregates and the pruned
     // prior scan (Spark plans are trees, the recurring seam)
-    val classesRows = nbClassesCache.computeIfAbsent(d, _ => {
+    val classesRows = nbClassesCache(d) {
       val nc = ntc.groupBy("cls").agg(sum("ntc").as("n_c"))
       val vocab = ntc.select("term").distinct().agg(count(lit(1)).as("v"))
       val priors = docs.filter(col("bk") < 80)
@@ -2725,7 +2699,7 @@ object Text extends QueryModule {
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSeq
-    })
+    }
     import s.implicits._
     val classes = classesRows.toDF("cls", "n_c", "v", "prior_mu")
     val testDocs = docs.filter(col("bk") >= foldLo)

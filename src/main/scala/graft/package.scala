@@ -2,6 +2,27 @@ package object graft {
   /** Driver contract: a named query is (session, sfDir) => result DataFrame. */
   type Q = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
 
+  /** The local session Bench, Verify and the specs run on: `cpus` cores
+    * and as many shuffle partitions, UTC.
+    */
+  def localSession(cpus: Int): org.apache.spark.sql.SparkSession =
+    org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet is TIMESTAMP(NANOS); see Tables.events
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // native vec_dot/vec_sqnorm expressions (graft.functions.VecExprs)
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      // 80+ queries in one session accumulate dead broadcasts, shuffle
+      // files and checkpoint blocks that the ContextCleaner only reclaims
+      // after a GC notices them; the default periodic GC (30 min) never
+      // fires inside a bench run, so late queries pay the debris as heap
+      // pressure. One forced GC a minute keeps the session flat.
+      .config("spark.cleaner.periodicGC.interval", "60s")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to `n`,
     * restoring the previous value afterwards. Shuffle width is a per-STAGE
     * sizing decision, not a per-session constant: an iterative loop over a

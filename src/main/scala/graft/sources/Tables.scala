@@ -33,9 +33,9 @@ object Tables {
     * instead of hard-coding one:
     *   - LongType → nanos: truncate with integer `div` (a double division
     *     would lose bits above 2^53), then `timestamp_micros`. Requires the
-    *     nanosAsLong flag, set once in the session builders (Verify/Bench/
-    *     SparkSpec) — a reader must not mutate session-global conf as a
-    *     side effect.
+    *     nanosAsLong flag, set once in the session builder
+    *     ([[graft.localSession]]) — a reader must not mutate session-global
+    *     conf as a side effect.
     *   - TIMESTAMP_NTZ → cast to TIMESTAMP. Value-preserving under the
     *     pinned UTC session zone, and keeps every downstream operator on
     *     the one type (window ranges, watermarks) they were built against.

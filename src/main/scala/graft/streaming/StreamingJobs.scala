@@ -854,16 +854,15 @@ object StreamingJobs extends QueryModule {
     * shared by q285/q294 (the source processes oldest-first, making
     * arrival order = event-time order, the per-key in-order contract
     * both state machines document). Columns: (event_id, user_id,
-    * event_type, t = unix_micros(ts)). Memoized per input dir per JVM
-    * (the Scratch memo contract): the staged files are read-only source
+    * event_type, t = unix_micros(ts)). Memoized per input dir
+    * ([[graft.Scratch.PerDir]]): the staged files are read-only source
     * input and each streaming query keeps its OWN checkpoint dir, so
     * q285/q294 sharing one staging is safe and saves a full events scan
     * + 8 writes per additional streaming query per run. */
-  private val eventRangesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val eventRangesCache = new graft.Scratch.PerDir[String]
 
   private def stageEventRanges(s: SparkSession, d: String): String =
-    eventRangesCache.computeIfAbsent(d, _ =>
+    eventRangesCache(d)(
       stageEventRangesInto(s, d, graft.Scratch.dir("graft_stream_src")))
 
   private def stageEventRangesInto(s: SparkSession, d: String,

@@ -5,16 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session: one per suite (lazy), UTC, small shuffle width. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet is TIMESTAMP(NANOS); see Tables.events
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // native vec_dot/vec_sqnorm expressions (graft.functions.VecExprs)
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = localSession(4)
 
   val sf: String = "/root/testdata/sf0.001"
 
