@@ -2,6 +2,8 @@
 # Run graft.Verify on compiled classes without sbt startup overhead.
 # Usage: scripts/run_verify.sh [sfDir] [outDir]
 set -e
+# compiled classes of the checkout this script lives in
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 rm -rf "$OUT"
@@ -13,5 +15,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   graft.Verify "$SF" "$OUT"

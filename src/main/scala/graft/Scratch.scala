@@ -3,7 +3,8 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Scratch staging for operators that persist intermediates on disk. The
   * staging decision lives here, once: parquet, written with mode
@@ -17,6 +18,10 @@ import org.apache.spark.sql.DataFrame
   *  - [[write]] / [[stage]]: write a frame once to a fresh dir and return
   *    the dir / read it back (a lineage cut: every later reference is a
   *    parquet leaf scan, not a re-execution of the plan).
+  *  - [[read]]: read a [[write]] dir back with the schema recorded at
+  *    write time. An unbound `read.parquet(dir)` runs a one-task Spark job
+  *    to infer the schema from a footer on EVERY call; a bound read runs
+  *    none.
   *  - [[PerDir]]: a per-INPUT-DIR memo of a staged artifact for the JVM's
   *    lifetime — one instance per artifact family. The first query touching
   *    a family pays the build, every later query reads the parquet leaf.
@@ -36,9 +41,23 @@ import org.apache.spark.sql.DataFrame
   *     the unbounded-map growth mode is bounded by the harness's world.
   *     A long-lived service would swap [[PerDir]] for a TTL'd cache keyed
   *     on a snapshot/version id — this class is the seam.
+  *
+  * == Schema binding ([[read]], [[graft.sources.Tables.table]]) ==
+  *  - The schema memos rest on contract 1: a dir's bytes do not change
+  *    within the JVM, so its schema, once known, is its schema for the
+  *    JVM's life. [[write]] never reuses a dir; a dir that code writes more
+  *    than once (loop state, layouts, streaming sinks) is a raw [[dir]] and
+  *    is read unbound.
+  *  - The schema [[write]] records is exact: it is the frame's own
+  *    schema, which is what the parquet writer stores in the footer, and
+  *    Spark's parquet read applies `asNullable` to a user-given schema
+  *    just as it does to an inferred one, so the bound read and an
+  *    inferring read resolve to the same schema.
+  *  - [[drop]] forgets the dir's recorded schema.
   */
 object Scratch {
   private val created = mutable.ArrayBuffer.empty[Path]
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   private lazy val hookInstalled: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -69,23 +88,36 @@ object Scratch {
     p.toString
   }
 
-  /** Delete a scratch dir early (it stays registered; the exit hook's
-    * second delete is a no-op).
+  /** Delete a scratch dir early and forget its recorded schema (it stays
+    * registered; the exit hook's second delete is a no-op).
     */
-  def drop(dir: String): Unit = deleteRecursively(Paths.get(dir))
+  def drop(dir: String): Unit = {
+    schemas.remove(dir)
+    deleteRecursively(Paths.get(dir))
+  }
 
-  /** Write `df` once to a fresh scratch dir; returns the dir. */
+  /** Write `df` once to a fresh scratch dir and record its schema for
+    * [[read]]; returns the dir.
+    */
   def write(prefix: String, df: DataFrame): String = {
     val d = dir(prefix)
     df.write.mode("overwrite").parquet(d)
+    schemas.put(d, df.schema)
     d
+  }
+
+  /** Read a dir that [[write]] produced, bound to its recorded schema. */
+  def read(s: SparkSession, dir: String): DataFrame = {
+    val st = schemas.get(dir)
+    require(st != null, s"Scratch.read: $dir was not produced by Scratch.write")
+    s.read.schema(st).parquet(dir)
   }
 
   /** Write `df` once to a fresh scratch dir and read it back in `df`'s
     * session.
     */
   def stage(prefix: String, df: DataFrame): DataFrame =
-    df.sparkSession.read.parquet(write(prefix, df))
+    read(df.sparkSession, write(prefix, df))
 
   /** A per-input-dir memo for ONE artifact family (contract above).
     *

@@ -152,7 +152,7 @@ object Dedup extends QueryModule {
   }
 
   private def stagedCands(s: org.apache.spark.sql.SparkSession, d: String) =
-    s.read.parquet(candCache(d)(graft.Scratch.write("graft_mh_cands", candJoin(s, d))))
+    graft.Scratch.read(s, candCache(d)(graft.Scratch.write("graft_mh_cands", candJoin(s, d))))
 
   /** [[hashedSets]] memoized per input dir: an unstaged plan
     * that references the hashed-set table k times re-tokenizes and
@@ -164,7 +164,7 @@ object Dedup extends QueryModule {
   private val hsCache = new graft.Scratch.PerDir[String]
 
   private def stagedHashedSets(s: org.apache.spark.sql.SparkSession, d: String) =
-    s.read.parquet(hsCache(d)(
+    graft.Scratch.read(s, hsCache(d)(
       graft.Scratch.write("graft_mh_hs", hashedSets(tokenSets(s, d)))))
 
   private[graft] def verifiedPairs(s: org.apache.spark.sql.SparkSession, d: String) = {
@@ -214,7 +214,7 @@ object Dedup extends QueryModule {
   private val stagedCache = new graft.Scratch.PerDir[String]
 
   private def stagedPairs(s: org.apache.spark.sql.SparkSession, d: String) =
-    s.read.parquet(stagedCache(d)(
+    graft.Scratch.read(s, stagedCache(d)(
       graft.Scratch.write("graft_mh_pairs", verifiedPairs(s, d))))
 
   /** q37 — per-document near-dup verdict: how many verified neighbors at
@@ -351,7 +351,7 @@ object Dedup extends QueryModule {
   // consumes the SAME staged label table the dedup family shares — the
   // integration point is the artifact, not a recomputation.
   private[graft] def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String) =
-    s.read.parquet(labelCache(d)(
+    graft.Scratch.read(s, labelCache(d)(
       graft.Scratch.write("graft_cc_labels", computeLabels(s, d))))
 
   private def computeLabels(s: org.apache.spark.sql.SparkSession,
@@ -570,7 +570,7 @@ object Dedup extends QueryModule {
       (graft.Scratch.write("graft_mh_index_sigs", bandSigs(s, t)),
         graft.Scratch.write("graft_mh_index_sets", hashedSets(t)))
     }
-    (s.read.parquet(sigDir), s.read.parquet(setDir))
+    (graft.Scratch.read(s, sigDir), graft.Scratch.read(s, setDir))
   }
 
   /** q114 — INCREMENTAL near-dup: a delta batch checked against the staged
@@ -740,7 +740,7 @@ object Dedup extends QueryModule {
   val streamDeltaDedup: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     val (ixSigs, ixSets) = corpusIndex(s, d)
-    val schema = s.read.parquet(s"$d/documents.parquet").schema
+    val schema = Tables.documents(s, d).schema
     val delta = s.readStream.schema(schema).parquet(s"$d/documents.*")
       .filter(isDelta)
     val tmp = graft.Scratch.dir("graft_stream_deltadedup")

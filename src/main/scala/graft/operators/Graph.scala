@@ -39,7 +39,7 @@ object Graph extends QueryModule {
   val pageRank: Q = (s, d) => {
     // distinct FK pairs off the shared staged leaf (one DISTINCT per
     // session, not per query); both references below are leaf scans
-    val raw = s.read.parquet(purchasePairsDir(s, d))
+    val raw = graft.Scratch.read(s, purchasePairsDir(s, d))
       .select(col("o").as("src"), (col("p") + lit(partOffset)).as("dst"))
     val withDeg = raw.join(
       raw.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
@@ -81,7 +81,7 @@ object Graph extends QueryModule {
     */
   val pprSeedNation = 3
   val personalizedPageRank: Q = (s, d) => {
-    val raw = s.read.parquet(purchasePairsDir(s, d))
+    val raw = graft.Scratch.read(s, purchasePairsDir(s, d))
       .select(col("o").as("src"), (col("p") + lit(partOffset)).as("dst"))
     val bi = raw.union(raw.select(col("dst").as("src"), col("src").as("dst")))
     val withDeg = bi.join(
@@ -137,7 +137,7 @@ object Graph extends QueryModule {
   val hits: Q = (s, d) => {
     // the shared purchase-pair leaf IS the HITS edge list — read it
     // directly instead of re-running the distinct and re-staging a copy
-    val edges = s.read.parquet(purchasePairsDir(s, d))
+    val edges = graft.Scratch.read(s, purchasePairsDir(s, d))
     var hub = edges.select(col("o")).distinct()
       .select(col("o"), lit(initRank).as("h"))
     var auth: org.apache.spark.sql.DataFrame = null
@@ -238,7 +238,7 @@ object Graph extends QueryModule {
   private[graft] def coPairsDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     coPairCache(d) {
-      val items = s.read.parquet(purchasePairsDir(s, d))
+      val items = graft.Scratch.read(s, purchasePairsDir(s, d))
       val pm = items.alias("a").join(items.alias("b"),
           col("a.o") === col("b.o") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("u"), col("b.p").as("v"))
@@ -253,7 +253,7 @@ object Graph extends QueryModule {
     * the per-query self-join rebuilds. */
   private def repeatEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(coPairsDir(s, d)).filter(col("m") >= 2).select("u", "v")
+    graft.Scratch.read(s, coPairsDir(s, d)).filter(col("m") >= 2).select("u", "v")
 
   /** q138/q265 shared artifacts — (canonical co-purchase edge dir,
     * degree-ORIENTED edge dir) — memoized per input dir: the global
@@ -270,9 +270,9 @@ object Graph extends QueryModule {
       // canonical (u < v) edges = the m ≥ 1 projection of the shared
       // co-purchase leaf; staged narrow (two columns) because the loops
       // and walks downstream scan this leaf many times
-      val rawEdges = s.read.parquet(coPairsDir(s, d)).select("u", "v")
+      val rawEdges = graft.Scratch.read(s, coPairsDir(s, d)).select("u", "v")
       val tmpE = graft.Scratch.write("graft_tri_edges", rawEdges)
-      val edges = s.read.parquet(tmpE)
+      val edges = graft.Scratch.read(s, tmpE)
       val deg = edges.select(col("u").as("x"))
         .union(edges.select(col("v").as("x")))
         .groupBy("x").agg(count(lit(1)).as("dg"))
@@ -288,11 +288,11 @@ object Graph extends QueryModule {
 
   val triangleCount: Q = (s, d) => {
     val (edgeDir, orientedDir) = triArtifacts(s, d)
-    val edges = s.read.parquet(edgeDir)
+    val edges = graft.Scratch.read(s, edgeDir)
     val deg = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("dg"))
-    val staged = s.read.parquet(orientedDir)
+    val staged = graft.Scratch.read(s, orientedDir)
     // adjacency-intersection form: T = Σ over oriented edges (u→v) of
     // |N⁺(u) ∩ N⁺(v)| — the orientation is acyclic, so triangle a→b→c is
     // counted exactly once, at edge (a→b) with c in both out-lists. One
@@ -341,11 +341,11 @@ object Graph extends QueryModule {
     */
   val localClustering: Q = (s, d) => {
     val (edgeDir, orientedDir) = triArtifacts(s, d)
-    val edges = s.read.parquet(edgeDir)
+    val edges = graft.Scratch.read(s, edgeDir)
     val deg = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("dg"))
-    val staged = s.read.parquet(orientedDir)
+    val staged = graft.Scratch.read(s, orientedDir)
     val adj = staged.groupBy("s").agg(sort_array(collect_list("t")).as("nbrs"))
     val triples = staged
       .join(adj.select(col("s").as("ju"), col("nbrs").as("nu")),
@@ -400,7 +400,7 @@ object Graph extends QueryModule {
     */
   val assortativity: Q = (s, d) => {
     val (edgeDir, _) = triArtifacts(s, d)
-    val edges = s.read.parquet(edgeDir)
+    val edges = graft.Scratch.read(s, edgeDir)
     val deg = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("dg"))
@@ -498,12 +498,12 @@ object Graph extends QueryModule {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     var aliveDir = edgeDir
-    var (prevN, prevCk) = stats(s.read.parquet(aliveDir))
+    var (prevN, prevCk) = stats(graft.Scratch.read(s, aliveDir))
     var converged = false
     val rows = (1 to trussRounds).map { r =>
       if (converged) (r, 0L, prevN, prevCk)
       else {
-        val alive = s.read.parquet(aliveDir)
+        val alive = graft.Scratch.read(s, aliveDir)
         val tri = trussTriples(s, alive)
         val sup = tri.select(explode(array(
             struct(least(col("a"), col("b")).as("u"),
@@ -517,7 +517,7 @@ object Graph extends QueryModule {
         val next = alive.join(sup, Seq("u", "v"))
           .filter(col("sup") >= trussK - 2).select("u", "v")
         val dir2 = graft.Scratch.write(s"graft_truss_a$r", next)
-        val (n, ck) = stats(s.read.parquet(dir2))
+        val (n, ck) = stats(graft.Scratch.read(s, dir2))
         val removed = prevN - n
         aliveDir = dir2
         prevN = n; prevCk = ck
@@ -583,7 +583,7 @@ object Graph extends QueryModule {
     val rows = (1 to trussRounds).map { r =>
       if (converged) (r, 0L, constN, constCk)
       else {
-        val cur = s.read.parquet(supDir) // alive entering round r, with
+        val cur = graft.Scratch.read(s, supDir) // alive entering round r, with
         // support counted within that same alive set
         val st = cur.agg(
           sum(when(col("sup") >= k2, 1L).otherwise(0L)),
@@ -666,7 +666,7 @@ object Graph extends QueryModule {
     val nodes = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x"))).distinct()
     var aliveDir = graft.Scratch.write("graft_core_alive0", nodes)
-    var prevN = s.read.parquet(aliveDir).count()
+    var prevN = graft.Scratch.read(s, aliveDir).count()
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
     var fixpoint: Option[(Long, Long)] = None // (n_alive, checksum)
     for (r <- 1 to coreRounds) {
@@ -679,7 +679,7 @@ object Graph extends QueryModule {
             lit(0L).as("n_removed"), lit(n).as("n_alive"),
             lit(ck).as("alive_checksum"))
         case None =>
-          val alive = s.read.parquet(aliveDir)
+          val alive = graft.Scratch.read(s, aliveDir)
           val live = edges
             .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
             .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
@@ -688,7 +688,7 @@ object Graph extends QueryModule {
             .groupBy("x").agg(count(lit(1)).as("c"))
           val next = deg.filter(col("c") >= coreK).select("x")
           val nextDir = graft.Scratch.write(s"graft_core_alive$r", next)
-          val row = s.read.parquet(nextDir).agg(
+          val row = graft.Scratch.read(s, nextDir).agg(
             count(lit(1)).as("n_alive"),
             coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
           val (curN, ck) = (row.getLong(0), row.getLong(1))
@@ -774,7 +774,7 @@ object Graph extends QueryModule {
       // LOSES later ties that raw 0 would have won — deterministic,
       // engine-identical, and pinned by the q251 value specs; a label
       // ≥ 1e12 or < 0 would corrupt the unpack, hence the domain check.
-      val ext = s.read.parquet(tmpE).groupBy("u")
+      val ext = graft.Scratch.read(s, tmpE).groupBy("u")
         .agg(count(lit(1)).as("deg"))
         .agg(max("deg").as("maxdeg"), min("u").as("minid"),
           max("u").as("maxid")).head()
@@ -789,12 +789,12 @@ object Graph extends QueryModule {
       d: String): (String, String) =
     lpaCache(d) {
       val tmpE = lpaEdgesDir(s, d)
-      val ed = s.read.parquet(tmpE) // both directions: undirected adjacency
+      val ed = graft.Scratch.read(s, tmpE) // both directions: undirected adjacency
       var labelsDir = graft.Scratch.write("graft_lpa_l0",
         ed.select(col("u").as("node")).distinct()
           .select(col("node"), col("node").as("lbl")))
       for (r <- 1 to lpaRounds) {
-        val labels = s.read.parquet(labelsDir)
+        val labels = graft.Scratch.read(s, labelsDir)
         val next = ed
           .join(labels.select(col("node").as("v"), col("lbl")), "v")
           .groupBy(col("u").as("node"), col("lbl"))
@@ -810,7 +810,7 @@ object Graph extends QueryModule {
 
   val labelPropagation: Q = (s, d) => {
     val (_, labelsDir) = lpaArtifacts(s, d)
-    s.read.parquet(labelsDir)
+    graft.Scratch.read(s, labelsDir)
       .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"),
         min(col("node")).as("min_member"),
@@ -842,8 +842,8 @@ object Graph extends QueryModule {
     */
   val modularity: Q = (s, d) => {
     val (edgesDir, labelsDir) = lpaArtifacts(s, d)
-    val ed = s.read.parquet(edgesDir)
-    val labels = s.read.parquet(labelsDir)
+    val ed = graft.Scratch.read(s, edgesDir)
+    val labels = graft.Scratch.read(s, labelsDir)
     val deg = ed.groupBy("u").agg(count(lit(1)).as("dg"))
     val dcTab = labels.join(deg, labels("node") === deg("u"))
       .groupBy("lbl").agg(sum("dg").as("dc"), count(lit(1)).as("n_nodes"))
@@ -905,7 +905,7 @@ object Graph extends QueryModule {
     // the both-direction m ≥ 2 adjacency is EXACTLY the LPA family's
     // staged artifact — read it instead of rebuilding and re-staging an
     // identical copy (same leaf the q155/q251/q253 loops scan)
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     val deg = ed.groupBy("u").agg(count(lit(1)).as("dg"))
     val w = Window.partitionBy("u")
       .orderBy(md5(concat(col("u").cast("string"), lit(":"),
@@ -962,7 +962,7 @@ object Graph extends QueryModule {
     * broadcast-whole.
     */
   val bfsHops: Q = (s, d) => {
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     // both directions staged, so src endpoints alone cover every node
     val nodes = ed.select(col("u").as("x")).distinct()
     // Stage only each round's FRESH slice: the visited set is the union
@@ -1027,7 +1027,7 @@ object Graph extends QueryModule {
     * spec's convergence pin (last entry 0, all earlier entries > 0). */
   private[graft] def bfsConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     val nodes = ed.select(col("u").as("x")).distinct()
     // Fresh-slice staging (the bfsHops discipline): only each round's new
     // nodes are written, the visited set is one multi-path scan over the
@@ -1047,7 +1047,7 @@ object Graph extends QueryModule {
     var dirs = Vector(graft.Scratch.write("graft_bfsc_v0",
       nodes.filter(col("x") % bfsSeedMod === 0)
         .select(col("x"), lit(0).as("dist"))))
-    var frontierN = s.read.parquet(dirs.head).count()
+    var frontierN = graft.Scratch.read(s, dirs.head).count()
     val traj = Seq.newBuilder[Long]
     traj += frontierN
     var r = 0
@@ -1057,16 +1057,16 @@ object Graph extends QueryModule {
         s"q250: BFS still expanding after $bfsMaxRounds rounds — raise " +
           "bfsMaxRounds (and the oracle unroll) together")
       val visited = s.read.parquet(dirs: _*)
-      val frontier = s.read.parquet(dirs.last)
+      val frontier = graft.Scratch.read(s, dirs.last)
       val nbrs = ed.join(frontier.select(col("x").as("u")), "u")
         .select(col("v").as("x")).distinct()
       val fresh = nbrs.join(visited, Seq("x"), "left_anti")
         .select(col("x"), lit(r).as("dist"))
       val nextDir = graft.Scratch.write(s"graft_bfsc_v$r", fresh)
       dirs :+= nextDir
-      // footer-only count; schema given explicitly because the FINAL
-      // slice is empty (0 part files — nothing to infer from)
-      frontierN = s.read.schema(fresh.schema).parquet(nextDir).count()
+      // footer-only count; the bound read also covers the FINAL slice,
+      // which is empty (0 part files — nothing to infer from)
+      frontierN = graft.Scratch.read(s, nextDir).count()
       traj += frontierN
     }
     // the final (empty) slice has no footer to infer from — drop it
@@ -1125,7 +1125,7 @@ object Graph extends QueryModule {
   private def lpaSelfLoopEdgesDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     lpacEdpCache(d) {
-      val ed = s.read.parquet(lpaEdgesDir(s, d))
+      val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
       // self-loops: the self-vote is just one more (u, u) adjacency row
       graft.Scratch.write("graft_lpac_edp", ed.unionByName(
         ed.select(col("u")).distinct().select(col("u"), col("u").as("v"))))
@@ -1135,8 +1135,8 @@ object Graph extends QueryModule {
     * spec's convergence pin (last entry 0, all earlier entries > 0). */
   private[graft] def lpaConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
-    val edp = s.read.parquet(lpaSelfLoopEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
+    val edp = graft.Scratch.read(s, lpaSelfLoopEdgesDir(s, d))
     var labelsDir = graft.Scratch.write("graft_lpac_l0",
       ed.select(col("u").as("node")).distinct()
         .select(col("node"), col("node").as("lbl")))
@@ -1151,7 +1151,7 @@ object Graph extends QueryModule {
           "lpaMaxRounds (and the oracle unroll) together")
       // select the live columns explicitly: rounds ≥ 2 read a leaf that
       // also carries the previous round's plbl audit column
-      val labels = s.read.parquet(labelsDir).select("node", "lbl")
+      val labels = graft.Scratch.read(s, labelsDir).select("node", "lbl")
       val next = edp
         .join(labels.select(col("node").as("v"), col("lbl")), "v")
         .groupBy(col("u").as("node"), col("lbl"))
@@ -1168,7 +1168,7 @@ object Graph extends QueryModule {
       // stays (q250's contract), minus its join.
       val nextDir = graft.Scratch.write(s"graft_lpac_l$r",
         next.join(labels.withColumnRenamed("lbl", "plbl"), "node"))
-      val row = s.read.parquet(nextDir)
+      val row = graft.Scratch.read(s, nextDir)
         .agg(sum(when(col("lbl") =!= col("plbl"), 1L).otherwise(0L))
             .as("n_changed"),
           countDistinct(col("lbl")).as("n_communities"),
@@ -1215,10 +1215,10 @@ object Graph extends QueryModule {
     * spec's convergence pin (last entry 0, all earlier entries > 0). */
   private[graft] def kcoreConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     var aliveDir = graft.Scratch.write("graft_kcorec_a0",
       ed.select(col("u").as("x")).distinct())
-    var prevN = s.read.parquet(aliveDir).count()
+    var prevN = graft.Scratch.read(s, aliveDir).count()
     val traj = Seq.newBuilder[Long]
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
     var removed = -1L
@@ -1228,7 +1228,7 @@ object Graph extends QueryModule {
       require(r <= kcoreMaxRounds,
         s"q252: k-core still peeling after $kcoreMaxRounds rounds — " +
           "raise kcoreMaxRounds (and the oracle unroll) together")
-      val alive = s.read.parquet(aliveDir)
+      val alive = graft.Scratch.read(s, aliveDir)
       val live = ed
         .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
         .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
@@ -1237,7 +1237,7 @@ object Graph extends QueryModule {
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= coreK).select("x")
       val nextDir = graft.Scratch.write(s"graft_kcorec_a$r", next)
-      val row = s.read.parquet(nextDir).agg(
+      val row = graft.Scratch.read(s, nextDir).agg(
         count(lit(1)).as("n_alive"),
         coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
       val curN = row.getLong(0)
@@ -1285,7 +1285,7 @@ object Graph extends QueryModule {
   val incrementalCc: Q = (s, d) => {
     // (u, v, m, m_base) all live on the shared staged co-purchase leaf —
     // no per-query self-join, no second staging of the same rows
-    val pmS = s.read.parquet(coPairsDir(s, d)).filter(col("m") >= 2)
+    val pmS = graft.Scratch.read(s, coPairsDir(s, d)).filter(col("m") >= 2)
     val baseEdges = pmS.filter(col("m_base") >= 2)
       .select(col("u").as("d1"), col("v").as("d2"))
     val newEdges = pmS.filter(col("m_base") < 2).select("u", "v")
@@ -1399,7 +1399,7 @@ object Graph extends QueryModule {
   /** The register-propagation loop body (see the q253 Scaladoc). */
   private def hyperBallLoop(s: org.apache.spark.sql.SparkSession,
       d: String): (Vector[(Int, (Long, Long, Long))], Vector[String]) = {
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     val k = col("node").cast("string")
     val init = ed.select(col("u").as("node")).distinct()
       .select(col("node"),
@@ -1435,7 +1435,7 @@ object Graph extends QueryModule {
         .crossJoin(nodeEst.agg(sum("est").as("nf"))).head()
       (row.getLong(0), row.getLong(1), row.getLong(2))
     }
-    val r0 = s.read.parquet(regsDir)
+    val r0 = graft.Scratch.read(s, regsDir)
     var rows = Vector((0, roundStats(r0, lit(1L)))) // every seed register is new
     var changed = -1L
     var r = 0
@@ -1444,7 +1444,7 @@ object Graph extends QueryModule {
       require(r <= hyperBallMaxRounds,
         s"q253: registers still moving after $hyperBallMaxRounds rounds — " +
           "raise hyperBallMaxRounds (and the oracle unroll) together")
-      val prev = s.read.parquet(regsDir).select("node", "bucket", "m")
+      val prev = graft.Scratch.read(s, regsDir).select("node", "bucket", "m")
       // Carry the PREVIOUS value through the union-aggregate as pm (prev
       // rows contribute pm = m, inbound rows pm = null; max ignores
       // nulls, and the prev bank holds one row per key, so max(pm) IS
@@ -1460,7 +1460,7 @@ object Graph extends QueryModule {
             .withColumn("pm", lit(null).cast("long")))
         .groupBy("node", "bucket").agg(max("m").as("m"), max("pm").as("pm"))
       val nextDir = graft.Scratch.write(s"graft_hb_r$r", next)
-      val stats = roundStats(s.read.parquet(nextDir),
+      val stats = roundStats(graft.Scratch.read(s, nextDir),
         when(col("pm").isNull || col("pm") =!= col("m"), 1L).otherwise(0L))
       changed = stats._1
       rows :+= ((r, stats))
@@ -1501,7 +1501,7 @@ object Graph extends QueryModule {
     val (_, dirs) = hyperBallArtifacts(s, d)
     val lastRound = dirs.length - 1
     val perRound = dirs.zipWithIndex.map { case (dir, r) =>
-      s.read.parquet(dir).groupBy("node")
+      graft.Scratch.read(s, dir).groupBy("node")
         .agg(count(lit(1)).as("n_present"),
           sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_present"))
         .select(col("node"), lit(r).as("round"),
@@ -1542,7 +1542,7 @@ object Graph extends QueryModule {
   val itemRecs: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     // co-buy multiplicity m rides the shared staged co-purchase leaf
-    val e2 = s.read.parquet(coPairsDir(s, d)).filter(col("m") >= 2)
+    val e2 = graft.Scratch.read(s, coPairsDir(s, d)).filter(col("m") >= 2)
       .select("u", "v", "m")
     val sym = e2.select(col("u"), col("v"), col("m"))
       .union(e2.select(col("v").as("u"), col("u").as("v"), col("m")))
@@ -1567,7 +1567,7 @@ object Graph extends QueryModule {
     */
   val degreePowerlaw: Q = (s, d) => {
     val (edgesDir, _) = lpaArtifacts(s, d)
-    val deg = s.read.parquet(edgesDir)
+    val deg = graft.Scratch.read(s, edgesDir)
       .groupBy("u").agg(count(lit(1)).as("dg"))
     val pts = deg.groupBy("dg").agg(count(lit(1)).as("nd"))
       .select(
@@ -1663,7 +1663,7 @@ object Graph extends QueryModule {
     }
 
   val sccClasses: Q = (s, d) => {
-    val ed = s.read.parquet(sccEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, sccEdgesDir(s, d))
     val nodes = ed.select(col("u").as("node"))
       .union(ed.select(col("v").as("node"))).distinct()
     // returns (final round, previous round): the N vs N-1 label diff is
@@ -1676,7 +1676,7 @@ object Graph extends QueryModule {
         nodes.select(col("node"), col("node").as("lbl")))
       var prev = cur
       for (r <- 1 to sccRounds) {
-        val labels = s.read.parquet(cur)
+        val labels = graft.Scratch.read(s, cur)
         val inMin = edges
           .join(labels.select(col("node").as("src"), col("lbl")), "src")
           .groupBy(col("dst").as("node")).agg(min("lbl").as("inmin"))
@@ -1687,7 +1687,7 @@ object Graph extends QueryModule {
         prev = cur
         cur = nd
       }
-      (s.read.parquet(cur), s.read.parquet(prev))
+      (graft.Scratch.read(s, cur), graft.Scratch.read(s, prev))
     }
     // The forward and backward chains are INDEPENDENT job sequences over
     // the same staged edge leaf (guide §2.6: overlap independent jobs) —
@@ -1763,7 +1763,7 @@ object Graph extends QueryModule {
     import scala.concurrent.ExecutionContext.Implicits.global
     def run(rev: Boolean, tag: String): (String, Seq[Long]) = {
       val s2 = s.newSession()
-      val ed2 = s2.read.parquet(edDir)
+      val ed2 = graft.Scratch.read(s2, edDir)
       val nodes2 = ed2.select(col("u").as("doc_id"))
         .union(ed2.select(col("v").as("doc_id"))).distinct()
       val edges = if (rev) ed2.select(col("v").as("src"), col("u").as("dst"))
@@ -1776,8 +1776,8 @@ object Graph extends QueryModule {
     val fB = Future(run(rev = true, "b"))
     val (fDir, fTraj) = Await.result(fF, scala.concurrent.duration.Duration.Inf)
     val (bDir, bTraj) = Await.result(fB, scala.concurrent.duration.Duration.Inf)
-    val f = s.read.parquet(fDir)
-    val b = s.read.parquet(bDir)
+    val f = graft.Scratch.read(s, fDir)
+    val b = graft.Scratch.read(s, bDir)
     val out = f.select(col("doc_id").as("node"), col("label").as("fl"))
       .join(b.select(col("doc_id").as("node"), col("label").as("bl")), "node")
       .filter(col("fl") === col("bl"))
@@ -1820,7 +1820,7 @@ object Graph extends QueryModule {
     */
   val linkPredict: Q = (s, d) => {
     // both-direction m ≥ 2 adjacency = the LPA family's staged artifact
-    val ed = s.read.parquet(lpaEdgesDir(s, d))
+    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     val deg = ed.groupBy("u").agg(count(lit(1)).as("dg"))
     val wedges = ed.alias("a").join(ed.alias("b"),
         col("a.u") === col("b.u") && col("a.v") < col("b.v"))
@@ -1869,7 +1869,7 @@ object Graph extends QueryModule {
     */
   val walkCorpus: Q = (s, d) => {
     val (canonDir, _) = triArtifacts(s, d)
-    val canon = s.read.parquet(canonDir)
+    val canon = graft.Scratch.read(s, canonDir)
     walkRun(s, graft.Scratch.write("graft_walk_ed",
       canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))))
   }
@@ -1880,12 +1880,13 @@ object Graph extends QueryModule {
   private[graft] def walkRun(s: org.apache.spark.sql.SparkSession,
       edDir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // unbound: PropertySpec passes planted dirs Scratch.write did not make
     val ed = s.read.parquet(edDir)
     var posDir = graft.Scratch.write("graft_walk_p0",
       ed.select(col("u").as("o")).distinct().select(col("o"), col("o").as("x")))
     val steps = (0 to walkLen).map { t =>
       if (t > 0) {
-        val cur = s.read.parquet(posDir)
+        val cur = graft.Scratch.read(s, posDir)
         val w = Window.partitionBy("o").orderBy(col("pick"), col("v"))
         val next = cur.join(ed, col("x") === col("u"))
           .withColumn("pick", md5(concat_ws(":",
@@ -1897,7 +1898,7 @@ object Graph extends QueryModule {
         val nextDir = graft.Scratch.write(s"graft_walk_p$t", next)
         posDir = nextDir
       }
-      s.read.parquet(posDir)
+      graft.Scratch.read(s, posDir)
         .agg(count(lit(1)).as("n_walks"),
           countDistinct(col("x")).as("n_distinct_nodes"),
           sum(col("x")).as("node_id_sum"))
@@ -1952,6 +1953,7 @@ object Graph extends QueryModule {
   private[graft] def brandesRun(s: org.apache.spark.sql.SparkSession,
       edDir: String, srcs: org.apache.spark.sql.DataFrame,
       tag: String): org.apache.spark.sql.DataFrame = {
+    // unbound: PropertySpec passes planted dirs Scratch.write did not make
     val ed = s.read.parquet(edDir)
     // Forward: fresh-slice staging (the q250 discipline) — only each
     // round's new (s, x) rows are written, the visited set is one
@@ -1963,7 +1965,7 @@ object Graph extends QueryModule {
     val seeds0 = srcs.select(col("s"), col("s").as("x"), lit(0).as("dist"),
       lit(1L).as("sigma"))
     var dirs = Vector(graft.Scratch.write(s"graft_${tag}_v0", seeds0))
-    var frontierN = s.read.parquet(dirs.head).count() // footer-only
+    var frontierN = graft.Scratch.read(s, dirs.head).count() // footer-only
     var r = 0
     while (frontierN > 0) {
       r += 1
@@ -1971,7 +1973,7 @@ object Graph extends QueryModule {
         s"q257: BFS still expanding after $brandesMaxRounds rounds — raise " +
           "brandesMaxRounds (and the oracle unroll) together")
       val visited = s.read.parquet(dirs: _*)
-      val frontier = s.read.parquet(dirs.last)
+      val frontier = graft.Scratch.read(s, dirs.last)
         .select(col("s"), col("x").as("u"), col("sigma"))
       val nbrs = ed.join(frontier, "u")
         .groupBy(col("s"), col("v").as("x"))
@@ -1981,9 +1983,9 @@ object Graph extends QueryModule {
         .select(col("s"), col("x"), lit(r).as("dist"), col("sigma"))
       val nextDir = graft.Scratch.write(s"graft_${tag}_v$r", fresh)
       dirs :+= nextDir
-      // footer-only count, explicit schema (the final slice is empty —
-      // no part files to infer from); see bfsConvergedRun's sync note
-      frontierN = s.read.schema(fresh.schema).parquet(nextDir).count()
+      // footer-only count, bound read (the final slice is empty — no
+      // part files to infer from); see bfsConvergedRun's sync note
+      frontierN = graft.Scratch.read(s, nextDir).count()
     }
     val maxDist = r - 1
     val vis = s.read.parquet(dirs.init: _*) // final slice is the empty one
@@ -2007,18 +2009,18 @@ object Graph extends QueryModule {
     var lvlDeltaDir: Option[String] = None // deltas of level d (partial)
     val deltaDirs = Vector.newBuilder[String]
     for (d <- maxDist to 1 by -1) {
-      val wd0 = s.read.parquet(dirs(d))
+      val wd0 = graft.Scratch.read(s, dirs(d))
         .select(col("s"), col("x").as("wx"), col("sigma").as("ws"))
       val wd = lvlDeltaDir match {
         case None => wd0.withColumn("wdel", lit(0L)) // deepest level: δ = 0
         case Some(dir) => wd0.join(
-            s.read.parquet(dir)
+            graft.Scratch.read(s, dir)
               .select(col("s"), col("x").as("wx"), col("delta").as("wdel0")),
             Seq("s", "wx"), "left")
           .select(col("s"), col("wx"), col("ws"),
             coalesce(col("wdel0"), lit(0L)).as("wdel"))
       }
-      val pu = s.read.parquet(dirs(d - 1))
+      val pu = graft.Scratch.read(s, dirs(d - 1))
         .select(col("s"), col("x").as("u"), col("sigma").as("us"))
       val contrib = ed.join(wd, col("v") === col("wx"))
         .join(pu, Seq("s", "u"))
@@ -2071,10 +2073,10 @@ object Graph extends QueryModule {
     */
   val betweenness: Q = (s, d) => {
     val (canonDir, _) = triArtifacts(s, d)
-    val canon = s.read.parquet(canonDir)
+    val canon = graft.Scratch.read(s, canonDir)
     val tmpB = graft.Scratch.write("graft_btw_ed",
       canon.unionByName(canon.select(col("v").as("u"), col("u").as("v"))))
-    val srcs = s.read.parquet(tmpB).select(col("u").as("x")).distinct()
+    val srcs = graft.Scratch.read(s, tmpB).select(col("u").as("x")).distinct()
       .orderBy(md5(col("x").cast("string")), col("x"))
       .limit(brandesK).select(col("x").as("s"))
     brandesRun(s, tmpB, srcs, "btw")

@@ -507,7 +507,7 @@ object Pipeline extends QueryModule {
     }
 
   val curriculum: Q = (s, d) => {
-    val scored = s.read.parquet(ceScoredDir(s, d))
+    val scored = graft.Scratch.read(s, ceScoredDir(s, d))
     val weights = scored.groupBy("source").agg(count(lit(1)).as("n_src"))
       .withColumn("wgt",
         floor(sqrt(col("n_src").cast("double"))).cast("long"))
@@ -571,7 +571,7 @@ object Pipeline extends QueryModule {
     * zero-excess domains' monotone decay.
     */
   val domainReweight: Q = (s, d) => {
-    val scored = s.read.parquet(ceScoredDir(s, d))
+    val scored = graft.Scratch.read(s, ceScoredDir(s, d))
     val loss = scored.groupBy("source").agg(count(lit(1)).as("n_docs"),
       expr("sum(ce_micro) div count(1)").as("loss_micro"))
     val base = scored.agg(expr("sum(ce_micro) div count(1)")
@@ -1082,7 +1082,7 @@ object Pipeline extends QueryModule {
     }
 
   val passageRetrieval: Q = (s, d) => {
-    val asg = s.read.parquet(passageAsgDir(s, d))
+    val asg = graft.Scratch.read(s, passageAsgDir(s, d))
     val tf = asg.groupBy("doc_id", "chunk", "tok")
       .agg(count(lit(1)).as("tf"))
     val pl = asg.groupBy("doc_id", "chunk").agg(count(lit(1)).as("pl"))
@@ -1154,7 +1154,7 @@ object Pipeline extends QueryModule {
     * best_chunk) with rank_sparse ≤ [[hybridDepth]]. */
   private[graft] def hybridSparseLeg(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val asg = s.read.parquet(passageAsgDir(s, d))
+    val asg = graft.Scratch.read(s, passageAsgDir(s, d))
     val tf = asg.groupBy("doc_id", "chunk", "tok")
       .agg(count(lit(1)).as("tf"))
     val pl = asg.groupBy("doc_id", "chunk").agg(count(lit(1)).as("pl"))

@@ -210,7 +210,7 @@ object Similarity extends QueryModule {
 
   val knnGraph: Q = (s, d) => {
     val b = base(s, d)
-    val mutual = s.read.parquet(knnGraphDir(s, d))
+    val mutual = graft.Scratch.read(s, knnGraphDir(s, d))
     val deg = mutual.select(col("u").as("node"))
       .unionByName(mutual.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -568,7 +568,7 @@ object Similarity extends QueryModule {
       .select(col("vec_id").as("q_id"))
     val sample = corpus.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
       .select(col("q_id"), col("embedding").as("q_emb"), col("sq").as("q_sq"))
-    val mutual = s.read.parquet(knnGraphDir(s, d))
+    val mutual = graft.Scratch.read(s, knnGraphDir(s, d))
     val ed = mutual.select(col("u"), col("v"))
       .unionByName(mutual.select(col("v").as("u"), col("u").as("v")))
     val qsim = cosineWithNorms(
@@ -611,7 +611,7 @@ object Similarity extends QueryModule {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
     for (h <- 1 to beamHops) {
-      val beam = s.read.parquet(beamDir)
+      val beam = graft.Scratch.read(s, beamDir)
       val nbrs = beam.join(ed, beam("node") === ed("u"))
         .select(col("q_id"), col("v").as("node"))
         .filter(col("node") =!= col("q_id"))
@@ -621,7 +621,7 @@ object Similarity extends QueryModule {
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
     }
-    val beam = s.read.parquet(beamDir)
+    val beam = graft.Scratch.read(s, beamDir)
     val top1 = beam.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("q_id"), round(col("sim9"), 4).as("graph_sim"))
@@ -787,7 +787,7 @@ object Similarity extends QueryModule {
         corpus.filter(col("vec_id") < 64).select(
           col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
           col("sq").as("p_sq")))
-      val pivots = s.read.parquet(pp)
+      val pivots = graft.Scratch.read(s, pp)
       val psim = cosineWithNorms(
         dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
       val wAssign = Window.partitionBy("vec_id")
@@ -799,7 +799,7 @@ object Similarity extends QueryModule {
         .select(col("vec_id"), col("embedding"), col("sq"),
           col("pivot_id").as("cell_id"))))
     }
-    (s.read.parquet(pivDir), s.read.parquet(homeDir))
+    (graft.Scratch.read(s, pivDir), graft.Scratch.read(s, homeDir))
   }
 
   /** q235's core, probe-width-parametrized so SimilaritySpec can pin the
@@ -941,7 +941,7 @@ object Similarity extends QueryModule {
   val streamSemDedup: Q = (s, d) => {
     import org.apache.spark.sql.streaming.Trigger
     val (pivots, home) = embCorpusIndex(s, d)
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
+    val schema = Tables.embeddings(s, d).schema
     val delta = s.readStream.schema(schema).parquet(s"$d/embeddings.*")
       .filter(isDeltaVec)
     val tmp = graft.Scratch.dir("graft_stream_semdedup")
@@ -1060,7 +1060,7 @@ object Similarity extends QueryModule {
     // shuffle width compounded per round and blew up past ~8 rounds)
     val tmpE = graft.Scratch.write("graft_sem_edges", edges)
     val nodes = corpus.select(col("vec_id").as("doc_id"))
-    val labels = Dedup.ccMinLabels(s, nodes, s.read.parquet(tmpE))
+    val labels = Dedup.ccMinLabels(s, nodes, graft.Scratch.read(s, tmpE))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"),
@@ -1171,7 +1171,7 @@ object Similarity extends QueryModule {
         .select(col("vec_id"),
           expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
             .as("qv")))
-      val vecs = s.read.parquet(tmp)
+      val vecs = graft.Scratch.read(s, tmp)
       val seed = vecs
         .select(col("vec_id"), col("qv"),
           expr("aggregate(qv, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)").as("sq"))
@@ -1181,7 +1181,7 @@ object Similarity extends QueryModule {
       var mindDir = graft.Scratch.write("graft_kcenter_d0",
         vecs.select(col("vec_id"), kcenterDistExpr(chosen.head._2).as("d")))
       for (r <- 1 until kcenterK) {
-        val mind = s.read.parquet(mindDir)
+        val mind = graft.Scratch.read(s, mindDir)
         val pick = mind
           .filter(!col("vec_id").isin(chosen.map(_._1): _*))
           .orderBy(col("d").desc, col("vec_id")).limit(1)
@@ -1191,7 +1191,7 @@ object Similarity extends QueryModule {
         mindDir = graft.Scratch.write(s"graft_kcenter_d$r",
           kcenterRoundUpdate(vecs, mind, chosen.last._2))
       }
-      val covering = s.read.parquet(mindDir).agg(max("d"))
+      val covering = graft.Scratch.read(s, mindDir).agg(max("d"))
         .collect()(0).getLong(0)
       (tmp, chosen, mindDir, covering)
     }
@@ -1224,7 +1224,7 @@ object Similarity extends QueryModule {
   val kcenterCoverage: Q = (s, d) => {
     import s.implicits._
     val (vecsDir, chosen, _, _) = kcenterArtifacts(s, d)
-    val vecs = s.read.parquet(vecsDir)
+    val vecs = graft.Scratch.read(s, vecsDir)
     val firstK = vecs.orderBy("vec_id").limit(kcenterK)
       .select(col("vec_id"), col("qv")).collect() // k rows, bounded
     val centers = (chosen.map(c => ("kcenter", c._2)) ++
@@ -1298,7 +1298,7 @@ object Similarity extends QueryModule {
     }
 
   val tripletMining: Q = (s, d) => {
-    val assigned = s.read.parquet(homeCellsDir(s, d))
+    val assigned = graft.Scratch.read(s, homeCellsDir(s, d))
     val anchors = assigned
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(tripletAnchors)
@@ -1373,8 +1373,8 @@ object Similarity extends QueryModule {
     */
   val silhouetteSampled: Q = (s, d) => {
     val (qvDir, _, _, _) = kcenterArtifacts(s, d)
-    val qv = s.read.parquet(qvDir)
-    val cells = s.read.parquet(homeCellsDir(s, d))
+    val qv = graft.Scratch.read(s, qvDir)
+    val cells = graft.Scratch.read(s, homeCellsDir(s, d))
       .select(col("vec_id"), col("cell_id"))
     val pts = qv.join(cells, "vec_id")
     val samples = pts

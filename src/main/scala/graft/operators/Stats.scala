@@ -1102,7 +1102,7 @@ object Stats extends QueryModule {
         .withColumn("arm",
           graft.functions.Hashing.md5Bucket(col("user_id"), 2)))
     }
-    s.read.parquet(leaf)
+    graft.Scratch.read(s, leaf)
   }
 
   val cuped: Q = (s, d) => {
@@ -3410,7 +3410,7 @@ object Stats extends QueryModule {
         .groupBy("pq").agg(
           sum("is_base").as("b"), sum(lit(1L) - col("is_base")).as("c")))
     }
-    s.read.parquet(leaf)
+    graft.Scratch.read(s, leaf)
   }
 
   val ksDrift: Q = (s, d) => {
@@ -3597,7 +3597,7 @@ object Stats extends QueryModule {
           (col("l") < date_sub(col("dmax"), kmCensorDays)).as("churn"),
           graft.functions.Hashing.md5Bucket(col("o_custkey"), 2).as("arm")))
     }
-    s.read.parquet(leaf)
+    graft.Scratch.read(s, leaf)
   }
 
   /** q267 — KAPLAN–MEIER SURVIVAL over customer activity lifetimes: the
@@ -4063,7 +4063,7 @@ object Stats extends QueryModule {
         raw.crossJoin(broadcast(raw.agg(min("m").as("m0"))))
         .select((col("m") - col("m0")).as("m"), col("c")))
     }
-    s.read.parquet(leaf)
+    graft.Scratch.read(s, leaf)
   }
 
   /** [[monthlyFrame]], collected for the inherently sequential

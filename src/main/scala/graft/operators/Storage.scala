@@ -1341,7 +1341,7 @@ object Storage extends QueryModule {
   val merkleMaintain: Q = (s, d) => {
     val keyed = merkleKeyed(s, d)
     val ranked = merkleRanked(keyed)
-    val tree = s.read.parquet(merkleTreeDir(s, d))
+    val tree = graft.Scratch.read(s, merkleTreeDir(s, d))
     val delta = keyed.join(broadcast(ranked), Seq("key"))
       .select(col("key"), col("cents"),
         when(col("rn") <= 6, expr("cents * 21 div 20")).as("new_cents"))

@@ -1819,7 +1819,7 @@ object Text extends QueryModule {
       wfDir: String, vocab: org.apache.spark.sql.DataFrame,
       rnd: Int, dpRounds: Int): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val m = bpeDelim
-    val wfS = s.read.parquet(wfDir)
+    val wfS = graft.Scratch.read(s, wfDir)
     val v = graft.Scratch.stage(s"graft_uni_v$rnd", vocab)
     val edges = wfS.select(col("w"), explode(expr(
         s"""flatten(transform(sequence(1, length(w)), i ->
@@ -1857,13 +1857,13 @@ object Text extends QueryModule {
     }
     var k = 1
     while (k <= dpRounds) {
-      val st = s.read.parquet(stDir)
+      val st = graft.Scratch.read(s, stDir)
       val fused = if (k + 1 <= dpRounds) step(step(st)) else step(st)
       val nextDir = graft.Scratch.write(s"graft_uni_dp${rnd}_$k", fused)
       stDir = nextDir
       k += (if (k + 1 <= dpRounds) 2 else 1)
     }
-    val fin = s.read.parquet(stDir)
+    val fin = graft.Scratch.read(s, stDir)
       .filter(col("pos") === length(col("w")) + 1)
     // coverage is STRUCTURAL (every single char is in every vocab), so an
     // uncovered word means the seed built wrong — fail loudly, 1-row sync
@@ -1908,7 +1908,7 @@ object Text extends QueryModule {
           raise_error(lit("q279: word contains the U+0001 piece delimiter")))
         .otherwise(col("w")).as("w"), col("f"))
     val tmp = graft.Scratch.write("graft_uni_wf", wf)
-    val wfS = s.read.parquet(tmp)
+    val wfS = graft.Scratch.read(s, tmp)
     val maxLen = wfS.agg(max(length(col("w")))).head().getInt(0)
     require(maxLen <= unigramMaxWordLen,
       s"q279: $maxLen-char word exceeds the $unigramMaxWordLen-round DP " +
@@ -2676,7 +2676,7 @@ object Text extends QueryModule {
     val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), col("lang"),
         filter(toks, t => length(t) > 0).as("tk"), bucket.as("bk"))
-    val ntc = s.read.parquet(nbNtcCache(d)(graft.Scratch.write("graft_nb",
+    val ntc = graft.Scratch.read(s, nbNtcCache(d)(graft.Scratch.write("graft_nb",
       docs.filter(col("bk") < 80)
         .select(col("lang").as("cls"), explode(col("tk")).as("term"))
         .groupBy("cls", "term").agg(count(lit(1)).as("ntc")))))

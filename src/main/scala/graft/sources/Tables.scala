@@ -2,18 +2,27 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders for the fixture star schema (FIXTURES.md).
   *
-  * Parquet is self-describing, so no schema inference pass is needed (the
-  * reference's CSV `inferSchema=True` at Dataset.py:77 reads the data twice;
-  * a production CSV path should pass an explicit StructType — see
-  * [[Csv.crimeLikeSchema]]). Column pruning + predicate pushdown reach the
-  * scan automatically because every operator stays declarative.
+  * Every table read is bound to a schema inferred once per table path per
+  * JVM. An unbound `read.parquet(path)` infers the schema by launching a
+  * one-task Spark job that reads a footer, on every call; the fixture
+  * tables are immutable per JVM ([[graft.Scratch]] contract 1), so that
+  * job is paid on a path's first read only (the reference's CSV
+  * `inferSchema=True` at Dataset.py:77 pays a full extra pass over the
+  * data instead; a production CSV path should pass an explicit StructType
+  * — see [[Csv.crimeLikeSchema]]). Column pruning + predicate pushdown
+  * reach the scan automatically because every operator stays declarative.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new graft.Scratch.PerDir[StructType]
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemas(path)(spark.read.parquet(path).schema)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -53,7 +53,7 @@ object StreamingJobs extends QueryModule {
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.table(s, d, "events").schema
     val raw = s.readStream.schema(schema).parquet(s"$d/events.*")
     schema("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -1344,7 +1344,7 @@ object StreamingJobs extends QueryModule {
     }
     val fin = s.read.parquet(treeV(maxBid.get())).withColumnsRenamed(
       Map("digest" -> "digest_new", "n_rows" -> "n_rows_new"))
-    val out = s.read.parquet(origDir).withColumnsRenamed(
+    val out = graft.Scratch.read(s, origDir).withColumnsRenamed(
         Map("digest" -> "digest_old", "n_rows" -> "n_rows_old"))
       .join(fin, Seq("level", "node"))
       .select(col("level"), col("node"), col("digest_old"),
