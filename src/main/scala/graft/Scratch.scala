@@ -18,10 +18,16 @@ import org.apache.spark.sql.types.StructType
   *  - [[write]] / [[stage]]: write a frame once to a fresh dir and return
   *    the dir / read it back (a lineage cut: every later reference is a
   *    parquet leaf scan, not a re-execution of the plan).
-  *  - [[read]]: read a [[write]] dir back with the schema recorded at
-  *    write time. An unbound `read.parquet(dir)` runs a one-task Spark job
-  *    to infer the schema from a footer on EVERY call; a bound read runs
-  *    none.
+  *  - [[read]]: read one or more [[write]] dirs back with the schema
+  *    recorded at write time. An unbound `read.parquet(dir)` runs a
+  *    one-task Spark job to infer the schema from a footer on EVERY call;
+  *    a bound read runs none, and an empty dir (no footer) reads fine.
+  *  - [[iterate]] / [[iterateAll]]: a staged loop — round 0 and every
+  *    round r are [[write]] dirs, round r is built from round r−1 read
+  *    bound, and the loop stops when it settles or at its [[Cap]]. A state
+  *    loop ([[iterate]]) drops round r−2 once round r is written, so at
+  *    most the two newest rounds are live; a history loop ([[iterateAll]])
+  *    keeps every round for consumers that read them all.
   *  - [[PerDir]]: a per-INPUT-DIR memo of a staged artifact for the JVM's
   *    lifetime — one instance per artifact family. The first query touching
   *    a family pays the build, every later query reads the parquet leaf.
@@ -46,8 +52,8 @@ import org.apache.spark.sql.types.StructType
   *  - The schema memos rest on contract 1: a dir's bytes do not change
   *    within the JVM, so its schema, once known, is its schema for the
   *    JVM's life. [[write]] never reuses a dir; a dir that code writes more
-  *    than once (loop state, layouts, streaming sinks) is a raw [[dir]] and
-  *    is read unbound.
+  *    than once (layouts, streaming sinks) is a raw [[dir]] and is read
+  *    unbound.
   *  - The schema [[write]] records is exact: it is the frame's own
   *    schema, which is what the parquet writer stores in the footer, and
   *    Spark's parquet read applies `asNullable` to a user-given schema
@@ -106,11 +112,20 @@ object Scratch {
     d
   }
 
-  /** Read a dir that [[write]] produced, bound to its recorded schema. */
-  def read(s: SparkSession, dir: String): DataFrame = {
-    val st = schemas.get(dir)
-    require(st != null, s"Scratch.read: $dir was not produced by Scratch.write")
-    s.read.schema(st).parquet(dir)
+  /** Read dirs that [[write]] produced as one frame, bound to their
+    * recorded schema. The schemas must agree up to nullability, which the
+    * bound read drops anyway (Spark reads a user-given schema as nullable).
+    */
+  def read(s: SparkSession, dirs: String*): DataFrame = {
+    val sts = dirs.map { d =>
+      val st = schemas.get(d)
+      require(st != null, s"Scratch.read: $d was not produced by Scratch.write")
+      st.toNullable
+    }
+    require(sts.nonEmpty, "Scratch.read: no dirs")
+    require(sts.forall(_ == sts.head),
+      s"Scratch.read: recorded schemas differ across ${dirs.mkString(", ")}")
+    s.read.schema(sts.head).parquet(dirs: _*)
   }
 
   /** Write `df` once to a fresh scratch dir and read it back in `df`'s
@@ -118,6 +133,69 @@ object Scratch {
     */
   def stage(prefix: String, df: DataFrame): DataFrame =
     read(df.sparkSession, write(prefix, df))
+
+  /** When a staged loop stops. */
+  sealed trait Cap { def rounds: Int }
+
+  /** Fixed depth: `rounds` rounds, fewer only if the loop settles first. */
+  final case class Depth(rounds: Int) extends Cap
+
+  /** Convergent: runs until the loop settles. Still moving after `rounds`
+    * rounds fails loudly, naming `loop` and the cap constant `name`.
+    */
+  final case class Converge(loop: String, rounds: Int, name: String) extends Cap
+
+  /** A state loop: round r is `step(r, round r−1)`. Returns the dirs of
+    * (the final round, the one before it); every older round is dropped
+    * as soon as the round two after it is written. A plan that still reads
+    * a dropped round fails loudly (its file listing names files that are
+    * gone); it never reads fewer rows.
+    */
+  def iterate(s: SparkSession, prefix: String, init: DataFrame, cap: Cap,
+      settled: (Int, DataFrame) => Boolean = (_, _) => false)(
+      step: (Int, DataFrame) => DataFrame): (String, String) = {
+    val dirs = rounds(s, prefix, init, cap, settled, keepAll = false)(
+      (r, prev, _) => step(r, prev))
+    (dirs.last, dirs.head)
+  }
+
+  /** A history loop: round r is `step(r, round r−1, dirs of rounds
+    * 0..r−1)`. Keeps and returns every round's dir; [[read]] of them all
+    * is the loop's union.
+    */
+  def iterateAll(s: SparkSession, prefix: String, init: DataFrame, cap: Cap,
+      settled: (Int, DataFrame) => Boolean = (_, _) => false)(
+      step: (Int, DataFrame, Vector[String]) => DataFrame): Vector[String] =
+    rounds(s, prefix, init, cap, settled, keepAll = true)(step)
+
+  /** The one staged loop behind [[iterate]] and [[iterateAll]]: writes
+    * round 0, then round r = 1, 2, … under `prefix`, asking `settled` of
+    * each round just written (round 0 included, read bound — the same
+    * frame is the next round's `prev`). Any per-round driver sync lives in
+    * `settled` or `step`; the loop itself runs no Spark job but the writes.
+    */
+  private def rounds(s: SparkSession, prefix: String, init: DataFrame,
+      cap: Cap, settled: (Int, DataFrame) => Boolean, keepAll: Boolean)(
+      step: (Int, DataFrame, Vector[String]) => DataFrame): Vector[String] = {
+    var dirs = Vector(write(s"${prefix}0", init))
+    var cur = read(s, dirs.last)
+    var done = settled(0, cur)
+    var r = 0
+    while (!done && r < cap.rounds) {
+      r += 1
+      dirs :+= write(s"$prefix$r", step(r, cur, dirs))
+      if (!keepAll && dirs.length > 2) { drop(dirs.head); dirs = dirs.tail }
+      cur = read(s, dirs.last)
+      done = settled(r, cur)
+    }
+    cap match {
+      case Converge(loop, max, name) => require(done,
+        s"$loop: still moving after $max rounds — raise $name (and the " +
+          "oracle unroll) together")
+      case Depth(_) =>
+    }
+    dirs
+  }
 
   /** A per-input-dir memo for ONE artifact family (contract above).
     *

@@ -324,8 +324,10 @@ object Dedup extends QueryModule {
     * does (measured: round ~10 at sf0.1 spends minutes inside
     * generateTreeString). Every iterative Spark algorithm needs the same
     * cure GraphX applies: materialize AND truncate lineage each round —
-    * `localCheckpoint(eager = true)` keeps the blocks on the executors and
-    * replaces the plan with a leaf. (Cluster production would use
+    * the round's raw RDD is localCheckpointed (blocks stay on the
+    * executors) and the frame rebuilt over it with `createDataFrame`, a
+    * stat-free leaf ([[minLabelFixpoint]] says why not
+    * `Dataset.localCheckpoint`). (Cluster production would use
     * reliable `checkpoint()` to survive executor loss; local mode has no
     * such failure domain, so the cheap variant is the right default.)
     */

@@ -491,41 +491,35 @@ object Graph extends QueryModule {
     // keeps the organic sparse structure where peeling means something.
     // Read off the shared staged co-purchase leaf (no per-query self-join).
     val rawEdges = repeatEdges(s, d)
-    val edgeDir = graft.Scratch.write("graft_truss_a0", rawEdges)
-    def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
+    val rows = Vector.newBuilder[(Int, Long, Long, Long)]
+    var (prevN, prevCk) = (0L, 0L)
+    // round r's (removed, alive, checksum), synced off the written round
+    def settled(r: Int, alive: org.apache.spark.sql.DataFrame): Boolean = {
+      val st = alive.agg(count(lit(1)),
         sum(expr("(u * 524287 + v) % 1000000007"))).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      val (n, ck) = (st.getLong(0), if (st.isNullAt(1)) 0L else st.getLong(1))
+      val removed = prevN - n
+      if (r > 0) rows += ((r, removed, n, ck))
+      prevN = n; prevCk = ck
+      r > 0 && removed == 0L
     }
-    var aliveDir = edgeDir
-    var (prevN, prevCk) = stats(graft.Scratch.read(s, aliveDir))
-    var converged = false
-    val rows = (1 to trussRounds).map { r =>
-      if (converged) (r, 0L, prevN, prevCk)
-      else {
-        val alive = graft.Scratch.read(s, aliveDir)
-        val tri = trussTriples(s, alive)
-        val sup = tri.select(explode(array(
-            struct(least(col("a"), col("b")).as("u"),
-              greatest(col("a"), col("b")).as("v")),
-            struct(least(col("a"), col("c")).as("u"),
-              greatest(col("a"), col("c")).as("v")),
-            struct(least(col("b"), col("c")).as("u"),
-              greatest(col("b"), col("c")).as("v")))).as("e"))
-          .groupBy(col("e.u").as("u"), col("e.v").as("v"))
-          .agg(count(lit(1)).as("sup"))
-        val next = alive.join(sup, Seq("u", "v"))
-          .filter(col("sup") >= trussK - 2).select("u", "v")
-        val dir2 = graft.Scratch.write(s"graft_truss_a$r", next)
-        val (n, ck) = stats(graft.Scratch.read(s, dir2))
-        val removed = prevN - n
-        aliveDir = dir2
-        prevN = n; prevCk = ck
-        if (removed == 0L) converged = true
-        (r, removed, n, ck)
-      }
+    graft.Scratch.iterate(s, "graft_truss_a", rawEdges,
+        graft.Scratch.Depth(trussRounds), settled) { (_, alive) =>
+      val sup = trussTriples(s, alive).select(explode(array(
+          struct(least(col("a"), col("b")).as("u"),
+            greatest(col("a"), col("b")).as("v")),
+          struct(least(col("a"), col("c")).as("u"),
+            greatest(col("a"), col("c")).as("v")),
+          struct(least(col("b"), col("c")).as("u"),
+            greatest(col("b"), col("c")).as("v")))).as("e"))
+        .groupBy(col("e.u").as("u"), col("e.v").as("v"))
+        .agg(count(lit(1)).as("sup"))
+      alive.join(sup, Seq("u", "v"))
+        .filter(col("sup") >= trussK - 2).select("u", "v")
     }
-    rows.toDF("round", "n_removed", "n_alive", "alive_checksum")
+    val done = rows.result()
+    (done ++ (done.length + 1 to trussRounds).map(r => (r, 0L, prevN, prevCk)))
+      .toDF("round", "n_removed", "n_alive", "alive_checksum")
       .select(col("round").cast("int").as("round"), col("n_removed"),
         col("n_alive"), col("alive_checksum"))
       .orderBy("round")
@@ -575,55 +569,52 @@ object Graph extends QueryModule {
           .agg(count(lit(1)).as("sup")),
         Seq("u", "v"), "left")
       .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("sup"))
-    var supDir = graft.Scratch.write("graft_trussd_s1", sup1)
     var prevAlive = alive0.count()
-    var converged = false
-    var constN = 0L
-    var constCk = 0L
-    val rows = (1 to trussRounds).map { r =>
-      if (converged) (r, 0L, constN, constCk)
-      else {
-        val cur = graft.Scratch.read(s, supDir) // alive entering round r, with
-        // support counted within that same alive set
-        val st = cur.agg(
-          sum(when(col("sup") >= k2, 1L).otherwise(0L)),
-          sum(when(col("sup") >= k2, expr("(u * 524287 + v) % 1000000007"))
-            .otherwise(0L))).collect()(0)
-        val n = if (st.isNullAt(0)) 0L else st.getLong(0)
-        val ck = if (st.isNullAt(1)) 0L else st.getLong(1)
-        val removed = prevAlive - n
-        prevAlive = n
-        if (removed == 0L) { converged = true; constN = n; constCk = ck }
-        else {
-          val rem = cur.filter(col("sup") < k2).select("u", "v")
-          val keep = cur.filter(col("sup") >= k2)
-          val adj = cur.select(col("u").as("x"), col("v").as("y"))
-            .union(cur.select(col("v").as("x"), col("u").as("y")))
-          // third vertex w: adjacent to u in the ENTERING alive set (which
-          // still holds the removed edges — triangles among them were
-          // counted in sup and must be subtracted too)
-          val candT = rem.join(adj, col("u") === col("x"))
-            .filter(col("y") =!= col("v"))
-            .select(col("u"), col("v"), col("y").as("w"))
-          val tR = candT.join(cur.select(col("u").as("cu"), col("v").as("cv")),
-              least(col("v"), col("w")) === col("cu") &&
-                greatest(col("v"), col("w")) === col("cv"), "left_semi")
-            .select(sort_array(array(col("u"), col("v"), col("w"))).as("t"))
-            .distinct()
-            .select(col("t")(0).as("a"), col("t")(1).as("b"),
-              col("t")(2).as("c"))
-          val decr = tR.select(explode(canon3).as("e"))
-            .groupBy(col("e.u").as("u"), col("e.v").as("v"))
-            .agg(count(lit(1)).as("d"))
-          supDir = graft.Scratch.write(s"graft_trussd_s${r + 1}",
-            keep.join(decr, Seq("u", "v"), "left")
-              .select(col("u"), col("v"),
-                (col("sup") - coalesce(col("d"), lit(0L))).as("sup")))
-        }
-        (r, removed, n, ck)
-      }
+    var lastCk = 0L
+    val rows = Vector.newBuilder[(Int, Long, Long, Long)]
+    // loop round i is the alive set entering trajectory round i + 1, with
+    // support counted within that same alive set
+    def settled(i: Int, cur: org.apache.spark.sql.DataFrame): Boolean = {
+      val st = cur.agg(
+        sum(when(col("sup") >= k2, 1L).otherwise(0L)),
+        sum(when(col("sup") >= k2, expr("(u * 524287 + v) % 1000000007"))
+          .otherwise(0L))).collect()(0)
+      val n = if (st.isNullAt(0)) 0L else st.getLong(0)
+      val ck = if (st.isNullAt(1)) 0L else st.getLong(1)
+      val removed = prevAlive - n
+      rows += ((i + 1, removed, n, ck))
+      prevAlive = n; lastCk = ck
+      removed == 0L
     }
-    rows.toDF("round", "n_removed", "n_alive", "alive_checksum")
+    graft.Scratch.iterate(s, "graft_trussd_s", sup1,
+        graft.Scratch.Depth(trussRounds - 1), settled) { (_, cur) =>
+      val rem = cur.filter(col("sup") < k2).select("u", "v")
+      val keep = cur.filter(col("sup") >= k2)
+      val adj = cur.select(col("u").as("x"), col("v").as("y"))
+        .union(cur.select(col("v").as("x"), col("u").as("y")))
+      // third vertex w: adjacent to u in the ENTERING alive set (which
+      // still holds the removed edges — triangles among them were
+      // counted in sup and must be subtracted too)
+      val candT = rem.join(adj, col("u") === col("x"))
+        .filter(col("y") =!= col("v"))
+        .select(col("u"), col("v"), col("y").as("w"))
+      val tR = candT.join(cur.select(col("u").as("cu"), col("v").as("cv")),
+          least(col("v"), col("w")) === col("cu") &&
+            greatest(col("v"), col("w")) === col("cv"), "left_semi")
+        .select(sort_array(array(col("u"), col("v"), col("w"))).as("t"))
+        .distinct()
+        .select(col("t")(0).as("a"), col("t")(1).as("b"),
+          col("t")(2).as("c"))
+      val decr = tR.select(explode(canon3).as("e"))
+        .groupBy(col("e.u").as("u"), col("e.v").as("v"))
+        .agg(count(lit(1)).as("d"))
+      keep.join(decr, Seq("u", "v"), "left")
+        .select(col("u"), col("v"),
+          (col("sup") - coalesce(col("d"), lit(0L))).as("sup"))
+    }
+    val done = rows.result()
+    (done ++ (done.length + 1 to trussRounds).map(r => (r, 0L, prevAlive, lastCk)))
+      .toDF("round", "n_removed", "n_alive", "alive_checksum")
       .select(col("round").cast("int").as("round"), col("n_removed"),
         col("n_alive"), col("alive_checksum"))
       .orderBy("round")
@@ -665,42 +656,39 @@ object Graph extends QueryModule {
     val edges = repeatEdges(s, d)
     val nodes = edges.select(col("u").as("x"))
       .union(edges.select(col("v").as("x"))).distinct()
-    var aliveDir = graft.Scratch.write("graft_core_alive0", nodes)
-    var prevN = graft.Scratch.read(s, aliveDir).count()
+    def row(r: Int, removed: Long, n: Long, ck: Long) =
+      s.range(1).select(lit(r).as("round"), lit(removed).as("n_removed"),
+        lit(n).as("n_alive"), lit(ck).as("alive_checksum"))
+    var prevN = 0L
+    var ck = 0L
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
-    var fixpoint: Option[(Long, Long)] = None // (n_alive, checksum)
-    for (r <- 1 to coreRounds) {
-      fixpoint match {
-        case Some((n, ck)) =>
-          // n_removed hit 0: the alive set is provably invariant from here
-          // on, so later trajectory rows are constants — emit them without
-          // recomputing the (identical) round
-          stats = stats :+ s.range(1).select(lit(r).as("round"),
-            lit(0L).as("n_removed"), lit(n).as("n_alive"),
-            lit(ck).as("alive_checksum"))
-        case None =>
-          val alive = graft.Scratch.read(s, aliveDir)
-          val live = edges
-            .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
-            .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
-          val deg = live.select(col("u").as("x"))
-            .union(live.select(col("v").as("x")))
-            .groupBy("x").agg(count(lit(1)).as("c"))
-          val next = deg.filter(col("c") >= coreK).select("x")
-          val nextDir = graft.Scratch.write(s"graft_core_alive$r", next)
-          val row = graft.Scratch.read(s, nextDir).agg(
-            count(lit(1)).as("n_alive"),
-            coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
-          val (curN, ck) = (row.getLong(0), row.getLong(1))
-          stats = stats :+ s.range(1).select(lit(r).as("round"),
-            lit(prevN - curN).as("n_removed"), lit(curN).as("n_alive"),
-            lit(ck).as("alive_checksum"))
-          if (curN == prevN) fixpoint = Some((curN, ck))
-          prevN = curN
-          aliveDir = nextDir
+    def settled(r: Int, alive: org.apache.spark.sql.DataFrame): Boolean =
+      if (r == 0) { prevN = alive.count(); false }
+      else {
+        val st = alive.agg(count(lit(1)).as("n_alive"),
+          coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
+        val curN = st.getLong(0)
+        ck = st.getLong(1)
+        stats :+= row(r, prevN - curN, curN, ck)
+        val fixpoint = curN == prevN
+        prevN = curN
+        fixpoint
       }
+    graft.Scratch.iterate(s, "graft_core_alive", nodes,
+        graft.Scratch.Depth(coreRounds), settled) { (_, alive) =>
+      val live = edges
+        .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
+        .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
+      val deg = live.select(col("u").as("x"))
+        .union(live.select(col("v").as("x")))
+        .groupBy("x").agg(count(lit(1)).as("c"))
+      deg.filter(col("c") >= coreK).select("x")
     }
-    stats.reduce(_ unionByName _).orderBy("round")
+    // n_removed hit 0: the alive set is provably invariant from there on,
+    // so later trajectory rows are constants — emitted without recomputing
+    // the (identical) round
+    (stats ++ (stats.length + 1 to coreRounds).map(row(_, 0L, prevN, ck)))
+      .reduce(_ unionByName _).orderBy("round")
   }
 
   /** Label-propagation round count (q155). */
@@ -790,20 +778,16 @@ object Graph extends QueryModule {
     lpaCache(d) {
       val tmpE = lpaEdgesDir(s, d)
       val ed = graft.Scratch.read(s, tmpE) // both directions: undirected adjacency
-      var labelsDir = graft.Scratch.write("graft_lpa_l0",
-        ed.select(col("u").as("node")).distinct()
-          .select(col("node"), col("node").as("lbl")))
-      for (r <- 1 to lpaRounds) {
-        val labels = graft.Scratch.read(s, labelsDir)
-        val next = ed
-          .join(labels.select(col("node").as("v"), col("lbl")), "v")
+      val (labelsDir, _) = graft.Scratch.iterate(s, "graft_lpa_l",
+          ed.select(col("u").as("node")).distinct()
+            .select(col("node"), col("node").as("lbl")),
+          graft.Scratch.Depth(lpaRounds)) { (_, labels) =>
+        ed.join(labels.select(col("node").as("v"), col("lbl")), "v")
           .groupBy(col("u").as("node"), col("lbl"))
           .agg(count(lit(1)).as("cnt"))
           .groupBy("node")
           .agg(expr("""1000000000000 - (max(cnt * 1000000000000
                  + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
-        val nextDir = graft.Scratch.write(s"graft_lpa_l$r", next)
-        labelsDir = nextDir
       }
       (tmpE, labelsDir)
     }
@@ -970,24 +954,17 @@ object Graph extends QueryModule {
     // the LAST slice (a direct leaf read, no filter over the full set),
     // and per-round write volume drops from |visited| to |fresh| — total
     // bytes written over the loop fall from O(rounds·n) to O(n).
-    var dirs = Vector(graft.Scratch.write("graft_bfs_v0",
-      nodes.filter(col("x") % bfsSeedMod === 0)
-        .select(col("x"), lit(0).as("dist"))))
-    for (r <- 1 to bfsRounds) {
-      val visited = s.read.parquet(dirs: _*)
-      // fixed-round loop: a late round CAN have an empty frontier, and a
-      // 0-row parquet dir has no footer to infer a schema from — filter
-      // the multi-path scan (schema comes from the non-empty seed slice)
-      // instead of reading dirs.last alone
-      val frontier = visited.filter(col("dist") === r - 1)
+    val dirs = graft.Scratch.iterateAll(s, "graft_bfs_v",
+        nodes.filter(col("x") % bfsSeedMod === 0)
+          .select(col("x"), lit(0).as("dist")),
+        graft.Scratch.Depth(bfsRounds)) { (r, frontier, slices) =>
+      val visited = graft.Scratch.read(s, slices: _*)
       val nbrs = ed.join(frontier.select(col("x").as("u")), "u")
         .select(col("v").as("x")).distinct()
-      val fresh = nbrs.join(visited, Seq("x"), "left_anti")
+      nbrs.join(visited, Seq("x"), "left_anti")
         .select(col("x"), lit(r).as("dist"))
-      val nextDir = graft.Scratch.write(s"graft_bfs_v$r", fresh)
-      dirs :+= nextDir
     }
-    val visited = s.read.parquet(dirs: _*)
+    val visited = graft.Scratch.read(s, dirs: _*)
     val reached = visited.groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"), sum("x").as("id_checksum"))
     val unreached = nodes.join(visited, Seq("x"), "left_anti")
@@ -1031,11 +1008,7 @@ object Graph extends QueryModule {
     val nodes = ed.select(col("u").as("x")).distinct()
     // Fresh-slice staging (the bfsHops discipline): only each round's new
     // nodes are written, the visited set is one multi-path scan over the
-    // slices, the frontier is a direct read of the LAST slice (non-empty
-    // while the loop runs — frontierN > 0 is the loop condition), and the
-    // frontier count rides the staging write as an observed metric —
-    // the old form re-wrote the ENTIRE visited set every round and then
-    // re-scanned it with a second filter+count job just to drive the loop.
+    // slices, and the frontier is the LAST slice.
     // NOTE on the sync mechanism: Dataset.observe(Observation) was tried
     // and REVERTED — Spark 4.1's classic.SparkSession.observationManager
     // is a non-transient lazy val, so the FIRST observe() in a session
@@ -1044,33 +1017,23 @@ object Graph extends QueryModule {
     // q40/q41) dies with NotSerializableException. The per-round count is
     // instead a count() on the freshly written FRESH slice — parquet
     // footer metadata only, no data scan, and the slice is small.
-    var dirs = Vector(graft.Scratch.write("graft_bfsc_v0",
-      nodes.filter(col("x") % bfsSeedMod === 0)
-        .select(col("x"), lit(0).as("dist"))))
-    var frontierN = graft.Scratch.read(s, dirs.head).count()
     val traj = Seq.newBuilder[Long]
-    traj += frontierN
-    var r = 0
-    while (frontierN > 0) {
-      r += 1
-      require(r <= bfsMaxRounds,
-        s"q250: BFS still expanding after $bfsMaxRounds rounds — raise " +
-          "bfsMaxRounds (and the oracle unroll) together")
-      val visited = s.read.parquet(dirs: _*)
-      val frontier = graft.Scratch.read(s, dirs.last)
+    val dirs = graft.Scratch.iterateAll(s, "graft_bfsc_v",
+        nodes.filter(col("x") % bfsSeedMod === 0)
+          .select(col("x"), lit(0).as("dist")),
+        graft.Scratch.Converge("q250 BFS", bfsMaxRounds, "bfsMaxRounds"),
+        settled = (_, slice) => {
+          val frontierN = slice.count()
+          traj += frontierN
+          frontierN == 0L
+        }) { (r, frontier, slices) =>
+      val visited = graft.Scratch.read(s, slices: _*)
       val nbrs = ed.join(frontier.select(col("x").as("u")), "u")
         .select(col("v").as("x")).distinct()
-      val fresh = nbrs.join(visited, Seq("x"), "left_anti")
+      nbrs.join(visited, Seq("x"), "left_anti")
         .select(col("x"), lit(r).as("dist"))
-      val nextDir = graft.Scratch.write(s"graft_bfsc_v$r", fresh)
-      dirs :+= nextDir
-      // footer-only count; the bound read also covers the FINAL slice,
-      // which is empty (0 part files — nothing to infer from)
-      frontierN = graft.Scratch.read(s, nextDir).count()
-      traj += frontierN
     }
-    // the final (empty) slice has no footer to infer from — drop it
-    val visited = s.read.parquet(dirs.init: _*)
+    val visited = graft.Scratch.read(s, dirs: _*)
     val reached = visited.groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"), sum("x").as("id_checksum"))
     val unreached = nodes.join(visited, Seq("x"), "left_anti")
@@ -1137,21 +1100,32 @@ object Graph extends QueryModule {
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
     val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     val edp = graft.Scratch.read(s, lpaSelfLoopEdgesDir(s, d))
-    var labelsDir = graft.Scratch.write("graft_lpac_l0",
-      ed.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")))
     val traj = Seq.newBuilder[Long]
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
-    var changed = -1L
-    var r = 0
-    while (changed != 0L) {
-      r += 1
-      require(r <= lpaMaxRounds,
-        s"q251: LPA still moving after $lpaMaxRounds rounds — raise " +
-          "lpaMaxRounds (and the oracle unroll) together")
-      // select the live columns explicitly: rounds ≥ 2 read a leaf that
-      // also carries the previous round's plbl audit column
-      val labels = graft.Scratch.read(s, labelsDir).select("node", "lbl")
+    def settled(r: Int, labels: org.apache.spark.sql.DataFrame): Boolean =
+      r > 0 && {
+        val row = labels
+          .agg(sum(when(col("lbl") =!= col("plbl"), 1L).otherwise(0L))
+              .as("n_changed"),
+            countDistinct(col("lbl")).as("n_communities"),
+            sum(col("lbl")).as("lbl_checksum"))
+          .head() // the 1-row per-round driver sync (q250's contract)
+        val changed = row.getLong(0)
+        traj += changed
+        stats = stats :+ s.range(1).select(lit(r).as("round"),
+          lit(changed).as("n_changed"),
+          lit(row.getLong(1)).as("n_communities"),
+          lit(row.getLong(2)).as("lbl_checksum"))
+        changed == 0L
+      }
+    graft.Scratch.iterate(s, "graft_lpac_l",
+        ed.select(col("u").as("node")).distinct()
+          .select(col("node"), col("node").as("lbl")),
+        graft.Scratch.Converge("q251 LPA", lpaMaxRounds, "lpaMaxRounds"),
+        settled) { (_, prev) =>
+      // select the live columns explicitly: rounds ≥ 1 carry the previous
+      // round's plbl audit column
+      val labels = prev.select("node", "lbl")
       val next = edp
         .join(labels.select(col("node").as("v"), col("lbl")), "v")
         .groupBy(col("u").as("node"), col("lbl"))
@@ -1161,26 +1135,10 @@ object Graph extends QueryModule {
                + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
       // The previous label rides the staged round as plbl (one keyed join
       // folded into the round's OWN write pass), so the per-round stats
-      // sync aggregates the fresh leaf alone — the old form re-joined the
-      // new and old label tables in a separate job every round. The next
-      // round's reader prunes plbl (parquet column pruning). countDistinct
-      // cannot ride an observed metric, so the 1-row stats sync itself
-      // stays (q250's contract), minus its join.
-      val nextDir = graft.Scratch.write(s"graft_lpac_l$r",
-        next.join(labels.withColumnRenamed("lbl", "plbl"), "node"))
-      val row = graft.Scratch.read(s, nextDir)
-        .agg(sum(when(col("lbl") =!= col("plbl"), 1L).otherwise(0L))
-            .as("n_changed"),
-          countDistinct(col("lbl")).as("n_communities"),
-          sum(col("lbl")).as("lbl_checksum"))
-        .head() // the 1-row per-round driver sync (q250's contract)
-      changed = row.getLong(0)
-      traj += changed
-      stats = stats :+ s.range(1).select(lit(r).as("round"),
-        lit(changed).as("n_changed"),
-        lit(row.getLong(1)).as("n_communities"),
-        lit(row.getLong(2)).as("lbl_checksum"))
-      labelsDir = nextDir
+      // sync aggregates the fresh leaf alone; the next round's reader
+      // prunes plbl. countDistinct cannot ride an observed metric, so the
+      // 1-row stats sync itself stays (q250's contract).
+      next.join(labels.withColumnRenamed("lbl", "plbl"), "node")
     }
     (stats.reduce(_ unionByName _).orderBy("round"), traj.result())
   }
@@ -1216,38 +1174,35 @@ object Graph extends QueryModule {
   private[graft] def kcoreConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
     val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
-    var aliveDir = graft.Scratch.write("graft_kcorec_a0",
-      ed.select(col("u").as("x")).distinct())
-    var prevN = graft.Scratch.read(s, aliveDir).count()
+    var prevN = 0L
     val traj = Seq.newBuilder[Long]
     var stats = Seq.empty[org.apache.spark.sql.DataFrame]
-    var removed = -1L
-    var r = 0
-    while (removed != 0L) {
-      r += 1
-      require(r <= kcoreMaxRounds,
-        s"q252: k-core still peeling after $kcoreMaxRounds rounds — " +
-          "raise kcoreMaxRounds (and the oracle unroll) together")
-      val alive = graft.Scratch.read(s, aliveDir)
+    def settled(r: Int, alive: org.apache.spark.sql.DataFrame): Boolean =
+      if (r == 0) { prevN = alive.count(); false }
+      else {
+        val row = alive.agg(
+          count(lit(1)).as("n_alive"),
+          coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
+        val curN = row.getLong(0)
+        val removed = prevN - curN
+        traj += removed
+        stats = stats :+ s.range(1).select(lit(r).as("round"),
+          lit(removed).as("n_removed"), lit(curN).as("n_alive"),
+          lit(row.getLong(1)).as("alive_checksum"))
+        prevN = curN
+        removed == 0L
+      }
+    graft.Scratch.iterate(s, "graft_kcorec_a",
+        ed.select(col("u").as("x")).distinct(),
+        graft.Scratch.Converge("q252 k-core", kcoreMaxRounds, "kcoreMaxRounds"),
+        settled) { (_, alive) =>
       val live = ed
         .join(alive.select(col("x").as("u")), Seq("u"), "left_semi")
         .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
       // both directions staged → degree is ONE aggregate over u
-      val next = live.groupBy(col("u").as("x"))
+      live.groupBy(col("u").as("x"))
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= coreK).select("x")
-      val nextDir = graft.Scratch.write(s"graft_kcorec_a$r", next)
-      val row = graft.Scratch.read(s, nextDir).agg(
-        count(lit(1)).as("n_alive"),
-        coalesce(sum("x"), lit(0L)).as("alive_checksum")).head()
-      val curN = row.getLong(0)
-      removed = prevN - curN
-      traj += removed
-      stats = stats :+ s.range(1).select(lit(r).as("round"),
-        lit(removed).as("n_removed"), lit(curN).as("n_alive"),
-        lit(row.getLong(1)).as("alive_checksum"))
-      prevN = curN
-      aliveDir = nextDir
     }
     (stats.reduce(_ unionByName _).orderBy("round"), traj.result())
   }
@@ -1409,9 +1364,6 @@ object Graph extends QueryModule {
       .select(col("node"), col("bucket"),
         when(col("w") === 0, lit(33))
           .otherwise(lit(33) - length(bin(col("w")))).as("m"))
-    var regsDir = graft.Scratch.write("graft_hb_r0", init)
-    val dirs = Vector.newBuilder[String]
-    dirs += regsDir
     // One driver sync per round: the register bank never loses a
     // (node, bucket) key (monotone union), so next ⊇ prev keyed rows and
     // "changed" = rows whose prev value is absent or differs — a LEFT
@@ -1435,39 +1387,32 @@ object Graph extends QueryModule {
         .crossJoin(nodeEst.agg(sum("est").as("nf"))).head()
       (row.getLong(0), row.getLong(1), row.getLong(2))
     }
-    val r0 = graft.Scratch.read(s, regsDir)
-    var rows = Vector((0, roundStats(r0, lit(1L)))) // every seed register is new
-    var changed = -1L
-    var r = 0
-    while (changed != 0L) {
-      r += 1
-      require(r <= hyperBallMaxRounds,
-        s"q253: registers still moving after $hyperBallMaxRounds rounds — " +
-          "raise hyperBallMaxRounds (and the oracle unroll) together")
-      val prev = graft.Scratch.read(s, regsDir).select("node", "bucket", "m")
+    var rows = Vector.empty[(Int, (Long, Long, Long))]
+    def settled(r: Int, regs: org.apache.spark.sql.DataFrame): Boolean = {
+      val stats = roundStats(regs,
+        if (r == 0) lit(1L) // every seed register is new
+        else when(col("pm").isNull || col("pm") =!= col("m"), 1L).otherwise(0L))
+      rows :+= ((r, stats))
+      r > 0 && stats._1 == 0L
+    }
+    val dirs = graft.Scratch.iterateAll(s, "graft_hb_r", init,
+        graft.Scratch.Converge("q253 HyperBall", hyperBallMaxRounds,
+          "hyperBallMaxRounds"), settled) { (_, regs, _) =>
+      val prev = regs.select("node", "bucket", "m")
       // Carry the PREVIOUS value through the union-aggregate as pm (prev
       // rows contribute pm = m, inbound rows pm = null; max ignores
       // nulls, and the prev bank holds one row per key, so max(pm) IS
       // the previous register value). The staged bank then answers
-      // "changed?" by itself — the old form re-joined the two full
-      // register banks (|nodes|·64 rows each) every round just to
-      // recover pm. One write + one leaf-scan stats pass per round now;
-      // q258's per-round readers prune the extra column.
-      val next = prev.withColumn("pm", col("m"))
+      // "changed?" by itself, with no join of two full register banks
+      // (|nodes|·64 rows each); q258's per-round readers prune pm.
+      prev.withColumn("pm", col("m"))
         .unionByName(
           ed.join(prev.withColumnRenamed("node", "v"), "v")
             .select(col("u").as("node"), col("bucket"), col("m"))
             .withColumn("pm", lit(null).cast("long")))
         .groupBy("node", "bucket").agg(max("m").as("m"), max("pm").as("pm"))
-      val nextDir = graft.Scratch.write(s"graft_hb_r$r", next)
-      val stats = roundStats(graft.Scratch.read(s, nextDir),
-        when(col("pm").isNull || col("pm") =!= col("m"), 1L).otherwise(0L))
-      changed = stats._1
-      rows :+= ((r, stats))
-      regsDir = nextDir
-      dirs += nextDir
     }
-    (rows, dirs.result())
+    (rows, dirs)
   }
 
   /** Fixed-point denominator for q258's harmonic weights: lcm(1..24) —
@@ -1672,20 +1617,15 @@ object Graph extends QueryModule {
     def propagate(rev: Boolean, tag: String) = {
       val edges = if (rev) ed.select(col("v").as("src"), col("u").as("dst"))
                   else ed.select(col("u").as("src"), col("v").as("dst"))
-      var cur = graft.Scratch.write(s"graft_scc_${tag}0",
-        nodes.select(col("node"), col("node").as("lbl")))
-      var prev = cur
-      for (r <- 1 to sccRounds) {
-        val labels = graft.Scratch.read(s, cur)
+      val (cur, prev) = graft.Scratch.iterate(s, s"graft_scc_$tag",
+          nodes.select(col("node"), col("node").as("lbl")),
+          graft.Scratch.Depth(sccRounds)) { (_, labels) =>
         val inMin = edges
           .join(labels.select(col("node").as("src"), col("lbl")), "src")
           .groupBy(col("dst").as("node")).agg(min("lbl").as("inmin"))
-        val next = labels.join(inMin, Seq("node"), "left")
+        labels.join(inMin, Seq("node"), "left")
           .select(col("node"),
             least(col("lbl"), coalesce(col("inmin"), col("lbl"))).as("lbl"))
-        val nd = graft.Scratch.write(s"graft_scc_$tag$r", next)
-        prev = cur
-        cur = nd
       }
       (graft.Scratch.read(s, cur), graft.Scratch.read(s, prev))
     }
@@ -1882,23 +1822,21 @@ object Graph extends QueryModule {
     import org.apache.spark.sql.expressions.Window
     // unbound: PropertySpec passes planted dirs Scratch.write did not make
     val ed = s.read.parquet(edDir)
-    var posDir = graft.Scratch.write("graft_walk_p0",
-      ed.select(col("u").as("o")).distinct().select(col("o"), col("o").as("x")))
-    val steps = (0 to walkLen).map { t =>
-      if (t > 0) {
-        val cur = graft.Scratch.read(s, posDir)
-        val w = Window.partitionBy("o").orderBy(col("pick"), col("v"))
-        val next = cur.join(ed, col("x") === col("u"))
-          .withColumn("pick", md5(concat_ws(":",
-            col("o").cast("string"), lit(t.toString),
-            col("v").cast("string"))))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("o"), col("v").as("x"))
-        val nextDir = graft.Scratch.write(s"graft_walk_p$t", next)
-        posDir = nextDir
-      }
-      graft.Scratch.read(s, posDir)
+    val w = Window.partitionBy("o").orderBy(col("pick"), col("v"))
+    val dirs = graft.Scratch.iterateAll(s, "graft_walk_p",
+        ed.select(col("u").as("o")).distinct().select(col("o"), col("o").as("x")),
+        graft.Scratch.Depth(walkLen)) { (t, cur, _) =>
+      cur.join(ed, col("x") === col("u"))
+        .withColumn("pick", md5(concat_ws(":",
+          col("o").cast("string"), lit(t.toString),
+          col("v").cast("string"))))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("o"), col("v").as("x"))
+    }
+    // per-step stats read every step's dir lazily: a history loop
+    val steps = dirs.zipWithIndex.map { case (dir, t) =>
+      graft.Scratch.read(s, dir)
         .agg(count(lit(1)).as("n_walks"),
           countDistinct(col("x")).as("n_distinct_nodes"),
           sum(col("x")).as("node_id_sum"))
@@ -1957,38 +1895,23 @@ object Graph extends QueryModule {
     val ed = s.read.parquet(edDir)
     // Forward: fresh-slice staging (the q250 discipline) — only each
     // round's new (s, x) rows are written, the visited set is one
-    // multi-path scan over the slices, the frontier is a direct read of
-    // the LAST slice (non-empty while the loop runs), and the frontier
-    // count rides the staging write as an observed metric. The old form
-    // re-wrote the whole visited set every round (O(rounds·reach) bytes)
-    // and re-counted it in a second job.
+    // multi-path scan over the slices, the frontier is the LAST slice, and
+    // its footer-only count is the per-round sync (bfsConvergedRun's note).
     val seeds0 = srcs.select(col("s"), col("s").as("x"), lit(0).as("dist"),
       lit(1L).as("sigma"))
-    var dirs = Vector(graft.Scratch.write(s"graft_${tag}_v0", seeds0))
-    var frontierN = graft.Scratch.read(s, dirs.head).count() // footer-only
-    var r = 0
-    while (frontierN > 0) {
-      r += 1
-      require(r <= brandesMaxRounds,
-        s"q257: BFS still expanding after $brandesMaxRounds rounds — raise " +
-          "brandesMaxRounds (and the oracle unroll) together")
-      val visited = s.read.parquet(dirs: _*)
-      val frontier = graft.Scratch.read(s, dirs.last)
-        .select(col("s"), col("x").as("u"), col("sigma"))
-      val nbrs = ed.join(frontier, "u")
+    val dirs = graft.Scratch.iterateAll(s, s"graft_${tag}_v", seeds0,
+        graft.Scratch.Converge("q257 BFS", brandesMaxRounds, "brandesMaxRounds"),
+        settled = (_, slice) => slice.count() == 0L) { (r, last, slices) =>
+      val visited = graft.Scratch.read(s, slices: _*)
+      val frontier = last.select(col("s"), col("x").as("u"), col("sigma"))
+      ed.join(frontier, "u")
         .groupBy(col("s"), col("v").as("x"))
         .agg(sum("sigma").as("sigma"))
-      val fresh = nbrs
         .join(visited.select(col("s"), col("x")), Seq("s", "x"), "left_anti")
         .select(col("s"), col("x"), lit(r).as("dist"), col("sigma"))
-      val nextDir = graft.Scratch.write(s"graft_${tag}_v$r", fresh)
-      dirs :+= nextDir
-      // footer-only count, bound read (the final slice is empty — no
-      // part files to infer from); see bfsConvergedRun's sync note
-      frontierN = graft.Scratch.read(s, nextDir).count()
     }
-    val maxDist = r - 1
-    val vis = s.read.parquet(dirs.init: _*) // final slice is the empty one
+    val maxDist = dirs.length - 2 // the final slice is the empty one
+    val vis = graft.Scratch.read(s, dirs: _*)
     // loud overflow precondition for the backward pass's packed products
     val g = vis.groupBy("s")
       .agg(count(lit(1)).as("nreach"), max("sigma").as("msig"))
@@ -2000,46 +1923,43 @@ object Graph extends QueryModule {
     // Backward: per-LEVEL delta staging. Each (s, x) sits at exactly one
     // distance, so its dependency δ is decided by a single level's
     // aggregate — stage only that per-level (s, x, delta) frame (the
-    // level-d slice of the forward pass IS the wd/pu row source) instead
-    // of rewriting the entire (s, x, dist, sigma, delta) table once per
-    // level. Nodes with no level-(d+1) successors simply have no delta
-    // row — the final left join coalesces them to the same 0 the old
-    // full-table rewrite carried along. Identical arithmetic, identical
-    // rows out; write volume per level drops from |reach| to |level|.
-    var lvlDeltaDir: Option[String] = None // deltas of level d (partial)
-    val deltaDirs = Vector.newBuilder[String]
-    for (d <- maxDist to 1 by -1) {
+    // level-d slice of the forward pass IS the wd/pu row source), so write
+    // volume per level is |level|, not |reach|. Nodes with no level-(d+1)
+    // successors have no delta row; the final left join coalesces them
+    // to 0. `contrib(d, …)` is what level d passes up to level d − 1;
+    // `lvlDelta` holds level d's own deltas, none at the deepest level.
+    def contrib(d: Int, lvlDelta: Option[org.apache.spark.sql.DataFrame]) = {
       val wd0 = graft.Scratch.read(s, dirs(d))
         .select(col("s"), col("x").as("wx"), col("sigma").as("ws"))
-      val wd = lvlDeltaDir match {
+      val wd = lvlDelta match {
         case None => wd0.withColumn("wdel", lit(0L)) // deepest level: δ = 0
-        case Some(dir) => wd0.join(
-            graft.Scratch.read(s, dir)
-              .select(col("s"), col("x").as("wx"), col("delta").as("wdel0")),
+        case Some(delta) => wd0.join(
+            delta.select(col("s"), col("x").as("wx"), col("delta").as("wdel0")),
             Seq("s", "wx"), "left")
           .select(col("s"), col("wx"), col("ws"),
             coalesce(col("wdel0"), lit(0L)).as("wdel"))
       }
       val pu = graft.Scratch.read(s, dirs(d - 1))
         .select(col("s"), col("x").as("u"), col("sigma").as("us"))
-      val contrib = ed.join(wd, col("v") === col("wx"))
+      ed.join(wd, col("v") === col("wx"))
         .join(pu, Seq("s", "u"))
         .select(col("s"), col("u").as("x"),
           expr("us * (1000000 + wdel) div ws").as("c"))
         .groupBy("s", "x").agg(sum("c").as("delta"))
-      val nextDir = graft.Scratch.write(s"graft_${tag}_b${d - 1}", contrib)
-      deltaDirs += nextDir
-      lvlDeltaDir = Some(nextDir)
     }
-    val allDelta =
-      if (maxDist < 1) null
-      else s.read.parquet(deltaDirs.result(): _*)
-        .select(col("s"), col("x"), col("delta"))
     val folded =
-      if (allDelta == null) vis.withColumn("delta", lit(0L))
-      else vis.join(allDelta, Seq("s", "x"), "left")
-        .select(col("s"), col("x"),
-          coalesce(col("delta"), lit(0L)).as("delta"))
+      if (maxDist < 1) vis.withColumn("delta", lit(0L))
+      else {
+        // round r holds level (maxDist − 1 − r)'s deltas
+        val deltaDirs = graft.Scratch.iterateAll(s, s"graft_${tag}_b",
+            contrib(maxDist, None), graft.Scratch.Depth(maxDist - 1)) {
+          (r, delta, _) => contrib(maxDist - r, Some(delta))
+        }
+        vis.join(graft.Scratch.read(s, deltaDirs: _*)
+            .select(col("s"), col("x"), col("delta")), Seq("s", "x"), "left")
+          .select(col("s"), col("x"),
+            coalesce(col("delta"), lit(0L)).as("delta"))
+      }
     folded
       .filter(col("x") =!= col("s"))
       .groupBy("x")

@@ -606,20 +606,16 @@ object Similarity extends QueryModule {
     // Stage the ≤ recallSampleN·beamWidth-row beam per hop instead (the
     // q106/q250 loop lineage discipline): each hop is then one join +
     // one score + one rank over a parquet leaf, linear in hops.
-    var beamDir = graft.Scratch.write("graft_annr_b0",
-      score(routed.unionByName(floor).distinct())
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
-    for (h <- 1 to beamHops) {
-      val beam = graft.Scratch.read(s, beamDir)
+    def topBeam(cand: DataFrame) = score(cand)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9")
+    val (beamDir, _) = graft.Scratch.iterate(s, "graft_annr_b",
+        topBeam(routed.unionByName(floor).distinct()),
+        graft.Scratch.Depth(beamHops)) { (_, beam) =>
       val nbrs = beam.join(ed, beam("node") === ed("u"))
         .select(col("q_id"), col("v").as("node"))
         .filter(col("node") =!= col("q_id"))
-      val cand = beam.select("q_id", "node").unionByName(nbrs).distinct()
-      beamDir = graft.Scratch.write(s"graft_annr_b$h",
-        score(cand)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= beamWidth).select("q_id", "node", "sim9"))
+      topBeam(beam.select("q_id", "node").unionByName(nbrs).distinct())
     }
     val beam = graft.Scratch.read(s, beamDir)
     val top1 = beam.withColumn("rn", row_number().over(w))
@@ -1178,18 +1174,16 @@ object Similarity extends QueryModule {
         .orderBy(col("sq").desc, col("vec_id")).limit(1)
         .select("vec_id", "qv").collect()(0)
       var chosen = Vector((seed.getLong(0), seed.getSeq[Long](1), -1L))
-      var mindDir = graft.Scratch.write("graft_kcenter_d0",
-        vecs.select(col("vec_id"), kcenterDistExpr(chosen.head._2).as("d")))
-      for (r <- 1 until kcenterK) {
-        val mind = graft.Scratch.read(s, mindDir)
+      val (mindDir, _) = graft.Scratch.iterate(s, "graft_kcenter_d",
+          vecs.select(col("vec_id"), kcenterDistExpr(chosen.head._2).as("d")),
+          graft.Scratch.Depth(kcenterK - 1)) { (r, mind) =>
         val pick = mind
           .filter(!col("vec_id").isin(chosen.map(_._1): _*))
           .orderBy(col("d").desc, col("vec_id")).limit(1)
           .join(vecs, "vec_id").select("vec_id", "d", "qv").collect()
         require(pick.nonEmpty, s"k-center round $r: corpus exhausted below k=$kcenterK")
         chosen = chosen :+ ((pick(0).getLong(0), pick(0).getSeq[Long](2), pick(0).getLong(1)))
-        mindDir = graft.Scratch.write(s"graft_kcenter_d$r",
-          kcenterRoundUpdate(vecs, mind, chosen.last._2))
+        kcenterRoundUpdate(vecs, mind, chosen.last._2)
       }
       val covering = graft.Scratch.read(s, mindDir).agg(max("d"))
         .collect()(0).getLong(0)

@@ -1830,8 +1830,6 @@ object Text extends QueryModule {
         col("e.piece").as("piece"))
       .join(broadcast(v), "piece")
     val edS = graft.Scratch.stage(s"graft_uni_e$rnd", edges)
-    var stDir = graft.Scratch.write(s"graft_uni_dp${rnd}_0",
-      wfS.select(col("w"), lit(1).as("pos"), lit("00").as("packed")))
     // dpRounds = the corpus's measured max word length (<= the cap): the
     // DP reaches its fixpoint once every word's full-length path exists,
     // so rounds past it are provable no-ops — the ORACLE still unrolls
@@ -1855,13 +1853,11 @@ object Text extends QueryModule {
       base.unionByName(cand).groupBy("w", "pos")
         .agg(min("packed").as("packed"))
     }
-    var k = 1
-    while (k <= dpRounds) {
-      val st = graft.Scratch.read(s, stDir)
-      val fused = if (k + 1 <= dpRounds) step(step(st)) else step(st)
-      val nextDir = graft.Scratch.write(s"graft_uni_dp${rnd}_$k", fused)
-      stDir = nextDir
-      k += (if (k + 1 <= dpRounds) 2 else 1)
+    // staged round i runs DP rounds 2i − 1 and 2i (the last alone if odd)
+    val (stDir, _) = graft.Scratch.iterate(s, s"graft_uni_dp${rnd}_",
+        wfS.select(col("w"), lit(1).as("pos"), lit("00").as("packed")),
+        graft.Scratch.Depth((dpRounds + 1) / 2)) { (i, st) =>
+      if (2 * i <= dpRounds) step(step(st)) else step(st)
     }
     val fin = graft.Scratch.read(s, stDir)
       .filter(col("pos") === length(col("w")) + 1)
