@@ -729,9 +729,10 @@ object Dedup extends QueryModule {
     * band signatures and hashed token sets (stateless projections —
     * linear in the batch), probes the STAGED corpus index exactly as
     * q114 does, and writes per-document verdicts to a durable parquet
-    * sink through foreachBatch — batch-id-keyed overwrite paths, so an
-    * at-least-once replay of a micro-batch is an idempotent no-op, not a
-    * duplicate append. No streaming state at all: a document's
+    * sink through foreachBatch — batch-id-keyed overwrite paths
+    * ([[graft.streaming.StreamingJobs.sinkBatches]]), so an at-least-once
+    * replay of a micro-batch rewrites its own dir instead of appending a
+    * duplicate. No streaming state at all: a document's
     * verdict depends only on (document, corpus index), never on other
     * delta documents, so the result is independent of micro-batch
     * boundaries — which is why this query can share q114's DuckDB oracle
@@ -740,50 +741,34 @@ object Dedup extends QueryModule {
     * the index probe stays the same shuffle_hash equi-join per batch.
     */
   val streamDeltaDedup: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
     val (ixSigs, ixSets) = corpusIndex(s, d)
     val schema = Tables.documents(s, d).schema
     val delta = s.readStream.schema(schema).parquet(s"$d/documents.*")
       .filter(isDelta)
-    val tmp = graft.Scratch.dir("graft_stream_deltadedup")
-    graft.withShufflePartitions(s, 8) {
-      val q = delta.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val t = batch.select(col("doc_id"),
-            array_distinct(split(col("text"), "\\s+")).as("tokset"))
-          val cand = bandSigs(s, t).alias("a")
-            .join(ixSigs.alias("b").hint("shuffle_hash"),
-              col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
-            .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
-            .distinct()
-          val x = hashedSets(t).select(col("doc_id").as("did"), col("hs").as("hs1"))
-          val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
-          val matches = cand
-            .join(x.hint("shuffle_hash"), "did")
-            .join(y.hint("shuffle_hash"), "cid")
-            .filter(jaccardDist <= maxDist)
-            .groupBy("did")
-            .agg(count(lit(1)).as("n_dup"), min("cid").as("dup_of"))
-          batch.select(col("doc_id"))
-            .join(matches, col("doc_id") === col("did"), "left")
-            .select(col("doc_id"),
-              coalesce(col("n_dup"), lit(0L)).as("n_dup"),
-              coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
-              (coalesce(col("n_dup"), lit(0L)) === 0).as("is_new"))
-            // batch-id-keyed OVERWRITE, not a shared append: foreachBatch
-            // is at-least-once, so a micro-batch replayed after a task
-            // failure (or a rerun against the same checkpoint) must be a
-            // no-op, not a duplicate-row append — each batch owns its path
-            // and a replay overwrites it with identical content
-            .write.mode("overwrite").parquet(s"$tmp/data/batch_$batchId")
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    s.read.parquet(s"$tmp/data/batch_*").orderBy("doc_id")
+    graft.streaming.StreamingJobs.sinkBatches(
+        graft.Scratch.dir("graft_stream_deltadedup"), delta) { batch =>
+      val t = batch.select(col("doc_id"),
+        array_distinct(split(col("text"), "\\s+")).as("tokset"))
+      val cand = bandSigs(s, t).alias("a")
+        .join(ixSigs.alias("b").hint("shuffle_hash"),
+          col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
+        .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
+        .distinct()
+      val x = hashedSets(t).select(col("doc_id").as("did"), col("hs").as("hs1"))
+      val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
+      val matches = cand
+        .join(x.hint("shuffle_hash"), "did")
+        .join(y.hint("shuffle_hash"), "cid")
+        .filter(jaccardDist <= maxDist)
+        .groupBy("did")
+        .agg(count(lit(1)).as("n_dup"), min("cid").as("dup_of"))
+      batch.select(col("doc_id"))
+        .join(matches, col("doc_id") === col("did"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_dup"), lit(0L)).as("n_dup"),
+          coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
+          (coalesce(col("n_dup"), lit(0L)) === 0).as("is_new"))
+    }._1.orderBy("doc_id")
   }
 
   /** q248 tombstone rule — deterministic, scale-proportional (~2% of

@@ -935,27 +935,15 @@ object Similarity extends QueryModule {
     * (the q39/q162/q244 streaming-family discipline).
     */
   val streamSemDedup: Q = (s, d) => {
-    import org.apache.spark.sql.streaming.Trigger
     val (pivots, home) = embCorpusIndex(s, d)
     val schema = Tables.embeddings(s, d).schema
     val delta = s.readStream.schema(schema).parquet(s"$d/embeddings.*")
       .filter(isDeltaVec)
-    val tmp = graft.Scratch.dir("graft_stream_semdedup")
-    graft.withShufflePartitions(s, 8) {
-      val q = delta.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val b = batch.select(col("vec_id"), col("embedding"),
-            sqNormD(col("embedding")).as("sq"))
-          semanticProbeVerdicts(b, pivots, home, probes = 2)
-            .write.mode("overwrite").parquet(s"$tmp/data/batch_$batchId")
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    s.read.parquet(s"$tmp/data/batch_*").orderBy("vec_id")
+    graft.streaming.StreamingJobs.sinkBatches(
+        graft.Scratch.dir("graft_stream_semdedup"), delta) { batch =>
+      semanticProbeVerdicts(batch.select(col("vec_id"), col("embedding"),
+        sqNormD(col("embedding")).as("sq")), pivots, home, probes = 2)
+    }._1.orderBy("vec_id")
   }
 
   /** q241 — IVF CENTROID DRIFT audit: does the delta batch still look

@@ -5,26 +5,46 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.{Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming slice (SURVEY.md §2.9 — absent from the reference;
   * reserved by the build plan M5). Each job runs a batch-equivalent
   * computation through `readStream` → `writeStream`, so it shares the batch
   * twin's DuckDB oracle: batch/stream parity is itself the check.
   *
-  * Coverage: q39 stateful windowed aggregation (complete mode, memory
-  * sink); q50 streaming deduplication with watermark-bounded state and a
-  * DURABLE parquet sink in append mode (the production persistence shape);
-  * q51 stream-static enrichment join (the canonical "enrich events with a
-  * broadcast dimension" topology). Session windows + typed custom state
-  * live in operators/Events (q45/q46) with StreamingSpec coverage.
+  * == The drain contract ==
+  * Every streaming query in graft (these, Dedup q244 and Similarity q249)
+  * runs through [[drain]]:
+  *  - '''Trigger.''' `Trigger.AvailableNow`: the query drains the whole
+  *    backlog in bounded micro-batches and stops itself — the
+  *    batch-parity trigger for a static input, and the backfill pattern.
+  *  - '''Width.''' [[statePartitions]] shuffle partitions, set on the
+  *    caller's session around start, await and stop. The query clones the
+  *    session at start, so its state stores and its foreachBatch bodies
+  *    run at that width.
+  *  - '''Batch count.''' A drain returns the number of micro-batches that
+  *    carried data (`numInputRows > 0`). AvailableNow can post zero-input
+  *    progress (a trailing commit or idle tick), which is not a fold.
+  *  - '''Stop.''' The query stops in `finally`; [[drainToLocal]] drops its
+  *    memory-sink view in `finally`. A batch that throws leaves no active
+  *    stream and no view behind.
+  *  - '''Versions.''' A [[foldVersions]] state fold is exactly-once under
+  *    replay: batch n reads version n−1 (the initial state when n = 0) and
+  *    overwrites `state_v<n>`, so a batch Spark runs again after a restart
+  *    re-reads the same predecessor and rewrites the same successor. The
+  *    fold's result is the newest version listed under its root, which is
+  *    also what a restart that replays nothing resumes from.
+  *  - '''Sources.''' A [[Staged]] file source streams bound to the schema
+  *    of the frame written there, so building the stream runs no
+  *    footer-inference job.
   *
   * At scale the source swaps for Kafka/file-directory streams and the
   * state store partitions by the grouping/dedup key exactly like the batch
-  * shuffle does; `Trigger.AvailableNow` drains a bounded backlog and stops,
-  * which is also the recommended backfill pattern.
+  * shuffle does.
   */
 object StreamingJobs extends QueryModule {
 
@@ -40,6 +60,137 @@ object StreamingJobs extends QueryModule {
     * the decision is explicit either way (see [[graft.withShufflePartitions]]).
     */
   private val statePartitions = 8
+
+  /** Runs `writer` to completion under the drain contract; returns the
+    * number of data-carrying micro-batches.
+    */
+  private[graft] def drain(s: SparkSession, writer: DataStreamWriter[_]): Long =
+    graft.withShufflePartitions(s, statePartitions) {
+      val q = writer.trigger(Trigger.AvailableNow()).start()
+      try {
+        q.awaitTermination()
+        q.recentProgress.count(_.numInputRows > 0).toLong
+      } finally q.stop()
+    }
+
+  /** Drains `df` into the memory sink in output `mode`, then returns
+    * `result` of the sink table collected into a local frame, with the
+    * batch count. The sink's view is dropped, so repeated runs in one
+    * session do not pile up memory-sink copies of their results.
+    */
+  private[graft] def drainToLocal(df: DataFrame, mode: String)(
+      result: DataFrame => DataFrame): (DataFrame, Long) = {
+    val s = df.sparkSession
+    val name = s"stream_${runId.incrementAndGet()}"
+    try {
+      val batches = drain(s,
+        df.writeStream.outputMode(mode).format("memory").queryName(name))
+      val res = result(s.table(name))
+      (s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema),
+        batches)
+    } finally s.catalog.dropTempView(name)
+  }
+
+  private def fs(s: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The `<prefix><n>` dirs under `root`, oldest (smallest n) first. */
+  private def listed(s: SparkSession, root: String, prefix: String): Seq[String] = {
+    val hfs = fs(s, root)
+    if (!hfs.exists(new Path(root))) Nil
+    else hfs.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .sortBy(_.getPath.getName.stripPrefix(prefix).toLong)
+      .map(_.getPath.toString)
+  }
+
+  /** The state versions a [[foldVersions]] under `root` has published. */
+  private def versions(s: SparkSession, root: String): Seq[String] =
+    listed(s, root, "state_v")
+
+  /** A foreachBatch state fold (the version rule above): batch n writes
+    * `step(batch, version n−1)` to `root/state_v<n>`; version −1 is `init`
+    * (`None`: no prior state). Returns the newest version (`init` if none
+    * was published) and the batch count.
+    */
+  private[graft] def foldVersions(root: String, stream: DataFrame,
+      init: Option[String] = None)(
+      step: (DataFrame, Option[DataFrame]) => DataFrame): (DataFrame, Long) = {
+    val s = stream.sparkSession
+    def version(n: Long): Option[String] =
+      if (n < 0) init else Some(s"$root/state_v$n")
+    val batches = drain(s, stream.writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (batch: DataFrame, n: Long) =>
+        step(batch, version(n - 1).map(s.read.parquet(_)))
+          .write.mode("overwrite").parquet(version(n).get)
+      })
+    val last = versions(s, root).lastOption.orElse(init)
+      .getOrElse(sys.error(s"$root: stream produced no micro-batches"))
+    (s.read.parquet(last), batches)
+  }
+
+  /** A foreachBatch sink keyed by batch id: batch n writes `step(batch)`
+    * to `root/batch_<n>` with mode overwrite, so a replayed batch rewrites
+    * its own dir instead of appending its rows twice. Returns every batch
+    * dir as one frame (an explicit listing: a glob logs a WARN-level
+    * FileNotFoundException through the lazy-analysis retry even when the
+    * read succeeds) and the batch count.
+    */
+  private[graft] def sinkBatches(root: String, stream: DataFrame)(
+      step: DataFrame => DataFrame): (DataFrame, Long) = {
+    val s = stream.sparkSession
+    val batches = drain(s, stream.writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch { (batch: DataFrame, n: Long) =>
+        step(batch).write.mode("overwrite").parquet(s"$root/batch_$n")
+      })
+    (s.read.parquet(listed(s, root, "batch_"): _*), batches)
+  }
+
+  /** A staged file source: parquet files under `dir`, written from a frame
+    * whose (nullable) schema is `schema`.
+    */
+  private[graft] final case class Staged(dir: String, schema: StructType) {
+    /** The file stream over `dir`, `perTrigger` files per micro-batch. */
+    def stream(s: SparkSession, perTrigger: Int): DataFrame =
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", perTrigger.toString).parquet(dir)
+
+    /** The same files as one batch frame. */
+    def read(s: SparkSession): DataFrame = s.read.schema(schema).parquet(dir)
+  }
+
+  /** Stages `df` as `root/src` unless an earlier run against the same root
+    * already did (a restart reads the source its checkpoint refers to).
+    */
+  private[graft] def stage(root: String, df: DataFrame): Staged = {
+    val src = s"$root/src"
+    if (!fs(df.sparkSession, src).exists(new Path(src)))
+      df.write.mode("overwrite").parquet(src)
+    Staged(src, df.schema.toNullable)
+  }
+
+  /** Stages each slice as one file `root/src/f<NN>.parquet` with strictly
+    * increasing mtimes: the file source replays oldest-first, so slices
+    * arrive in order.
+    */
+  private[graft] def stageOrdered(root: String, slices: Seq[DataFrame]): Staged = {
+    val hfs = fs(slices.head.sparkSession, root)
+    val src = s"$root/src"
+    hfs.mkdirs(new Path(src))
+    slices.zipWithIndex.foreach { case (slice, i) =>
+      val part = s"$root/stage_$i"
+      slice.coalesce(1).write.mode("overwrite").parquet(part)
+      val file = hfs.listStatus(new Path(part))
+        .find(_.getPath.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part written for slice $i of $root"))
+      val dst = new Path(src, f"f$i%02d.parquet")
+      hfs.rename(file.getPath, dst)
+      hfs.setTimes(dst, 1000000L + i * 1000L, -1)
+    }
+    Staged(src, slices.head.schema.toNullable)
+  }
 
   /** Streaming read of the events table, schema-adaptive on `ts` exactly
     * like the batch [[graft.sources.Tables.events]] (long nanos →
@@ -64,30 +215,6 @@ object StreamingJobs extends QueryModule {
     }
   }
 
-  /** Run a streaming aggregate to completion through the memory sink and
-    * return its final table, dropping the temp view so repeated runs in
-    * one session (bench loops, test reruns) don't accumulate result
-    * copies in driver memory.
-    */
-  private def drainToLocal(s: SparkSession, agg: DataFrame, tag: String,
-      order: Seq[String], mode: String = "complete"): DataFrame = {
-    val name = s"stream_${tag}_${runId.incrementAndGet()}"
-    // AvailableNow drains the whole backlog in bounded micro-batches and
-    // stops itself — the batch-parity trigger for a static input.
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = agg.writeStream.outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    val sink = s.table(name).orderBy(order.map(col): _*)
-    val rows = java.util.Arrays.asList(sink.collect(): _*)
-    val out = s.createDataFrame(rows, sink.schema)
-    s.catalog.dropTempView(name)
-    out
-  }
-
   /** q39 — tumbling 1-hour event-time window over a streaming read of the
     * events table; result identical to the batch q22.
     */
@@ -97,7 +224,7 @@ object StreamingJobs extends QueryModule {
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("total"))
-    drainToLocal(s, agg, "tumbling", Seq("window_start", "event_type"))
+    drainToLocal(agg, "complete")(_.orderBy("window_start", "event_type"))._1
   }
 
   /** q50 — streaming deduplication with watermark-bounded state, written
@@ -120,16 +247,9 @@ object StreamingJobs extends QueryModule {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
     val tmp = graft.Scratch.dir("graft_stream_dedup")
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = dedup.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .format("parquet")
-        .option("path", s"$tmp/data")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
+    drain(s, dedup.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$tmp/data")
+      .option("checkpointLocation", s"$tmp/ckpt"))
     s.read.parquet(s"$tmp/data").orderBy("user_id", "event_type")
   }
 
@@ -146,7 +266,7 @@ object StreamingJobs extends QueryModule {
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_nationkey"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
-    drainToLocal(s, agg, "static_join", Seq("c_nationkey", "event_type"))
+    drainToLocal(agg, "complete")(_.orderBy("c_nationkey", "event_type"))._1
   }
 
   /** q68 — stream-stream inner join: each view event joined to the same
@@ -188,8 +308,7 @@ object StreamingJobs extends QueryModule {
           col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"))
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts"))).as("gap_us"))
-    drainToLocal(s, joined, "ss_join", Seq("view_id", "purchase_id"),
-      mode = "append")
+    drainToLocal(joined, "append")(_.orderBy("view_id", "purchase_id"))._1
   }
 
   /** q104 — stream-stream LEFT OUTER join: q68's topology, plus the
@@ -224,8 +343,7 @@ object StreamingJobs extends QueryModule {
         "leftOuter")
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts"))).as("gap_us"))
-    drainToLocal(s, joined, "ss_outer", Seq("view_id", "purchase_id"),
-      mode = "append")
+    drainToLocal(joined, "append")(_.orderBy("view_id", "purchase_id"))._1
   }
 
   /** Streaming sessionizer via `flatMapGroupsWithState` — the custom-state
@@ -269,24 +387,13 @@ object StreamingJobs extends QueryModule {
           open.foreach(state.update)
           out.iterator
       }
-    val name = s"stream_sessions_${runId.incrementAndGet()}"
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = closed.toDF("user_id", "start_us", "end_us", "n_events")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    val sink = s.table(name)
-      .select(col("user_id"),
-        expr("timestamp_micros(start_us)").as("session_start"),
-        expr("timestamp_micros(end_us)").as("session_end"), col("n_events"))
-      .orderBy("user_id", "session_start")
-    val rows = java.util.Arrays.asList(sink.collect(): _*)
-    val out = s.createDataFrame(rows, sink.schema)
-    s.catalog.dropTempView(name)
-    out
+    drainToLocal(closed.toDF("user_id", "start_us", "end_us", "n_events"),
+        "append") {
+      _.select(col("user_id"),
+          expr("timestamp_micros(start_us)").as("session_start"),
+          expr("timestamp_micros(end_us)").as("session_end"), col("n_events"))
+        .orderBy("user_id", "session_start")
+    }._1
   }
 
   /** q117 — streaming CDC upsert through `foreachBatch`: the production
@@ -294,9 +401,9 @@ object StreamingJobs extends QueryModule {
     * has no transactional MERGE — each micro-batch folds its
     * latest-per-(user_id, event_type) rows into the previous state version
     * and publishes a NEW immutable state directory (the poor-man's Delta
-    * commit: readers never observe a half-written table, and re-running a
-    * batch re-publishes the same version — idempotent under the
-    * exactly-once contract foreachBatch + checkpoint provides).
+    * commit: readers never observe a half-written table; a replayed batch
+    * rewrites its own version from its own predecessor, the
+    * [[foldVersions]] rule).
     *
     * The source is staged into several files and throttled with
     * maxFilesPerTrigger so AvailableNow genuinely produces MULTIPLE
@@ -317,61 +424,20 @@ object StreamingJobs extends QueryModule {
       fixedRoot: Option[String] = None): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
     val root = fixedRoot.getOrElse(graft.Scratch.dir("graft_stream_upsert"))
-    val src = s"$root/src"
-    // idempotent restart contract: with a fixed root the source is staged
-    // once and the checkpoint survives — a re-run must replay ZERO batches.
-    // Hadoop FileSystem, not java.io.File: state/source dirs live on
-    // whatever FS the job runs against (HDFS/S3/local alike).
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(new org.apache.hadoop.fs.Path(src)))
-      Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema // ts already µs timestamps
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val stream = stage(root, Tables.events(s, d).repartition(8)).stream(s, 2)
     def latest(df: DataFrame): DataFrame = {
       val w = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts").desc, col("event_id").desc)
       df.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).drop("rn")
     }
-    // recovery: the latest published state version is discoverable from the
-    // directory listing — a restarted job resumes from it, and a re-run
-    // whose checkpoint says "all files processed" publishes nothing new
-    var current: Option[String] = {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      if (!hfs.exists(rootPath)) None
-      else hfs.listStatus(rootPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("state_v"))
-        .sortBy(_.getPath.getName.stripPrefix("state_v").toLong)
-        .lastOption.map(_.getPath.toString)
+    val (state, batches) = foldVersions(root, stream) { (batch, prev) =>
+      val incoming = latest(batch)
+      prev.fold(incoming)(p => latest(p.unionByName(incoming)))
     }
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val incoming = latest(batch)
-          val merged = current match {
-            case Some(p) => latest(s.read.parquet(p).unionByName(incoming))
-            case None => incoming
-          }
-          val out = s"$root/state_v$id"
-          merged.write.mode("overwrite").parquet(out)
-          current = Some(out)
-          batches += 1
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-    }
-    val state = s.read.parquet(current.getOrElse(
-      sys.error("stream produced no micro-batches")))
-      .select(col("user_id"), col("event_type"), col("event_id"),
+    (state.select(col("user_id"), col("event_type"), col("event_id"),
         col("ts").as("latest_ts"), col("value"))
-      .orderBy("user_id", "event_type")
-    (state, batches)
+      .orderBy("user_id", "event_type"), batches)
   }
 
   val streamUpsert: Q = (s, d) => upsertRun(s, d)._1
@@ -389,74 +455,40 @@ object StreamingJobs extends QueryModule {
     * the sketch STREAMABLE — a KLL-style randomized compactor would only
     * agree in distribution, and batch boundaries would leak into the
     * answer. Per-day exact counts sum-merge alongside (associative, like
-    * q117's latest-per-key). State footprint: ≤ k rows per day plus one
-    * count row per day, whatever the event volume; each micro-batch costs
-    * one keyed window over (state ∪ batch-partial), both already ≤ k per
-    * day. StreamingSpec pins multi-batch folding and stream≡batch sketch
+    * q117's latest-per-key). State footprint: ≤ k rows per day, each
+    * carrying the day's count, whatever the event volume; each micro-batch
+    * costs one keyed window over (state ∪ batch-partial), both already
+    * ≤ k per day. StreamingSpec pins multi-batch folding and stream≡batch sketch
     * identity.
     */
   private[graft] def streamRankRun(s: SparkSession, d: String,
       fixedRoot: Option[String] = None): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
     val root = fixedRoot.getOrElse(graft.Scratch.dir("graft_stream_rank"))
-    val src = s"$root/src"
-    // idempotent restart contract (same as q117): with a fixed root the
-    // source is staged once and the checkpoint survives — a re-run must
-    // replay ZERO batches and leave the converged state untouched
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!hfs.exists(new org.apache.hadoop.fs.Path(src)))
-      Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val stream = stage(root, Tables.events(s, d).repartition(8)).stream(s, 2)
     val w = Window.partitionBy("day").orderBy("hh", "v")
     def compact(df: DataFrame): DataFrame = df
       .withColumn("sn", row_number().over(w)).filter(col("sn") <= srkK)
       .drop("sn")
-    // recovery: resume from the latest published state version, so a
-    // restarted run whose checkpoint says "all files processed" still
-    // reads the converged state (and publishes nothing new)
-    var current: Option[String] = {
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      if (!hfs.exists(rootPath)) None
-      else hfs.listStatus(rootPath).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("state_v"))
-        .sortBy(_.getPath.getName.stripPrefix("state_v").toLong)
-        .lastOption.map(_.getPath.toString)
-    }
-    var batches = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val incoming = batch.select(
-          to_date(col("ts")).as("day"), col("value").as("v"),
-          md5(col("event_id").cast("string")).as("hh"))
-        val incCounts = incoming.groupBy("day").agg(count(lit(1)).as("n"))
-        val (mergedS, mergedC) = current match {
-          case Some(p) =>
-            (compact(s.read.parquet(s"$p/sample")
-               .unionByName(compact(incoming))),
-             s.read.parquet(s"$p/counts").unionByName(incCounts)
-               .groupBy("day").agg(sum("n").as("n")))
-          case None => (compact(incoming), incCounts)
-        }
-        val out = s"$root/state_v$id"
-        mergedS.write.mode("overwrite").parquet(s"$out/sample")
-        mergedC.write.mode("overwrite").parquet(s"$out/counts")
-        current = Some(out)
-        batches += 1
+    // state: each day's bottom-k sample rows, every row carrying the day's
+    // running event count n (a day with events always keeps ≥ 1 sample row)
+    val (state, batches) = foldVersions(root, stream) { (batch, prev) =>
+      val incoming = batch.select(
+        to_date(col("ts")).as("day"), col("value").as("v"),
+        md5(col("event_id").cast("string")).as("hh"))
+      val incCounts = incoming.groupBy("day").agg(count(lit(1)).as("n"))
+      val (sample, counts) = prev match {
+        case Some(p) =>
+          (compact(p.select("day", "v", "hh").unionByName(compact(incoming))),
+           p.select("day", "n").distinct().unionByName(incCounts)
+             .groupBy("day").agg(sum("n").as("n")))
+        case None => (compact(incoming), incCounts)
       }
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val state = current.getOrElse(sys.error("stream produced no micro-batches"))
-    val ranked = s.read.parquet(s"$state/sample")
+      sample.join(counts, "day")
+    }
+    val out = state
       .withColumn("r", row_number()
         .over(Window.partitionBy("day").orderBy("v")).cast("long"))
-    val out = ranked
-      .join(broadcast(s.read.parquet(s"$state/counts")), "day")
       .withColumn("m", least(lit(srkK.toLong), col("n")))
       .groupBy("day").agg(
         max("n").as("n_events"),
@@ -493,47 +525,27 @@ object StreamingJobs extends QueryModule {
   private[graft] def streamHeavyRun(s: SparkSession, d: String)
       : (DataFrame, Long, Long) = {
     val root = graft.Scratch.dir("graft_stream_hh")
-    val src = s"$root/src"
-    Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val src = stage(root, Tables.events(s, d).repartition(8))
     def keyOf(df: DataFrame): DataFrame = df.select(
       when(col("event_type").isin("click", "view"),
         concat(lit("hot_"), col("event_type")))
         .otherwise(concat(lit("u"), col("user_id") % 50)).as("hh_key"))
-    var current: Option[String] = None
-    var batches = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val incoming = keyOf(batch).groupBy("hh_key")
-          .agg(count(lit(1)).as("cnt"))
-        val summed = (current match {
-          case Some(p) => s.read.parquet(p).unionByName(incoming)
-          case None => incoming
-        }).groupBy("hh_key").agg(sum("cnt").as("cnt"))
-        // mergeable-summaries truncation: the (K+1)-th largest count (0 if
-        // fewer than K+1 keys) is debited from every counter
-        val topRows = summed.orderBy(col("cnt").desc, col("hh_key"))
-          .limit(shhK + 1).collect()
-        val sub = if (topRows.length > shhK) topRows.last.getAs[Long]("cnt") else 0L
-        val folded = summed
-          .select(col("hh_key"), (col("cnt") - sub).as("cnt"))
-          .filter(col("cnt") > 0)
-        val out = s"$root/state_v$id"
-        folded.write.mode("overwrite").parquet(out)
-        current = Some(out)
-        batches += 1
-      }
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val state = s.read.parquet(
-      current.getOrElse(sys.error("stream produced no micro-batches")))
+    val (state, batches) = foldVersions(root, src.stream(s, 2)) { (batch, prev) =>
+      val incoming = keyOf(batch).groupBy("hh_key")
+        .agg(count(lit(1)).as("cnt"))
+      val summed = prev.fold(incoming)(_.unionByName(incoming))
+        .groupBy("hh_key").agg(sum("cnt").as("cnt"))
+      // mergeable-summaries truncation: the (K+1)-th largest count (0 if
+      // fewer than K+1 keys) is debited from every counter
+      val topRows = summed.orderBy(col("cnt").desc, col("hh_key"))
+        .limit(shhK + 1).collect()
+      val sub = if (topRows.length > shhK) topRows.last.getAs[Long]("cnt") else 0L
+      summed
+        .select(col("hh_key"), (col("cnt") - sub).as("cnt"))
+        .filter(col("cnt") > 0)
+    }
     val stateRows = state.count()
-    val keyed = keyOf(s.read.parquet(src))
+    val keyed = keyOf(src.read(s))
     val tot = keyed.agg(count(lit(1)).as("n"))
     val out = keyed
       .join(broadcast(state.select("hh_key")), Seq("hh_key"), "inner")
@@ -565,11 +577,7 @@ object StreamingJobs extends QueryModule {
   private[graft] def streamHllRun(s: SparkSession, d: String)
       : (DataFrame, Long, Long) = {
     val root = graft.Scratch.dir("graft_stream_hll")
-    val src = s"$root/src"
-    Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val src = stage(root, Tables.events(s, d).repartition(8))
     def regsOf(df: DataFrame): DataFrame = {
       val k = col("user_id").cast("string")
       df.select(
@@ -581,36 +589,19 @@ object StreamingJobs extends QueryModule {
             .otherwise(lit(33) - length(bin(col("w")))).as("m"))
         .groupBy("bucket").agg(max("m").as("m"))
     }
-    var current: Option[String] = None
-    var batches = 0L
-    var maxState = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val incoming = regsOf(batch)
-        val folded = (current match {
-          case Some(p) => s.read.parquet(p).unionByName(incoming)
-          case None => incoming
-        }).groupBy("bucket").agg(max("m").as("m"))
-        val out = s"$root/state_v$id"
-        folded.write.mode("overwrite").parquet(out)
-        current = Some(out)
-        maxState = math.max(maxState, s.read.parquet(out).count())
-        batches += 1
-      }
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val state = s.read.parquet(
-      current.getOrElse(sys.error("stream produced no micro-batches")))
+    val (state, batches) = foldVersions(root, src.stream(s, 2)) { (batch, prev) =>
+      val incoming = regsOf(batch)
+      prev.fold(incoming)(_.unionByName(incoming))
+        .groupBy("bucket").agg(max("m").as("m"))
+    }
+    val maxState = versions(s, root).map(s.read.parquet(_).count()).max
     val full = s.range(0, 64).select(col("id").as("bucket"))
       .join(state, Seq("bucket"), "left")
       .select(coalesce(col("m"), lit(0)).as("m"))
     val sketch = full.agg(
       sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
       sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
-    val exact = s.read.parquet(src)
+    val exact = src.read(s)
       .agg(countDistinct(col("user_id")).as("n_exact"))
     val out = exact.crossJoin(broadcast(sketch))
       .select(col("n_exact"), col("n_empty"),
@@ -641,39 +632,18 @@ object StreamingJobs extends QueryModule {
   private[graft] def streamBitmapRun(s: SparkSession, d: String)
       : (DataFrame, Long, Long) = {
     val root = graft.Scratch.dir("graft_stream_bitmap")
-    val src = s"$root/src"
-    Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val stream = stage(root, Tables.events(s, d).repartition(8)).stream(s, 2)
     def bitmapOf(df: DataFrame): DataFrame =
       df.select(col("event_type"), expr("user_id div 32").as("w"),
           expr("CAST(user_id % 32 AS INT)").as("b"))
         .groupBy("event_type", "w")
         .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), b))").as("bits"))
-    var current: Option[String] = None
-    var batches = 0L
-    var maxState = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val incoming = bitmapOf(batch)
-        val folded = (current match {
-          case Some(p) => s.read.parquet(p).unionByName(incoming)
-          case None => incoming
-        }).groupBy("event_type", "w").agg(expr("bit_or(bits)").as("bits"))
-        val out = s"$root/state_v$id"
-        folded.write.mode("overwrite").parquet(out)
-        current = Some(out)
-        maxState = math.max(maxState, s.read.parquet(out).count())
-        batches += 1
-      }
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val state = s.read.parquet(
-      current.getOrElse(sys.error("stream produced no micro-batches")))
+    val (state, batches) = foldVersions(root, stream) { (batch, prev) =>
+      val incoming = bitmapOf(batch)
+      prev.fold(incoming)(_.unionByName(incoming))
+        .groupBy("event_type", "w").agg(expr("bit_or(bits)").as("bits"))
+    }
+    val maxState = versions(s, root).map(s.read.parquet(_).count()).max
     val out = state.groupBy("event_type")
       .agg(sum(expr("bit_count(bits)")).cast("long").as("n_distinct_users"))
       .orderBy("event_type")
@@ -702,11 +672,7 @@ object StreamingJobs extends QueryModule {
   private[graft] def streamOhlcRun(s: SparkSession, d: String)
       : (DataFrame, Long) = {
     val root = graft.Scratch.dir("graft_stream_ohlc")
-    val src = s"$root/src"
-    Tables.events(s, d).repartition(8).write.mode("overwrite").parquet(src)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
+    val stream = stage(root, Tables.events(s, d).repartition(8)).stream(s, 2)
     def partial(df: DataFrame): DataFrame = df
       .filter(col("event_type") === "purchase")
       .select(to_date(col("ts")).as("day"),
@@ -718,36 +684,19 @@ object StreamingJobs extends QueryModule {
         max("vq").as("high"), min("vq").as("low"),
         max("tk").as("close_tk"), max_by(col("vq"), col("tk")).as("close"),
         count(lit(1)).as("n_trades"), sum("vq").as("volume"))
-    var current: Option[String] = None
-    var batches = 0L
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val inc = partial(batch)
-        val folded = (current match {
-          case Some(p) => s.read.parquet(p).unionByName(inc)
-          case None => inc
-        }).groupBy("day")
-          .agg(min_by(col("open"), col("open_tk")).as("open_v"),
-            min("open_tk").as("open_tk"),
-            max("high").as("high"), min("low").as("low"),
-            max_by(col("close"), col("close_tk")).as("close_v"),
-            max("close_tk").as("close_tk"),
-            sum("n_trades").as("n_trades"), sum("volume").as("volume"))
-          .select(col("day"), col("open_tk"), col("open_v").as("open"),
-            col("high"), col("low"), col("close_tk"),
-            col("close_v").as("close"), col("n_trades"), col("volume"))
-        val out = s"$root/state_v$id"
-        folded.write.mode("overwrite").parquet(out)
-        current = Some(out)
-        batches += 1
-      }
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val state = s.read.parquet(
-      current.getOrElse(sys.error("stream produced no micro-batches")))
+    val (state, batches) = foldVersions(root, stream) { (batch, prev) =>
+      val inc = partial(batch)
+      prev.fold(inc)(_.unionByName(inc)).groupBy("day")
+        .agg(min_by(col("open"), col("open_tk")).as("open_v"),
+          min("open_tk").as("open_tk"),
+          max("high").as("high"), min("low").as("low"),
+          max_by(col("close"), col("close_tk")).as("close_v"),
+          max("close_tk").as("close_tk"),
+          sum("n_trades").as("n_trades"), sum("volume").as("volume"))
+        .select(col("day"), col("open_tk"), col("open_v").as("open"),
+          col("high"), col("low"), col("close_tk"),
+          col("close_v").as("close"), col("n_trades"), col("volume"))
+    }
     val out = state.select(col("day"), col("open"), col("high"), col("low"),
       col("close"), col("n_trades"), col("volume")).orderBy("day")
     (out, batches)
@@ -766,8 +715,8 @@ object StreamingJobs extends QueryModule {
     * OWN version table staged once; per batch, ONE custkey equi-join
     * with the [valid_from, valid_to) residual (per-key version lists are
     * small, so the residual filters a few rows per key — never a range
-    * cartesian), written to a batch-id-keyed dir (overwrite ⇒ replay
-    * idempotent, the q244 sink contract). Verdicts are ROW-LOCAL (event
+    * cartesian), written to a batch-id-keyed dir ([[sinkBatches]]).
+    * Verdicts are ROW-LOCAL (event
     * time vs a static dimension), hence micro-batch-boundary-independent
     * — so the DuckDB oracle is the plain batch temporal join, and the
     * stream/batch hash match IS the parity proof. The self-referential
@@ -778,44 +727,20 @@ object StreamingJobs extends QueryModule {
   private[graft] def scd2EnrichRun(s: SparkSession, d: String)
       : (DataFrame, Long) = {
     val root = graft.Scratch.dir("graft_stream_scd2")
-    var batches = 0L
-    val src = s"$root/src"
-    Tables.orders(s, d).repartition(8).write.mode("overwrite").parquet(src)
+    val stream = stage(root, Tables.orders(s, d).repartition(8)).stream(s, 2)
     val dimPath = s"$root/dim"
     graft.operators.Relational.scd2(s, d)
       .write.mode("overwrite").parquet(dimPath)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val dim = s.read.parquet(dimPath)
-          batch.select("o_orderkey", "o_custkey", "o_orderdate",
-              "o_totalprice")
-            .join(dim, batch("o_custkey") === dim("o_custkey") &&
-              batch("o_orderdate") >= dim("valid_from") &&
-              (dim("valid_to").isNull ||
-                batch("o_orderdate") < dim("valid_to")))
-            .select(batch("o_orderkey"), col("status"), col("is_current"),
-              batch("o_totalprice"))
-            .write.mode("overwrite").parquet(s"$root/enriched_b$id")
-          batches += 1
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    val (enriched, batches) = sinkBatches(root, stream) { batch =>
+      val dim = s.read.parquet(dimPath)
+      batch.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
+        .join(dim, batch("o_custkey") === dim("o_custkey") &&
+          batch("o_orderdate") >= dim("valid_from") &&
+          (dim("valid_to").isNull || batch("o_orderdate") < dim("valid_to")))
+        .select(batch("o_orderkey"), col("status"), col("is_current"),
+          batch("o_totalprice"))
     }
-    // explicit child listing, not a glob: glob resolution logs a
-    // WARN-level FileNotFoundException stack through the lazy-analysis
-    // retry (the q249 finding) even when the read succeeds
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val parts = hfs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("enriched_b"))
-      .map(_.getPath.toString)
-    val out = s.read.parquet(parts: _*)
+    val out = enriched
       .groupBy("status", "is_current")
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("total_price"))
@@ -849,62 +774,38 @@ object StreamingJobs extends QueryModule {
     * trigger → 4 genuine micro-batches with cross-batch state carry,
     * which StreamingSpec pins alongside stream ≡ batch equality.
     */
-  /** Stage the events table as 8 ts-range parquet files with strictly
-    * increasing mtimes under `root/src` — the file-source replay harness
-    * shared by q285/q294 (the source processes oldest-first, making
-    * arrival order = event-time order, the per-key in-order contract
-    * both state machines document). Columns: (event_id, user_id,
-    * event_type, t = unix_micros(ts)). Memoized per input dir
+  /** The events table staged as 8 ts-range files in ts order
+    * ([[stageOrdered]]) — the file-source replay harness shared by
+    * q285/q294/q312/q340: arrival order = event-time order, the per-key
+    * in-order contract their state machines document. Columns: (event_id,
+    * user_id, event_type, t = unix_micros(ts)). Memoized per input dir
     * ([[graft.Scratch.PerDir]]): the staged files are read-only source
-    * input and each streaming query keeps its OWN checkpoint dir, so
-    * q285/q294 sharing one staging is safe and saves a full events scan
-    * + 8 writes per additional streaming query per run. */
-  private val eventRangesCache = new graft.Scratch.PerDir[String]
+    * input and each streaming query keeps its OWN checkpoint, so sharing
+    * one staging saves a full events scan + 8 writes per additional
+    * streaming query per run.
+    */
+  private val eventRangesCache = new graft.Scratch.PerDir[Staged]
 
-  private def stageEventRanges(s: SparkSession, d: String): String =
-    eventRangesCache(d)(
-      stageEventRangesInto(s, d, graft.Scratch.dir("graft_stream_src")))
-
-  private def stageEventRangesInto(s: SparkSession, d: String,
-      root: String): String = {
-    val src = s"$root/src"
-    val ev = Tables.events(s, d)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("unix_micros(ts)").as("t"))
-    val bounds = ev.agg(min("t"), max("t")).head()
-    val (tLo, tHi) = (bounds.getLong(0), bounds.getLong(1))
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-    (0 until 8).foreach { i =>
-      val lo = tLo + (tHi - tLo + 1) * i / 8
-      val hi = tLo + (tHi - tLo + 1) * (i + 1) / 8
-      val part = s"$root/stage_$i"
-      ev.filter(col("t") >= lo && col("t") < hi)
-        .coalesce(1).write.mode("overwrite").parquet(part)
-      val file = hfs.listStatus(new org.apache.hadoop.fs.Path(part))
-        .find(_.getPath.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for range $i"))
-      val dst = new org.apache.hadoop.fs.Path(src, f"f$i%02d.parquet")
-      hfs.rename(file.getPath, dst)
-      // explicit strictly-increasing mtimes: the file source replays
-      // oldest-first, making arrival order = event-time order
-      hfs.setTimes(dst, 1000000L + i * 1000L, -1)
+  private[graft] def stageEventRanges(s: SparkSession, d: String): Staged =
+    eventRangesCache(d) {
+      val ev = Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("t"))
+      val bounds = ev.agg(min("t"), max("t")).head()
+      val (tLo, tHi) = (bounds.getLong(0), bounds.getLong(1))
+      stageOrdered(graft.Scratch.dir("graft_stream_src"), (0 until 8).map { i =>
+        val lo = tLo + (tHi - tLo + 1) * i / 8
+        val hi = tLo + (tHi - tLo + 1) * (i + 1) / 8
+        ev.filter(col("t") >= lo && col("t") < hi)
+      })
     }
-    src
-  }
 
   private[graft] def streamFunnelRun(s: SparkSession, d: String)
       : (DataFrame, Long) = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val win = graft.operators.Events.funnelWindowUs
-    val root = graft.Scratch.dir("graft_stream_funnel")
-    val src = stageEventRanges(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val advances = stream
+    val advances = stageEventRanges(s, d).stream(s, 2)
       .select(col("user_id"), col("event_type"), col("t"))
       .as[(Long, String, Long)]
       .groupByKey(_._1)
@@ -935,44 +836,28 @@ object StreamingJobs extends QueryModule {
           state.update((t1, t2, t3))
           out.iterator
       }
-    val name = s"stream_funnel_${runId.incrementAndGet()}"
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = advances.toDF("user_id", "step", "t", "t_prev")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      // count DATA-carrying batches only (advisor r13): AvailableNow can
-      // post zero-input progress ticks (trailing commit/idle), which
-      // would let a "batches >= N" spec pass with fewer genuine folds
-      finally { batches = q.recentProgress.count(_.numInputRows > 0); q.stop() }
+    drainToLocal(advances.toDF("user_id", "step", "t", "t_prev"), "append") {
+        adv =>
+      val j = adv.filter(col("step") === 1).agg(count(lit(1)).as("n1"))
+        .crossJoin(adv.filter(col("step") === 2)
+          .agg(count(lit(1)).as("n2"),
+            sum((col("t") - col("t_prev")).cast("decimal(38,0)")).as("l2")))
+        .crossJoin(adv.filter(col("step") === 3)
+          .agg(count(lit(1)).as("n3"),
+            sum((col("t") - col("t_prev")).cast("decimal(38,0)")).as("l3")))
+      def row(step: Int, nm: String, n: String, prev: String, lat: String) =
+        j.select(lit(step).as("step"), lit(nm).as("event_type"),
+          col(n).as("n_users"),
+          expr(s"CASE WHEN $prev > 0 THEN $n * 1000000 div $prev ELSE 0 END")
+            .as("conv_from_prev_ppm"),
+          expr(if (lat.isEmpty) "CAST(-1 AS BIGINT)"
+            else s"CASE WHEN $n > 0 THEN CAST($lat div $n AS BIGINT) ELSE -1 END")
+            .as("mean_latency_us"))
+      row(1, "view", "n1", "n1", "")
+        .unionByName(row(2, "click", "n2", "n1", "l2"))
+        .unionByName(row(3, "purchase", "n3", "n2", "l3"))
+        .orderBy("step")
     }
-    val adv = s.table(name)
-    val j = adv.filter(col("step") === 1).agg(count(lit(1)).as("n1"))
-      .crossJoin(adv.filter(col("step") === 2)
-        .agg(count(lit(1)).as("n2"),
-          sum((col("t") - col("t_prev")).cast("decimal(38,0)")).as("l2")))
-      .crossJoin(adv.filter(col("step") === 3)
-        .agg(count(lit(1)).as("n3"),
-          sum((col("t") - col("t_prev")).cast("decimal(38,0)")).as("l3")))
-    def row(step: Int, nm: String, n: String, prev: String, lat: String) =
-      j.select(lit(step).as("step"), lit(nm).as("event_type"),
-        col(n).as("n_users"),
-        expr(s"CASE WHEN $prev > 0 THEN $n * 1000000 div $prev ELSE 0 END")
-          .as("conv_from_prev_ppm"),
-        expr(if (lat.isEmpty) "CAST(-1 AS BIGINT)"
-          else s"CASE WHEN $n > 0 THEN CAST($lat div $n AS BIGINT) ELSE -1 END")
-          .as("mean_latency_us"))
-    val res = row(1, "view", "n1", "n1", "")
-      .unionByName(row(2, "click", "n2", "n1", "l2"))
-      .unionByName(row(3, "purchase", "n3", "n2", "l3"))
-      .orderBy("step")
-    val rows = java.util.Arrays.asList(res.collect(): _*)
-    val out = s.createDataFrame(rows, res.schema)
-    s.catalog.dropTempView(name)
-    (out, batches)
   }
 
   val streamFunnel: Q = (s, d) => streamFunnelRun(s, d)._1
@@ -998,12 +883,7 @@ object StreamingJobs extends QueryModule {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val win = 7L * 86400L * 1000000L
-    val root = graft.Scratch.dir("graft_stream_attr")
-    val src = stageEventRanges(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val credits = stream
+    val credits = stageEventRanges(s, d).stream(s, 2)
       .select(col("user_id"), col("event_id"), col("event_type"), col("t"))
       .as[(Long, Long, String, Long)]
       .groupByKey(_._1)
@@ -1071,31 +951,15 @@ object StreamingJobs extends QueryModule {
           state.update(touches)
           out.iterator
       }
-    val name = s"stream_attr_${runId.incrementAndGet()}"
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = credits.toDF("channel", "n_ch", "first_ppm", "last_ppm",
-          "linear_ppm", "ushape_ppm")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      // count DATA-carrying batches only (advisor r13): AvailableNow can
-      // post zero-input progress ticks (trailing commit/idle), which
-      // would let a "batches >= N" spec pass with fewer genuine folds
-      finally { batches = q.recentProgress.count(_.numInputRows > 0); q.stop() }
+    drainToLocal(credits.toDF("channel", "n_ch", "first_ppm", "last_ppm",
+        "linear_ppm", "ushape_ppm"), "append") {
+      _.groupBy("channel")
+        .agg(count(lit(1)).as("n_convs"), sum("n_ch").as("n_touches"),
+          sum("first_ppm").as("first_ppm"), sum("last_ppm").as("last_ppm"),
+          sum("linear_ppm").as("linear_ppm"),
+          sum("ushape_ppm").as("ushape_ppm"))
+        .orderBy("channel")
     }
-    val res = s.table(name).groupBy("channel")
-      .agg(count(lit(1)).as("n_convs"), sum("n_ch").as("n_touches"),
-        sum("first_ppm").as("first_ppm"), sum("last_ppm").as("last_ppm"),
-        sum("linear_ppm").as("linear_ppm"),
-        sum("ushape_ppm").as("ushape_ppm"))
-      .orderBy("channel")
-    val rows = java.util.Arrays.asList(res.collect(): _*)
-    val out = s.createDataFrame(rows, res.schema)
-    s.catalog.dropTempView(name)
-    (out, batches)
   }
 
   val streamAttribution: Q = (s, d) => streamAttributionRun(s, d)._1
@@ -1127,12 +991,7 @@ object StreamingJobs extends QueryModule {
     val incS = graft.operators.Stats.sprtIncS
     val incF = graft.operators.Stats.sprtIncF
     val bound = graft.operators.Stats.sprtBound
-    val root = graft.Scratch.dir("graft_stream_sprt")
-    val src = stageEventRanges(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val snaps = stream
+    val snaps = stageEventRanges(s, d).stream(s, 2)
       .select(graft.functions.Hashing.md5Bucket(col("user_id"), 2).as("arm"),
         col("event_id"), col("event_type"), col("t"))
       .as[(Long, Long, String, Long)]
@@ -1156,35 +1015,22 @@ object StreamingJobs extends QueryModule {
           state.update((llr, n, nS, cidx, cllr))
           Iterator((arm, llr, n, nS, cidx, cllr))
       }
-    val name = s"stream_sprt_${runId.incrementAndGet()}"
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = snaps.toDF("arm", "llr", "n", "n_succ", "cidx", "cllr")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      finally { batches = q.recentProgress.count(_.numInputRows > 0); q.stop() }
+    drainToLocal(snaps.toDF("arm", "llr", "n", "n_succ", "cidx", "cllr"),
+        "append") {
+      _.groupBy("arm")
+        .agg(max(struct(col("n"), col("llr"), col("n_succ"), col("cidx"),
+          col("cllr"))).as("m"))
+        .select(col("arm"), col("m.n").as("n_trials"),
+          col("m.n_succ").as("n_success"),
+          expr(s"""CASE WHEN m.cidx = -1 THEN 'continue'
+                  WHEN m.cllr >= $bound THEN 'accept_h1'
+                  ELSE 'accept_h0' END""").as("decision"),
+          expr("CASE WHEN m.cidx = -1 THEN m.n ELSE m.cidx END")
+            .as("n_at_decision"),
+          expr("CASE WHEN m.cidx = -1 THEN m.llr ELSE m.cllr END")
+            .as("llr_micro"))
+        .orderBy("arm")
     }
-    val res = s.table(name)
-      .groupBy("arm")
-      .agg(max(struct(col("n"), col("llr"), col("n_succ"), col("cidx"),
-        col("cllr"))).as("m"))
-      .select(col("arm"), col("m.n").as("n_trials"),
-        col("m.n_succ").as("n_success"),
-        expr(s"""CASE WHEN m.cidx = -1 THEN 'continue'
-                WHEN m.cllr >= $bound THEN 'accept_h1'
-                ELSE 'accept_h0' END""").as("decision"),
-        expr("CASE WHEN m.cidx = -1 THEN m.n ELSE m.cidx END")
-          .as("n_at_decision"),
-        expr("CASE WHEN m.cidx = -1 THEN m.llr ELSE m.cllr END")
-          .as("llr_micro"))
-      .orderBy("arm")
-    val rows = java.util.Arrays.asList(res.collect(): _*)
-    val out = s.createDataFrame(rows, res.schema)
-    s.catalog.dropTempView(name)
-    (out, batches)
   }
 
   val streamSprt: Q = (s, d) => streamSprtRun(s, d)._1
@@ -1210,12 +1056,7 @@ object StreamingJobs extends QueryModule {
       : (DataFrame, Long) = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val root = graft.Scratch.dir("graft_stream_srm")
-    val src = stageEventRanges(s, d)
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(src)
-    val firsts = stream
+    val firsts = stageEventRanges(s, d).stream(s, 2)
       .select(col("user_id"), col("t"), col("event_id"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
@@ -1230,36 +1071,22 @@ object StreamingJobs extends QueryModule {
             Iterator((u, first._2))
           }
       }
-    val name = s"stream_srm_${runId.incrementAndGet()}"
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = firsts.toDF("user_id", "t_first")
-        .writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt_${runId.get()}")
-        .format("memory").queryName(name).start()
-      try q.awaitTermination()
-      finally { batches = q.recentProgress.count(_.numInputRows > 0); q.stop() }
+    drainToLocal(firsts.toDF("user_id", "t_first"), "append") {
+      _.select(
+          graft.functions.Hashing.md5Bucket(col("user_id"), 2).as("arm"),
+          expr("to_date(timestamp_micros(t_first))").as("d0"))
+        .rollup("d0")
+        .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_control"),
+          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_treat"))
+        .select(coalesce(col("d0").cast("string"), lit("ALL")).as("day"),
+          col("n_control"), col("n_treat"),
+          expr("""CAST((CAST(n_control - n_treat AS DECIMAL(38,0))
+                  * (n_control - n_treat) * 1000000)
+                  div (n_control + n_treat) AS BIGINT)""").as("chi2_micro"))
+        .withColumn("srm",
+          col("chi2_micro") > graft.operators.Stats.chiCritMicro)
+        .orderBy("day")
     }
-    val res = s.table(name)
-      .select(
-        graft.functions.Hashing.md5Bucket(col("user_id"), 2).as("arm"),
-        expr("to_date(timestamp_micros(t_first))").as("d0"))
-      .rollup("d0")
-      .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_control"),
-        sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_treat"))
-      .select(coalesce(col("d0").cast("string"), lit("ALL")).as("day"),
-        col("n_control"), col("n_treat"),
-        expr("""CAST((CAST(n_control - n_treat AS DECIMAL(38,0))
-                * (n_control - n_treat) * 1000000)
-                div (n_control + n_treat) AS BIGINT)""").as("chi2_micro"))
-      .withColumn("srm",
-        col("chi2_micro") > graft.operators.Stats.chiCritMicro)
-      .orderBy("day")
-    val rows = java.util.Arrays.asList(res.collect(): _*)
-    val out = s.createDataFrame(rows, res.schema)
-    s.catalog.dropTempView(name)
-    (out, batches)
   }
 
   val streamSrm: Q = (s, d) => streamSrmRun(s, d)._1
@@ -1283,66 +1110,22 @@ object StreamingJobs extends QueryModule {
       : (DataFrame, Long) = {
     import graft.operators.Storage
     val root = graft.Scratch.dir("graft_stream_merkle")
-    val src = s"$root/src"
-    val keyed = Storage.merkleKeyed(s, d)
-    val ranked = Storage.merkleRanked(keyed)
-    val changes = keyed.join(broadcast(ranked), Seq("key"))
-      .select(col("key"), col("cents"),
-        when(col("rn") <= 6, expr("cents * 21 div 20")).as("new_cents"),
-        col("rn"))
-    val hfs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    hfs.mkdirs(new org.apache.hadoop.fs.Path(src))
-    (0 until 4).foreach { i =>
-      val part = s"$root/stage_$i"
-      changes.filter(col("rn") > i * 3 && col("rn") <= (i + 1) * 3)
-        .drop("rn").coalesce(1).write.mode("overwrite").parquet(part)
-      val file = hfs.listStatus(new org.apache.hadoop.fs.Path(part))
-        .find(_.getPath.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"q299: no parquet part for batch $i"))
-      val dst = new org.apache.hadoop.fs.Path(src, f"f$i%02d.parquet")
-      hfs.rename(file.getPath, dst)
-      hfs.setTimes(dst, 1000000L + i * 1000L, -1)
-    }
     val origDir = Storage.merkleTreeDir(s, d)
-    // exactly-once under batch retry: the INPUT version is derived from
-    // batchId (batch n reads tree_v(n-1), writes tree_v(n) overwrite),
-    // so a re-delivered batch re-reads the same predecessor and
-    // re-writes the same successor instead of double-applying its delta
-    // to an already-advanced pointer
-    val maxBid = new java.util.concurrent.atomic.AtomicLong(-1L)
-    def treeV(bid: Long): String =
-      if (bid < 0) origDir else s"$root/tree_v$bid"
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    var batches = 0L
-    graft.withShufflePartitions(s, statePartitions) {
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          // the ONE shared delta algebra (Storage.merkleDeltaLevels) —
-          // a local copy here would let the two folds drift apart and
-          // silently break the stream ≡ incremental identity
-          val allDelta = Storage.merkleDeltaLevels(batch)
-          val next = s.read.parquet(treeV(bid - 1))
-            .join(broadcast(allDelta), Seq("level", "node"), "left")
-            .select(col("level"), col("node"),
-              pmod(col("digest") + coalesce(col("ddg"), lit(0L)),
-                lit(Storage.merkleP)).as("digest"),
-              (col("n_rows") + coalesce(col("dn"), lit(0L))).as("n_rows"))
-          next.write.mode("overwrite").parquet(treeV(bid))
-          maxBid.getAndUpdate(m => math.max(m, bid))
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      // count DATA-carrying batches only (advisor r13): AvailableNow can
-      // post zero-input progress ticks (trailing commit/idle), which
-      // would let a "batches >= N" spec pass with fewer genuine folds
-      finally { batches = q.recentProgress.count(_.numInputRows > 0); q.stop() }
+    val (tree, batches) = foldVersions(root,
+        merkleChanges(s, d, root).stream(s, 1), init = Some(origDir)) {
+      (batch, prev) =>
+        // the ONE shared delta algebra (Storage.merkleDeltaLevels) —
+        // a local copy here would let the two folds drift apart and
+        // silently break the stream ≡ incremental identity
+        val allDelta = Storage.merkleDeltaLevels(batch)
+        prev.get
+          .join(broadcast(allDelta), Seq("level", "node"), "left")
+          .select(col("level"), col("node"),
+            pmod(col("digest") + coalesce(col("ddg"), lit(0L)),
+              lit(Storage.merkleP)).as("digest"),
+            (col("n_rows") + coalesce(col("dn"), lit(0L))).as("n_rows"))
     }
-    val fin = s.read.parquet(treeV(maxBid.get())).withColumnsRenamed(
+    val fin = tree.withColumnsRenamed(
       Map("digest" -> "digest_new", "n_rows" -> "n_rows_new"))
     val out = graft.Scratch.read(s, origDir).withColumnsRenamed(
         Map("digest" -> "digest_old", "n_rows" -> "n_rows_old"))
@@ -1356,6 +1139,21 @@ object StreamingJobs extends QueryModule {
   }
 
   val streamMerkle: Q = (s, d) => streamMerkleRun(s, d)._1
+
+  /** q299's change set (q281/q295's) staged as 4 ordered delta files of 3
+    * keys each ([[stageOrdered]]).
+    */
+  private[graft] def merkleChanges(s: SparkSession, d: String,
+      root: String): Staged = {
+    import graft.operators.Storage
+    val keyed = Storage.merkleKeyed(s, d)
+    val changes = keyed.join(broadcast(Storage.merkleRanked(keyed)), Seq("key"))
+      .select(col("key"), col("cents"),
+        when(col("rn") <= 6, expr("cents * 21 div 20")).as("new_cents"),
+        col("rn"))
+    stageOrdered(root, (0 until 4).map(i =>
+      changes.filter(col("rn") > i * 3 && col("rn") <= (i + 1) * 3).drop("rn")))
+  }
 
   def queries: Map[String, Q] = Map(
     "q294_stream_attribution" -> streamAttribution,

@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import java.time.LocalDateTime
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,29 +17,6 @@ class SchemaBindingSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Spark jobs `body` launches from this thread (job group filter, so a
-    * job from any other thread is not counted).
-    */
-  private def jobsLaunchedBy(body: => Unit): Int = {
-    val group = s"graft-schema-spec-${System.nanoTime()}"
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "schema binding spec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graftspec.Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
 
   test("Scratch.read: the bound schema equals the inferred one") {
     val schema = StructType(Seq(

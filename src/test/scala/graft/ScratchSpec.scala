@@ -181,36 +181,6 @@ class ScratchSpec extends SparkSpec {
       "q276_ktruss", "q246_graph_ann_recall", "q253_hyperball", "q258_harmonic_centrality")
     // fresh copies of the fixture: every per-input-dir memo misses, so each
     // run pays its loops (a warm memo would skip q253/q258's loop)
-    def freshInput(): String = {
-      val dst = java.nio.file.Files.createTempDirectory("graft_spec_loops_in")
-      val src = java.nio.file.Paths.get(sf)
-      val walk = java.nio.file.Files.walk(src)
-      try walk.forEach(p => if (p != src) java.nio.file.Files.copy(p, dst.resolve(src.relativize(p))))
-      finally walk.close()
-      dst.toString
-    }
-    def digest(s: org.apache.spark.sql.SparkSession, d: String, name: String): String = {
-      val rows = SparkEntry.queries(name)(s, d).collect().map(_.toString).sorted
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val seqIn = freshInput()
-    val expected = names.map(n => n -> digest(spark, seqIn, n)).toMap
-    val concIn = freshInput()
-    val start = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(4)
-    try {
-      val runs = (0 until 4).map { c =>
-        pool.submit(() => {
-          val s = spark.newSession()
-          start.await()
-          // each client walks the list from a different offset
-          (names.drop(c) ++ names.take(c)).map(n => n -> digest(s, concIn, n))
-        })
-      }
-      start.countDown()
-      for (run <- runs; (n, h) <- run.get(600, TimeUnit.SECONDS))
-        assert(h === expected(n), n)
-    } finally pool.shutdownNow()
+    assertConcurrentMatchesSequential(names)
   }
 }

@@ -199,6 +199,27 @@ class StreamingSpec extends SparkSpec {
     assert(out2.collect().map(_.toSeq).sortBy(_.toString) === snap1)
   }
 
+  test("q117/q136 state folds: a restart re-runs the uncommitted last batch from its predecessor version") {
+    type Run = Option[String] => (org.apache.spark.sql.DataFrame, Long)
+    Seq[(String, Run)](
+      "q117" -> (r => graft.streaming.StreamingJobs.upsertRun(spark, sf, r)),
+      "q136" -> (r => graft.streaming.StreamingJobs.streamRankRun(spark, sf, r))
+    ).foreach { case (tag, run) =>
+      val root = java.nio.file.Files.createTempDirectory(s"graftreplay_$tag").toString
+      val (out1, batches1) = run(Some(root))
+      assert(batches1 >= 2, tag)
+      val snap1 = out1.collect().map(_.toSeq).sortBy(_.toString)
+      // batch n published state_v<n> but its commit never landed: the
+      // restart must run batch n again, and its result must not change
+      val commits = new java.io.File(s"$root/ckpt/commits")
+      val last = commits.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+      Seq(last, s".$last.crc").foreach(f => new java.io.File(commits, f).delete())
+      val (out2, batches2) = run(Some(root))
+      assert(batches2 === 1L, s"$tag: the restart ran $batches2 batches")
+      assert(out2.collect().map(_.toSeq).sortBy(_.toString) === snap1, tag)
+    }
+  }
+
   test("streaming heavy hitters (q147): multi-batch fold, capped state, exact verified output") {
     val (out, batches, stateRows) =
       graft.streaming.StreamingJobs.streamHeavyRun(spark, sf)
