@@ -44,14 +44,8 @@ object Bench {
     // and column and discards them — the cost of the real query, minus sink
     // I/O.
     // Optional comma-separated query-name filter (substring match) for
-    // iterating on one query's timing without paying the full suite. Blank
-    // tokens (a stray comma) would substring-match EVERY name, silently
-    // disabling the filter — drop them; an all-blank value means no filter.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).filter(_.nonEmpty)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(name.contains))
-    }
+    // iterating on one query's timing without paying the full suite.
+    val (only, selected) = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val err = try {
@@ -72,7 +66,7 @@ object Bench {
     val prefixes = results.map(_._1.takeWhile(_ != '_'))
     require(prefixes.distinct.size == prefixes.size,
       s"duplicate qNN prefixes: ${prefixes.diff(prefixes.distinct).mkString(",")}")
-    val qs = results.map { case (k, v, _) => "\"" + k.takeWhile(_ != '_') + "\":" + fmt(v) }
+    val qs = results.map { case (k, v, _) => Verify.jstr(k.takeWhile(_ != '_')) + ":" + fmt(v) }
       .mkString("{", ",", "}")
     // A failed query must surface as a failure, not as a fast timing line —
     // but bounded: r7's 35 full exception strings blew the ~2000-char
@@ -82,24 +76,22 @@ object Bench {
     // the overflow into a single "_more" count so a systemic failure reads
     // as one line instead of eating the JSON.
     val failed = results.collect { case (k, _, Some(e)) => (k, e.take(80)) }
-    val errs = (failed.take(8).map { case (k, e) =>
-      "\"" + k + "\":\"" + e.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    } ++ (if (failed.size > 8) Seq(s""""_more":${failed.size - 8}""") else Nil))
+    val errs = (failed.take(8).map { case (k, e) => Verify.jstr(k) + ":" + Verify.jstr(e) }
+      ++ (if (failed.size > 8) Seq(s""""_more":${failed.size - 8}""") else Nil))
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
     // Record the active filter: a filtered run saved as BENCH_rNN.json must
     // be distinguishable from a full-suite run. Escaped like the errors
     // map — a stray quote in the env var must not corrupt the one JSON
     // line the harness parses.
-    def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val onlyJson = only.map(o => s""","only":"${esc(o.mkString(","))}"""").getOrElse("")
+    val onlyJson = only.map(o => s""","only":${Verify.jstr(o.mkString(","))}""").getOrElse("")
     // The stamp rides BOTH emitted lines (compact + detail) so whichever
     // artifact a reader holds self-adjudicates.
     val loadAfter = load1()
     val loadJson =
       s""","load1_before":${fmt(loadBefore)},"load1_after":${fmt(loadAfter)}"""
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs$onlyJson$loadJson,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$errs$onlyJson$loadJson,"sf":${Verify.jstr(sfDir)}}"""
     // The full line (233 timings ≈ 3.4k chars) overflows the ~2000-char
     // stdout tail window the harness records — BENCH_r07 and r08 both came
     // back "parsed": null despite clean runs. Persist the full map to a
@@ -119,7 +111,7 @@ object Bench {
     // detailPath and sfDir are env-controlled: escape them like `only`
     // above, or a quote/backslash in either path re-breaks the final
     // guaranteed-parseable line this split exists to protect.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"errors":${failed.size}$loadJson,"detail":"${esc(detailPath)}","sf":"${esc(sfDir)}"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"errors":${failed.size}$loadJson,"detail":${Verify.jstr(detailPath)},"sf":${Verify.jstr(sfDir)}}""")
     spark.stop()
     // Explicit exit after the one JSON line is printed — see Verify.main:
     // a leaked non-daemon thread must not stall the harness on process

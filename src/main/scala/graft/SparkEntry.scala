@@ -32,6 +32,18 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, Q] = distinctByName(modules.flatMap(_.queries))
 
+  /** The queries a run selects by `only`, the `SPARK_GRAFT_ONLY` value: a
+    * comma-separated list of substrings of query names. Blank tokens are
+    * dropped, since a blank matches every name; an unset or all-blank
+    * value selects every query. Returns the tokens in force (None: no
+    * filter) and the selected queries in name order.
+    */
+  def select(only: Option[String]): (Option[Seq[String]], Seq[(String, Q)]) = {
+    val tokens = only.map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).filter(_.nonEmpty)
+    (tokens, queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => tokens.forall(_.exists(name.contains)) })
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -52,17 +52,13 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // Fail loudly ONCE on fixture drift before running 177 queries into it
+    // Fail loudly ONCE on fixture drift before running every query into it
     // (r7: one re-encoded column → 35 buried per-query AnalysisExceptions).
     graft.sources.Tables.smokeCheck(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // Same optional dev-iteration filter as Bench (blank tokens dropped —
-    // they would substring-match every name); the driver sets no filter,
-    // so its gate always dumps the full query set.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).filter(_.nonEmpty)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+    // Same optional dev-iteration filter as Bench; a correctness run sets
+    // no filter, so it always dumps the full query set.
+    val (_, selected) = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val failures = dumpAll(spark, sfDir, outDir, selected)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -48,7 +48,7 @@ object Dedup extends QueryModule {
   private val numHashes = numBands * rowsPerBand
 
   /** Jaccard-distance acceptance threshold for a verified near-dup. */
-  private val maxDist = 0.1
+  private[graft] val maxDist = 0.1
 
   /** i-th minhash over the token set: min over tokens of the first 8 md5
     * hex digits of "i:token" — the same family DuckDB can evaluate
@@ -1158,14 +1158,10 @@ object Dedup extends QueryModule {
     "q123_leakage_split" -> leakageSplit,
     "q131_entity_clusters" -> entityClusters)
 
-  /** Shared CTE chain ending in `pairs(d1, d2)` — the DuckDB mirror of
-    * [[verifiedPairs]]; the md5-based hash family keeps both engines on
-    * identical candidates.
-    */
   /** CTE chain ending in `e(doc_id, band, sig)` + `th(doc_id, hs)` — the
     * DuckDB mirror of [[bandSigs]]/[[hashedSets]] over the whole corpus.
     */
-  private def sigCte: String = {
+  private[graft] def sigCte: String = {
     val mh = (0 until numHashes).map { i =>
       s"list_min(list_transform(tokset, t -> substr(md5('$i:' || t), 1, 8))) AS mh$i"
     }.mkString(",\n  ")
@@ -1221,16 +1217,6 @@ object Dedup extends QueryModule {
       .orderBy("cluster_size")
   }
 
-  private[graft] def pairsCte: String =
-    s"""$sigCte,
-       |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-       |  FROM e a JOIN e b
-       |  ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-       |pairs AS (SELECT d1, d2 FROM cand
-       |  JOIN th x ON x.doc_id = d1 JOIN th y ON y.doc_id = d2
-       |  WHERE 1.0 - CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)
-       |          / (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) <= $maxDist)""".stripMargin
-
   /** The q114 delta-verdict oracle, shared verbatim by the streaming
     * probe q244 (whose result is micro-batch-boundary-independent). */
   private def deltaOracleSql: String =
@@ -1262,14 +1248,7 @@ object Dedup extends QueryModule {
     // the same recursive-CC labels as q59, then the survivorship rules in
     // plain SQL — packed argmax key and majority-vote window included
     "q198_survivorship" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
+      s"""WITH RECURSIVE ${OracleSql.dupLabels},
          |m AS (SELECT f.label, d.doc_id, d.lang, CAST(d.n_chars AS BIGINT) AS nc
          |  FROM final f JOIN documents d USING (doc_id)),
          |golden AS (SELECT label, count(*) AS n_members,
@@ -1322,14 +1301,7 @@ object Dedup extends QueryModule {
          |ORDER BY doc_id, span_start""".stripMargin,
     // the same recursive-CC labels reduced to the per-size savings table
     "q232_dedup_savings" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
+      s"""WITH RECURSIVE ${OracleSql.dupLabels},
          |m AS (SELECT f.label, CAST(d.n_chars AS BIGINT) AS nc
          |  FROM final f JOIN documents d USING (doc_id)),
          |pc AS (SELECT label, count(*) AS csize,
@@ -1344,17 +1316,7 @@ object Dedup extends QueryModule {
     // the same recursive-CC labels as q59/q198, then the identical
     // (size desc, label) rank + snake fold in plain SQL
     "q208_group_kfold" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
-         |sizes AS (SELECT label, count(*) AS csize FROM final GROUP BY 1),
-         |rk AS (SELECT label, csize, row_number()
-         |    OVER (ORDER BY csize DESC, label) AS rank FROM sizes),
+      s"""WITH RECURSIVE ${OracleSql.dupClusterRanks},
          |fd AS (SELECT label, CAST(CASE WHEN ((rank - 1) // $kFolds) % 2 = 0
          |    THEN (rank - 1) % $kFolds
          |    ELSE ${kFolds - 1} - (rank - 1) % $kFolds
@@ -1366,14 +1328,7 @@ object Dedup extends QueryModule {
     // the same recursive-CC labels, the same (cluster, source)
     // incidence reduction, the same ordered pair join
     "q242_cross_source_dup" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
+      s"""WITH RECURSIVE ${OracleSql.dupLabels},
          |inc AS MATERIALIZED (SELECT f.label, d.source, count(*) AS nd
          |  FROM final f JOIN documents d USING (doc_id) GROUP BY 1, 2),
          |pr AS (SELECT a.source AS src_a, b.source AS src_b,
@@ -1411,7 +1366,7 @@ object Dedup extends QueryModule {
          |FROM er GROUP BY 1 ORDER BY err_bucket""".stripMargin
     },
     "q37_minhash_neardup" ->
-      s"""WITH $pairsCte,
+      s"""WITH ${OracleSql.pairsCte},
          |deg AS (SELECT doc_id, count(*) AS n_neardup, min(nb) AS min_nb FROM
          |  (SELECT d1 AS doc_id, d2 AS nb FROM pairs
          |   UNION ALL SELECT d2 AS doc_id, d1 AS nb FROM pairs)
@@ -1481,13 +1436,7 @@ object Dedup extends QueryModule {
     // LITERAL zeros where the Spark side MEASURES residual references —
     // an incomplete propagation mismatches loudly
     "q248_rtbf_delete" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
+      s"""WITH RECURSIVE ${OracleSql.dupReach},
          |final AS MATERIALIZED (SELECT doc_id, min(label) AS label
          |  FROM reach GROUP BY doc_id),
          |tomb AS (SELECT doc_id FROM documents WHERE doc_id % 53 = 5),
@@ -1533,14 +1482,7 @@ object Dedup extends QueryModule {
     // parity IS the check (the q39/q162 discipline)
     "q244_stream_delta_dedup" -> deltaOracleSql,
     "q123_leakage_split" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
+      s"""WITH RECURSIVE ${OracleSql.dupLabels},
          |v AS (SELECT doc_id, label,
          |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END
          |    AS split
@@ -1572,15 +1514,7 @@ object Dedup extends QueryModule {
     // the q59 recursive-CC clusters recomputed from scratch, then the
     // identical per-size rollup with per-doc single-rounded weights
     "q290_dedup_weights" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         |sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM final GROUP BY cluster_id)
+      s"""WITH RECURSIVE ${OracleSql.dupClusterSizes}
          |SELECT s.cluster_size, count(*) AS n_docs,
          |  CAST(1000000 // s.cluster_size AS BIGINT) AS weight_ppm,
          |  CAST(sum(d.n_chars) AS BIGINT) AS raw_chars,
@@ -1590,15 +1524,7 @@ object Dedup extends QueryModule {
          |JOIN documents d ON f.doc_id = d.doc_id
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q59_dup_clusters" ->
-      s"""WITH RECURSIVE $pairsCte,
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id),
-         |sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM final GROUP BY cluster_id)
+      s"""WITH RECURSIVE ${OracleSql.dupClusterSizes}
          |SELECT f.doc_id, f.cluster_id, s.cluster_size,
          |  (f.doc_id = f.cluster_id) AS is_canonical
          |FROM final f JOIN sizes s USING (cluster_id)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -1675,16 +1675,7 @@ FROM fl CROSS JOIN rm ORDER BY channel"""
         |SELECT DATE '1970-01-01' + CAST(t AS INT) AS day,
         |  count(*) AS mau7
         |FROM tg, sp WHERE t <= hi GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q175_ohlc_bars" ->
-      """WITH ev AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vq,
-        |    lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || ':' || event_id
-        |      AS tk
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT day, arg_min(vq, tk) AS open, max(vq) AS high,
-        |  min(vq) AS low, arg_max(vq, tk) AS close,
-        |  count(*) AS n_trades, CAST(sum(vq) AS BIGINT) AS volume
-        |FROM ev GROUP BY 1 ORDER BY day""".stripMargin,
+    "q175_ohlc_bars" -> OracleSql.ohlcQuery,
     "q168_interval_coverage" ->
       s"""WITH ev AS (SELECT user_id, event_id, epoch_us(ts) AS t,
         |    epoch_us(ts) + $coverHoldUs AS e

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -692,7 +692,7 @@ object Graph extends QueryModule {
   }
 
   /** Label-propagation round count (q155). */
-  private val lpaRounds = 3
+  private[graft] val lpaRounds = 3
 
   /** q155 — synchronous LABEL PROPAGATION (3 fixed rounds) over q148's
     * repeat-co-purchase graph: each node adopts the most frequent label
@@ -921,7 +921,7 @@ object Graph extends QueryModule {
   /** BFS seed rule (q167): node id ≡ 0 (mod bfsSeedMod) — deterministic,
     * scale-proportional (4 seeds at sf0.001, ~400 at sf0.1), and
     * expressible identically in both engines. */
-  private val bfsSeedMod = 50L
+  private[graft] val bfsSeedMod = 50L
 
   /** q167 — MULTI-SOURCE BFS hop profile over the repeat-co-purchase
     * graph (q148/q155's edges): how much of the graph lies within 1, 2, 3
@@ -1635,12 +1635,8 @@ object Graph extends QueryModule {
     // two chains back-fill each other. No session conf is mutated inside
     // propagate, and job submission is thread-safe; results land in
     // distinct Scratch dirs either way.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fF = Future(propagate(rev = false, "f"))
-    val fB = Future(propagate(rev = true, "b"))
-    val (f, fp) = Await.result(fF, scala.concurrent.duration.Duration.Inf)
-    val (b, bp) = Await.result(fB, scala.concurrent.duration.Duration.Inf)
+    val ((f, fp), (b, bp)) = graft.concurrently(
+      propagate(rev = false, "f"), propagate(rev = true, "b"))
     f.withColumnRenamed("lbl", "fl")
       .join(b.withColumnRenamed("lbl", "bl"), "node")
       .join(fp.withColumnRenamed("lbl", "flp"), "node")
@@ -1699,8 +1695,6 @@ object Graph extends QueryModule {
     // newSession() clone (same SparkContext, isolated SQL conf) and
     // hands its converged labels back as a staged parquet leaf the main
     // session reads — frames never cross sessions.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     def run(rev: Boolean, tag: String): (String, Seq[Long]) = {
       val s2 = s.newSession()
       val ed2 = graft.Scratch.read(s2, edDir)
@@ -1712,10 +1706,8 @@ object Graph extends QueryModule {
       val dir = graft.Scratch.write(s"graft_sccc_$tag", lbl)
       (dir, traj)
     }
-    val fF = Future(run(rev = false, "f"))
-    val fB = Future(run(rev = true, "b"))
-    val (fDir, fTraj) = Await.result(fF, scala.concurrent.duration.Duration.Inf)
-    val (bDir, bTraj) = Await.result(fB, scala.concurrent.duration.Duration.Inf)
+    val ((fDir, fTraj), (bDir, bTraj)) =
+      graft.concurrently(run(rev = false, "f"), run(rev = true, "b"))
     val f = graft.Scratch.read(s, fDir)
     val b = graft.Scratch.read(s, bDir)
     val out = f.select(col("doc_id").as("node"), col("label").as("fl"))
@@ -2050,12 +2042,7 @@ object Graph extends QueryModule {
            |  count(DISTINCT x) AS n_distinct_nodes,
            |  CAST(sum(x) AS BIGINT) AS node_id_sum FROM p$t""".stripMargin
       }.mkString("\nUNION ALL ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |ced AS (SELECT DISTINCT a.p AS u, b.p AS v FROM items a
-         |  JOIN items b ON a.o = b.o AND a.p < b.p),
-         |ed AS MATERIALIZED (SELECT u, v FROM ced
-         |  UNION ALL SELECT v AS u, u AS v FROM ced),
+      s"""WITH ${OracleSql.coItemEdges},
          |p0 AS MATERIALIZED (SELECT DISTINCT u AS o, u AS x FROM ed),
          |$steps
          |$stats
@@ -2092,12 +2079,7 @@ object Graph extends QueryModule {
            |  FROM b$dd b LEFT JOIN c$dd c ON c.s = b.s AND c.x = b.x)"""
           .stripMargin
       }.mkString(",\n")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |ced AS (SELECT DISTINCT a.p AS u, b.p AS v FROM items a
-         |  JOIN items b ON a.o = b.o AND a.p < b.p),
-         |ed AS MATERIALIZED (SELECT u, v FROM ced
-         |  UNION ALL SELECT v AS u, u AS v FROM ced),
+      s"""WITH ${OracleSql.coItemEdges},
          |srcs AS MATERIALIZED (SELECT x AS s FROM
          |  (SELECT DISTINCT u AS x FROM ed)
          |  ORDER BY md5(CAST(x AS VARCHAR)), x LIMIT $brandesK),
@@ -2136,18 +2118,7 @@ object Graph extends QueryModule {
             .stripMargin
         }.mkString(",\n")
       val k = sccOracleSuperRounds
-      s"""WITH cp AS (SELECT o_custkey AS c, l_partkey AS p,
-         |    min(o_orderdate) AS mind, max(o_orderdate) AS maxd
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |  GROUP BY 1, 2),
-         |e AS MATERIALIZED (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m
-         |    FROM cp a JOIN cp b
-         |    ON a.c = b.c AND a.p <> b.p AND a.mind < b.maxd GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |f0 AS (SELECT node, node AS lbl FROM nodes),
-         |b0 AS (SELECT node, node AS lbl FROM nodes),
+      s"""WITH ${OracleSql.sccSeeds},
          |${superRounds("f", "u", "v")},
          |${superRounds("b", "v", "u")},
          |moved AS (SELECT count(*) AS n_moved
@@ -2168,25 +2139,7 @@ object Graph extends QueryModule {
     // loop and the fixed unroll emit the identical hop profile without
     // any convergence detection entering the compare
     "q250_bfs_converged" -> {
-      val rounds = (1 to bfsMaxRounds).map { r =>
-        s"""f$r AS (SELECT DISTINCT ed.v AS x FROM ed
-           |  JOIN v${r - 1} w ON ed.u = w.x AND w.dist = ${r - 1}
-           |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1} p WHERE p.x = ed.v)),
-           |v$r AS MATERIALIZED (SELECT x, dist FROM v${r - 1}
-           |  UNION ALL SELECT x, $r AS dist FROM f$r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |nodes AS (SELECT DISTINCT u AS x FROM ed),
-         |v0 AS MATERIALIZED (SELECT x, 0 AS dist FROM nodes
-         |  WHERE x % $bfsSeedMod = 0),
-         |$rounds
+      s"""WITH ${OracleSql.bfsFrontiers(bfsMaxRounds)}
          |SELECT dist, count(*) AS n_nodes,
          |  CAST(sum(x) AS BIGINT) AS id_checksum
          |FROM v$bfsMaxRounds GROUP BY 1
@@ -2219,14 +2172,7 @@ object Graph extends QueryModule {
       }.mkString(",\n")
       val unions = (1 to lpaMaxRounds).map(r => s"SELECT * FROM s$r")
         .mkString("\nUNION ALL ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
+      s"""WITH ${OracleSql.copurchaseEdges},
          |edp AS MATERIALIZED (SELECT u, v FROM ed
          |  UNION ALL SELECT DISTINCT u, u AS v FROM ed),
          |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM ed),
@@ -2255,14 +2201,7 @@ object Graph extends QueryModule {
       }.mkString(",\n")
       val unions = (1 to kcoreMaxRounds).map(r => s"SELECT * FROM s$r")
         .mkString("\nUNION ALL ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
+      s"""WITH ${OracleSql.copurchaseEdges},
          |a0 AS MATERIALIZED (SELECT DISTINCT u AS x FROM ed),
          |$rounds,
          |traj AS ($unions)
@@ -2303,22 +2242,7 @@ object Graph extends QueryModule {
       }.mkString(",\n")
       val unions = (0 to hyperBallMaxRounds).map(r => s"SELECT * FROM s$r")
         .mkString("\nUNION ALL ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |r0 AS MATERIALIZED (SELECT node,
-         |    ('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 8))::BIGINT % 64
-         |      AS bucket,
-         |    CASE WHEN ('0x' || substr(md5(CAST(node AS VARCHAR)), 9, 8))::BIGINT = 0
-         |      THEN 33
-         |      ELSE 33 - length(bin(('0x' || substr(md5(CAST(node AS VARCHAR)), 9, 8))::BIGINT))
-         |      END AS m
-         |  FROM (SELECT DISTINCT u AS node FROM ed)),
+      s"""WITH ${OracleSql.hyperballRegisters},
          |s0 AS (SELECT 0 AS round,
          |    (SELECT count(*) FROM r0) AS n_changed,
          |    (SELECT CAST(sum(m) AS BIGINT) FROM r0) AS reg_checksum,
@@ -2363,22 +2287,7 @@ object Graph extends QueryModule {
       val estRounds = (0 to hyperBallMaxRounds).map(nodeEstCte).mkString(",\n")
       val unions = (0 to hyperBallMaxRounds).map(r => s"SELECT * FROM er$r")
         .mkString("\nUNION ALL ")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |r0 AS MATERIALIZED (SELECT node,
-         |    ('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 8))::BIGINT % 64
-         |      AS bucket,
-         |    CASE WHEN ('0x' || substr(md5(CAST(node AS VARCHAR)), 9, 8))::BIGINT = 0
-         |      THEN 33
-         |      ELSE 33 - length(bin(('0x' || substr(md5(CAST(node AS VARCHAR)), 9, 8))::BIGINT))
-         |      END AS m
-         |  FROM (SELECT DISTINCT u AS node FROM ed)),
+      s"""WITH ${OracleSql.hyperballRegisters},
          |$regRounds,
          |$estRounds,
          |allr AS ($unions),
@@ -2436,36 +2345,31 @@ object Graph extends QueryModule {
     // the identical m>=2 edge list reduced to a degree histogram, fit
     // with q200's closed-form milli-nat OLS expression tree
     "q223_degree_powerlaw" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e2 AS (SELECT u, v FROM (
-        |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-        |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-        |  WHERE m >= 2),
-        |ed AS (SELECT u, v FROM e2
-        |  UNION ALL SELECT v AS u, u AS v FROM e2),
-        |deg AS (SELECT u, count(*) AS dg FROM ed GROUP BY 1),
-        |hist AS (SELECT dg, count(*) AS nd FROM deg GROUP BY 1),
-        |pts AS (SELECT
-        |    CAST(round(ln(CAST(dg AS DOUBLE)) * 1000) AS BIGINT) AS x,
-        |    CAST(round(ln(CAST(nd AS DOUBLE)) * 1000) AS BIGINT) AS y
-        |  FROM hist),
-        |sums AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
-        |    CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx FROM pts)
-        |SELECT n,
-        |  CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN NULL
-        |    ELSE CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
-        |      / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000) AS BIGINT)
-        |    END AS slope_micro,
-        |  CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN NULL
-        |    ELSE CAST(round((CAST(sy AS DOUBLE)
-        |      - CAST(n * sxy - sx * sy AS DOUBLE)
-        |        / CAST(n * sxx - sx * sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      / CAST(n AS DOUBLE) * 1000) AS BIGINT)
-        |    END AS intercept_micro
-        |FROM sums""".stripMargin,
+      s"""WITH ${OracleSql.copurchasePairs},
+         |ed AS (SELECT u, v FROM e2
+         |  UNION ALL SELECT v AS u, u AS v FROM e2),
+         |deg AS (SELECT u, count(*) AS dg FROM ed GROUP BY 1),
+         |hist AS (SELECT dg, count(*) AS nd FROM deg GROUP BY 1),
+         |pts AS (SELECT
+         |    CAST(round(ln(CAST(dg AS DOUBLE)) * 1000) AS BIGINT) AS x,
+         |    CAST(round(ln(CAST(nd AS DOUBLE)) * 1000) AS BIGINT) AS y
+         |  FROM hist),
+         |sums AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx,
+         |    CAST(sum(y) AS BIGINT) AS sy,
+         |    CAST(sum(x * y) AS BIGINT) AS sxy,
+         |    CAST(sum(x * x) AS BIGINT) AS sxx FROM pts)
+         |SELECT n,
+         |  CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN NULL
+         |    ELSE CAST(round(CAST(n * sxy - sx * sy AS DOUBLE)
+         |      / CAST(n * sxx - sx * sx AS DOUBLE) * 1000000) AS BIGINT)
+         |    END AS slope_micro,
+         |  CASE WHEN n < 2 OR n * sxx - sx * sx = 0 THEN NULL
+         |    ELSE CAST(round((CAST(sy AS DOUBLE)
+         |      - CAST(n * sxy - sx * sy AS DOUBLE)
+         |        / CAST(n * sxx - sx * sx AS DOUBLE) * CAST(sx AS DOUBLE))
+         |      / CAST(n AS DOUBLE) * 1000) AS BIGINT)
+         |    END AS intercept_micro
+         |FROM sums""".stripMargin,
     // identical pair counts, identical (m desc, v) rank order
     "q217_item_recs" ->
       """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
@@ -2493,18 +2397,7 @@ object Graph extends QueryModule {
              |  FROM $tag${r - 1} n LEFT JOIN ${tag}m$r m USING (node))"""
             .stripMargin
         }.mkString(",\n")
-      s"""WITH cp AS (SELECT o_custkey AS c, l_partkey AS p,
-         |    min(o_orderdate) AS mind, max(o_orderdate) AS maxd
-         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-         |  GROUP BY 1, 2),
-         |e AS MATERIALIZED (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m
-         |    FROM cp a JOIN cp b
-         |    ON a.c = b.c AND a.p <> b.p AND a.mind < b.maxd GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |nodes AS (SELECT u AS node FROM e UNION SELECT v FROM e),
-         |f0 AS (SELECT node, node AS lbl FROM nodes),
-         |b0 AS (SELECT node, node AS lbl FROM nodes),
+      s"""WITH ${OracleSql.sccSeeds},
          |${rounds("f", "u", "v")},
          |${rounds("b", "v", "u")},
          |j AS (SELECT f.node, f.lbl AS fl, b.lbl AS bl,
@@ -2521,47 +2414,21 @@ object Graph extends QueryModule {
     // identical wedge enumeration + fixed-point RA (// ≡ div on the
     // positive operands), so the top-20 candidate ranking must match
     "q177_link_predict" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-        |  FROM lineitem),
-        |e2 AS (SELECT u, v FROM (
-        |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-        |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-        |  WHERE m >= 2),
-        |ed AS MATERIALIZED (SELECT u, v FROM e2
-        |  UNION ALL SELECT v AS u, u AS v FROM e2),
-        |deg AS (SELECT u, count(*) AS dg FROM ed GROUP BY 1),
-        |wg AS (SELECT a.u AS w, a.v AS x, b.v AS y
-        |  FROM ed a JOIN ed b ON a.u = b.u AND a.v < b.v),
-        |sc AS (SELECT x, y, count(*) AS cn,
-        |    CAST(sum(1000000 // dg) AS BIGINT) AS ra_ppm
-        |  FROM wg JOIN deg ON wg.w = deg.u GROUP BY 1, 2)
-        |SELECT x AS u, y AS v, cn, ra_ppm FROM sc
-        |WHERE NOT EXISTS (SELECT 1 FROM e2
-        |  WHERE e2.u = sc.x AND e2.v = sc.y)
-        |ORDER BY cn DESC, ra_ppm DESC, u, v LIMIT 20""".stripMargin,
+      s"""WITH ${OracleSql.copurchaseDegrees},
+         |wg AS (SELECT a.u AS w, a.v AS x, b.v AS y
+         |  FROM ed a JOIN ed b ON a.u = b.u AND a.v < b.v),
+         |sc AS (SELECT x, y, count(*) AS cn,
+         |    CAST(sum(1000000 // dg) AS BIGINT) AS ra_ppm
+         |  FROM wg JOIN deg ON wg.w = deg.u GROUP BY 1, 2)
+         |SELECT x AS u, y AS v, cn, ra_ppm FROM sc
+         |WHERE NOT EXISTS (SELECT 1 FROM e2
+         |  WHERE e2.u = sc.x AND e2.v = sc.y)
+         |ORDER BY cn DESC, ra_ppm DESC, u, v LIMIT 20""".stripMargin,
     // the same fixed-depth frontier expansion, unrolled as generated
     // CTEs — identical seeds (mod rule), identical rounds, so the hop
     // profile must match row for row
     "q167_bfs_hops" -> {
-      val rounds = (1 to bfsRounds).map { r =>
-        s"""f$r AS (SELECT DISTINCT ed.v AS x FROM ed
-           |  JOIN v${r - 1} w ON ed.u = w.x AND w.dist = ${r - 1}
-           |  WHERE NOT EXISTS (SELECT 1 FROM v${r - 1} p WHERE p.x = ed.v)),
-           |v$r AS MATERIALIZED (SELECT x, dist FROM v${r - 1}
-           |  UNION ALL SELECT x, $r AS dist FROM f$r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |nodes AS (SELECT DISTINCT u AS x FROM ed),
-         |v0 AS MATERIALIZED (SELECT x, 0 AS dist FROM nodes
-         |  WHERE x % $bfsSeedMod = 0),
-         |$rounds
+      s"""WITH ${OracleSql.bfsFrontiers(bfsRounds)}
          |SELECT dist, count(*) AS n_nodes,
          |  CAST(sum(x) AS BIGINT) AS id_checksum
          |FROM v$bfsRounds GROUP BY 1
@@ -2575,15 +2442,7 @@ object Graph extends QueryModule {
     // the identical md5 hash-sample: both engines draw the same
     // neighborhoods, so the aggregate must match exactly
     "q159_gnn_sample" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |deg AS (SELECT u, count(*) AS dg FROM ed GROUP BY 1),
+      s"""WITH ${OracleSql.copurchaseDegrees},
          |rk AS (SELECT u, v, row_number() OVER (PARTITION BY u
          |    ORDER BY md5(u || ':' || v), v) AS rk FROM ed),
          |samp AS (SELECT u, v FROM rk WHERE rk <= $sampleS),
@@ -2604,24 +2463,7 @@ object Graph extends QueryModule {
     // packed-BIGINT argmax is reproduced literally so the per-node winner
     // (max count, ties to smallest label) is the identical integer max
     "q155_label_propagation" -> {
-      val rounds = (1 to lpaRounds).map { r =>
-        s"""nb$r AS (SELECT ed.u AS node, l.lbl AS lbl, count(*) AS cnt
-           |  FROM ed JOIN l${r - 1} l ON ed.v = l.node GROUP BY 1, 2),
-           |l$r AS MATERIALIZED (SELECT node,
-           |    1000000000000 - (max(cnt * 1000000000000
-           |      + (1000000000000 - lbl)) % 1000000000000) AS lbl
-           |  FROM nb$r GROUP BY 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM ed),
-         |$rounds
+      s"""WITH ${OracleSql.lpaLabels}
          |SELECT lbl AS community, count(*) AS n_members,
          |  min(node) AS min_member,
          |  CAST(sum(node) AS BIGINT) AS member_checksum
@@ -2633,24 +2475,7 @@ object Graph extends QueryModule {
     // explicit-sign form (both engines' integer division truncates toward
     // zero, so the unshifted form would agree too; see the Scaladoc note)
     "q202_modularity" -> {
-      val rounds = (1 to lpaRounds).map { r =>
-        s"""nb$r AS (SELECT ed.u AS node, l.lbl AS lbl, count(*) AS cnt
-           |  FROM ed JOIN l${r - 1} l ON ed.v = l.node GROUP BY 1, 2),
-           |l$r AS MATERIALIZED (SELECT node,
-           |    1000000000000 - (max(cnt * 1000000000000
-           |      + (1000000000000 - lbl)) % 1000000000000) AS lbl
-           |  FROM nb$r GROUP BY 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
-         |  FROM lineitem),
-         |e2 AS (SELECT u, v FROM (
-         |    SELECT a.p AS u, b.p AS v, count(*) AS m FROM items a
-         |    JOIN items b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2)
-         |  WHERE m >= 2),
-         |ed AS MATERIALIZED (SELECT u, v FROM e2
-         |  UNION ALL SELECT v AS u, u AS v FROM e2),
-         |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM ed),
-         |$rounds,
+      s"""WITH ${OracleSql.lpaLabels},
          |deg AS (SELECT u, count(*) AS dg FROM ed GROUP BY 1),
          |dc AS (SELECT l.lbl, sum(deg.dg) AS dc, count(*) AS n_nodes
          |  FROM l$lpaRounds l JOIN deg ON l.node = deg.u GROUP BY 1),
@@ -2736,38 +2561,31 @@ object Graph extends QueryModule {
     // credits via unnest, the identical ppm arithmetic; the summary row
     // re-derives q138's n_triangles as sum(credits) // 3
     "q265_local_clustering" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT DISTINCT a.p AS u, b.p AS v
-        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-        |deg AS MATERIALIZED (SELECT x, count(*) AS dg FROM (
-        |    SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-        |  GROUP BY 1),
-        |tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-        |  FROM edges e1
-        |  JOIN edges e2 ON e1.v = e2.u
-        |  JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v),
-        |cred AS MATERIALIZED (SELECT x, count(*) AS tri FROM (
-        |    SELECT unnest([a, b, c]) AS x FROM tri) GROUP BY 1),
-        |lcc AS MATERIALIZED (SELECT CAST(d.x AS BIGINT) AS node,
-        |    d.dg AS degree,
-        |    CAST(coalesce(c.tri, 0) AS BIGINT) AS n_triangles,
-        |    CASE WHEN d.dg >= 2 THEN (2 * CAST(coalesce(c.tri, 0) AS BIGINT)
-        |        * 1000000) // (d.dg * (d.dg - 1))
-        |      ELSE CAST(0 AS BIGINT) END AS lcc_ppm
-        |  FROM deg d LEFT JOIN cred c ON d.x = c.x),
-        |top AS (SELECT CAST(row_number() OVER (
-        |      ORDER BY degree DESC, node) - 1 AS INT) AS rk,
-        |    node, degree, n_triangles, lcc_ppm
-        |  FROM lcc ORDER BY degree DESC, node LIMIT 10)
-        |SELECT * FROM top
-        |UNION ALL
-        |SELECT CAST(10 AS INT), CAST(-1 AS BIGINT), count(*),
-        |  CAST(sum(n_triangles) // 3 AS BIGINT),
-        |  CAST(sum(lcc_ppm) // count(*) AS BIGINT)
-        |FROM lcc WHERE degree >= 2
-        |ORDER BY rk""".stripMargin,
+      s"""WITH ${OracleSql.triangleEdgeDegrees},
+         |tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
+         |  FROM edges e1
+         |  JOIN edges e2 ON e1.v = e2.u
+         |  JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v),
+         |cred AS MATERIALIZED (SELECT x, count(*) AS tri FROM (
+         |    SELECT unnest([a, b, c]) AS x FROM tri) GROUP BY 1),
+         |lcc AS MATERIALIZED (SELECT CAST(d.x AS BIGINT) AS node,
+         |    d.dg AS degree,
+         |    CAST(coalesce(c.tri, 0) AS BIGINT) AS n_triangles,
+         |    CASE WHEN d.dg >= 2 THEN (2 * CAST(coalesce(c.tri, 0) AS BIGINT)
+         |        * 1000000) // (d.dg * (d.dg - 1))
+         |      ELSE CAST(0 AS BIGINT) END AS lcc_ppm
+         |  FROM deg d LEFT JOIN cred c ON d.x = c.x),
+         |top AS (SELECT CAST(row_number() OVER (
+         |      ORDER BY degree DESC, node) - 1 AS INT) AS rk,
+         |    node, degree, n_triangles, lcc_ppm
+         |  FROM lcc ORDER BY degree DESC, node LIMIT 10)
+         |SELECT * FROM top
+         |UNION ALL
+         |SELECT CAST(10 AS INT), CAST(-1 AS BIGINT), count(*),
+         |  CAST(sum(n_triangles) // 3 AS BIGINT),
+         |  CAST(sum(lcc_ppm) // count(*) AS BIGINT)
+         |FROM lcc WHERE degree >= 2
+         |ORDER BY rk""".stripMargin,
     // every round recomputed from scratch (canonical u<v<w triangle join,
     // 3-way edge credits, the same support cut and checksum) — the
     // oracle's full unroll certifies the engine's post-fixpoint
@@ -2809,33 +2627,26 @@ object Graph extends QueryModule {
     // shape (cast → divide → sqrt → round 4): the doubles are the same
     // bits, so round-4 parity is exact, the q33 argument
     "q266_assortativity" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |edges AS MATERIALIZED (
-        |  SELECT DISTINCT a.p AS u, b.p AS v
-        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-        |deg AS MATERIALIZED (SELECT x, count(*) AS dg FROM (
-        |    SELECT u AS x FROM edges UNION ALL SELECT v FROM edges)
-        |  GROUP BY 1),
-        |pairs AS (SELECT CAST(du.dg AS DECIMAL(38,0)) AS dx,
-        |    CAST(dv.dg AS DECIMAL(38,0)) AS dy
-        |  FROM (SELECT u, v FROM edges
-        |        UNION ALL SELECT v AS u, u AS v FROM edges) e
-        |  JOIN deg du ON e.u = du.x
-        |  JOIN deg dv ON e.v = dv.x),
-        |mom AS (SELECT count(*) AS n_pairs, sum(dx) AS sx, sum(dy) AS sy,
-        |    sum(dx * dy) AS sxy, sum(dx * dx) AS sxx, sum(dy * dy) AS syy
-        |  FROM pairs)
-        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
-        |  (SELECT count(*) FROM edges) AS n_edges,
-        |  n_pairs,
-        |  (2 * (SELECT count(*) FROM edges) * 1000)
-        |    // (SELECT count(*) FROM deg) AS avg_degree_milli,
-        |  round(CAST(n_pairs * sxy - sx * sy AS DOUBLE)
-        |    / sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
-        |    / sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE)), 4)
-        |    AS assortativity
-        |FROM mom""".stripMargin,
+      s"""WITH ${OracleSql.triangleEdgeDegrees},
+         |pairs AS (SELECT CAST(du.dg AS DECIMAL(38,0)) AS dx,
+         |    CAST(dv.dg AS DECIMAL(38,0)) AS dy
+         |  FROM (SELECT u, v FROM edges
+         |        UNION ALL SELECT v AS u, u AS v FROM edges) e
+         |  JOIN deg du ON e.u = du.x
+         |  JOIN deg dv ON e.v = dv.x),
+         |mom AS (SELECT count(*) AS n_pairs, sum(dx) AS sx, sum(dy) AS sy,
+         |    sum(dx * dy) AS sxy, sum(dx * dx) AS sxx, sum(dy * dy) AS syy
+         |  FROM pairs)
+         |SELECT (SELECT count(*) FROM deg) AS n_nodes,
+         |  (SELECT count(*) FROM edges) AS n_edges,
+         |  n_pairs,
+         |  (2 * (SELECT count(*) FROM edges) * 1000)
+         |    // (SELECT count(*) FROM deg) AS avg_degree_milli,
+         |  round(CAST(n_pairs * sxy - sx * sy AS DOUBLE)
+         |    / sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
+         |    / sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE)), 4)
+         |    AS assortativity
+         |FROM mom""".stripMargin,
     "q106_pagerank" -> {
       val iterCtes = (1 to iters).map { i =>
         s"""r$i AS (SELECT n.node,

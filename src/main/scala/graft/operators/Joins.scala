@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -506,10 +506,5 @@ object Joins extends QueryModule {
         |FROM base FULL OUTER JOIN delta ON key = u_key
         |ORDER BY o_orderkey""".stripMargin,
     // the salted join must be indistinguishable from the plain join
-    "q52_salted_join" ->
-      """SELECT o_orderpriority,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)
+    "q52_salted_join" -> OracleSql.priorityRevenueQuery)
 }

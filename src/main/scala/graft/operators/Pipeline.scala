@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
@@ -1344,25 +1344,9 @@ n$k AS (SELECT CAST($k AS INT) AS round, source, n_docs, loss_micro,
     // rank, same order as Spark), and the q158 fusion formula; ranks CAST
     // to INT (row_number is BIGINT in DuckDB, INT in Spark)
     "q259_hybrid_retrieval" -> {
-      val over = chunkBudget - chunkStride
       val cosLP = "round(list_cosine_similarity(l.embedding::DOUBLE[], r.embedding::DOUBLE[]), 9)"
       val cosVP = "round(list_cosine_similarity(v.embedding::DOUBLE[], p.embedding::DOUBLE[]), 9)"
-      raw"""WITH tk AS (SELECT doc_id,
-         |    CAST(generate_subscripts(ts, 1) - 1 AS BIGINT) AS i,
-         |    unnest(ts) AS tok
-         |  FROM (SELECT doc_id, list_filter(
-         |      string_split_regex(text, '\s+'), t -> len(t) > 0) AS ts
-         |    FROM documents)),
-         |asg AS MATERIALIZED (
-         |  SELECT doc_id, i // $chunkStride AS chunk, tok FROM tk
-         |  UNION ALL
-         |  SELECT doc_id, i // $chunkStride - 1, tok FROM tk
-         |  WHERE i % $chunkStride < $over AND i >= $chunkStride),
-         |tf AS MATERIALIZED (SELECT doc_id, chunk, tok, count(*) AS tf
-         |  FROM asg GROUP BY 1, 2, 3),
-         |pl AS MATERIALIZED (SELECT doc_id, chunk, count(*) AS pl
-         |  FROM asg GROUP BY 1, 2),
-         |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+      raw"""WITH ${OracleSql.passageTermStats},
          |st AS (SELECT (SELECT count(*) FROM pl) AS n_p,
          |  (SELECT CAST(sum(pl) AS BIGINT) FROM pl) AS sum_pl),
          |qs AS MATERIALIZED (SELECT doc_id AS q_id FROM documents
@@ -1425,23 +1409,7 @@ n$k AS (SELECT CAST($k AS INT) AS round, source, n_docs, loss_micro,
     // q273's assignment + q149's formula at passage granularity, the same
     // single-ln-rounding ppm and the same deterministic term pick
     "q278_passage_retrieval" -> {
-      val over = chunkBudget - chunkStride
-      raw"""WITH tk AS (SELECT doc_id,
-         |    CAST(generate_subscripts(ts, 1) - 1 AS BIGINT) AS i,
-         |    unnest(ts) AS tok
-         |  FROM (SELECT doc_id, list_filter(
-         |      string_split_regex(text, '\s+'), t -> len(t) > 0) AS ts
-         |    FROM documents)),
-         |asg AS MATERIALIZED (
-         |  SELECT doc_id, i // $chunkStride AS chunk, tok FROM tk
-         |  UNION ALL
-         |  SELECT doc_id, i // $chunkStride - 1, tok FROM tk
-         |  WHERE i % $chunkStride < $over AND i >= $chunkStride),
-         |tf AS MATERIALIZED (SELECT doc_id, chunk, tok, count(*) AS tf
-         |  FROM asg GROUP BY 1, 2, 3),
-         |pl AS MATERIALIZED (SELECT doc_id, chunk, count(*) AS pl
-         |  FROM asg GROUP BY 1, 2),
-         |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
+      raw"""WITH ${OracleSql.passageTermStats},
          |terms AS MATERIALIZED (SELECT tok, df FROM dfq
          |  ORDER BY df DESC, tok LIMIT 4),
          |st AS (SELECT (SELECT count(*) FROM pl) AS n_p,
@@ -1531,13 +1499,7 @@ n$k AS (SELECT CAST($k AS INT) AS round, source, n_docs, loss_micro,
     // for near dedup + split, q74's shingle decontamination, q103's
     // integer sqrt quotas, q85's bins — every verdict a monotone flag
     "q234_pipeline_e2e" ->
-      s"""WITH RECURSIVE ${Dedup.pairsCte},
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
+      s"""WITH RECURSIVE ${OracleSql.dupReach},
          |lbl AS MATERIALIZED (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
          |fb AS MATERIALIZED (SELECT d.doc_id, d.lang,
          |    CAST(len($duckToks) AS BIGINT) AS n_tok,
@@ -1774,12 +1736,7 @@ n$k AS (SELECT CAST($k AS INT) AS round, source, n_docs, loss_micro,
          |FROM r JOIN q ON r.lang = q.lang
          |WHERE r.rk <= q.quota
          |GROUP BY 1, 2, 3 ORDER BY q.lang""".stripMargin,
-    "q91_latest_per_key" ->
-      """SELECT user_id, event_type, event_id, ts AS latest_ts, value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
+    "q91_latest_per_key" -> OracleSql.latestPerKeyQuery,
     "q92_dq_audit" ->
       """SELECT * FROM (
         |  SELECT 'orderkey_not_null' AS rule, count(*) AS violations,

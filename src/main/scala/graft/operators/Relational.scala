@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
@@ -1018,24 +1018,17 @@ object Relational extends QueryModule {
         |  AND o.dt = sky.mx
         |GROUP BY 1, 2, 3 ORDER BY 1, 2 DESC""".stripMargin,
     "q109_scd2" ->
-      """WITH src AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate, o_orderstatus,
-        |    lag(o_orderstatus) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |      AS prev
-        |  FROM orders),
-        |chg AS (
-        |  SELECT * FROM src WHERE prev IS NULL OR prev <> o_orderstatus)
-        |SELECT o_custkey,
-        |  CAST(row_number() OVER w AS INT) AS version,
-        |  o_orderstatus AS status,
-        |  o_orderdate AS valid_from,
-        |  lead(o_orderdate) OVER w AS valid_to,
-        |  CASE WHEN lead(o_orderdate) OVER w IS NULL THEN 1 ELSE 0 END
-        |    AS is_current
-        |FROM chg
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, version""".stripMargin,
+      s"""WITH ${OracleSql.scd2Changes}
+         |SELECT o_custkey,
+         |  CAST(row_number() OVER w AS INT) AS version,
+         |  o_orderstatus AS status,
+         |  o_orderdate AS valid_from,
+         |  lead(o_orderdate) OVER w AS valid_to,
+         |  CASE WHEN lead(o_orderdate) OVER w IS NULL THEN 1 ELSE 0 END
+         |    AS is_current
+         |FROM chg
+         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+         |ORDER BY o_custkey, version""".stripMargin,
     "q01_pricing_summary" -> pricingSql,
     // q49 is q01 behind the memo cache — identical semantics, same oracle
     "q49_memo_pricing" -> pricingSql,

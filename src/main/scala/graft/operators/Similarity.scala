@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Vectors._
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
@@ -1682,10 +1682,10 @@ object Similarity extends QueryModule {
     "q243_semantic_clusters" -> semanticClusters,
     "q254_semantic_decontam" -> semanticDecontam)
 
-  private val duckCos =
+  private[graft] val duckCos =
     "list_cosine_similarity(%s.embedding::DOUBLE[], %s.embedding::DOUBLE[])"
 
-  private def duckBandBucket(band: Int) = (0 until 8).map { i =>
+  private[graft] def duckBandBucket(band: Int) = (0 until 8).map { i =>
     s"(CASE WHEN embedding[${band * 8 + i + 1}] >= 0 THEN ${1 << i} ELSE 0 END)"
   }.mkString(" + ")
 
@@ -1741,18 +1741,7 @@ object Similarity extends QueryModule {
       val bcbE = "list_sum(list_transform(range(1, 65), i -> " +
         "n3.b[i] * list_sum(list_transform(range(1, 65), j -> " +
         "cm.m[(i - 1) * 64 + j] * n3.b[j]))))"
-      s"""WITH RECURSIVE e AS (SELECT list_transform(embedding,
-         |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-         |      AS v FROM embeddings),
-         |cnt AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM e),
-         |lin AS (SELECT i, CAST(sum(COALESCE(v[i], 0)) AS HUGEINT) AS s
-         |  FROM e, range(1, 65) t(i) GROUP BY i),
-         |sq AS (SELECT i, j, sum(CAST(COALESCE(v[i], 0) AS HUGEINT)
-         |      * COALESCE(v[j], 0)) AS sp
-         |  FROM e, range(1, 65) t1(i), range(1, 65) t2(j) GROUP BY i, j),
-         |cv AS MATERIALIZED (SELECT q.i, q.j,
-         |    (SELECT n FROM cnt) * q.sp - li.s * lj.s AS c
-         |  FROM sq q JOIN lin li ON li.i = q.i JOIN lin lj ON lj.i = q.j),
+      s"""WITH RECURSIVE ${OracleSql.pcaCovariance},
          |cm AS MATERIALIZED (SELECT list(c ORDER BY i, j) AS m FROM cv),
          |it(step, b) AS (
          |  SELECT 0, list_transform(range(1, 65),
@@ -1863,18 +1852,7 @@ object Similarity extends QueryModule {
            |    AS BIGINT) AS cum_ev_ppm
            |FROM (SELECT unnest(range(1, 65)) AS dim) dd, ld$c, fl"""
           .stripMargin
-      s"""WITH RECURSIVE e AS (SELECT list_transform(embedding,
-         |    x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))
-         |      AS v FROM embeddings),
-         |cnt AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM e),
-         |lin AS (SELECT i, CAST(sum(COALESCE(v[i], 0)) AS HUGEINT) AS s
-         |  FROM e, range(1, 65) t(i) GROUP BY i),
-         |sq AS (SELECT i, j, sum(CAST(COALESCE(v[i], 0) AS HUGEINT)
-         |      * COALESCE(v[j], 0)) AS sp
-         |  FROM e, range(1, 65) t1(i), range(1, 65) t2(j) GROUP BY i, j),
-         |cv AS MATERIALIZED (SELECT q.i, q.j,
-         |    (SELECT n FROM cnt) * q.sp - li.s * lj.s AS c
-         |  FROM sq q JOIN lin li ON li.i = q.i JOIN lin lj ON lj.i = q.j),
+      s"""WITH RECURSIVE ${OracleSql.pcaCovariance},
          |cm1 AS MATERIALIZED (SELECT list(c ORDER BY i, j) AS m FROM cv),
          |trc AS MATERIALIZED (SELECT sum(c) AS tr FROM cv WHERE i = j),
          |${compBlock(1)},
@@ -2109,13 +2087,7 @@ object Similarity extends QueryModule {
     // recursive label reachability — any label the iterative loop leaves
     // un-propagated mismatches the closure
     "q243_semantic_clusters" ->
-      s"""WITH RECURSIVE assigned AS (
-         |  SELECT vec_id, embedding, cell_id FROM (
-         |    SELECT v.vec_id, v.embedding, p.vec_id AS cell_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY round(${duckCos.format("v", "p")}, 9) DESC, p.vec_id) AS arn
-         |    FROM embeddings v CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 64) p
-         |  ) WHERE arn = 1),
+      s"""WITH RECURSIVE ${OracleSql.ivfAssigned},
          |ed AS (SELECT l.vec_id AS d1, r.vec_id AS d2
          |  FROM assigned l JOIN assigned r
          |  ON l.cell_id = r.cell_id AND l.vec_id < r.vec_id
@@ -2136,18 +2108,7 @@ object Similarity extends QueryModule {
     // the same corpus/delta home-cell assignments, q153's ppm centroid
     // rounding, and an engine-identical full-outer cell merge
     "q241_ivf_drift" ->
-      s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id % 10 <> 7),
-         |piv AS (SELECT vec_id AS pivot_id, embedding FROM corpus
-         |  WHERE vec_id < 64),
-         |ch AS (SELECT vec_id, embedding, cell_id FROM (
-         |    SELECT c.vec_id, c.embedding, p.pivot_id AS cell_id,
-         |      row_number() OVER (PARTITION BY c.vec_id
-         |        ORDER BY round(${duckCos.format("c", "p")}, 9) DESC,
-         |          p.pivot_id) AS arn
-         |    FROM corpus c CROSS JOIN piv p) WHERE arn = 1),
-         |delta AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id % 10 = 7),
+      s"""WITH ${OracleSql.ivfCorpusCells},
          |dh AS (SELECT vec_id, embedding, cell_id FROM (
          |    SELECT d.vec_id, d.embedding, p.pivot_id AS cell_id,
          |      row_number() OVER (PARTITION BY d.vec_id
@@ -2225,18 +2186,7 @@ object Similarity extends QueryModule {
          |GROUP BY 1 ORDER BY 1""".stripMargin)
 
   private def deltaSemOracleSql: String =
-      s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id % 10 <> 7),
-         |piv AS (SELECT vec_id AS pivot_id, embedding FROM corpus
-         |  WHERE vec_id < 64),
-         |ch AS (SELECT vec_id, embedding, cell_id FROM (
-         |    SELECT c.vec_id, c.embedding, p.pivot_id AS cell_id,
-         |      row_number() OVER (PARTITION BY c.vec_id
-         |        ORDER BY round(${duckCos.format("c", "p")}, 9) DESC,
-         |          p.pivot_id) AS arn
-         |    FROM corpus c CROSS JOIN piv p) WHERE arn = 1),
-         |delta AS (SELECT vec_id, embedding FROM embeddings
-         |  WHERE vec_id % 10 = 7),
+      s"""WITH ${OracleSql.ivfCorpusCells},
          |dp AS (SELECT vec_id, embedding, cell_id, arn FROM (
          |    SELECT d.vec_id, d.embedding, p.pivot_id AS cell_id,
          |      row_number() OVER (PARTITION BY d.vec_id
@@ -2258,9 +2208,7 @@ object Similarity extends QueryModule {
     // graph (q189's chain inline), same entry points, same (sim9, id)
     // ranking — then q72's brute/hit arithmetic verbatim
     "q246_graph_ann_recall" -> {
-      val banded = (0 until 8).map { b =>
-        s"SELECT vec_id, $b AS band, ${duckBandBucket(b)} AS bucket FROM embeddings"
-      }.mkString("\n  UNION ALL ")
+      val banded = OracleSql.lshBandRows
       val hops = (1 to beamHops).map { h =>
         s"""cand$h AS (SELECT DISTINCT q_id, node FROM (
            |    SELECT q_id, node FROM beam${h - 1}
@@ -2278,22 +2226,7 @@ object Similarity extends QueryModule {
       }.mkString(",\n")
       s"""WITH banded AS MATERIALIZED (
          |  $banded),
-         |cand AS (
-         |  SELECT DISTINCT cl.vec_id AS v1, cr.vec_id AS v2
-         |  FROM banded cl JOIN banded cr
-         |  ON cl.band = cr.band AND cl.bucket = cr.bucket
-         |    AND cl.vec_id < cr.vec_id),
-         |scored AS (
-         |  SELECT v1, v2, round(${duckCos.format("e1", "e2")}, 9) AS sim9
-         |  FROM cand JOIN embeddings e1 ON v1 = e1.vec_id
-         |            JOIN embeddings e2 ON v2 = e2.vec_id),
-         |directed AS (
-         |  SELECT v1 AS src, v2 AS dst, sim9 FROM scored
-         |  UNION ALL SELECT v2, v1, sim9 FROM scored),
-         |knn AS (SELECT src, dst FROM (
-         |    SELECT src, dst, row_number() OVER (PARTITION BY src
-         |      ORDER BY sim9 DESC, dst) AS rn FROM directed)
-         |  WHERE rn <= 5),
+         |${OracleSql.knnGraph},
          |mutual AS MATERIALIZED (
          |  SELECT f.src AS u, f.dst AS v FROM knn f JOIN knn g
          |  ON f.src = g.dst AND f.dst = g.src AND f.src < f.dst),
@@ -2337,27 +2270,10 @@ object Similarity extends QueryModule {
          |  round(CAST(n_hits AS DOUBLE) / n_eval, 4) AS recall FROM hits""".stripMargin
     },
     "q189_knn_graph" -> {
-      val banded = (0 until 8).map { b =>
-        s"SELECT vec_id, $b AS band, ${duckBandBucket(b)} AS bucket FROM embeddings"
-      }.mkString("\n  UNION ALL ")
+      val banded = OracleSql.lshBandRows
       s"""WITH banded AS (
          |  $banded),
-         |cand AS (
-         |  SELECT DISTINCT cl.vec_id AS v1, cr.vec_id AS v2
-         |  FROM banded cl JOIN banded cr
-         |  ON cl.band = cr.band AND cl.bucket = cr.bucket
-         |    AND cl.vec_id < cr.vec_id),
-         |scored AS (
-         |  SELECT v1, v2, round(${duckCos.format("e1", "e2")}, 9) AS sim9
-         |  FROM cand JOIN embeddings e1 ON v1 = e1.vec_id
-         |            JOIN embeddings e2 ON v2 = e2.vec_id),
-         |directed AS (
-         |  SELECT v1 AS src, v2 AS dst, sim9 FROM scored
-         |  UNION ALL SELECT v2, v1, sim9 FROM scored),
-         |knn AS (SELECT src, dst FROM (
-         |    SELECT src, dst, row_number() OVER (PARTITION BY src
-         |      ORDER BY sim9 DESC, dst) AS rn FROM directed)
-         |  WHERE rn <= 5),
+         |${OracleSql.knnGraph},
          |mutual AS (
          |  SELECT f.src AS u, f.dst AS v FROM knn f JOIN knn g
          |  ON f.src = g.dst AND f.dst = g.src AND f.src < f.dst),
@@ -2388,13 +2304,7 @@ object Similarity extends QueryModule {
         |FROM cc JOIN i ON cc.label = i.label
         |ORDER BY cc.label, cc.dim""".stripMargin,
     "q101_semantic_dedup" ->
-      s"""WITH assigned AS (
-         |  SELECT vec_id, embedding, cell_id FROM (
-         |    SELECT v.vec_id, v.embedding, p.vec_id AS cell_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY round(${duckCos.format("v", "p")}, 9) DESC, p.vec_id) AS arn
-         |    FROM embeddings v CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 64) p
-         |  ) WHERE arn = 1),
+      s"""WITH ${OracleSql.ivfAssigned},
          |reps AS (
          |  SELECT r.vec_id, min(l.vec_id) AS rep_id
          |  FROM assigned l JOIN assigned r
@@ -2471,9 +2381,7 @@ object Similarity extends QueryModule {
          |  FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id <> r.vec_id
          |) WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     "q36_embed_neardup" -> {
-      val banded = (0 until 8).map { b =>
-        s"SELECT vec_id, $b AS band, ${duckBandBucket(b)} AS bucket FROM embeddings"
-      }.mkString("\n  UNION ALL ")
+      val banded = OracleSql.lshBandRows
       s"""WITH banded AS (
          |  $banded),
          |cand AS (
@@ -2491,13 +2399,7 @@ object Similarity extends QueryModule {
       s"""WITH sample AS (
          |  SELECT vec_id AS q_id FROM embeddings
          |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $recallSampleN),
-         |assigned AS (
-         |  SELECT vec_id, embedding, cell_id, arn FROM (
-         |    SELECT v.vec_id, v.embedding, p.vec_id AS cell_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY round(${duckCos.format("v", "p")}, 9) DESC, p.vec_id) AS arn
-         |    FROM embeddings v CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 64) p
-         |  ) WHERE arn <= 2),
+         |${OracleSql.ivfAssignedTop2},
          |ivf AS (
          |  SELECT vec_id AS q_id, round(sim9, 4) AS ivf_sim
          |  FROM (
@@ -2542,13 +2444,7 @@ object Similarity extends QueryModule {
          |    AS balance_ppm
          |FROM wn""".stripMargin,
     "q47_ivf_ann" ->
-      s"""WITH assigned AS (
-         |  SELECT vec_id, embedding, cell_id, arn FROM (
-         |    SELECT v.vec_id, v.embedding, p.vec_id AS cell_id,
-         |      row_number() OVER (PARTITION BY v.vec_id
-         |        ORDER BY round(${duckCos.format("v", "p")}, 9) DESC, p.vec_id) AS arn
-         |    FROM embeddings v CROSS JOIN (SELECT * FROM embeddings WHERE vec_id < 64) p
-         |  ) WHERE arn <= 2)
+      s"""WITH ${OracleSql.ivfAssignedTop2}
          |SELECT vec_id, CAST(cell_id AS INT) AS cell_id, neighbor_id,
          |  round(sim9, 4) AS sim
          |FROM (

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -3574,7 +3574,7 @@ object Stats extends QueryModule {
 
   /** q267 censoring horizon: a customer whose last order sits within 90
     * days of the observation end is censored (still alive), not churned. */
-  private val kmCensorDays = 90
+  private[graft] val kmCensorDays = 90
 
   /** The staged per-customer survival frame (duration t, churn flag, md5
     * arm), memoized per input dir ([[graft.Scratch.PerDir]]): q267's
@@ -5636,29 +5636,14 @@ object Stats extends QueryModule {
     // naive lag-12 self-join, scored on the shared t >= 24 window —
     // identical integer MAE table, ties flagging both models
     "q306_forecast_backtest" -> {
-      val l1 = s"($holtAlpha * (mo.c - it.q[1]) " +
-        s"+ ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000"
-      val p2 = hwPeriod.toLong * hwPeriod
+      val l1 = OracleSql.hwLevelUpdate
       val cut = 2 * hwPeriod
       // the q319 AR chain (a-prefixed to keep CTE names disjoint from
       // the smoother recursions): ACF -> Durbin-Levinson -> PACF-cutoff
       // order -> in-sample residuals for the shared scored window
-      val apk = "((arr.rho[ait.k + 1] * 1000000 - list_sum(" +
-        "list_transform(range(1, ait.k + 1), " +
-        "j -> ait.phi[j] * arr.rho[ait.k + 1 - j]))) // ait.v)"
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (SELECT m - (SELECT min(m) FROM raw) AS m,
-         |    c FROM raw),
-         |ast AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |adev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM ast) AS dv FROM monthly),
-         |aden AS (SELECT sum(dv * dv) AS dn FROM adev),
+      val apk = OracleSql.arPacfStep
+      s"""WITH RECURSIVE ${OracleSql.hwMonthlySeries},
+         |${OracleSql.arAcfInputs},
          |aacf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
          |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
          |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM aden)
@@ -5684,15 +5669,7 @@ object Stats extends QueryModule {
          |    (ait.v * (1000000 - ($apk * $apk) // 1000000)) // 1000000
          |  FROM ait, arr
          |  WHERE ait.k < $acfMaxLag AND ait.v > 0 AND ait.k < arr.nl),
-         |asel AS MATERIALIZED (SELECT coalesce(max(ait.k), 0) AS p
-         |  FROM ait, ast
-         |  WHERE ait.phi[ait.k] * ait.phi[ait.k] * ast.n
-         |    >= ${arBandZSq * 1000000L} * CAST(1000000 AS HUGEINT)),
-         |aphis AS MATERIALIZED (SELECT
-         |    unnest(range(1, len(phi) + 1)) AS j, unnest(phi) AS ph
-         |  FROM (SELECT coalesce(
-         |      (SELECT ait.phi FROM ait, asel WHERE ait.k = asel.p),
-         |      CAST([] AS HUGEINT[])) AS phi)),
+         |${OracleSql.arOrderPhis},
          |ainss AS (SELECT x.m AS m, sum(p2.ph * l.dv) AS ss
          |  FROM monthly x
          |  JOIN aphis p2 ON TRUE
@@ -5725,18 +5702,7 @@ object Stats extends QueryModule {
          |      - it.s) + ${1000000L - holtBeta} * it.b) // 1000000,
          |    it.s + it.b
          |  FROM ith it JOIN monthly mo ON mo.m = it.t + 1),
-         |i1 AS (SELECT CAST(sum(c) AS HUGEINT) AS s1 FROM monthly
-         |  WHERE m < $hwPeriod),
-         |i2 AS (SELECT CAST(sum(c) AS HUGEINT) AS s2 FROM monthly
-         |  WHERE m >= $hwPeriod AND m < ${2 * hwPeriod}),
-         |init AS MATERIALIZED (SELECT (s2 - s1) // $p2 AS b0,
-         |    s1 // $hwPeriod + (((s2 - s1) // $p2) * ${hwPeriod - 1}) // 2
-         |      AS l0
-         |  FROM i1, i2),
-         |seas0 AS MATERIALIZED (SELECT
-         |    list(CAST(c AS HUGEINT)
-         |      - (l0 - b0 * (${hwPeriod - 1} - m)) ORDER BY m) AS q
-         |  FROM monthly, init WHERE m < $hwPeriod),
+         |${OracleSql.hwSeasonInit},
          |itw(t, s, b, q, sh, f) AS (
          |  SELECT CAST(${hwPeriod - 1} AS BIGINT), init.l0, init.b0,
          |    seas0.q, CAST(0 AS HUGEINT), CAST(0 AS HUGEINT)
@@ -5789,31 +5755,11 @@ object Stats extends QueryModule {
     // each recursive step (1-based inclusive slicing: elements 2..12),
     // the same toward-zero division
     "q303_holt_winters" -> {
-      val p2 = hwPeriod.toLong * hwPeriod
       // the level update, spliced where b'/seas' reference it — SQL has
       // no let-binding inside a recursive step
-      val l1 = s"($holtAlpha * (mo.c - it.q[1]) " +
-        s"+ ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000"
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (SELECT m - (SELECT min(m) FROM raw) AS m,
-         |    c FROM raw),
-         |i1 AS (SELECT CAST(sum(c) AS HUGEINT) AS s1 FROM monthly
-         |  WHERE m < $hwPeriod),
-         |i2 AS (SELECT CAST(sum(c) AS HUGEINT) AS s2 FROM monthly
-         |  WHERE m >= $hwPeriod AND m < ${2 * hwPeriod}),
-         |init AS MATERIALIZED (SELECT (s2 - s1) // $p2 AS b0,
-         |    s1 // $hwPeriod + (((s2 - s1) // $p2) * ${hwPeriod - 1}) // 2
-         |      AS l0
-         |  FROM i1, i2),
-         |seas0 AS MATERIALIZED (SELECT
-         |    list(CAST(c AS HUGEINT)
-         |      - (l0 - b0 * (${hwPeriod - 1} - m)) ORDER BY m) AS q
-         |  FROM monthly, init WHERE m < $hwPeriod),
+      val l1 = OracleSql.hwLevelUpdate
+      s"""WITH RECURSIVE ${OracleSql.hwMonthlySeries},
+         |${OracleSql.hwSeasonInit},
          |it(t, s, b, q, sh, f) AS (
          |  SELECT CAST(${hwPeriod - 1} AS BIGINT), init.l0, init.b0,
          |    seas0.q, CAST(0 AS HUGEINT), CAST(0 AS HUGEINT)
@@ -5849,29 +5795,7 @@ object Stats extends QueryModule {
     // as a linear recursive CTE over the dense row index, the same
     // toward-zero division on negative trends
     "q300_holt_forecast" ->
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (SELECT m - (SELECT min(m) FROM raw) AS m,
-         |    c, row_number() OVER (ORDER BY m) - 1 AS t FROM raw),
-         |it AS (
-         |  SELECT CAST(0 AS BIGINT) AS t,
-         |    CAST((SELECT c FROM monthly WHERE t = 0) AS HUGEINT) AS s,
-         |    CAST(coalesce((SELECT c FROM monthly WHERE t = 1)
-         |      - (SELECT c FROM monthly WHERE t = 0), 0) AS HUGEINT) AS b,
-         |    CAST((SELECT c FROM monthly WHERE t = 0) AS HUGEINT) AS f
-         |  UNION ALL
-         |  SELECT it.t + 1,
-         |    ($holtAlpha * mo.c
-         |      + ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000,
-         |    ($holtBeta * ((($holtAlpha * mo.c
-         |        + ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000)
-         |      - it.s) + ${1000000L - holtBeta} * it.b) // 1000000,
-         |    it.s + it.b
-         |  FROM it JOIN monthly mo ON mo.t = it.t + 1)
+      s"""WITH RECURSIVE ${OracleSql.holtLinearFit}
          |SELECT mo.m, mo.c AS actual_cents,
          |  CAST(it.s AS BIGINT) AS level_cents,
          |  CAST(it.b AS BIGINT) AS trend_cents,
@@ -5931,49 +5855,31 @@ object Stats extends QueryModule {
     // position under the same (slope, m1, m2) order, and the same
     // closed-form integer OLS
     "q277_theil_sen" ->
-      """WITH raw AS (SELECT
-        |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-        |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-        |      AS c
-        |  FROM orders GROUP BY 1),
-        |monthly AS MATERIALIZED (
-        |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-        |slopes AS (SELECT a.m AS m1, b.m AS m2,
-        |    CAST((b.c - a.c) * 1000000 // (b.m - a.m) AS BIGINT) AS sl
-        |  FROM monthly a JOIN monthly b ON a.m < b.m),
-        |med AS (SELECT sl AS theilsen_slope_micro,
-        |    (SELECT count(*) FROM slopes) AS n_pairs
-        |  FROM (SELECT sl, row_number() OVER (ORDER BY sl, m1, m2) AS rk
-        |    FROM slopes)
-        |  WHERE rk = ((SELECT count(*) FROM slopes) + 1) // 2),
-        |mom AS (SELECT count(*) AS n_months,
-        |    CAST(count(*) * sum(m * c) - sum(m) * sum(c) AS BIGINT) AS num,
-        |    CAST(count(*) * sum(m * m) - sum(m) * sum(m) AS BIGINT) AS den
-        |  FROM monthly),
-        |ols AS (SELECT n_months,
-        |    (num // den) * 1000000 + ((num % den) * 1000000) // den
-        |      AS ols_slope_micro
-        |  FROM mom)
-        |SELECT o.n_months, CAST(med.n_pairs AS BIGINT) AS n_pairs,
-        |  med.theilsen_slope_micro, o.ols_slope_micro
-        |FROM ols o CROSS JOIN med""".stripMargin,
+      s"""WITH ${OracleSql.monthlySeries},
+         |slopes AS (SELECT a.m AS m1, b.m AS m2,
+         |    CAST((b.c - a.c) * 1000000 // (b.m - a.m) AS BIGINT) AS sl
+         |  FROM monthly a JOIN monthly b ON a.m < b.m),
+         |med AS (SELECT sl AS theilsen_slope_micro,
+         |    (SELECT count(*) FROM slopes) AS n_pairs
+         |  FROM (SELECT sl, row_number() OVER (ORDER BY sl, m1, m2) AS rk
+         |    FROM slopes)
+         |  WHERE rk = ((SELECT count(*) FROM slopes) + 1) // 2),
+         |mom AS (SELECT count(*) AS n_months,
+         |    CAST(count(*) * sum(m * c) - sum(m) * sum(c) AS BIGINT) AS num,
+         |    CAST(count(*) * sum(m * m) - sum(m) * sum(m) AS BIGINT) AS den
+         |  FROM monthly),
+         |ols AS (SELECT n_months,
+         |    (num // den) * 1000000 + ((num % den) * 1000000) // den
+         |      AS ols_slope_micro
+         |  FROM mom)
+         |SELECT o.n_months, CAST(med.n_pairs AS BIGINT) AS n_pairs,
+         |  med.theilsen_slope_micro, o.ols_slope_micro
+         |FROM ols o CROSS JOIN med""".stripMargin,
     // identical rebased monthly rollup, truncated integer mean, HUGEINT
     // deviation products ≡ the Spark side's DECIMAL(38,0), the same
     // sign-safe toward-zero ppm CASE
     "q307_acf" ->
-      s"""WITH raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |st AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |dev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM st) AS dv FROM monthly),
+      s"""WITH ${OracleSql.monthlyDeviations},
          |den AS (SELECT sum(dv * dv) AS dn, count(*) AS n_months FROM dev)
          |SELECT CAST(b.m - a.m AS INT) AS lag, count(*) AS n_pairs,
          |  (SELECT n_months FROM den) AS n_months,
@@ -5989,35 +5895,8 @@ object Stats extends QueryModule {
     // the phi row carried as a HUGEINT LIST (q303's ring trick); every
     // // is toward-zero ≡ the Scala side's Long division
     "q313_pacf" -> {
-      val pk = "((r.rho[it.k + 1] * 1000000 - list_sum(" +
-        "list_transform(range(1, it.k + 1), " +
-        "j -> it.phi[j] * r.rho[it.k + 1 - j]))) // it.v)"
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |st AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |dev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM st) AS dv FROM monthly),
-         |den AS (SELECT sum(dv * dv) AS dn FROM dev),
-         |acf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
-         |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
-         |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM den)
-         |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
-         |        // (SELECT dn FROM den))
-         |      END AS BIGINT) AS acf_ppm
-         |  FROM dev a JOIN dev b
-         |    ON b.m > a.m AND b.m <= a.m + $acfMaxLag
-         |  WHERE (SELECT dn FROM den) > 0
-         |  GROUP BY 1),
-         |r AS MATERIALIZED (SELECT
-         |    list(CAST(acf_ppm AS HUGEINT) ORDER BY lag) AS rho,
-         |    count(*) AS nl FROM acf),
+      val pk = OracleSql.pacfStep
+      s"""WITH RECURSIVE ${OracleSql.monthlyRho},
          |it(k, phi, v) AS (
          |  SELECT 1, [r.rho[1]],
          |    CAST(1000000 AS HUGEINT) - (r.rho[1] * r.rho[1]) // 1000000
@@ -6038,38 +5917,11 @@ object Stats extends QueryModule {
     // month), and the horizon as a dev-ring recursive CTE (q303's list
     // trick); every // is toward-zero ≡ the Scala side's BigInt division
     "q319_ar_forecast" -> {
-      val pk = "((r.rho[it.k + 1] * 1000000 - list_sum(" +
-        "list_transform(range(1, it.k + 1), " +
-        "j -> it.phi[j] * r.rho[it.k + 1 - j]))) // it.v)"
+      val pk = OracleSql.pacfStep
       val sExpr = "coalesce(list_sum(list_transform(" +
         "range(1, len(phir.phi) + 1), " +
         "j -> phir.phi[j] * hz.ring[len(hz.ring) + 1 - j])), 0)"
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |st AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |dev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM st) AS dv FROM monthly),
-         |den AS (SELECT sum(dv * dv) AS dn FROM dev),
-         |acf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
-         |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
-         |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM den)
-         |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
-         |        // (SELECT dn FROM den))
-         |      END AS BIGINT) AS acf_ppm
-         |  FROM dev a JOIN dev b
-         |    ON b.m > a.m AND b.m <= a.m + $acfMaxLag
-         |  WHERE (SELECT dn FROM den) > 0
-         |  GROUP BY 1),
-         |r AS MATERIALIZED (SELECT
-         |    list(CAST(acf_ppm AS HUGEINT) ORDER BY lag) AS rho,
-         |    count(*) AS nl FROM acf),
+      s"""WITH RECURSIVE ${OracleSql.monthlyRho},
          |it(k, phi, v) AS (
          |  SELECT 1, [r.rho[1]],
          |    CAST(1000000 AS HUGEINT) - (r.rho[1] * r.rho[1]) // 1000000
@@ -6131,14 +5983,7 @@ object Stats extends QueryModule {
     // list), the same conditional-residual recursion and zero-future-
     // innovation horizon — every truncation toward zero in both engines
     "q351_ma_forecast" -> {
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
+      s"""WITH RECURSIVE ${OracleSql.monthlySeries},
          |mst AS MATERIALIZED (SELECT count(*) AS n,
          |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
          |mdev AS MATERIALIZED (SELECT m,
@@ -6193,29 +6038,7 @@ object Stats extends QueryModule {
            |    + (hz$k.dh * (SELECT mx FROM zmxd)) // $armaScaleQ
            |    AS BIGINT), 0 FROM hz$k""".stripMargin
       }.mkString("\n")
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |st AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |dev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM st) AS dv FROM monthly),
-         |den AS (SELECT sum(dv * dv) AS dn FROM dev),
-         |acf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
-         |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
-         |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM den)
-         |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
-         |        // (SELECT dn FROM den))
-         |      END AS BIGINT) AS acf_ppm
-         |  FROM dev a JOIN dev b
-         |    ON b.m > a.m AND b.m <= a.m + $acfMaxLag
-         |  WHERE (SELECT dn FROM den) > 0
-         |  GROUP BY 1),
+      s"""WITH RECURSIVE ${OracleSql.monthlyAcf},
          |${armaOracleChain(acf = "acf", st = "st", dev = "dev")},
          |hz1 AS (SELECT (zcf.c + zcf.phi
          |      * (SELECT dv FROM zdsv WHERE m = (SELECT n - 1 FROM st))
@@ -6257,25 +6080,12 @@ object Stats extends QueryModule {
     // the residual ACF in the same sign-safe ppm, each Q term truncated
     // once, the chi-square criticals as the identical literal CASE
     "q323_ljung_box" -> {
-      val apk = "((arr.rho[ait.k + 1] * 1000000 - list_sum(" +
-        "list_transform(range(1, ait.k + 1), " +
-        "j -> ait.phi[j] * arr.rho[ait.k + 1 - j]))) // ait.v)"
+      val apk = OracleSql.arPacfStep
       val critCase = (1 to 12)
         .map(d => s"WHEN $d THEN ${chi2Crit95Micro(d)}")
         .mkString(" ")
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |ast AS MATERIALIZED (SELECT count(*) AS n,
-         |    CAST(sum(c) AS HUGEINT) // count(*) AS mu FROM monthly),
-         |adev AS MATERIALIZED (SELECT m,
-         |    CAST(c AS HUGEINT) - (SELECT mu FROM ast) AS dv FROM monthly),
-         |aden AS (SELECT sum(dv * dv) AS dn FROM adev),
+      s"""WITH RECURSIVE ${OracleSql.monthlySeries},
+         |${OracleSql.arAcfInputs},
          |aacf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
          |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
          |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM aden)
@@ -6300,15 +6110,7 @@ object Stats extends QueryModule {
          |    (ait.v * (1000000 - ($apk * $apk) // 1000000)) // 1000000
          |  FROM ait, arr
          |  WHERE ait.k < $acfMaxLag AND ait.v > 0 AND ait.k < arr.nl),
-         |asel AS MATERIALIZED (SELECT coalesce(max(ait.k), 0) AS p
-         |  FROM ait, ast
-         |  WHERE ait.phi[ait.k] * ait.phi[ait.k] * ast.n
-         |    >= ${arBandZSq * 1000000L} * CAST(1000000 AS HUGEINT)),
-         |aphis AS MATERIALIZED (SELECT
-         |    unnest(range(1, len(phi) + 1)) AS j, unnest(phi) AS ph
-         |  FROM (SELECT coalesce(
-         |      (SELECT ait.phi FROM ait, asel WHERE ait.k = asel.p),
-         |      CAST([] AS HUGEINT[])) AS phi)),
+         |${OracleSql.arOrderPhis},
          |ainss AS (SELECT x.m AS m, sum(p2.ph * l.dv) AS ss
          |  FROM monthly x JOIN aphis p2 ON TRUE
          |  JOIN adev l ON l.m = x.m - p2.j GROUP BY x.m),
@@ -6356,37 +6158,7 @@ object Stats extends QueryModule {
     // grid ≡ the engine's), the count-12 edge guards, sign-safe seasonal
     // means, and the same positional m % 12 index
     "q324_classical_decomp" ->
-      s"""WITH raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |tr AS (SELECT m, c,
-         |    sum(CAST(c AS HUGEINT)) OVER (ORDER BY m
-         |      ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING) AS sa,
-         |    count(*) OVER (ORDER BY m
-         |      ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING) AS ca,
-         |    sum(CAST(c AS HUGEINT)) OVER (ORDER BY m
-         |      ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING) AS sb,
-         |    count(*) OVER (ORDER BY m
-         |      ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING) AS cb
-         |  FROM monthly),
-         |tt AS MATERIALIZED (SELECT m, c,
-         |    CAST((sa + sb) // 24 AS BIGINT) AS trend
-         |  FROM tr WHERE ca = 12 AND cb = 12),
-         |sm AS (SELECT m % 12 AS j,
-         |    CASE WHEN sum(CAST(c - trend AS HUGEINT)) >= 0
-         |      THEN sum(CAST(c - trend AS HUGEINT)) // count(*)
-         |      ELSE -((-sum(CAST(c - trend AS HUGEINT))) // count(*))
-         |      END AS smean
-         |  FROM tt GROUP BY 1),
-         |ad AS (SELECT CASE WHEN sum(smean) >= 0 THEN sum(smean) // 12
-         |    ELSE -((-sum(smean)) // 12) END AS adj FROM sm),
-         |se AS (SELECT j,
-         |    CAST(smean - (SELECT adj FROM ad) AS BIGINT) AS seas FROM sm)
+      s"""WITH ${OracleSql.classicalDecomposition}
          |SELECT tt.m, tt.c AS actual_cents, tt.trend AS trend_cents,
          |  se.seas AS seasonal_cents,
          |  tt.c - tt.trend - se.seas AS remainder_cents
@@ -6424,14 +6196,7 @@ object Stats extends QueryModule {
     // the same prefix-sum objective in HUGEINT, argmax via the
     // f-desc/k-asc row_number — identical fixed-point statistic
     "q326_changepoint" ->
-      s"""WITH raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
+      s"""WITH ${OracleSql.monthlySeries},
          |tot AS MATERIALIZED (SELECT CAST(count(*) AS HUGEINT) AS nm,
          |    CAST(sum(c) AS HUGEINT) AS st,
          |    sum(CAST(c AS HUGEINT) * c) AS s2t FROM monthly),
@@ -6460,37 +6225,7 @@ object Stats extends QueryModule {
     // q324's CTE chain, then the variance-numerator ratio (the shared
     // 1/n² cancels) with one truncation per measure and the 0 floor
     "q327_strength_measures" ->
-      s"""WITH raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
-         |tr AS (SELECT m, c,
-         |    sum(CAST(c AS HUGEINT)) OVER (ORDER BY m
-         |      ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING) AS sa,
-         |    count(*) OVER (ORDER BY m
-         |      ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING) AS ca,
-         |    sum(CAST(c AS HUGEINT)) OVER (ORDER BY m
-         |      ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING) AS sb,
-         |    count(*) OVER (ORDER BY m
-         |      ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING) AS cb
-         |  FROM monthly),
-         |tt AS MATERIALIZED (SELECT m, c,
-         |    CAST((sa + sb) // 24 AS BIGINT) AS trend
-         |  FROM tr WHERE ca = 12 AND cb = 12),
-         |sm AS (SELECT m % 12 AS j,
-         |    CASE WHEN sum(CAST(c - trend AS HUGEINT)) >= 0
-         |      THEN sum(CAST(c - trend AS HUGEINT)) // count(*)
-         |      ELSE -((-sum(CAST(c - trend AS HUGEINT))) // count(*))
-         |      END AS smean
-         |  FROM tt GROUP BY 1),
-         |ad AS (SELECT CASE WHEN sum(smean) >= 0 THEN sum(smean) // 12
-         |    ELSE -((-sum(smean)) // 12) END AS adj FROM sm),
-         |se AS (SELECT j,
-         |    CAST(smean - (SELECT adj FROM ad) AS BIGINT) AS seas FROM sm),
+      s"""WITH ${OracleSql.classicalDecomposition},
          |comp AS (SELECT
          |    CAST(tt.c - tt.trend - se.seas AS HUGEINT) AS r,
          |    CAST(tt.c - se.seas AS HUGEINT) AS trr,
@@ -6517,14 +6252,7 @@ object Stats extends QueryModule {
     // division-free cross-multiplication, z via the corrected double
     // sqrt (exact at every reachable radicand — isqrt's contract)
     "q325_mann_kendall" ->
-      s"""WITH raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (
-         |  SELECT m - (SELECT min(m) FROM raw) AS m, c FROM raw),
+      s"""WITH ${OracleSql.monthlySeries},
          |sp AS (SELECT coalesce(CAST(sum(CASE WHEN b.c > a.c THEN 1
          |      WHEN b.c < a.c THEN -1 ELSE 0 END) AS HUGEINT), 0) AS s
          |  FROM monthly a JOIN monthly b ON b.m > a.m),
@@ -6561,29 +6289,7 @@ object Stats extends QueryModule {
     // statistic on the calibration prefix and ppm coverage on the tail;
     // Long.MaxValue is the conformal infinite interval
     "q317_forecast_interval" ->
-      s"""WITH RECURSIVE raw AS (SELECT
-         |    CAST(year(CAST(o_orderdate AS DATE)) * 12
-         |      + month(CAST(o_orderdate AS DATE)) - 1 AS BIGINT) AS m,
-         |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-         |      AS c
-         |  FROM orders GROUP BY 1),
-         |monthly AS MATERIALIZED (SELECT m - (SELECT min(m) FROM raw) AS m,
-         |    c, row_number() OVER (ORDER BY m) - 1 AS t FROM raw),
-         |it AS (
-         |  SELECT CAST(0 AS BIGINT) AS t,
-         |    CAST((SELECT c FROM monthly WHERE t = 0) AS HUGEINT) AS s,
-         |    CAST(coalesce((SELECT c FROM monthly WHERE t = 1)
-         |      - (SELECT c FROM monthly WHERE t = 0), 0) AS HUGEINT) AS b,
-         |    CAST((SELECT c FROM monthly WHERE t = 0) AS HUGEINT) AS f
-         |  UNION ALL
-         |  SELECT it.t + 1,
-         |    ($holtAlpha * mo.c
-         |      + ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000,
-         |    ($holtBeta * ((($holtAlpha * mo.c
-         |        + ${1000000L - holtAlpha} * (it.s + it.b)) // 1000000)
-         |      - it.s) + ${1000000L - holtBeta} * it.b) // 1000000,
-         |    it.s + it.b
-         |  FROM it JOIN monthly mo ON mo.t = it.t + 1),
+      s"""WITH RECURSIVE ${OracleSql.holtLinearFit},
          |errs AS MATERIALIZED (SELECT
          |    row_number() OVER (ORDER BY it.t) AS i,
          |    CAST(abs(mo.c - it.f) AS BIGINT) AS e
@@ -6612,19 +6318,8 @@ object Stats extends QueryModule {
     // same md5 arms, pooled θ in the same sign-safe toward-zero ppm,
     // HUGEINT second moments ≡ the Spark side's DECIMAL(38,0)
     "q308_cuped" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2 AS INT)
-         |    AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEvents},
+         |${OracleSql.cupedUsers},
          |mom AS (SELECT count(*) AS n, CAST(sum(x) AS HUGEINT) AS sx,
          |    CAST(count(*) AS HUGEINT) * sum(CAST(x AS HUGEINT) * y)
          |      - CAST(sum(x) AS HUGEINT) * sum(y) AS covn,
@@ -6673,19 +6368,8 @@ object Stats extends QueryModule {
     // radicand (see isqrt's Scaladoc)
     "q322_power_mde" -> {
       val zsum = zAlphaHalfMicro + zBetaMicro
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2 AS INT)
-         |    AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEvents},
+         |${OracleSql.cupedUsers},
          |pa AS (SELECT arm, count(*) AS n, CAST(sum(y) AS HUGEINT) AS sy,
          |    sum(CAST(y AS HUGEINT) * y) AS syy FROM per GROUP BY arm),
          |c AS (SELECT
@@ -6738,17 +6422,8 @@ object Stats extends QueryModule {
     // double sqrt + the two-step integer correction (exact at every
     // reachable radicand — see the mannWhitney Scaladoc's ~10⁸-user bound)
     "q329_mann_whitney" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2 AS INT)
-         |    AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEvents},
+         |${OracleSql.postPeriodUsers},
          |h AS (SELECT y,
          |    sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS c0,
          |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS c1,
@@ -6792,17 +6467,8 @@ object Stats extends QueryModule {
     // the pooled histogram, the same once-per-term micro truncations, and
     // the corrected double floor-sqrt for the pooled z
     "q335_winsorized_mean" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2 AS INT)
-         |    AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEvents},
+         |${OracleSql.postPeriodUsers},
          |h AS (SELECT y,
          |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
          |    CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
@@ -6959,12 +6625,7 @@ object Stats extends QueryModule {
          |z2 AS (SELECT *,
          |    w0 + (CASE WHEN (w0 + 1) * (w0 + 1) <= vp THEN 1 ELSE 0 END)
          |      AS w1 FROM z1),
-         |z3 AS (SELECT *, CASE WHEN vp IS NULL THEN NULL
-         |    ELSE w1 - (CASE WHEN w1 * w1 > vp THEN 1 ELSE 0 END) END
-         |      AS sep FROM z2),
-         |z4 AS (SELECT *, CASE WHEN vp IS NULL THEN NULL
-         |    ELSE (CAST(abs(ratio_treat_ppm - ratio_control_ppm)
-         |      AS HUGEINT) * 1000000) // sep END AS zm FROM z3)
+         |${OracleSql.deltaRatioZ}
          |SELECT n_control, n_treat, ratio_control_ppm, ratio_treat_ppm,
          |  se_control_ppm, se_treat_ppm,
          |  CASE WHEN se_control_ppm >= 0 AND se_treat_ppm >= 0
@@ -6976,19 +6637,8 @@ object Stats extends QueryModule {
     // the same per-user diffs, arm moments, micro means, and corrected
     // floor-sqrt z — per-user differencing in BOTH engines
     "q347_diff_in_diff" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEventsWrapped},
+         |${OracleSql.cupedUsers},
          |pa AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
          |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
          |    CAST(sum(y - x) AS BIGINT) AS sd,
@@ -7020,12 +6670,7 @@ object Stats extends QueryModule {
          |        * 1000000000000) // (CAST(n1 AS HUGEINT) * n1 * n1) END)
          |      AS vsum
          |  FROM j),
-         |s0_ AS (SELECT *, CAST(floor(sqrt(CAST(vsum AS DOUBLE)))
-         |    AS HUGEINT) AS r0 FROM mm),
-         |s1_ AS (SELECT *, r0 + (CASE WHEN (r0 + 1) * (r0 + 1) <= vsum
-         |    THEN 1 ELSE 0 END) AS r1 FROM s0_),
-         |s2_ AS (SELECT *, r1 - (CASE WHEN r1 * r1 > vsum THEN 1 ELSE 0
-         |    END) AS sq FROM s1_),
+         |${OracleSql.isqrtSteps},
          |zz AS (SELECT *,
          |    CASE WHEN n0 <= 0 OR n1 <= 0 OR vsum <= 0 THEN -1
          |      ELSE (abs(d1m - d0m) * 1000000) // sq END AS z FROM s2_)
@@ -7104,13 +6749,7 @@ object Stats extends QueryModule {
     // the same binary take-up, micro means, p(1−p) first-stage z, and
     // the weak-instrument gate on the LATE
     "q349_iv_wald" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
+      s"""WITH ${OracleSql.clickSplitEvents},
          |per AS MATERIALIZED (SELECT user_id,
          |    CASE WHEN sum(c) > 0 THEN 1 ELSE 0 END AS t,
          |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
@@ -7138,12 +6777,7 @@ object Stats extends QueryModule {
          |      * 1000000000000) // (CAST(n1 AS HUGEINT) * n1 * n1)
          |      AS vsum
          |  FROM j WHERE n0 > 0 AND n1 > 0),
-         |s0_ AS (SELECT *, CAST(floor(sqrt(CAST(vsum AS DOUBLE)))
-         |    AS HUGEINT) AS r0 FROM mm),
-         |s1_ AS (SELECT *, r0 + (CASE WHEN (r0 + 1) * (r0 + 1) <= vsum
-         |    THEN 1 ELSE 0 END) AS r1 FROM s0_),
-         |s2_ AS (SELECT *, r1 - (CASE WHEN r1 * r1 > vsum THEN 1 ELSE 0
-         |    END) AS sq FROM s1_),
+         |${OracleSql.isqrtSteps},
          |zz AS (SELECT *,
          |    CASE WHEN vsum <= 0 THEN -1
          |      ELSE (abs(t1 - t0) * 1000000) // sq END AS zfs FROM s2_)
@@ -7167,24 +6801,7 @@ object Stats extends QueryModule {
     // truncation sequence for naive / Cochran / HT-IPW; division guards
     // are explicit (CASE branches both evaluate under vectorization)
     "q350_propensity_strat" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    CAST(sum(c) AS BIGINT) AS cl
-         |  FROM ev GROUP BY user_id),
-         |h AS (SELECT cl, count(*) AS t FROM per GROUP BY cl),
-         |hc AS (SELECT cl, sum(t) OVER (ORDER BY cl) AS cum,
-         |    sum(t) OVER () AS nn FROM h),
-         |med AS (SELECT min(cl) AS med FROM hc WHERE cum * 2 >= nn),
+      s"""WITH ${OracleSql.clickMedianUsers},
          |cells AS (SELECT
          |    CAST(least(x // $propStratWidth, $propStratCap) AS BIGINT)
          |      AS stratum,
@@ -7254,24 +6871,7 @@ object Stats extends QueryModule {
     // radicand is computed once); all divisions nonnegative-operand or
     // toward-zero (DuckDB // truncates toward zero, matching tdiv)
     "q359_neyman_ci" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    CAST(sum(c) AS BIGINT) AS cl
-         |  FROM ev GROUP BY user_id),
-         |h AS (SELECT cl, count(*) AS t FROM per GROUP BY cl),
-         |hc AS (SELECT cl, sum(t) OVER (ORDER BY cl) AS cum,
-         |    sum(t) OVER () AS nn FROM h),
-         |med AS (SELECT min(cl) AS med FROM hc WHERE cum * 2 >= nn),
+      s"""WITH ${OracleSql.clickMedianUsers},
          |cells AS (SELECT
          |    CAST(least(x // $propStratWidth, $propStratCap) AS BIGINT)
          |      AS stratum,
@@ -7373,24 +6973,7 @@ object Stats extends QueryModule {
     // identical STAGED V form (two truncations, same order), signed
     // HUGEINT A sum (DuckDB // truncates toward zero, matching tdiv)
     "q366_cmh_test" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    CAST(sum(c) AS BIGINT) AS cl
-         |  FROM ev GROUP BY user_id),
-         |h AS (SELECT cl, count(*) AS t FROM per GROUP BY cl),
-         |hc AS (SELECT cl, sum(t) OVER (ORDER BY cl) AS cum,
-         |    sum(t) OVER () AS nn FROM h),
-         |med AS (SELECT min(cl) AS med FROM hc WHERE cum * 2 >= nn),
+      s"""WITH ${OracleSql.clickMedianUsers},
          |yh AS (SELECT y, count(*) AS t FROM per GROUP BY y),
          |yhc AS (SELECT y, sum(t) OVER (ORDER BY y) AS cum,
          |    sum(t) OVER () AS nn FROM yh),
@@ -7449,24 +7032,7 @@ object Stats extends QueryModule {
     // terms reduced to cell algebra — division guards explicit (the
     // vectorized-CASE rule), toward-zero everywhere
     "q354_aipw_doubly_robust" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS x,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    CAST(sum(c) AS BIGINT) AS cl
-         |  FROM ev GROUP BY user_id),
-         |h AS (SELECT cl, count(*) AS t FROM per GROUP BY cl),
-         |hc AS (SELECT cl, sum(t) OVER (ORDER BY cl) AS cum,
-         |    sum(t) OVER () AS nn FROM h),
-         |med AS (SELECT min(cl) AS med FROM hc WHERE cum * 2 >= nn),
+      s"""WITH ${OracleSql.clickMedianUsers},
          |cells AS MATERIALIZED (SELECT
          |    CAST(least(x // $propStratWidth, $propStratCap) AS BIGINT)
          |      AS stratum,
@@ -7703,17 +7269,8 @@ object Stats extends QueryModule {
     // the same per-arm conditional cumulatives on the one ordered
     // histogram and the identical nearest-rank inequality per decile
     "q345_quantile_effects" ->
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
-         |per AS MATERIALIZED (SELECT user_id,
-         |    CAST(sum(CASE WHEN day >= (SELECT split FROM sp)
-         |      THEN p ELSE 0 END) AS BIGINT) AS y,
-         |    ${graft.functions.Hashing.duckMd5Bucket("user_id", 2)} AS arm
-         |  FROM ev GROUP BY user_id),
+      s"""WITH ${OracleSql.purchaseSplitEventsWrapped},
+         |${OracleSql.postPeriodUsers},
          |h AS (SELECT y,
          |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
          |      AS c0,
@@ -7758,13 +7315,7 @@ object Stats extends QueryModule {
            |  n0, n1
            |FROM (SELECT n0, n1, s${cl}0 AS s0, s${cl}1 AS s1,
            |    q${cl}0 AS q0, q${cl}1 AS q1 FROM mom)""".stripMargin
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
+      s"""WITH ${OracleSql.clickSplitEvents},
          |per AS MATERIALIZED (SELECT user_id,
          |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
          |      THEN p ELSE 0 END) AS BIGINT) AS x,
@@ -7857,13 +7408,7 @@ object Stats extends QueryModule {
         "s22")
       val d2 = det3("nn", "s1", "sy", "s1", "s11", "s1y", "s2", "s12",
         "s2y")
-      s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p,
-         |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS c
-         |  FROM events),
-         |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-         |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-         |    AS INT) AS split FROM b),
+      s"""WITH ${OracleSql.clickSplitEvents},
          |per AS MATERIALIZED (SELECT user_id,
          |    CAST(sum(CASE WHEN day < (SELECT split FROM sp)
          |      THEN p ELSE 0 END) AS BIGINT) AS x1,
@@ -8096,12 +7641,7 @@ object Stats extends QueryModule {
          |  FROM zc),
          |z2 AS (SELECT *, w0 + (CASE WHEN (w0 + 1) * (w0 + 1) <= vp
          |    THEN 1 ELSE 0 END) AS w1 FROM z1),
-         |z3 AS (SELECT *, CASE WHEN vp IS NULL THEN NULL
-         |    ELSE w1 - (CASE WHEN w1 * w1 > vp THEN 1 ELSE 0 END) END
-         |      AS sep FROM z2),
-         |z4 AS (SELECT *, CASE WHEN vp IS NULL THEN NULL
-         |    ELSE (CAST(abs(ratio_treat_ppm - ratio_control_ppm)
-         |      AS HUGEINT) * 1000000) // sep END AS zm FROM z3)
+         |${OracleSql.deltaRatioZ}
          |SELECT n_control, n_treat,
          |  CAST(buckets_control AS BIGINT) AS buckets_control,
          |  CAST(buckets_treat AS BIGINT) AS buckets_treat,
@@ -8203,11 +7743,7 @@ object Stats extends QueryModule {
     // truncations — every E/V term must agree exactly for the hash to
     // match
     "q330_log_rank" ->
-      s"""WITH cust AS (SELECT o_custkey,
-         |    min(CAST(o_orderdate AS DATE)) AS f,
-         |    max(CAST(o_orderdate AS DATE)) AS l
-         |  FROM orders GROUP BY 1),
-         |hz AS (SELECT max(l) AS dmax FROM cust),
+      s"""WITH ${OracleSql.customerLifetimes},
          |lt AS (SELECT CAST(datediff('day', f, l) AS BIGINT) AS t,
          |    (l < (SELECT dmax FROM hz) - INTERVAL $kmCensorDays DAY)
          |      AS churn,
@@ -8265,25 +7801,7 @@ object Stats extends QueryModule {
          |    > $chiCritMicro) AS significant
          |FROM agg""".stripMargin,
     "q267_kaplan_meier" ->
-      s"""WITH RECURSIVE cust AS (SELECT o_custkey,
-         |    min(CAST(o_orderdate AS DATE)) AS f,
-         |    max(CAST(o_orderdate AS DATE)) AS l
-         |  FROM orders GROUP BY 1),
-         |hz AS (SELECT max(l) AS dmax FROM cust),
-         |lt AS (SELECT CAST(datediff('day', f, l) AS BIGINT) AS t,
-         |    (l < (SELECT dmax FROM hz) - INTERVAL $kmCensorDays DAY)
-         |      AS churn
-         |  FROM cust),
-         |hist AS MATERIALIZED (SELECT t,
-         |    CAST(sum(CASE WHEN churn THEN 1 ELSE 0 END) AS BIGINT) AS d,
-         |    count(*) AS leave FROM lt GROUP BY 1),
-         |grid AS MATERIALIZED (SELECT t, d, n,
-         |    CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS i
-         |  FROM (SELECT t, d,
-         |      CAST((SELECT sum(leave) FROM hist) - coalesce(sum(leave)
-         |        OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-         |          AND 1 PRECEDING), 0) AS BIGINT) AS n
-         |    FROM hist) WHERE d > 0),
+      s"""WITH RECURSIVE ${OracleSql.survivalRiskGrid},
          |km(i, s) AS (
          |  SELECT CAST(0 AS BIGINT), CAST(1000000000000 AS BIGINT)
          |  UNION ALL
@@ -8300,25 +7818,7 @@ object Stats extends QueryModule {
     // through suffix CTEs (the q359 pattern), the n = d row poisoned
     // with the -1 sentinels, and the plain band clamped into [0, 1e12]
     "q361_km_greenwood" ->
-      s"""WITH RECURSIVE cust AS (SELECT o_custkey,
-         |    min(CAST(o_orderdate AS DATE)) AS f,
-         |    max(CAST(o_orderdate AS DATE)) AS l
-         |  FROM orders GROUP BY 1),
-         |hz AS (SELECT max(l) AS dmax FROM cust),
-         |lt AS (SELECT CAST(datediff('day', f, l) AS BIGINT) AS t,
-         |    (l < (SELECT dmax FROM hz) - INTERVAL $kmCensorDays DAY)
-         |      AS churn
-         |  FROM cust),
-         |hist AS MATERIALIZED (SELECT t,
-         |    CAST(sum(CASE WHEN churn THEN 1 ELSE 0 END) AS BIGINT) AS d,
-         |    count(*) AS leave FROM lt GROUP BY 1),
-         |grid AS MATERIALIZED (SELECT t, d, n,
-         |    CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS i
-         |  FROM (SELECT t, d,
-         |      CAST((SELECT sum(leave) FROM hist) - coalesce(sum(leave)
-         |        OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-         |          AND 1 PRECEDING), 0) AS BIGINT) AS n
-         |    FROM hist) WHERE d > 0),
+      s"""WITH RECURSIVE ${OracleSql.survivalRiskGrid},
          |km(i, s, gw, ok) AS (
          |  SELECT CAST(0 AS BIGINT), CAST(1000000000000 AS HUGEINT),
          |    CAST(0 AS HUGEINT), true
@@ -8356,18 +7856,7 @@ object Stats extends QueryModule {
     // nested-floor identity h // n, the same corrected double
     // floor-sqrt, lower clamp only
     "q362_nelson_aalen" ->
-      s"""WITH cust AS (SELECT o_custkey,
-         |    min(CAST(o_orderdate AS DATE)) AS f,
-         |    max(CAST(o_orderdate AS DATE)) AS l
-         |  FROM orders GROUP BY 1),
-         |hz AS (SELECT max(l) AS dmax FROM cust),
-         |lt AS (SELECT CAST(datediff('day', f, l) AS BIGINT) AS t,
-         |    (l < (SELECT dmax FROM hz) - INTERVAL $kmCensorDays DAY)
-         |      AS churn
-         |  FROM cust),
-         |hist AS MATERIALIZED (SELECT t,
-         |    CAST(sum(CASE WHEN churn THEN 1 ELSE 0 END) AS BIGINT) AS d,
-         |    count(*) AS leave FROM lt GROUP BY 1),
+      s"""WITH ${OracleSql.survivalHistogram},
          |grid AS (SELECT t, d, n,
          |    (CAST(d AS HUGEINT) * 1000000000000) // n AS h_step
          |  FROM (SELECT t, d,
@@ -8592,61 +8081,47 @@ object Stats extends QueryModule {
         |  month_distinct
         |FROM agg JOIN pm USING (month) ORDER BY month""".stripMargin,
     "q187_ks_drift" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS pq FROM orders),
-        |sp AS (SELECT min(dt) AS dmin, max(dt) AS dmax FROM o),
-        |sl AS (SELECT pq, CASE WHEN dt <= dmin
-        |      + CAST((dmax - dmin) // 2 AS INT)
-        |    THEN 1 ELSE 0 END AS is_base FROM o, sp),
-        |h AS (SELECT pq, CAST(sum(is_base) AS BIGINT) AS b,
-        |    CAST(sum(1 - is_base) AS BIGINT) AS c FROM sl GROUP BY 1),
-        |cum AS (SELECT pq,
-        |    CAST(sum(b) OVER (ORDER BY pq) AS BIGINT) AS c1,
-        |    CAST(sum(c) OVER (ORDER BY pq) AS BIGINT) AS c2 FROM h),
-        |tot AS (SELECT CAST(sum(b) AS BIGINT) AS n1,
-        |    CAST(sum(c) AS BIGINT) AS n2 FROM h)
-        |SELECT n1, n2, abs(c1 * n2 - c2 * n1) * 1000000 // (n1 * n2)
-        |    AS d_ppm,
-        |  pq AS at_value_cents
-        |FROM cum, tot
-        |ORDER BY abs(c1 * n2 - c2 * n1) DESC, pq LIMIT 1""".stripMargin,
+      s"""WITH ${OracleSql.driftHistogram},
+         |cum AS (SELECT pq,
+         |    CAST(sum(b) OVER (ORDER BY pq) AS BIGINT) AS c1,
+         |    CAST(sum(c) OVER (ORDER BY pq) AS BIGINT) AS c2 FROM h),
+         |tot AS (SELECT CAST(sum(b) AS BIGINT) AS n1,
+         |    CAST(sum(c) AS BIGINT) AS n2 FROM h)
+         |SELECT n1, n2, abs(c1 * n2 - c2 * n1) * 1000000 // (n1 * n2)
+         |    AS d_ppm,
+         |  pq AS at_value_cents
+         |FROM cum, tot
+         |ORDER BY abs(c1 * n2 - c2 * n1) DESC, pq LIMIT 1""".stripMargin,
     // q187's histogram verbatim, the same strictly-preceding prefix-sum
     // identity with HUGEINT products ≡ DECIMAL(38,0), each mean truncated
     // once before the 2exy − exx − eyy composition
     "q315_energy_drift" ->
-      """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS dt,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS pq FROM orders),
-        |sp AS (SELECT min(dt) AS dmin, max(dt) AS dmax FROM o),
-        |sl AS (SELECT pq, CASE WHEN dt <= dmin
-        |      + CAST((dmax - dmin) // 2 AS INT)
-        |    THEN 1 ELSE 0 END AS is_base FROM o, sp),
-        |h AS (SELECT pq, CAST(sum(is_base) AS BIGINT) AS b,
-        |    CAST(sum(1 - is_base) AS BIGINT) AS c FROM sl GROUP BY 1),
-        |cum AS (SELECT pq, b, c,
-        |    COALESCE(CAST(sum(b) OVER pw AS HUGEINT), 0) AS ab,
-        |    COALESCE(CAST(sum(c) OVER pw AS HUGEINT), 0) AS bb,
-        |    COALESCE(sum(CAST(b AS HUGEINT) * pq) OVER pw,
-        |      CAST(0 AS HUGEINT)) AS sa,
-        |    COALESCE(sum(CAST(c AS HUGEINT) * pq) OVER pw,
-        |      CAST(0 AS HUGEINT)) AS sb
-        |  FROM h WINDOW pw AS (ORDER BY pq
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-        |sums AS (SELECT
-        |    sum(c * (CAST(pq AS HUGEINT) * ab - sa)
-        |      + b * (CAST(pq AS HUGEINT) * bb - sb)) AS sxy,
-        |    sum(2 * b * (CAST(pq AS HUGEINT) * ab - sa)) AS sxx,
-        |    sum(2 * c * (CAST(pq AS HUGEINT) * bb - sb)) AS syy
-        |  FROM cum),
-        |tot AS (SELECT CAST(sum(b) AS HUGEINT) AS n1,
-        |    CAST(sum(c) AS HUGEINT) AS n2 FROM h)
-        |SELECT CAST(n1 AS BIGINT) AS n_base, CAST(n2 AS BIGINT) AS n_cur,
-        |  CAST((sxx * 1000000) // (n1 * n1) AS BIGINT) AS exx_microcents,
-        |  CAST((syy * 1000000) // (n2 * n2) AS BIGINT) AS eyy_microcents,
-        |  CAST((sxy * 1000000) // (n1 * n2) AS BIGINT) AS exy_microcents,
-        |  CAST(2 * ((sxy * 1000000) // (n1 * n2))
-        |    - (sxx * 1000000) // (n1 * n1)
-        |    - (syy * 1000000) // (n2 * n2) AS BIGINT) AS energy_microcents
-        |FROM sums, tot""".stripMargin,
+      s"""WITH ${OracleSql.driftHistogram},
+         |cum AS (SELECT pq, b, c,
+         |    COALESCE(CAST(sum(b) OVER pw AS HUGEINT), 0) AS ab,
+         |    COALESCE(CAST(sum(c) OVER pw AS HUGEINT), 0) AS bb,
+         |    COALESCE(sum(CAST(b AS HUGEINT) * pq) OVER pw,
+         |      CAST(0 AS HUGEINT)) AS sa,
+         |    COALESCE(sum(CAST(c AS HUGEINT) * pq) OVER pw,
+         |      CAST(0 AS HUGEINT)) AS sb
+         |  FROM h WINDOW pw AS (ORDER BY pq
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
+         |sums AS (SELECT
+         |    sum(c * (CAST(pq AS HUGEINT) * ab - sa)
+         |      + b * (CAST(pq AS HUGEINT) * bb - sb)) AS sxy,
+         |    sum(2 * b * (CAST(pq AS HUGEINT) * ab - sa)) AS sxx,
+         |    sum(2 * c * (CAST(pq AS HUGEINT) * bb - sb)) AS syy
+         |  FROM cum),
+         |tot AS (SELECT CAST(sum(b) AS HUGEINT) AS n1,
+         |    CAST(sum(c) AS HUGEINT) AS n2 FROM h)
+         |SELECT CAST(n1 AS BIGINT) AS n_base, CAST(n2 AS BIGINT) AS n_cur,
+         |  CAST((sxx * 1000000) // (n1 * n1) AS BIGINT) AS exx_microcents,
+         |  CAST((syy * 1000000) // (n2 * n2) AS BIGINT) AS eyy_microcents,
+         |  CAST((sxy * 1000000) // (n1 * n2) AS BIGINT) AS exy_microcents,
+         |  CAST(2 * ((sxy * 1000000) // (n1 * n2))
+         |    - (sxx * 1000000) // (n1 * n1)
+         |    - (syy * 1000000) // (n2 * n2) AS BIGINT) AS energy_microcents
+         |FROM sums, tot""".stripMargin,
     "q179_psi_drift" ->
       """WITH o AS (SELECT CAST(o_orderdate AS DATE) AS dt,
         |    CAST(round(o_totalprice * 100) AS BIGINT) AS pq FROM orders),
@@ -8761,78 +8236,58 @@ object Stats extends QueryModule {
         |  ON a.w = b.w AND a.event_type <= b.event_type
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     "q173_roc_sweep" ->
-      """WITH us AS (SELECT user_id,
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS score,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS label
-        |  FROM events GROUP BY 1),
-        |vc AS (SELECT score,
-        |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS pos_at,
-        |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS neg_at
-        |  FROM us GROUP BY 1),
-        |cu AS (SELECT score, pos_at, neg_at,
-        |    sum(pos_at) OVER (ORDER BY score DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-        |    sum(neg_at) OVER (ORDER BY score DESC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp,
-        |    (SELECT sum(pos_at) FROM vc) AS np,
-        |    (SELECT sum(neg_at) FROM vc) AS nn
-        |  FROM vc)
-        |SELECT CAST(score AS BIGINT) AS thresh, CAST(tp AS BIGINT) AS tp,
-        |  CAST(fp AS BIGINT) AS fp, CAST(np - tp AS BIGINT) AS fn,
-        |  CAST(nn - fp AS BIGINT) AS tn,
-        |  CAST(tp * 1000000 // (tp + fp) AS BIGINT) AS prec_ppm,
-        |  CAST(tp * 1000000 // np AS BIGINT) AS rec_ppm
-        |FROM cu ORDER BY thresh""".stripMargin,
+      s"""WITH ${OracleSql.scoreCounts},
+         |cu AS (SELECT score, pos_at, neg_at,
+         |    sum(pos_at) OVER (ORDER BY score DESC
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
+         |    sum(neg_at) OVER (ORDER BY score DESC
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp,
+         |    (SELECT sum(pos_at) FROM vc) AS np,
+         |    (SELECT sum(neg_at) FROM vc) AS nn
+         |  FROM vc)
+         |SELECT CAST(score AS BIGINT) AS thresh, CAST(tp AS BIGINT) AS tp,
+         |  CAST(fp AS BIGINT) AS fp, CAST(np - tp AS BIGINT) AS fn,
+         |  CAST(nn - fp AS BIGINT) AS tn,
+         |  CAST(tp * 1000000 // (tp + fp) AS BIGINT) AS prec_ppm,
+         |  CAST(tp * 1000000 // np AS BIGINT) AS rec_ppm
+         |FROM cu ORDER BY thresh""".stripMargin,
     "q203_calibration" ->
-      """WITH us AS (SELECT user_id,
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS score,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS label
-        |  FROM events GROUP BY 1),
-        |pred AS (SELECT
-        |    score * 1000000 // (SELECT max(score) FROM us) AS pred_ppm,
-        |    label
-        |  FROM us),
-        |bins AS (SELECT least(pred_ppm // 100000, 9) AS bucket,
-        |    count(*) AS n,
-        |    sum(pred_ppm) // count(*) AS mean_pred_ppm,
-        |    sum(label) * 1000000 // count(*) AS frac_pos_ppm
-        |  FROM pred GROUP BY 1),
-        |brier AS (SELECT CAST(
-        |    sum(CAST(pred_ppm - label * 1000000 AS HUGEINT)
-        |        * (pred_ppm - label * 1000000))
-        |    // (CAST(count(*) AS HUGEINT) * 1000000) AS BIGINT)
-        |    AS brier_micro FROM pred)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, n,
-        |  CAST(mean_pred_ppm AS BIGINT) AS mean_pred_ppm,
-        |  CAST(frac_pos_ppm AS BIGINT) AS frac_pos_ppm,
-        |  CAST(mean_pred_ppm - frac_pos_ppm AS BIGINT) AS gap_ppm,
-        |  brier_micro
-        |FROM bins, brier ORDER BY bucket""".stripMargin,
+      s"""WITH ${OracleSql.userScores},
+         |pred AS (SELECT
+         |    score * 1000000 // (SELECT max(score) FROM us) AS pred_ppm,
+         |    label
+         |  FROM us),
+         |bins AS (SELECT least(pred_ppm // 100000, 9) AS bucket,
+         |    count(*) AS n,
+         |    sum(pred_ppm) // count(*) AS mean_pred_ppm,
+         |    sum(label) * 1000000 // count(*) AS frac_pos_ppm
+         |  FROM pred GROUP BY 1),
+         |brier AS (SELECT CAST(
+         |    sum(CAST(pred_ppm - label * 1000000 AS HUGEINT)
+         |        * (pred_ppm - label * 1000000))
+         |    // (CAST(count(*) AS HUGEINT) * 1000000) AS BIGINT)
+         |    AS brier_micro FROM pred)
+         |SELECT CAST(bucket AS BIGINT) AS bucket, n,
+         |  CAST(mean_pred_ppm AS BIGINT) AS mean_pred_ppm,
+         |  CAST(frac_pos_ppm AS BIGINT) AS frac_pos_ppm,
+         |  CAST(mean_pred_ppm - frac_pos_ppm AS BIGINT) AS gap_ppm,
+         |  brier_micro
+         |FROM bins, brier ORDER BY bucket""".stripMargin,
     "q174_auc_exact" ->
-      """WITH us AS (SELECT user_id,
-        |    sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS score,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS label
-        |  FROM events GROUP BY 1),
-        |vc AS (SELECT score,
-        |    sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS pos_at,
-        |    sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS neg_at
-        |  FROM us GROUP BY 1),
-        |nb AS (SELECT score, pos_at, neg_at,
-        |    COALESCE(sum(neg_at) OVER (ORDER BY score ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS neg_below
-        |  FROM vc),
-        |ag AS (SELECT sum(pos_at) AS n_pos, sum(neg_at) AS n_neg,
-        |    sum(pos_at * (2 * neg_below + neg_at)) AS u2 FROM nb)
-        |SELECT CAST(n_pos AS BIGINT) AS n_pos,
-        |  CAST(n_neg AS BIGINT) AS n_neg,
-        |  CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0 ELSE
-        |    (u2::HUGEINT * 1000000) // (2 * n_pos::HUGEINT * n_neg) END
-        |    AS BIGINT) AS auc_micro
-        |FROM ag""".stripMargin,
+      s"""WITH ${OracleSql.scoreCounts},
+         |nb AS (SELECT score, pos_at, neg_at,
+         |    COALESCE(sum(neg_at) OVER (ORDER BY score ASC
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |      AS neg_below
+         |  FROM vc),
+         |ag AS (SELECT sum(pos_at) AS n_pos, sum(neg_at) AS n_neg,
+         |    sum(pos_at * (2 * neg_below + neg_at)) AS u2 FROM nb)
+         |SELECT CAST(n_pos AS BIGINT) AS n_pos,
+         |  CAST(n_neg AS BIGINT) AS n_neg,
+         |  CAST(CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0 ELSE
+         |    (u2::HUGEINT * 1000000) // (2 * n_pos::HUGEINT * n_neg) END
+         |    AS BIGINT) AS auc_micro
+         |FROM ag""".stripMargin,
     "q169_ab_chisq" -> {
       val arm = graft.functions.Hashing.duckMd5Bucket("user_id", 2)
       s"""WITH cv AS (SELECT user_id,
@@ -9058,54 +8513,8 @@ object Stats extends QueryModule {
          |    AS n_kept
          |FROM documents d JOIN thr t ON d.lang = t.lang
          |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-    "q126_hll_native" ->
-      """WITH h AS (
-        |  SELECT
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8))::BIGINT % 64
-        |      AS bucket,
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 9, 8))::BIGINT AS w
-        |  FROM orders),
-        |r AS (
-        |  SELECT bucket,
-        |    max(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS m
-        |  FROM h GROUP BY 1),
-        |allb AS (
-        |  SELECT COALESCE(r.m, 0) AS m
-        |  FROM (SELECT unnest(range(0, 64)) AS bucket) b
-        |  LEFT JOIN r ON b.bucket = r.bucket),
-        |sk AS (
-        |  SELECT CAST(sum(CAST(power(2, 33 - m) AS BIGINT)) AS BIGINT) AS s_inv,
-        |    CAST(sum(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty
-        |  FROM allb),
-        |ex AS (SELECT count(DISTINCT o_custkey) AS n_exact FROM orders)
-        |SELECT ex.n_exact, sk.n_empty,
-        |  CAST(floor(0.709::DOUBLE * 4096 * 8589934592 / s_inv) AS BIGINT)
-        |    AS hll_est
-        |FROM ex CROSS JOIN sk""".stripMargin,
-    "q105_hll_distinct" ->
-      """WITH h AS (
-        |  SELECT
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 8))::BIGINT % 64
-        |      AS bucket,
-        |    ('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 9, 8))::BIGINT AS w
-        |  FROM orders),
-        |r AS (
-        |  SELECT bucket,
-        |    max(CASE WHEN w = 0 THEN 33 ELSE 33 - length(bin(w)) END) AS m
-        |  FROM h GROUP BY 1),
-        |allb AS (
-        |  SELECT COALESCE(r.m, 0) AS m
-        |  FROM (SELECT unnest(range(0, 64)) AS bucket) b
-        |  LEFT JOIN r ON b.bucket = r.bucket),
-        |sk AS (
-        |  SELECT CAST(sum(CAST(power(2, 33 - m) AS BIGINT)) AS BIGINT) AS s_inv,
-        |    CAST(sum(CASE WHEN m = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty
-        |  FROM allb),
-        |ex AS (SELECT count(DISTINCT o_custkey) AS n_exact FROM orders)
-        |SELECT ex.n_exact, sk.n_empty,
-        |  CAST(floor(0.709::DOUBLE * 4096 * 8589934592 / s_inv) AS BIGINT)
-        |    AS hll_est
-        |FROM ex CROSS JOIN sk""".stripMargin,
+    "q126_hll_native" -> OracleSql.hllCustkeyQuery,
+    "q105_hll_distinct" -> OracleSql.hllCustkeyQuery,
     "q122_hll_rollup" ->
       """WITH e AS (
         |  SELECT CAST(ts AS DATE) AS day,

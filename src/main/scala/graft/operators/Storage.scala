@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
@@ -1617,12 +1617,7 @@ object Storage extends QueryModule {
         |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
     // identical result to the unbucketed q52 join — layout must not change
     // answers, only plans
-    "q66_bucketed_join" ->
-      """SELECT o_orderpriority,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        | count(*) AS n_items
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
+    "q66_bucketed_join" -> OracleSql.priorityRevenueQuery,
     // the manifest diff must equal the second batch's logical predicate
     "q124_incremental_read" ->
       """SELECT o_orderpriority, count(*) AS n,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1518,7 +1518,7 @@ object Text extends QueryModule {
     * fires only after ("t","h") created the "th" token — the standard
     * iterative BPE encode over a topologically-ordered merge list).
     */
-  private val bpeMerges = Seq(
+  private[graft] val bpeMerges = Seq(
     ("t", "h"), ("h", "e"), ("i", "n"), ("e", "r"), ("a", "n"),
     ("r", "e"), ("o", "n"), ("a", "t"), ("th", "e"), ("an", "d"))
 
@@ -2868,7 +2868,7 @@ object Text extends QueryModule {
     "q38_simhash16" -> simhash16,
     "q65_simhash_neardup" -> simhashNearDup)
 
-  private val duckToks = raw"string_split_regex(text, '\s+')"
+  private[graft] val duckToks = raw"string_split_regex(text, '\s+')"
 
   /** DuckDB mirror of [[simhashes]]'s bit expression (shared by q38/q65). */
   private val duckSimhashBits: String = {
@@ -3123,12 +3123,7 @@ object Text extends QueryModule {
          |ORDER BY cq.class""".stripMargin
     },
     "q199_containment" ->
-      raw"""WITH t AS (SELECT doc_id,
-         |  list_filter(string_split_regex(text, '\s+'),
-         |    x -> len(x) > 0) AS tk FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest(list_transform(
-         |    range(1, greatest(len(tk) - 7, 0) + 1),
-         |    i -> md5(array_to_string(tk[i:i+7], ' ')))) AS sh FROM t),
+      raw"""WITH ${OracleSql.docShingles},
          |sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
          |inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
          |    count(*) AS common
@@ -3170,20 +3165,7 @@ object Text extends QueryModule {
          |    / CAST(n AS DOUBLE) * 1000) AS BIGINT) AS intercept_micro
          |FROM sums""".stripMargin,
     "q192_retrieval_metrics" ->
-      raw"""WITH tk AS (SELECT doc_id,
-         |  unnest(list_filter(string_split_regex(text, '\s+'),
-         |    x -> len(x) > 0)) AS t FROM documents),
-         |tf AS (SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
-         |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY 1),
-         |terms AS (SELECT t, df FROM dfq ORDER BY df DESC, t LIMIT 4),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-         |              (SELECT count(*) FROM tk) AS sum_dl),
-         |sc AS (SELECT tf.doc_id, tf.tf,
-         |  CAST(round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0)
-         |    * (tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) * n_docs / sum_dl))))
-         |    * 1000000) AS BIGINT) AS ppm
-         |  FROM tf JOIN terms USING (t) JOIN dl USING (doc_id) CROSS JOIN st),
+      raw"""WITH ${OracleSql.bm25Scores},
          |pd AS (SELECT doc_id, count(*) AS g,
          |    CAST(sum(ppm) AS BIGINT) AS score_ppm,
          |    CAST(sum(tf) AS BIGINT) AS tf_sum
@@ -3247,12 +3229,7 @@ object Text extends QueryModule {
          |FROM seen JOIN vc USING (source, pct)
          |ORDER BY source, pct""".stripMargin,
     "q181_ngram_novelty" ->
-      raw"""WITH t AS (SELECT doc_id,
-         |  list_filter(string_split_regex(text, '\s+'),
-         |    x -> len(x) > 0) AS tk FROM documents),
-         |sh AS (SELECT DISTINCT doc_id, unnest(list_transform(
-         |    range(1, greatest(len(tk) - 7, 0) + 1),
-         |    i -> md5(array_to_string(tk[i:i+7], ' ')))) AS sh FROM t),
+      raw"""WITH ${OracleSql.docShingles},
          |dfq AS (SELECT sh, count(*) AS df FROM sh GROUP BY 1),
          |per AS (SELECT doc_id, count(*) AS n_shingles,
          |    CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -3421,21 +3398,12 @@ object Text extends QueryModule {
     // (DuckDB literals accept control chars; Verify.jstr escapes the JSON
     // dump) — see the bpeDelim Scaladoc for the collision/BMP contract.
     "q236_bpe_encode" -> {
-      val m = bpeDelim
-      val chars = raw"regexp_replace(w, '(.)', '$m\1$m', 'g')"
-      val enc = bpeMerges.foldLeft(chars) { case (acc, (l, r)) =>
-        s"replace($acc, '$m$l$m$m$r$m', '$m$l$r$m')"
-      }
       raw"""WITH wds AS (SELECT source,
          |    unnest(list_filter(string_split_regex(text, '\s+'),
          |      t -> len(t) > 0)) AS w
          |  FROM documents),
          |wf AS (SELECT source, w, count(*) AS f FROM wds GROUP BY 1, 2),
-         |dict AS (SELECT DISTINCT w FROM wf),
-         |enc AS (SELECT w,
-         |    CAST((length($enc) - length(replace($enc, '$m', ''))) // 2
-         |      AS BIGINT) AS n_bpe
-         |  FROM dict)
+         |${OracleSql.bpeWordTokens}
          |SELECT source, CAST(sum(f) AS BIGINT) AS n_words,
          |  count(*) AS n_word_types,
          |  CAST(sum(f * length(w)) AS BIGINT) AS n_chars,
@@ -3466,21 +3434,12 @@ object Text extends QueryModule {
     // q236's encode machinery re-read per LANGUAGE, the premium via a
     // scalar-subquery min — same raw-byte delimiter contract
     "q269_tokenizer_fertility" -> {
-      val m = bpeDelim
-      val chars = raw"regexp_replace(w, '(.)', '$m\1$m', 'g')"
-      val enc = bpeMerges.foldLeft(chars) { case (acc, (l, r)) =>
-        s"replace($acc, '$m$l$m$m$r$m', '$m$l$r$m')"
-      }
       raw"""WITH wds AS (SELECT lang,
          |    unnest(list_filter(string_split_regex(text, '\s+'),
          |      t -> len(t) > 0)) AS w
          |  FROM documents),
          |wf AS (SELECT lang, w, count(*) AS f FROM wds GROUP BY 1, 2),
-         |dict AS (SELECT DISTINCT w FROM wf),
-         |enc AS (SELECT w,
-         |    CAST((length($enc) - length(replace($enc, '$m', ''))) // 2
-         |      AS BIGINT) AS n_bpe
-         |  FROM dict),
+         |${OracleSql.bpeWordTokens},
          |pl AS MATERIALIZED (SELECT lang,
          |    CAST(sum(f) AS BIGINT) AS n_words,
          |    CAST(sum(f * n_bpe) AS BIGINT) AS n_tokens,
@@ -3578,11 +3537,7 @@ object Text extends QueryModule {
            |    (SELECT CAST(sum(usage * len(piece)) AS BIGINT) FROM us$rnd)
            |      AS usage_len_checksum
            |  FROM fin$rnd JOIN wf USING (w))""".stripMargin
-      raw"""WITH wds AS (SELECT
-         |    unnest(list_filter(string_split_regex(text, '\s+'),
-         |      t -> len(t) > 0)) AS w
-         |  FROM documents),
-         |wf AS MATERIALIZED (SELECT w, count(*) AS f FROM wds GROUP BY 1),
+      raw"""WITH ${OracleSql.wordFrequencies},
          |pw AS MATERIALIZED (SELECT piece, CAST(sum(f) AS BIGINT) AS wfreq
          |  FROM (SELECT f, unnest(flatten(list_transform(range(1, len(w) + 1), i ->
          |    list_transform(range(1, least($unigramPieceMaxLen, len(w) - i + 1) + 1), L ->
@@ -3624,11 +3579,7 @@ object Text extends QueryModule {
         .map(k => s"SELECT $k AS round, l AS left_tok, r AS right_tok, " +
           s"cnt AS n_occurrences FROM b$k")
         .mkString("\nUNION ALL ")
-      raw"""WITH wds AS (SELECT
-         |    unnest(list_filter(string_split_regex(text, '\s+'),
-         |      t -> len(t) > 0)) AS w
-         |  FROM documents),
-         |wf AS MATERIALIZED (SELECT w, count(*) AS f FROM wds GROUP BY 1),
+      raw"""WITH ${OracleSql.wordFrequencies},
          |e0 AS (SELECT w, regexp_replace(w, '(.)', '$m\1$m', 'g') AS enc
          |  FROM wf),
          |$rounds
@@ -3652,16 +3603,7 @@ object Text extends QueryModule {
          |FROM pr GROUP BY 1
          |ORDER BY n_occurrences DESC, pair LIMIT 20""".stripMargin,
     "q170_trigram_lm" -> {
-      val bk = graft.functions.Hashing.duckMd5Bucket("doc_id", 100)
-      raw"""WITH base AS (SELECT doc_id, source,
-         |    list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)
-         |      AS tk,
-         |    $bk AS bk
-         |  FROM documents),
-         |tri AS (SELECT doc_id, source, bk,
-         |    unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-         |      i -> array_to_string(tk[i:i+2], ' '))) AS g3
-         |  FROM base),
+      raw"""WITH ${OracleSql.trigrams},
          |tg AS (SELECT doc_id, source, bk, g3,
          |    array_to_string((string_split(g3, ' '))[1:2], ' ') AS g2
          |  FROM tri),
@@ -3686,16 +3628,7 @@ object Text extends QueryModule {
     // mirror exactly, and ONE ln per trigram converts the identical
     // rational (exact-int-to-double, correctly-rounded divide) to µnats
     "q311_kneser_ney" -> {
-      val bk = graft.functions.Hashing.duckMd5Bucket("doc_id", 100)
-      raw"""WITH base AS (SELECT doc_id, source,
-         |    list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)
-         |      AS tk,
-         |    $bk AS bk
-         |  FROM documents),
-         |tri AS (SELECT doc_id, source, bk,
-         |    unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-         |      i -> array_to_string(tk[i:i+2], ' '))) AS g3
-         |  FROM base),
+      raw"""WITH ${OracleSql.trigrams},
          |tg AS (SELECT doc_id, source, bk, g3,
          |    array_to_string((string_split(g3, ' '))[1:2], ' ') AS g2,
          |    array_to_string((string_split(g3, ' '))[2:3], ' ') AS s23,
@@ -3752,20 +3685,7 @@ object Text extends QueryModule {
          |FROM mu GROUP BY 1 ORDER BY source""".stripMargin
     },
     "q158_rrf_fusion" ->
-      raw"""WITH tk AS (SELECT doc_id,
-         |  unnest(list_filter(string_split_regex(text, '\s+'),
-         |    x -> len(x) > 0)) AS t FROM documents),
-         |tf AS (SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
-         |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY 1),
-         |terms AS (SELECT t, df FROM dfq ORDER BY df DESC, t LIMIT 4),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-         |              (SELECT count(*) FROM tk) AS sum_dl),
-         |sc AS (SELECT tf.doc_id, tf.tf,
-         |  CAST(round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0)
-         |    * (tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) * n_docs / sum_dl))))
-         |    * 1000000) AS BIGINT) AS ppm
-         |  FROM tf JOIN terms USING (t) JOIN dl USING (doc_id) CROSS JOIN st),
+      raw"""WITH ${OracleSql.bm25Scores},
          |pd AS (SELECT doc_id, CAST(sum(ppm) AS BIGINT) AS score_ppm,
          |    CAST(sum(tf) AS BIGINT) AS tf_sum FROM sc GROUP BY 1),
          |ta AS (SELECT doc_id, CAST(row_number() OVER
@@ -3784,15 +3704,7 @@ object Text extends QueryModule {
          |    AS BIGINT) AS rrf_ppm
          |FROM f ORDER BY rrf_ppm DESC, doc_id LIMIT 20""".stripMargin,
     "q149_bm25" ->
-      raw"""WITH tk AS (SELECT doc_id,
-         |  unnest(list_filter(string_split_regex(text, '\s+'),
-         |    x -> len(x) > 0)) AS t FROM documents),
-         |tf AS (SELECT doc_id, t, count(*) AS tf FROM tk GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, count(*) AS dl FROM tk GROUP BY 1),
-         |dfq AS (SELECT t, count(*) AS df FROM tf GROUP BY 1),
-         |terms AS (SELECT t, df FROM dfq ORDER BY df DESC, t LIMIT 4),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs,
-         |              (SELECT count(*) FROM tk) AS sum_dl),
+      raw"""WITH ${OracleSql.bm25Stats},
          |sc AS (SELECT tf.doc_id,
          |  CAST(round(ln((CAST(n_docs AS DOUBLE) - df + 0.5) / (df + 0.5) + 1.0)
          |    * (tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) * n_docs / sum_dl))))
@@ -4002,12 +3914,7 @@ object Text extends QueryModule {
          |FROM r ORDER BY doc_id""".stripMargin
     },
     "q74_decontaminate" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  list_filter($duckToks, t -> len(t) > 0) AS tk FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_transform(
-         |    range(1, greatest(len(tk) - 7, 0) + 1),
-         |    i -> md5(array_to_string(tk[i:i+7], ' ')))) AS sh FROM t),
-         |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 10),
+      s"""WITH ${OracleSql.benchShingles},
          |hits AS (SELECT c.doc_id, CAST(count(DISTINCT c.sh) AS BIGINT) AS n_hits
          |  FROM sh c JOIN bench b ON c.sh = b.sh
          |  WHERE c.doc_id >= 10 GROUP BY c.doc_id)
@@ -4050,12 +3957,7 @@ object Text extends QueryModule {
       def duckPositions(sh: String) = (0 until bloomK)
         .map(j => s"('0x' || substr($sh, ${j * 4 + 1}, 4))::BIGINT")
         .mkString("[", ", ", "]")
-      s"""WITH t AS (SELECT doc_id,
-         |  list_filter($duckToks, t -> len(t) > 0) AS tk FROM documents),
-         |sh AS (SELECT doc_id, unnest(list_transform(
-         |    range(1, greatest(len(tk) - 7, 0) + 1),
-         |    i -> md5(array_to_string(tk[i:i+7], ' ')))) AS sh FROM t),
-         |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id < 10),
+      s"""WITH ${OracleSql.benchShingles},
          |bits AS (SELECT DISTINCT unnest(${duckPositions("sh")}) AS bit FROM bench),
          |probe AS (SELECT DISTINCT doc_id, sh FROM sh WHERE doc_id >= 10),
          |pb AS (SELECT doc_id, sh, unnest(${duckPositions("sh")}) AS bit FROM probe),
@@ -4170,17 +4072,7 @@ object Text extends QueryModule {
     // heuristic — fold math and labeler both shared with their queries
     "q229_cv_accuracy" -> {
       val k = Dedup.kFolds
-      s"""WITH RECURSIVE ${Dedup.pairsCte},
-         |ue AS (SELECT d1 AS src, d2 AS dst FROM pairs
-         |  UNION ALL SELECT d2 AS src, d1 AS dst FROM pairs),
-         |reach(doc_id, label) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT ue.dst, reach.label FROM ue JOIN reach ON reach.doc_id = ue.src),
-         |final AS (SELECT doc_id, min(label) AS label FROM reach GROUP BY doc_id),
-         |sizes AS (SELECT label, count(*) AS csize FROM final GROUP BY 1),
-         |rk AS (SELECT label, csize, row_number()
-         |    OVER (ORDER BY csize DESC, label) AS rank FROM sizes),
+      s"""WITH RECURSIVE ${OracleSql.dupClusterRanks},
          |fd AS (SELECT label, CAST(CASE WHEN ((rank - 1) // $k) % 2 = 0
          |    THEN (rank - 1) % $k
          |    ELSE ${k - 1} - (rank - 1) % $k

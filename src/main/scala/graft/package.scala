@@ -23,6 +23,32 @@ package object graft {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
 
+  /** Run `a` and `b` at once and return both results. `b` runs on a
+    * thread started by this call, so it inherits the caller's Spark local
+    * properties (job group, tags, description) as they are now; a pooled
+    * thread would keep whatever it inherited when the pool created it.
+    * `a` runs on the caller's thread. `b` is joined before this returns or
+    * rethrows, so neither side outlives the call; if both throw, `a`'s
+    * error is rethrown with `b`'s attached as suppressed.
+    */
+  def concurrently[A, B](a: => A, b: => B): (A, B) = {
+    var rb: Either[Throwable, B] = null // read after join, which orders it
+    val t = new Thread(() => rb = try Right(b) catch { case e: Throwable => Left(e) },
+      "graft-concurrently")
+    t.setDaemon(true)
+    t.start()
+    val ra = try Right(a) catch { case e: Throwable => Left(e) }
+    var interrupted = false
+    while (t.isAlive) try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    (ra, rb) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), Left(eb)) => e.addSuppressed(eb); throw e
+      case (Left(e), _) => throw e
+      case (_, Left(eb)) => throw eb
+    }
+  }
+
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to `n`,
     * restoring the previous value afterwards. Shuffle width is a per-STAGE
     * sizing decision, not a per-session constant: an iterative loop over a

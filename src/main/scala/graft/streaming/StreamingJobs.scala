@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{Q, QueryModule}
+import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
 import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -728,11 +728,9 @@ object StreamingJobs extends QueryModule {
       : (DataFrame, Long) = {
     val root = graft.Scratch.dir("graft_stream_scd2")
     val stream = stage(root, Tables.orders(s, d).repartition(8)).stream(s, 2)
-    val dimPath = s"$root/dim"
-    graft.operators.Relational.scd2(s, d)
-      .write.mode("overwrite").parquet(dimPath)
+    val dim = graft.Scratch.stage("graft_stream_scd2_dim",
+      graft.operators.Relational.scd2(s, d))
     val (enriched, batches) = sinkBatches(root, stream) { batch =>
-      val dim = s.read.parquet(dimPath)
       batch.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
         .join(dim, batch("o_custkey") === dim("o_custkey") &&
           batch("o_orderdate") >= dim("valid_from") &&
@@ -1193,43 +1191,27 @@ object StreamingJobs extends QueryModule {
     // [valid_from, valid_to) residual — row-local verdicts make the
     // stream/batch hash match the parity proof
     "q275_stream_scd2_enrich" ->
-      """WITH src AS (
-        |  SELECT o_custkey, o_orderkey, o_orderdate, o_orderstatus,
-        |    lag(o_orderstatus) OVER
-        |      (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |      AS prev
-        |  FROM orders),
-        |chg AS (
-        |  SELECT * FROM src WHERE prev IS NULL OR prev <> o_orderstatus),
-        |ver AS MATERIALIZED (SELECT o_custkey,
-        |    o_orderstatus AS status,
-        |    o_orderdate AS valid_from,
-        |    lead(o_orderdate) OVER w AS valid_to,
-        |    CASE WHEN lead(o_orderdate) OVER w IS NULL THEN 1 ELSE 0 END
-        |      AS is_current
-        |  FROM chg
-        |  WINDOW w AS (PARTITION BY o_custkey
-        |    ORDER BY o_orderdate, o_orderkey)),
-        |enr AS (SELECT v.status, v.is_current, o.o_totalprice
-        |  FROM orders o JOIN ver v ON o.o_custkey = v.o_custkey
-        |    AND o.o_orderdate >= v.valid_from
-        |    AND (v.valid_to IS NULL OR o.o_orderdate < v.valid_to))
-        |SELECT status, is_current, count(*) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS total_price
-        |FROM enr GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+      s"""WITH ${OracleSql.scd2Changes},
+         |ver AS MATERIALIZED (SELECT o_custkey,
+         |    o_orderstatus AS status,
+         |    o_orderdate AS valid_from,
+         |    lead(o_orderdate) OVER w AS valid_to,
+         |    CASE WHEN lead(o_orderdate) OVER w IS NULL THEN 1 ELSE 0 END
+         |      AS is_current
+         |  FROM chg
+         |  WINDOW w AS (PARTITION BY o_custkey
+         |    ORDER BY o_orderdate, o_orderkey)),
+         |enr AS (SELECT v.status, v.is_current, o.o_totalprice
+         |  FROM orders o JOIN ver v ON o.o_custkey = v.o_custkey
+         |    AND o.o_orderdate >= v.valid_from
+         |    AND (v.valid_to IS NULL OR o.o_orderdate < v.valid_to))
+         |SELECT status, is_current, count(*) AS n_orders,
+         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+         |    AS total_price
+         |FROM enr GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // exact merge ⇒ the streamed bars equal batch q175's — one oracle
     // (Events.scala's q175 SQL verbatim) serves both formulations
-    "q212_stream_ohlc" ->
-      """WITH ev AS (SELECT CAST(ts AS DATE) AS day,
-        |    CAST(round(value * 1000000) AS BIGINT) AS vq,
-        |    lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') || ':' || event_id
-        |      AS tk
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT day, arg_min(vq, tk) AS open, max(vq) AS high,
-        |  min(vq) AS low, arg_max(vq, tk) AS close,
-        |  count(*) AS n_trades, CAST(sum(vq) AS BIGINT) AS volume
-        |FROM ev GROUP BY 1 ORDER BY day""".stripMargin,
+    "q212_stream_ohlc" -> OracleSql.ohlcQuery,
     // the bitmap fold is exact, so the streamed answer must equal plain
     // COUNT(DISTINCT) — the strongest oracle a streaming distinct can have
     "q190_stream_bitmap" ->
@@ -1295,12 +1277,7 @@ object StreamingJobs extends QueryModule {
         |FROM j GROUP BY day ORDER BY day""".stripMargin,
     // the converged upsert state IS the batch latest-per-key (q91's SQL):
     // folding latest() across micro-batches equals latest() over the union
-    "q117_stream_upsert" ->
-      """SELECT user_id, event_type, event_id, ts AS latest_ts, value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
+    "q117_stream_upsert" -> OracleSql.latestPerKeyQuery,
     // identical semantics to q22 — same oracle
     "q39_stream_tumbling" ->
       """SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP) AS window_start,
