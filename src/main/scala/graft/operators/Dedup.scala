@@ -309,7 +309,7 @@ object Dedup extends QueryModule {
     * Algorithm: iterative min-label propagation — every doc starts labeled
     * with its own id; each round every node takes the min of its own label
     * and its neighbors' labels; fixpoint = component minimum. Each round is
-    * one equi-join of the (cached) edge list against the current labels
+    * one equi-join of the (staged) edge list against the current labels
     * plus a hash aggregate — all shuffle-partitioned by id, nothing
     * driver-side except the (scalar) convergence probe. Rounds needed =
     * graph diameter; near-dup clusters are dense (diameter ≤ ~3), so this
@@ -319,17 +319,13 @@ object Dedup extends QueryModule {
     * label SUM is a convergence certificate: unchanged sum ⟺ fixpoint.
     *
     * Lineage discipline: `next` references `labels` TWICE (propagation +
-    * self), so under plain cache() the LOGICAL plan doubles every round —
+    * self), so an unstaged loop's LOGICAL plan doubles every round —
     * analysis and plan stringification go exponential long before the data
     * does (measured: round ~10 at sf0.1 spends minutes inside
-    * generateTreeString). Every iterative Spark algorithm needs the same
-    * cure GraphX applies: materialize AND truncate lineage each round —
-    * the round's raw RDD is localCheckpointed (blocks stay on the
-    * executors) and the frame rebuilt over it with `createDataFrame`, a
-    * stat-free leaf ([[minLabelFixpoint]] says why not
-    * `Dataset.localCheckpoint`). (Cluster production would use
-    * reliable `checkpoint()` to survive executor loss; local mode has no
-    * such failure domain, so the cheap variant is the right default.)
+    * generateTreeString). The loop is therefore a [[graft.Scratch.iterate]]
+    * state loop ([[minLabelFixpoint]]): every round is written to parquet
+    * and the next round plans against that leaf, so every round plans at
+    * the same flat cost and AQE sizes its shuffles from honest leaf stats.
     */
   val dupClusters: Q = (s, d) => {
     val labels = clusterLabels(s, d)
@@ -341,7 +337,7 @@ object Dedup extends QueryModule {
   }
 
   /** Connected-component labels (doc_id, label = component minimum) over
-    * the verified near-dup graph — the CC loop's result, memoized per
+    * the verified near-dup graph — the CC loop's final round, memoized per
     * input dir exactly like [[stagedPairs]]: the label
     * table is the dedup family's second shared intermediate (q59's
     * clustering and q123's leakage-safe split both consume it, and a
@@ -353,32 +349,37 @@ object Dedup extends QueryModule {
   // consumes the SAME staged label table the dedup family shares — the
   // integration point is the artifact, not a recomputation.
   private[graft] def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.Scratch.read(s, labelCache(d)(
-      graft.Scratch.write("graft_cc_labels", computeLabels(s, d))))
+    graft.Scratch.read(s, labelCache(d)(computeLabels(s, d)))
 
+  // The edges are the staged pair leaf (see stagedPairs: its write runs
+  // the candidate-verify join through AQE, which broadcasts it — measured
+  // 14s sort-merge vs 1.5s at sf0.1), and the loop's final round dir IS
+  // the staged label table.
   private def computeLabels(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    // Parquet roundtrip, not localCheckpoint/cache: both of those execute
-    // via paths that pin the physical plan before runtime, so AQE never
-    // turns the candidate-verify join into a broadcast and it runs as a
-    // sort-merge over millions of candidates (measured: 14s vs 1.5s at
-    // sf0.1). See stagedPairs.
+      d: String): String =
     ccMinLabels(s,
       Tables.documents(s, d).select(col("doc_id")), stagedPairs(s, d))
 
   /** Min-label connected components over ANY (d1, d2) edge list and
     * (doc_id) node set — the loop [[dupClusters]]'s Scaladoc describes,
     * generalized so other pair-producing operators (q131's fuzzy entity
-    * pairs) reuse the same lineage-disciplined machinery.
+    * pairs, q243's cosine-threshold edges, q255's co-purchase graph) reuse
+    * it. Returns the dir of the (doc_id, label) table; read it with
+    * [[graft.Scratch.read]].
     */
-  // private[graft]: q243's embedding-space clusters (Similarity.scala)
-  // run the same lineage-disciplined loop over cosine-threshold edges.
   private[graft] def ccMinLabels(s: org.apache.spark.sql.SparkSession,
       nodes: org.apache.spark.sql.DataFrame,
-      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    minLabelFixpoint(s, nodes,
-      pairs.select(col("d1").as("src"), col("d2").as("dst"))
-        .union(pairs.select(col("d2").as("src"), col("d1").as("dst"))))._1
+      pairs: org.apache.spark.sql.DataFrame): String =
+    // both directions from ONE reference to `pairs`: a union of two
+    // projections would run an unstaged pair plan twice
+    minLabelFixpoint(s, nodes, pairs.select(inline(array(
+      struct(col("d1").as("src"), col("d2").as("dst")),
+      struct(col("d2").as("src"), col("d1").as("dst"))))))._1
+
+  /** Loud cap for the min-label fixpoint: rounds track log(diameter)
+    * (the two pointer jumps per round); q243's embedding graph at
+    * τ = 0.4, the deepest caller, needs ~19 at sf1. */
+  private[graft] val ccMaxRounds = 50
 
   /** The DIRECTED core of [[ccMinLabels]]: labels flow src → dst only, so
     * the converged label(x) is the minimum id that REACHES x — undirected
@@ -388,115 +389,58 @@ object Dedup extends QueryModule {
     * path-doubling jump stays sound under direction: label(x) = ℓ means
     * ℓ →* x, and label(ℓ) = m means m →* ℓ, so m →* x by transitivity —
     * every jumped label is a genuine reacher, never a shortcut across
-    * direction. Returns the converged labels AND the per-round label-sum
-    * trajectory — the driver-synced convergence evidence (labels only
-    * decrease, so the sum strictly falls until the fixpoint; the last two
-    * entries equal BY TERMINATION, and a spec pins that contract).
+    * direction.
+    *
+    * A [[graft.Scratch.iterate]] state loop over the staged edge list:
+    * round 0 labels every node with itself, and each round propagates the
+    * in-neighbor minimum and then jumps twice. Returns the final round's
+    * dir AND the per-round label-sum trajectory — the driver-synced
+    * convergence evidence (labels only decrease, so the sum falls until
+    * the fixpoint; the last two entries equal BY TERMINATION, and a spec
+    * pins that contract). The staged edges and the previous round are
+    * dropped before it returns.
     */
   private[graft] def minLabelFixpoint(s: org.apache.spark.sql.SparkSession,
       nodes: org.apache.spark.sql.DataFrame,
-      dirEdges: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    // Edge layout, decided ONCE before the loop: hash-partitioned by src,
-    // sorted within partitions on src, and cached. Every propagation round
-    // joins edges⋈labels on src = doc_id; the cached layout satisfies BOTH
-    // the merge join's partitioning and its ordering requirement, so each
-    // round shuffles and sorts only the (small) label table while the
-    // (large) edge side streams straight out of the cache — the
-    // edges-stay-put / labels-move layout GraphX's Pregel runs on a
-    // thousand executors. Without it, every round re-shuffled AND re-sorted
-    // the full edge list (the dominant per-round cost, measured
-    // ~1.5-2s/round at sf0.1; the loop executes through localCheckpoint's
-    // RDD path, which bypasses AQE, so no runtime rescue applies).
-    // The loop frames are a few MB; its stages are fixed-overhead-bound,
-    // not data-bound, so the whole loop runs at a narrow shuffle width (8)
-    // — per round that is ~6 small stages whose task count would otherwise
-    // be the session's full core count for 5000-row frames. At real corpus
-    // sizes the width scales with label-table volume, same knob.
-    val loopP = math.min(8, s.sparkContext.defaultParallelism)
-    graft.withShufflePartitions(s, loopP) {
-    val ue = dirEdges
-      .repartition(loopP, col("src"))
-      .sortWithinPartitions("src")
-      .cache()
-    // Per-round materialization goes through the RAW RDD, not
-    // Dataset.localCheckpoint. localCheckpoint(true) truncates the
-    // LOGICAL plan, but Spark 4's Dataset.checkpoint first calls
-    // LogicalRDD.rewriteStatsAndConstraints, which computes the child
-    // plan's STATS and STORES them on the new leaf — and sizeInBytes
-    // compounds MULTIPLICATIVELY through the round's ~6 joins:
-    // S_r ≈ S_{r-1}^6, so the stat's BigInteger DIGIT COUNT grows ~6×
-    // per round and by round ~10 the driver spends minutes inside
-    // Toom-Cook BigInteger.multiply while the cluster data is idle
-    // (measured on q243's sf1 graph: rounds 1–8 at ~1s, round 9 at 10s,
-    // round 10 at 62s, round 11 at 116s; jstack pins the time in
-    // SizeInBytesOnlyStatsPlanVisitor.visitJoin). Near-dup text graphs
-    // converge in ≤ 8 rounds, which is why the family never saw it; the
-    // embedding graph at τ = 0.4 needs ~19. createDataFrame over the
-    // localCheckpointed Row RDD carries NO materialized stat (the leaf
-    // reports the constant default size), so every multiplication stays
-    // word-sized and every round plans at the same flat cost; the label
-    // RDD blocks are reclaimed by the ContextCleaner when the previous
-    // round's reference drops, exactly as before.
-    // The convergence certificate (Σ label) rides the SAME job that
-    // materializes the round (a long accumulator filled by the eager
-    // foreach — Spark applies action-side accumulator updates exactly
-    // once per task), so each round costs ONE driver sync, not
-    // materialize + a separate aggregate job. Label is column 1 of the
-    // (doc_id, label) schema.
-    def materialize(df: org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame, Long) = {
-      val rdd = df.rdd
-      rdd.localCheckpoint()
-      val acc = s.sparkContext.longAccumulator
-      rdd.foreach(r => acc.add(r.getLong(1))) // eager: materialize + sum
-      (s.createDataFrame(rdd, df.schema), acc.value)
+      dirEdges: org.apache.spark.sql.DataFrame): (String, Seq[Long]) = {
+    // staged once: every round joins a parquet leaf, not the edge plan
+    val edDir = graft.Scratch.write("graft_cc_edges", dirEdges)
+    val ue = graft.Scratch.read(s, edDir)
+    val traj = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // labels only decrease, so an unchanged Σ label ⟺ the fixpoint
+    def settled(r: Int, labels: org.apache.spark.sql.DataFrame): Boolean = {
+      val sumNow = labels.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
+      val done = traj.lastOption.contains(sumNow)
+      traj += sumNow
+      done
     }
-    var (labels, prevSum) = materialize(
-      nodes.select(col("doc_id"), col("doc_id").as("label")))
-    val traj = Seq.newBuilder[Long]
-    traj += prevSum
-    var converged = false
-    var rounds = 0
-    try {
-    while (!converged && rounds < 50) {
+    // pointer jump (path doubling): label ← label(label). Neighbor
+    // propagation alone needs diameter-many rounds — a CHAIN of
+    // near-dups (common in templated corpora) makes that dozens of
+    // driver-synced rounds; composing the jump drops it to
+    // O(log diameter). Labels still only decrease, so the sum
+    // certificate is untouched.
+    def jump(m: org.apache.spark.sql.DataFrame) = m.alias("a")
+      .join(m.alias("b"), col("a.label") === col("b.doc_id"), "left")
+      .select(col("a.doc_id").as("doc_id"),
+        least(col("a.label"), coalesce(col("b.label"), col("a.label"))).as("label"))
+    val (last, prev) = graft.Scratch.iterate(s, "graft_cc_l",
+        nodes.select(col("doc_id"), col("doc_id").as("label")),
+        graft.Scratch.Converge("min-label CC", ccMaxRounds, "ccMaxRounds"),
+        settled) { (_, labels) =>
       val prop = ue.join(labels, col("src") === col("doc_id"))
         .groupBy(col("dst")).agg(min("label").as("nb_min"))
       val stepped = labels.join(prop, col("doc_id") === col("dst"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"))
-      // pointer jump (path doubling): label ← label(label). Neighbor
-      // propagation alone needs diameter-many rounds — a CHAIN of
-      // near-dups (common in templated corpora) makes that dozens of
-      // driver-synced rounds; composing the jump drops it to
-      // O(log diameter). Labels still only decrease, so the sum
-      // certificate is untouched.
-      def jump(m: org.apache.spark.sql.DataFrame) = m.alias("a")
-        .join(m.alias("b"), col("a.label") === col("b.doc_id"), "left")
-        .select(col("a.doc_id").as("doc_id"),
-          least(col("a.label"), coalesce(col("b.label"), col("a.label"))).as("label"))
-      // materialize-and-truncate (see the stats-compounding note above):
-      // round k+1 plans against a flat stat-free leaf. Two jumps per
-      // round: each driver-synced round costs ~seconds of fixed stage
+      // two jumps per round: each driver-synced round costs fixed stage
       // overhead regardless of data volume, so compressing harder per
-      // round (4× path doubling) is nearly free and halves the rounds.
-      val (next, sumNow) = materialize(jump(jump(stepped)))
-      labels = next
-      converged = sumNow == prevSum
-      prevSum = sumNow
-      traj += sumNow
-      rounds += 1
+      // round (4× path doubling) is nearly free and halves the rounds
+      jump(jump(stepped))
     }
-    require(converged, s"label propagation did not converge in $rounds rounds")
-    // finally, not fall-through: a non-converged require (or a failed
-    // round) must still release the CacheManager-pinned edge list, or it
-    // stays on the heap for every later query in the session
-    } finally ue.unpersist()
-    // the final round's checkpointed RDD backs the returned plan (the
-    // caller stages it to parquet); the ContextCleaner reclaims the
-    // blocks once the reference drops
-    (labels, traj.result())
-    } // withShufflePartitions(loopP)
+    graft.Scratch.drop(edDir)
+    graft.Scratch.drop(prev)
+    (last, traj.toSeq)
   }
 
   private val segLen = 10
@@ -957,7 +901,7 @@ object Dedup extends QueryModule {
     val pairs = Joins.fuzzyPairs(s, d)
       .select(col("key_1").as("d1"), col("key_2").as("d2"))
     val nodes = Tables.customer(s, d).select(col("c_custkey").as("doc_id"))
-    val labels = ccMinLabels(s, nodes, pairs)
+    val labels = graft.Scratch.read(s, ccMinLabels(s, nodes, pairs))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("doc_id").as("c_custkey"), col("label").as("entity_id"),

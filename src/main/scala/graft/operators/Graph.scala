@@ -133,14 +133,21 @@ object Graph extends QueryModule {
     * integer `div`, mirrored `//` in the oracle, so the hash match
     * covers all six half-rounds. Top-10 per side via
     * TakeOrderedAndProject, O(k) output.
+    *
+    * The power iteration is a [[graft.Scratch.iterate]] state loop over
+    * HALF-rounds: round 0 is (o, hr = initRank), odd rounds are (p, ar)
+    * and even rounds (o, hr), each built from the renormed previous
+    * round. Each half-round references its Σ-aggregate TWICE (renorm
+    * numerator + the 1-row max) and the next builds on top, so an
+    * unstaged recursion grew 4× per round; staged, both references are
+    * leaf scans and the plan is linear in rounds. Round 0 renorms to
+    * itself (its max is initRank, so the divisor is 1), and the final two
+    * rounds are hr and ar of round [[iters]].
     */
   val hits: Q = (s, d) => {
     // the shared purchase-pair leaf IS the HITS edge list — read it
     // directly instead of re-running the distinct and re-staging a copy
     val edges = graft.Scratch.read(s, purchasePairsDir(s, d))
-    var hub = edges.select(col("o")).distinct()
-      .select(col("o"), lit(initRank).as("h"))
-    var auth: org.apache.spark.sql.DataFrame = null
     // Renorm invariant made LOUD: `x div (xmax div initRank)` is only a
     // renormalization when xmax >= initRank (true today — h0 = initRank
     // and every node has >= 1 edge, so each half-round's max sum can only
@@ -152,23 +159,23 @@ object Graph extends QueryModule {
       s"""CASE WHEN assert_true($xmax >= $initRank,
          |  'q262 HITS renorm invariant broke: max half-round score < initRank')
          |  IS NULL THEN $x div ($xmax div $initRank) END""".stripMargin)
-    // Each half-round references its Σ-aggregate TWICE (renorm numerator
-    // + the 1-row max) and the next half-round builds on top, so the
-    // unstaged recursion grew 4× per round — a 780k-char physical plan by
-    // round 3 re-executing early rounds dozens of times. Stage each
-    // half-round's node-scale aggregate (the q106 loop lineage
-    // discipline): both references become leaf scans, the plan is linear
-    // in rounds, and the arithmetic is unchanged.
-    for (i <- 1 to iters) {
-      val ar = graft.Scratch.stage(s"graft_hits_a$i",
-        edges.join(hub, "o").groupBy("p").agg(sum("h").as("ar")))
-      auth = ar.crossJoin(broadcast(ar.agg(max("ar").as("amax"))))
-        .select(col("p"), renorm("ar", "amax").as("a"))
-      val hr = graft.Scratch.stage(s"graft_hits_h$i",
-        edges.join(auth, "p").groupBy("o").agg(sum("a").as("hr")))
-      hub = hr.crossJoin(broadcast(hr.agg(max("hr").as("hmax"))))
-        .select(col("o"), renorm("hr", "hmax").as("h"))
+    // (key, raw) renormed to (key, out) by the half-round's 1-row max
+    def renormed(half: org.apache.spark.sql.DataFrame, key: String,
+        raw: String, out: String) =
+      half.crossJoin(broadcast(half.agg(max(raw).as("xmax"))))
+        .select(col(key), renorm(raw, "xmax").as(out))
+    val (hrDir, arDir) = graft.Scratch.iterate(s, "graft_hits_r",
+        edges.select(col("o")).distinct().select(col("o"), lit(initRank).as("hr")),
+        graft.Scratch.Depth(2 * iters)) { (r, prev) =>
+      if (r % 2 == 1) // a ← Σ h over in-edges
+        edges.join(renormed(prev, "o", "hr", "h"), "o")
+          .groupBy("p").agg(sum("h").as("ar"))
+      else // h ← Σ a over out-edges
+        edges.join(renormed(prev, "p", "ar", "a"), "p")
+          .groupBy("o").agg(sum("a").as("hr"))
     }
+    val hub = renormed(graft.Scratch.read(s, hrDir), "o", "hr", "h")
+    val auth = renormed(graft.Scratch.read(s, arDir), "p", "ar", "a")
     auth.orderBy(col("a").desc, col("p")).limit(10)
       .select(lit("authority").as("kind"), col("p").as("node"),
         col("a").as("score"))
@@ -1246,9 +1253,9 @@ object Graph extends QueryModule {
     val newEdges = pmS.filter(col("m_base") < 2).select("u", "v")
     val baseNodes = baseEdges.select(col("d1").as("doc_id"))
       .union(baseEdges.select(col("d2").as("doc_id"))).distinct()
-    // the staged artifact a production pipeline keeps between ingests
-    val baseLabels = Dedup.ccMinLabels(s, baseNodes, baseEdges)
-    val bl = graft.Scratch.stage("graft_inccc_base", baseLabels) // (doc_id, label)
+    // the staged artifact a production pipeline keeps between ingests:
+    // the loop's final (doc_id, label) round
+    val bl = graft.Scratch.read(s, Dedup.ccMinLabels(s, baseNodes, baseEdges))
     // collapse new edges onto the component graph: O(new edges) rows
     val mergeEdges = newEdges
       .join(bl.select(col("doc_id").as("u"), col("label").as("lu")), Seq("u"), "left")
@@ -1265,7 +1272,7 @@ object Graph extends QueryModule {
     val merged =
       if (mergeNodes.isEmpty)
         mergeNodes.select(col("doc_id"), col("doc_id").as("label"))
-      else Dedup.ccMinLabels(s, mergeNodes, mergeEdges)
+      else graft.Scratch.read(s, Dedup.ccMinLabels(s, mergeNodes, mergeEdges))
     val fullNodes = pmS.select(col("u").as("node"))
       .union(pmS.select(col("v").as("node"))).distinct()
     val composed = fullNodes
@@ -1659,11 +1666,10 @@ object Graph extends QueryModule {
     * graph cannot silently drop classes beyond a fixed horizon (the one
     * place q210's determinism discipline traded soundness-of-coverage
     * for replayability). Both reachability passes run
-    * [[Dedup.minLabelFixpoint]] — the q59/q243 lineage-disciplined loop
-    * (stats-safe createDataFrame materialization, Dedup.scala's
-    * localCheckpoint-stats note; edges staged/cached in the
-    * labels-move/edges-stay layout) — over the SAME staged edge list as
-    * q210 ([[sccEdgesDir]]), once forward, once on reversed edges.
+    * [[Dedup.minLabelFixpoint]] — the q59/q243 min-label
+    * [[graft.Scratch.iterate]] state loop — over the SAME staged edge
+    * list as q210 ([[sccEdgesDir]]), once forward, once on reversed
+    * edges, at once on the caller's session.
     * Labels only decrease, so the per-round sum strictly falls until the
     * fixpoint; the trajectory's equal last two entries ARE the
     * convergence certificate (AnalyticsSpec pins it via
@@ -1675,7 +1681,7 @@ object Graph extends QueryModule {
     * far past any fixture diameter) and AUDITS ITS OWN convergence
     * in-band: `n_moved_final` counts nodes whose forward or backward
     * label moved in the oracle's last super-round, which the Spark side
-    * emits as the literal 0 its require(converged) guarantees — an
+    * emits as the literal 0 its Converge cap guarantees — an
     * under-unrolled oracle mismatches LOUDLY on that column instead of
     * silently comparing two truncated runs. Output: the non-trivial
     * converged classes (fl = bl = class label), largest first, top 50.
@@ -1687,27 +1693,18 @@ object Graph extends QueryModule {
     * final pair). */
   private[graft] def sccConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long], Seq[Long]) = {
-    val edDir = sccEdgesDir(s, d) // build the shared memo on the main session
+    val ed = graft.Scratch.read(s, sccEdgesDir(s, d))
+    val nodes = ed.select(col("u").as("doc_id"))
+      .union(ed.select(col("v").as("doc_id"))).distinct()
     // The forward and backward fixpoints are INDEPENDENT job chains over
-    // the same staged edge leaf (guide §2.6, the q210 overlap) — but
-    // minLabelFixpoint temporarily narrows spark.sql.shuffle.partitions,
-    // which is SESSION state, so each thread runs on its own
-    // newSession() clone (same SparkContext, isolated SQL conf) and
-    // hands its converged labels back as a staged parquet leaf the main
-    // session reads — frames never cross sessions.
-    def run(rev: Boolean, tag: String): (String, Seq[Long]) = {
-      val s2 = s.newSession()
-      val ed2 = graft.Scratch.read(s2, edDir)
-      val nodes2 = ed2.select(col("u").as("doc_id"))
-        .union(ed2.select(col("v").as("doc_id"))).distinct()
-      val edges = if (rev) ed2.select(col("v").as("src"), col("u").as("dst"))
-                  else ed2.select(col("u").as("src"), col("v").as("dst"))
-      val (lbl, traj) = Dedup.minLabelFixpoint(s2, nodes2, edges)
-      val dir = graft.Scratch.write(s"graft_sccc_$tag", lbl)
-      (dir, traj)
-    }
+    // the same staged edge leaf (guide §2.6, the q210 overlap); neither
+    // touches session conf, so both run on the caller's session.
+    def run(rev: Boolean): (String, Seq[Long]) =
+      Dedup.minLabelFixpoint(s, nodes,
+        if (rev) ed.select(col("v").as("src"), col("u").as("dst"))
+        else ed.select(col("u").as("src"), col("v").as("dst")))
     val ((fDir, fTraj), (bDir, bTraj)) =
-      graft.concurrently(run(rev = false, "f"), run(rev = true, "b"))
+      graft.concurrently(run(rev = false), run(rev = true))
     val f = graft.Scratch.read(s, fDir)
     val b = graft.Scratch.read(s, bDir)
     val out = f.select(col("doc_id").as("node"), col("label").as("fl"))
@@ -1719,7 +1716,7 @@ object Graph extends QueryModule {
       .filter(col("n_members") >= 2)
       .orderBy(col("n_members").desc, col("scc_label"))
       .limit(50)
-      // literal 0 — the loop's require(converged) is the witness; the
+      // literal 0 — the loop's Converge cap is the witness; the
       // oracle computes the true count over ALL nodes from its last two
       // super-rounds, so an under-converged oracle fails the compare
       .select(col("scc_label"), col("n_members"), col("min_member"),

@@ -1008,9 +1008,9 @@ object Similarity extends QueryModule {
     * "cluster then keep one" decision needs the closure, exactly the
     * q37-vs-q59 distinction on the text side). Edges come from the SAME
     * cell-blocked pair join q101 runs (Σ|cell|², never n²); the closure
-    * is the generalized lineage-disciplined min-label loop the text
-    * family shares (Dedup.ccMinLabels — staged edge layout, label-only
-    * shuffles per round, localCheckpoint lineage truncation). Output one
+    * is the generalized min-label loop the text family shares
+    * (Dedup.ccMinLabels — a Scratch.iterate state loop over the staged
+    * edge list, every round a parquet leaf). Output one
     * row per vector: cluster id (= component minimum), size, canonical
     * bit. The oracle recomputes the fixpoint by recursive reachability —
     * the strongest cross-check for an iterative loop.
@@ -1038,13 +1038,10 @@ object Similarity extends QueryModule {
         col("l.cell_id") === col("r.cell_id") &&
           col("l.vec_id") < col("r.vec_id") && round(sim, 9) >= semanticTau)
       .select(col("l.vec_id").as("d1"), col("r.vec_id").as("d2"))
-    // parquet roundtrip before the loop — the family's computeLabels
-    // discipline: the loop must consume LEAF scans (the live
-    // assignment/window subtree re-planned under the loop's narrow
-    // shuffle width compounded per round and blew up past ~8 rounds)
-    val tmpE = graft.Scratch.write("graft_sem_edges", edges)
+    // the loop stages the edges once before its first round, so every
+    // round scans a parquet leaf, not the assignment/window subtree
     val nodes = corpus.select(col("vec_id").as("doc_id"))
-    val labels = Dedup.ccMinLabels(s, nodes, graft.Scratch.read(s, tmpE))
+    val labels = graft.Scratch.read(s, Dedup.ccMinLabels(s, nodes, edges))
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "label")
       .select(col("doc_id").as("vec_id"), col("label").as("cluster_id"),

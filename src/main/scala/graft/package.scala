@@ -48,21 +48,4 @@ package object graft {
       case (_, Left(eb)) => throw eb
     }
   }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to `n`,
-    * restoring the previous value afterwards. Shuffle width is a per-STAGE
-    * sizing decision, not a per-session constant: an iterative loop over a
-    * few-MB frame or a bounded streaming drain pays fixed per-task and
-    * per-state-store overhead for every extra partition, while the wide
-    * scans of the same job want the full core count. AQE re-coalesces most
-    * batch stages at runtime, but plans that execute through the RDD path
-    * (localCheckpoint) or stateful streaming never get that rescue — for
-    * those, the width must be chosen up front.
-    */
-  def withShufflePartitions[T](s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
 }

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Structured Streaming slice (SURVEY.md §2.9 — absent from the reference;
   * reserved by the build plan M5). Each job runs a batch-equivalent
@@ -37,7 +37,9 @@ import org.apache.spark.sql.types.StructType
   *    overwrites `state_v<n>`, so a batch Spark runs again after a restart
   *    re-reads the same predecessor and rewrites the same successor. The
   *    fold's result is the newest version listed under its root, which is
-  *    also what a restart that replays nothing resumes from.
+  *    also what a restart that replays nothing resumes from. Each version
+  *    carries its schema (`_schema.json`), and every version read is
+  *    bound to it, so no read runs a footer-inference job.
   *  - '''Sources.''' A [[Staged]] file source streams bound to the schema
   *    of the frame written there, so building the stream runs no
   *    footer-inference job.
@@ -57,21 +59,29 @@ object StreamingJobs extends QueryModule {
     * snapshots one store per partition per micro-batch, so a query whose
     * state fits in a handful of stores pays pure fixed overhead for each
     * extra partition. At production state volumes the same knob goes UP —
-    * the decision is explicit either way (see [[graft.withShufflePartitions]]).
+    * the decision is explicit either way. AQE re-coalesces batch stages
+    * at runtime, but stateful streaming never gets that rescue: its width
+    * must be chosen before the first batch.
     */
   private val statePartitions = 8
 
   /** Runs `writer` to completion under the drain contract; returns the
-    * number of data-carrying micro-batches.
+    * number of data-carrying micro-batches. The only session-conf write
+    * in graft: `spark.sql.shuffle.partitions` is [[statePartitions]]
+    * from start to stop, and the caller's value is restored after.
     */
-  private[graft] def drain(s: SparkSession, writer: DataStreamWriter[_]): Long =
-    graft.withShufflePartitions(s, statePartitions) {
+  private[graft] def drain(s: SparkSession, writer: DataStreamWriter[_]): Long = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = s.conf.get(key)
+    s.conf.set(key, statePartitions.toString)
+    try {
       val q = writer.trigger(Trigger.AvailableNow()).start()
       try {
         q.awaitTermination()
         q.recentProgress.count(_.numInputRows > 0).toLong
       } finally q.stop()
-    }
+    } finally s.conf.set(key, prev)
+  }
 
   /** Drains `df` into the memory sink in output `mode`, then returns
     * `result` of the sink table collected into a local frame, with the
@@ -105,29 +115,53 @@ object StreamingJobs extends QueryModule {
   }
 
   /** The state versions a [[foldVersions]] under `root` has published. */
-  private def versions(s: SparkSession, root: String): Seq[String] =
+  private[graft] def versions(s: SparkSession, root: String): Seq[String] =
     listed(s, root, "state_v")
+
+  /** A version's schema file. Spark's file index skips `_`-prefixed
+    * names, so the parquet read of the dir never sees it.
+    */
+  private def schemaFile(dir: String): Path = new Path(dir, "_schema.json")
+
+  /** Overwrites `dir` with `df`, then records `df`'s schema in it. */
+  private def writeVersion(dir: String, df: DataFrame): Unit = {
+    df.write.mode("overwrite").parquet(dir)
+    val out = fs(df.sparkSession, dir).create(schemaFile(dir), true)
+    try out.write(df.schema.json.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Reads a [[foldVersions]] version bound to its recorded schema: no
+    * footer-inference job, and no state of this JVM needed, so a version
+    * an earlier run wrote reads the same way.
+    */
+  private[graft] def readVersion(s: SparkSession, dir: String): DataFrame = {
+    val in = fs(s, dir).open(schemaFile(dir))
+    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    s.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(dir)
+  }
 
   /** A foreachBatch state fold (the version rule above): batch n writes
     * `step(batch, version n−1)` to `root/state_v<n>`; version −1 is `init`
-    * (`None`: no prior state). Returns the newest version (`init` if none
-    * was published) and the batch count.
+    * (`None`: no prior state; otherwise a [[graft.Scratch.write]] dir).
+    * Returns the newest version (`init` if none was published) and the
+    * batch count. Every read is bound to a recorded schema.
     */
   private[graft] def foldVersions(root: String, stream: DataFrame,
       init: Option[String] = None)(
       step: (DataFrame, Option[DataFrame]) => DataFrame): (DataFrame, Long) = {
     val s = stream.sparkSession
-    def version(n: Long): Option[String] =
-      if (n < 0) init else Some(s"$root/state_v$n")
+    def version(n: Long): Option[DataFrame] =
+      if (n < 0) init.map(graft.Scratch.read(s, _))
+      else Some(readVersion(s, s"$root/state_v$n"))
     val batches = drain(s, stream.writeStream
       .option("checkpointLocation", s"$root/ckpt")
       .foreachBatch { (batch: DataFrame, n: Long) =>
-        step(batch, version(n - 1).map(s.read.parquet(_)))
-          .write.mode("overwrite").parquet(version(n).get)
+        writeVersion(s"$root/state_v$n", step(batch, version(n - 1)))
       })
-    val last = versions(s, root).lastOption.orElse(init)
+    val last = versions(s, root).lastOption.map(readVersion(s, _))
+      .orElse(version(-1))
       .getOrElse(sys.error(s"$root: stream produced no micro-batches"))
-    (s.read.parquet(last), batches)
+    (last, batches)
   }
 
   /** A foreachBatch sink keyed by batch id: batch n writes `step(batch)`

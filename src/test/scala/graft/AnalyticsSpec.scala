@@ -1578,6 +1578,15 @@ class AnalyticsSpec extends SparkSpec {
     out.collect().foreach(r => assert(r.getLong(4) == 0L))
   }
 
+  test("q245 converged SCC: the exact sf0.001 label-sum trajectories (round count and sums)") {
+    // one round more or less, or a different sum per round, is a changed
+    // loop: round 0 is Σ node id, one propagate + 2 jumps reaches the
+    // component minimum 0 everywhere, and a second round certifies it
+    val (_, fTraj, bTraj) = operators.Graph.sccConvergedRun(spark, sf)
+    assert(fTraj === Seq(19900L, 0L, 0L))
+    assert(bTraj === Seq(19900L, 0L, 0L))
+  }
+
   test("q265 local clustering: summary triangle total equals q138's global count; lcc bounded; hubs ranked") {
     val rows = q("q265_local_clustering").collect().sortBy(_.getInt(0))
     assert(rows.length === 11)
@@ -4405,9 +4414,9 @@ class AnalyticsSpec extends SparkSpec {
     val ed = spark.read.parquet(
       operators.Graph.lpaEdgesDirForSpec(spark, sf))
     val nodes = ed.select(col("u").as("doc_id")).distinct()
-    val labels = operators.Dedup.ccMinLabels(spark, nodes,
+    val labels = Scratch.read(spark, operators.Dedup.ccMinLabels(spark, nodes,
       ed.filter(col("u") < col("v"))
-        .select(col("u").as("d1"), col("v").as("d2")))
+        .select(col("u").as("d1"), col("v").as("d2"))))
     val exact = labels.groupBy("label").agg(count(lit(1)).as("n"))
       .agg(sum(col("n") * col("n"))).head().getLong(0)
     val ratio = nfFinal.toDouble / exact.toDouble

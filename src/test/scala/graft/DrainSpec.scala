@@ -7,6 +7,7 @@ import graft.streaming.StreamingJobs
 
 /** Pins the one streaming drain (`StreamingJobs.drain` and the primitives
   * built on it): staged file sources stream bound to the written schema
+  * without a Spark job, fold versions read bound to their recorded schema
   * without a Spark job, a failing batch leaves no stream and no sink view
   * behind, and streaming queries give the same results from 4 sessions at
   * once.
@@ -50,6 +51,26 @@ class DrainSpec extends SparkSpec {
       (batch, _) => batch
     })
     assert(spark.streams.active.isEmpty)
+  }
+
+  test("fold versions read bound to their recorded schema: no Spark job, same rows as an inferring read") {
+    val src = StreamingJobs.stageOrdered(tmp("graft_spec_fold_src"),
+      Seq(spark.range(0, 3).toDF("id"), spark.range(3, 6).toDF("id")))
+    val root = tmp("graft_spec_fold_v")
+    val (state, batches) = StreamingJobs.foldVersions(root, src.stream(spark, 1)) {
+      (batch, prev) => prev.fold(batch)(_.unionByName(batch))
+    }
+    assert(batches === 2L)
+    assert(state.collect().map(_.getLong(0)).sorted.toSeq === (0L until 6L))
+    val versions = StreamingJobs.versions(spark, root)
+    assert(versions.size === 2)
+    versions.foreach { v =>
+      var df: DataFrame = null
+      assert(jobsLaunchedBy { df = StreamingJobs.readVersion(spark, v) } === 0, v)
+      val inferred = spark.read.parquet(v)
+      assert(df.schema === inferred.schema, v)
+      assert(df.collect().map(_.toString).sorted === inferred.collect().map(_.toString).sorted, v)
+    }
   }
 
   test("streaming drains: 4 sessions at once match a sequential run") {

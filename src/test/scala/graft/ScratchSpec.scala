@@ -183,4 +183,11 @@ class ScratchSpec extends SparkSpec {
     // run pays its loops (a warm memo would skip q253/q258's loop)
     assertConcurrentMatchesSequential(names)
   }
+
+  test("min-label CC and HITS loops: 4 sessions at once match a sequential run") {
+    // q245 runs its forward and backward fixpoints at once on ONE session
+    assertConcurrentMatchesSequential(Seq("q59_dup_clusters",
+      "q131_entity_clusters", "q243_semantic_clusters", "q245_scc_converged",
+      "q255_incremental_cc", "q262_hits"))
+  }
 }
