@@ -38,7 +38,7 @@ object OracleSql {
       "j -> it.phi[j] * r.rho[it.k + 1 - j]))) // it.v)"
 
   /** [[pacfStep]] over the a-prefixed `arr`/`ait` of q306/q323. */
-  def arPacfStep: String =
+  private def arPacfStep: String =
     "((arr.rho[ait.k + 1] * 1000000 - list_sum(" +
       "list_transform(range(1, ait.k + 1), " +
       "j -> ait.phi[j] * arr.rho[ait.k + 1 - j]))) // ait.v)"
@@ -52,6 +52,41 @@ object OracleSql {
        |adev AS MATERIALIZED (SELECT m,
        |    CAST(c AS HUGEINT) - (SELECT mu FROM ast) AS dv FROM monthly),
        |aden AS (SELECT sum(dv * dv) AS dn FROM adev)""".stripMargin
+
+  /** The q319 AR chain of q306/q323 over `monthly`: [[arAcfInputs]], the
+    * ACF `aacf(lag, acf_ppm)`, its lag-ordered list `arr(rho, nl)`, the
+    * Durbin-Levinson recursion `ait(k, phi, v)` and [[arOrderPhis]].
+    */
+  def arFit: String = {
+    val apk = arPacfStep
+    s"""$arAcfInputs,
+       |aacf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
+       |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
+       |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM aden)
+       |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
+       |        // (SELECT dn FROM aden))
+       |      END AS BIGINT) AS acf_ppm
+       |  FROM adev a JOIN adev b
+       |    ON b.m > a.m AND b.m <= a.m + ${Stats.acfMaxLag}
+       |  WHERE (SELECT dn FROM aden) > 0
+       |  GROUP BY 1),
+       |arr AS MATERIALIZED (SELECT
+       |    list(CAST(acf_ppm AS HUGEINT) ORDER BY lag) AS rho,
+       |    count(*) AS nl FROM aacf),
+       |ait(k, phi, v) AS (
+       |  SELECT 1, [arr.rho[1]],
+       |    CAST(1000000 AS HUGEINT) - (arr.rho[1] * arr.rho[1]) // 1000000
+       |  FROM arr WHERE arr.nl >= 1
+       |  UNION ALL
+       |  SELECT ait.k + 1,
+       |    list_transform(range(1, ait.k + 1),
+       |      j -> ait.phi[j] - ($apk * ait.phi[ait.k + 1 - j]) // 1000000) ||
+       |      [$apk],
+       |    (ait.v * (1000000 - ($apk * $apk) // 1000000)) // 1000000
+       |  FROM ait, arr
+       |  WHERE ait.k < ${Stats.acfMaxLag} AND ait.v > 0 AND ait.k < arr.nl),
+       |$arOrderPhis""".stripMargin
+  }
 
   /** The PACF-cutoff AR order `asel(p)` over the a-prefixed Durbin-Levinson
     * recursion `ait`, and that order's phi row unnested as `aphis(j, ph)`.
@@ -221,14 +256,6 @@ object OracleSql {
        |    it.s + it.b
        |  FROM it JOIN monthly mo ON mo.t = it.t + 1)""".stripMargin
 
-  /** The same `monthly(m, c)` as [[monthlySeries]], wrapped as the
-    * Holt-Winters and backtest oracles state it.
-    */
-  def hwMonthlySeries: String =
-    s"""$monthlyRevenue,
-       |monthly AS MATERIALIZED (SELECT m - (SELECT min(m) FROM raw) AS m,
-       |    c FROM raw)""".stripMargin
-
   /** The Holt-Winters two-season init `init(b0, l0)` and the initial seasonal ring `seas0(q)`. */
   def hwSeasonInit: String =
     s"""i1 AS (SELECT CAST(sum(c) AS HUGEINT) AS s1 FROM monthly
@@ -320,15 +347,6 @@ object OracleSql {
        |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
        |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2 AS INT)
        |    AS split FROM b)""".stripMargin
-
-  /** The chain of [[purchaseSplitEvents]] with `sp` wrapped after `// 2`, as q345/q347 state it. */
-  def purchaseSplitEventsWrapped: String =
-    s"""ev AS (SELECT user_id, CAST(ts AS DATE) AS day,
-       |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS p
-       |  FROM events),
-       |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-       |sp AS (SELECT d0 + CAST((date_diff('day', d0, d1) + 1) // 2
-       |    AS INT) AS split FROM b)""".stripMargin
 
   /** [[userScores]] plus positive and negative counts per score, `vc(score, pos_at, neg_at)`. */
   def scoreCounts: String =
@@ -748,6 +766,19 @@ object OracleSql {
        |  FROM sq q JOIN lin li ON li.i = q.i JOIN lin lj ON lj.i = q.j)""".stripMargin
 
   // ---- Events ----
+
+  /** `ev(event_id, user_id, event_type, ts_us)` and the touch keys
+    * `tk`: zero-padded epoch micros, event id and type of each view,
+    * click and signup, the `Events.convTouches` key.
+    */
+  def touchKeys: String =
+    """ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
+      |  FROM events),
+      |tk AS (SELECT event_id, user_id, event_type, ts_us,
+      |    CASE WHEN event_type IN ('view', 'click', 'signup') THEN
+      |      lpad(CAST(ts_us AS VARCHAR), 20, '0') || ':' || event_id ||
+      |        ':' || event_type END AS tk
+      |  FROM ev)""".stripMargin
 
   /** The whole q175/q212 oracle: daily OHLC bars over purchase values. */
   def ohlcQuery: String =

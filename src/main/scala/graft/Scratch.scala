@@ -43,10 +43,14 @@ import org.apache.spark.sql.types.StructType
   *     (dir, mtime) was considered and rejected: an mtime probe per lookup
   *     re-lists the directory on the hot path of EVERY query, to defend a
   *     sequence no harness run performs.
-  *  2. '''Input-dir cardinality is tiny.''' Keys are the 3–4 sf dirs, so
-  *     the unbounded-map growth mode is bounded by the harness's world.
-  *     A long-lived service would swap [[PerDir]] for a TTL'd cache keyed
-  *     on a snapshot/version id — this class is the seam.
+  *  2. '''One entry per distinct input path, never evicted.''' Each family
+  *     holds one key per input dir it was asked about, for the JVM's
+  *     life, and nothing bounds the count: a run that reads a fresh input
+  *     path on every pass (perfbench's batch_cold workload, the specs'
+  *     `freshInput()`) adds a key per pass to every family it touches.
+  *     A bound (a byte budget with LRU eviction of unleased entries, or a
+  *     TTL'd cache keyed on a snapshot id) belongs in this class — it is
+  *     the seam, and ROADMAP item 8 is where that bound is planned.
   *
   * == Schema binding ([[read]], [[graft.sources.Tables.table]]) ==
   *  - The schema memos rest on contract 1: a dir's bytes do not change
@@ -62,7 +66,8 @@ import org.apache.spark.sql.types.StructType
   *  - [[drop]] forgets the dir's recorded schema.
   */
 object Scratch {
-  private val created = mutable.ArrayBuffer.empty[Path]
+  /** Live scratch dirs, deleted by the exit hook; [[drop]] removes one. */
+  private[graft] val created = mutable.ArrayBuffer.empty[Path]
   private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   private lazy val hookInstalled: Unit = {
@@ -94,12 +99,14 @@ object Scratch {
     p.toString
   }
 
-  /** Delete a scratch dir early and forget its recorded schema (it stays
-    * registered; the exit hook's second delete is a no-op).
+  /** Delete a scratch dir early and forget it: its recorded schema and
+    * its entry in [[created]].
     */
   def drop(dir: String): Unit = {
     schemas.remove(dir)
-    deleteRecursively(Paths.get(dir))
+    val p = Paths.get(dir)
+    created.synchronized(created -= p)
+    deleteRecursively(p)
   }
 
   /** Write `df` once to a fresh scratch dir and record its schema for

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic hash-bucket expressions shared by the sampling/split
@@ -17,6 +17,44 @@ object Hashing {
   def md5Bucket(c: Column, n: Int): Column =
     pmod(conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(n.toLong))
+
+  /** The HLL register count m every HLL sketch here uses (alpha_64 =
+    * 0.709 in [[hllEstimate]]). */
+  val hllBuckets = 64
+
+  /** The HLL register hash of the string key `k`, beside the columns
+    * `keep`: (keep…, bucket, rho). bucket = [[md5Bucket]] over m =
+    * [[hllBuckets]]; rho = the leading-zero rank of the 32-bit word in md5
+    * hex digits 9–16, via `length(bin(w))` — an exact integer string op,
+    * so both engines agree bit-for-bit.
+    */
+  def hllRanks(df: DataFrame, k: Column, keep: String*): DataFrame =
+    df.select(keep.map(col) ++ Seq(md5Bucket(k, hllBuckets).as("bucket"),
+        conv(substring(md5(k), 9, 8), 16, 10).cast("long").as("w")): _*)
+      .select(keep.map(col) ++ Seq(col("bucket"), when(col("w") === 0, lit(33))
+        .otherwise(lit(33) - length(bin(col("w")))).as("rho")): _*)
+
+  /** Σ 2^(33−m) over registers `m`, as exact integers (m ≤ 33). */
+  def hllSInv: Column =
+    sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv")
+
+  /** The count of empty (m = 0) registers. */
+  def hllNEmpty: Column =
+    sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty")
+
+  /** The m = 64 harmonic-mean estimate from `sInv` = Σ 2^(33−m): numerator
+    * alpha_64·m²·2^33 over ONE correctly-rounded double division —
+    * IEEE-identical across engines. */
+  def hllEstimate(sInv: Column): Column =
+    floor(lit(0.709) * lit(4096.0) * lit(8589934592.0) / sInv.cast("double"))
+      .cast("long")
+
+  /** The standard small-range switch over (raw, n_empty): at or below
+    * 2.5m with empty registers present, linear counting m·ln(m/V). */
+  def hllSmallRange: Column =
+    expr("""CASE WHEN raw <= 160 AND n_empty > 0
+             THEN CAST(round(64 * ln(CAST(64 AS DOUBLE) / n_empty)) AS BIGINT)
+             ELSE raw END""")
 
   /** DuckDB mirror of [[md5Bucket]] over a SQL expression string. */
   def duckMd5Bucket(e: String, n: Int): String =

@@ -375,7 +375,7 @@ object Events extends QueryModule {
 
   val multiTouch: Q = (s, d) => {
     val conv = convTouches(s, d)
-    conv.select(col("conv_id"), col("n"), col("fty"), col("lty"),
+    val credits = conv.select(col("conv_id"), col("n"), col("fty"), col("lty"),
         explode(array(
           struct(lit("view").as("ch"), col("n_view").as("n_ch")),
           struct(lit("click").as("ch"), col("n_click").as("n_ch")),
@@ -411,13 +411,21 @@ object Events extends QueryModule {
               + expr("""(200000 div (n - 2))
                 * (n_ch - CASE WHEN fty = ch THEN 1 ELSE 0 END
                         - CASE WHEN lty = ch THEN 1 ELSE 0 END)""")))))
-      .groupBy(col("ch").as("channel"))
+    creditLedger(credits, col("ch").as("channel"))
+  }
+
+  /** The q292/q294 ledger: per-(conversion, channel) credit rows (n_ch,
+    * first_ppm, last_ppm, linear_ppm, ushape_ppm) summed per `channel`
+    * (a column named channel). q294's stream folds into this same
+    * aggregate, so its parity with q292 is built, not asserted. */
+  private[graft] def creditLedger(credits: org.apache.spark.sql.DataFrame,
+      channel: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    credits.groupBy(channel)
       .agg(count(lit(1)).as("n_convs"), sum("n_ch").as("n_touches"),
         sum("first_ppm").as("first_ppm"), sum("last_ppm").as("last_ppm"),
         sum("linear_ppm").as("linear_ppm"),
         sum("ushape_ppm").as("ushape_ppm"))
       .orderBy("channel")
-  }
 
   /** q297 — SHAPLEY ATTRIBUTION (Shapley 1953; the "data-driven
     * attribution" model production ad platforms run next to the
@@ -1081,6 +1089,15 @@ object Events extends QueryModule {
         sum((col("t2") - col("t1")).cast("decimal(38,0)")).as("l2")))
       .crossJoin(s3.agg(count(lit(1)).as("n3"),
         sum((col("t3") - col("t2")).cast("decimal(38,0)")).as("l3")))
+    funnelReport(j)
+  }
+
+  /** The q282/q285 funnel table from the one-row step totals `j` (n1;
+    * n2, l2; n3, l3 — users reaching each step and the summed latency
+    * from the step before): one row per step. q285's stream folds into
+    * this same tail, so its parity with q282 is built, not asserted. */
+  private[graft] def funnelReport(j: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
     def row(step: Int, name: String, n: String, prev: String, lat: String) =
       j.select(lit(step).as("step"), lit(name).as("event_type"),
         col(n).as("n_users"),
@@ -1723,13 +1740,7 @@ FROM fl CROSS JOIN rm ORDER BY channel"""
     // the identical mask histogram, coalition values, sixths-exact
     // Shapley terms, and remainder rule over the shared q292 frame CTEs
     "q297_shapley_attribution" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |tk AS (SELECT event_id, user_id, event_type, ts_us,
-        |    CASE WHEN event_type IN ('view', 'click', 'signup') THEN
-        |      lpad(CAST(ts_us AS VARCHAR), 20, '0') || ':' || event_id
-        |        || ':' || event_type END AS tk
-        |  FROM ev),
+      s"""WITH ${OracleSql.touchKeys},
         |wn AS (SELECT event_id, event_type,
         |    count(CASE WHEN event_type = 'view' THEN 1 END)
         |      OVER w AS n_view,
@@ -1778,13 +1789,7 @@ FROM fl CROSS JOIN rm ORDER BY channel"""
     // the identical frame, touch keys, closed-form per-channel credits,
     // and remainder-to-first rule
     "q292_multi_touch" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |tk AS (SELECT event_id, user_id, event_type, ts_us,
-        |    CASE WHEN event_type IN ('view', 'click', 'signup') THEN
-        |      lpad(CAST(ts_us AS VARCHAR), 20, '0') || ':' || event_id
-        |        || ':' || event_type END AS tk
-        |  FROM ev),
+      s"""WITH ${OracleSql.touchKeys},
         |wn AS (SELECT event_id, event_type,
         |    count(CASE WHEN event_type = 'view' THEN 1 END)
         |      OVER w AS n_view,

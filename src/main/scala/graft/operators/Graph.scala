@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OracleSql, Q, QueryModule}
+import graft.functions.Hashing.{hllBuckets, hllEstimate, hllRanks, hllSmallRange}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -279,26 +280,36 @@ object Graph extends QueryModule {
       // and walks downstream scan this leaf many times
       val rawEdges = graft.Scratch.read(s, coPairsDir(s, d)).select("u", "v")
       val tmpE = graft.Scratch.write("graft_tri_edges", rawEdges)
-      val edges = graft.Scratch.read(s, tmpE)
-      val deg = edges.select(col("u").as("x"))
-        .union(edges.select(col("v").as("x")))
-        .groupBy("x").agg(count(lit(1)).as("dg"))
-      val lowFirst = col("du") < col("dv") ||
-        (col("du") === col("dv") && col("u") < col("v"))
-      val dir = edges
-        .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
-        .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
-        .select(when(lowFirst, col("u")).otherwise(col("v")).as("s"),
-          when(lowFirst, col("v")).otherwise(col("u")).as("t"))
-      (tmpE, graft.Scratch.write("graft_tri_dir", dir))
+      (tmpE, graft.Scratch.write("graft_tri_dir",
+        degreeOriented(graft.Scratch.read(s, tmpE))))
     }
+
+  /** Each endpoint's degree over the undirected `edges` (u, v): (x, dg). */
+  private def degrees(edges: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    edges.select(col("u").as("x"))
+      .union(edges.select(col("v").as("x")))
+      .groupBy("x").agg(count(lit(1)).as("dg"))
+
+  /** `edges` (u, v) oriented low-degree first (ties: smaller id) as (s, t):
+    * an acyclic orientation, so every triangle is seen at exactly one
+    * oriented edge. */
+  private def degreeOriented(edges: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val deg = degrees(edges)
+    val lowFirst = col("du") < col("dv") ||
+      (col("du") === col("dv") && col("u") < col("v"))
+    edges
+      .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
+      .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
+      .select(when(lowFirst, col("u")).otherwise(col("v")).as("s"),
+        when(lowFirst, col("v")).otherwise(col("u")).as("t"))
+  }
 
   val triangleCount: Q = (s, d) => {
     val (edgeDir, orientedDir) = triArtifacts(s, d)
     val edges = graft.Scratch.read(s, edgeDir)
-    val deg = edges.select(col("u").as("x"))
-      .union(edges.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("dg"))
+    val deg = degrees(edges)
     val staged = graft.Scratch.read(s, orientedDir)
     // adjacency-intersection form: T = Σ over oriented edges (u→v) of
     // |N⁺(u) ∩ N⁺(v)| — the orientation is acyclic, so triangle a→b→c is
@@ -349,9 +360,7 @@ object Graph extends QueryModule {
   val localClustering: Q = (s, d) => {
     val (edgeDir, orientedDir) = triArtifacts(s, d)
     val edges = graft.Scratch.read(s, edgeDir)
-    val deg = edges.select(col("u").as("x"))
-      .union(edges.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("dg"))
+    val deg = degrees(edges)
     val staged = graft.Scratch.read(s, orientedDir)
     val adj = staged.groupBy("s").agg(sort_array(collect_list("t")).as("nbrs"))
     val triples = staged
@@ -408,9 +417,7 @@ object Graph extends QueryModule {
   val assortativity: Q = (s, d) => {
     val (edgeDir, _) = triArtifacts(s, d)
     val edges = graft.Scratch.read(s, edgeDir)
-    val deg = edges.select(col("u").as("x"))
-      .union(edges.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("dg"))
+    val deg = degrees(edges)
     val pairs = edges
       .union(edges.select(col("v").as("u"), col("u").as("v")))
       .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
@@ -448,16 +455,7 @@ object Graph extends QueryModule {
   private def trussTriples(s: org.apache.spark.sql.SparkSession,
       edges: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val deg = edges.select(col("u").as("x"))
-      .union(edges.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("dg"))
-    val lowFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val dir = edges
-      .join(deg.select(col("x").as("u"), col("dg").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("dg").as("dv")), "v")
-      .select(when(lowFirst, col("u")).otherwise(col("v")).as("s"),
-        when(lowFirst, col("v")).otherwise(col("u")).as("t"))
+    val dir = degreeOriented(edges)
     val adj = dir.groupBy("s").agg(sort_array(collect_list("t")).as("nbrs"))
     dir
       .join(adj.select(col("s").as("ju"), col("nbrs").as("nu")),
@@ -786,18 +784,29 @@ object Graph extends QueryModule {
       val tmpE = lpaEdgesDir(s, d)
       val ed = graft.Scratch.read(s, tmpE) // both directions: undirected adjacency
       val (labelsDir, _) = graft.Scratch.iterate(s, "graft_lpa_l",
-          ed.select(col("u").as("node")).distinct()
-            .select(col("node"), col("node").as("lbl")),
-          graft.Scratch.Depth(lpaRounds)) { (_, labels) =>
-        ed.join(labels.select(col("node").as("v"), col("lbl")), "v")
-          .groupBy(col("u").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy("node")
-          .agg(expr("""1000000000000 - (max(cnt * 1000000000000
-                 + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
+          ownLabels(ed), graft.Scratch.Depth(lpaRounds)) { (_, labels) =>
+        lpaVote(ed, labels)
       }
       (tmpE, labelsDir)
     }
+
+  /** Every source node of `ed` (u, v) labelled with itself: (node, lbl). */
+  private def ownLabels(ed: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    ed.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl"))
+
+  /** One synchronous LPA round: each node u of `ed` (u, v) takes the label
+    * most frequent among its neighbours' `labels` (node, lbl), ties to the
+    * smallest label — one packed max, cnt·10¹² + (10¹² − lbl). */
+  private def lpaVote(ed: org.apache.spark.sql.DataFrame,
+      labels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ed.join(labels.select(col("node").as("v"), col("lbl")), "v")
+      .groupBy(col("u").as("node"), col("lbl"))
+      .agg(count(lit(1)).as("cnt"))
+      .groupBy("node")
+      .agg(expr("""1000000000000 - (max(cnt * 1000000000000
+             + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
 
   val labelPropagation: Q = (s, d) => {
     val (_, labelsDir) = lpaArtifacts(s, d)
@@ -952,7 +961,18 @@ object Graph extends QueryModule {
     * anti-join's build side (visited) only matters hash-bucketed, never
     * broadcast-whole.
     */
-  val bfsHops: Q = (s, d) => {
+  val bfsHops: Q = (s, d) =>
+    bfsProfile(s, d, "graft_bfs_v", graft.Scratch.Depth(bfsRounds))
+
+  /** The q167/q250 multi-source BFS over the staged adjacency
+    * ([[lpaEdgesDir]]) from the seeds x ≡ 0 (mod [[bfsSeedMod]]), run as
+    * a history loop under `prefix` until `cap` or `settled`: the hop
+    * profile (dist, n_nodes, id_checksum) plus the dist = -1 unreached
+    * bucket. */
+  private def bfsProfile(s: org.apache.spark.sql.SparkSession, d: String,
+      prefix: String, cap: graft.Scratch.Cap,
+      settled: (Int, org.apache.spark.sql.DataFrame) => Boolean = (_, _) => false)
+      : org.apache.spark.sql.DataFrame = {
     val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
     // both directions staged, so src endpoints alone cover every node
     val nodes = ed.select(col("u").as("x")).distinct()
@@ -961,10 +981,10 @@ object Graph extends QueryModule {
     // the LAST slice (a direct leaf read, no filter over the full set),
     // and per-round write volume drops from |visited| to |fresh| — total
     // bytes written over the loop fall from O(rounds·n) to O(n).
-    val dirs = graft.Scratch.iterateAll(s, "graft_bfs_v",
+    val dirs = graft.Scratch.iterateAll(s, prefix,
         nodes.filter(col("x") % bfsSeedMod === 0)
           .select(col("x"), lit(0).as("dist")),
-        graft.Scratch.Depth(bfsRounds)) { (r, frontier, slices) =>
+        cap, settled) { (r, frontier, slices) =>
       val visited = graft.Scratch.read(s, slices: _*)
       val nbrs = ed.join(frontier.select(col("x").as("u")), "u")
         .select(col("v").as("x")).distinct()
@@ -1011,11 +1031,6 @@ object Graph extends QueryModule {
     * spec's convergence pin (last entry 0, all earlier entries > 0). */
   private[graft] def bfsConvergedRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
-    val nodes = ed.select(col("u").as("x")).distinct()
-    // Fresh-slice staging (the bfsHops discipline): only each round's new
-    // nodes are written, the visited set is one multi-path scan over the
-    // slices, and the frontier is the LAST slice.
     // NOTE on the sync mechanism: Dataset.observe(Observation) was tried
     // and REVERTED — Spark 4.1's classic.SparkSession.observationManager
     // is a non-transient lazy val, so the FIRST observe() in a session
@@ -1025,29 +1040,14 @@ object Graph extends QueryModule {
     // instead a count() on the freshly written FRESH slice — parquet
     // footer metadata only, no data scan, and the slice is small.
     val traj = Seq.newBuilder[Long]
-    val dirs = graft.Scratch.iterateAll(s, "graft_bfsc_v",
-        nodes.filter(col("x") % bfsSeedMod === 0)
-          .select(col("x"), lit(0).as("dist")),
+    val profile = bfsProfile(s, d, "graft_bfsc_v",
         graft.Scratch.Converge("q250 BFS", bfsMaxRounds, "bfsMaxRounds"),
         settled = (_, slice) => {
           val frontierN = slice.count()
           traj += frontierN
           frontierN == 0L
-        }) { (r, frontier, slices) =>
-      val visited = graft.Scratch.read(s, slices: _*)
-      val nbrs = ed.join(frontier.select(col("x").as("u")), "u")
-        .select(col("v").as("x")).distinct()
-      nbrs.join(visited, Seq("x"), "left_anti")
-        .select(col("x"), lit(r).as("dist"))
-    }
-    val visited = graft.Scratch.read(s, dirs: _*)
-    val reached = visited.groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"), sum("x").as("id_checksum"))
-    val unreached = nodes.join(visited, Seq("x"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"),
-        coalesce(sum("x"), lit(0L)).as("id_checksum"))
-      .select(lit(-1).as("dist"), col("n_nodes"), col("id_checksum"))
-    (reached.unionByName(unreached).orderBy("dist"), traj.result())
+        })
+    (profile, traj.result())
   }
 
   /** Loud cap for q251's adaptive loop = the oracle's unroll depth
@@ -1125,21 +1125,13 @@ object Graph extends QueryModule {
           lit(row.getLong(2)).as("lbl_checksum"))
         changed == 0L
       }
-    graft.Scratch.iterate(s, "graft_lpac_l",
-        ed.select(col("u").as("node")).distinct()
-          .select(col("node"), col("node").as("lbl")),
+    graft.Scratch.iterate(s, "graft_lpac_l", ownLabels(ed),
         graft.Scratch.Converge("q251 LPA", lpaMaxRounds, "lpaMaxRounds"),
         settled) { (_, prev) =>
       // select the live columns explicitly: rounds ≥ 1 carry the previous
       // round's plbl audit column
       val labels = prev.select("node", "lbl")
-      val next = edp
-        .join(labels.select(col("node").as("v"), col("lbl")), "v")
-        .groupBy(col("u").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("node")
-        .agg(expr("""1000000000000 - (max(cnt * 1000000000000
-               + (1000000000000 - lbl)) % 1000000000000)""").as("lbl"))
+      val next = lpaVote(edp, labels)
       // The previous label rides the staged round as plbl (one keyed join
       // folded into the round's OWN write pass), so the per-round stats
       // sync aggregates the fresh leaf alone; the next round's reader
@@ -1358,19 +1350,27 @@ object Graph extends QueryModule {
     (out, rows.tail.map(_._2._1))
   }
 
+  /** Each node's ball-size estimate `est` from its (node, bucket, m)
+    * register rows: absent registers count as empty (2^33 each in the
+    * harmonic sum), with the small-range linear-counting switch. */
+  private def ballEstimates(regs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    regs.groupBy("node")
+      .agg(count(lit(1)).as("n_present"),
+        sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_present"))
+      .select(col("node"),
+        hllEstimate(col("s_present") +
+          (lit(hllBuckets.toLong) - col("n_present")) * lit(8589934592L)).as("raw"),
+        (lit(hllBuckets.toLong) - col("n_present")).as("n_empty"))
+      .select(col("node"), hllSmallRange.as("est"))
+
   /** The register-propagation loop body (see the q253 Scaladoc). */
   private def hyperBallLoop(s: org.apache.spark.sql.SparkSession,
       d: String): (Vector[(Int, (Long, Long, Long))], Vector[String]) = {
     val ed = graft.Scratch.read(s, lpaEdgesDir(s, d))
-    val k = col("node").cast("string")
-    val init = ed.select(col("u").as("node")).distinct()
-      .select(col("node"),
-        pmod(conv(substring(md5(k), 1, 8), 16, 10).cast("long"),
-          lit(64L)).as("bucket"),
-        conv(substring(md5(k), 9, 8), 16, 10).cast("long").as("w"))
-      .select(col("node"), col("bucket"),
-        when(col("w") === 0, lit(33))
-          .otherwise(lit(33) - length(bin(col("w")))).as("m"))
+    val init = hllRanks(ed.select(col("u").as("node")).distinct(),
+        col("node").cast("string"), "node")
+      .select(col("node"), col("bucket"), col("rho").as("m"))
     // One driver sync per round: the register bank never loses a
     // (node, bucket) key (monotone union), so next ⊇ prev keyed rows and
     // "changed" = rows whose prev value is absent or differs — a LEFT
@@ -1378,20 +1378,8 @@ object Graph extends QueryModule {
     // instead of an anti-join count plus a stats pass.
     def roundStats(regs: org.apache.spark.sql.DataFrame,
         changedCol: org.apache.spark.sql.Column): (Long, Long, Long) = {
-      val nodeEst = regs.groupBy("node")
-        .agg(count(lit(1)).as("n_present"),
-          sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_present"))
-        .select(
-          floor(lit(0.709) * lit(4096.0) * lit(8589934592.0) /
-            (col("s_present") +
-              (lit(64L) - col("n_present")) * lit(8589934592L))
-              .cast("double")).cast("long").as("raw"),
-          (lit(64L) - col("n_present")).as("n_empty"))
-        .select(expr("""CASE WHEN raw <= 160 AND n_empty > 0
-                 THEN CAST(round(64 * ln(CAST(64 AS DOUBLE) / n_empty)) AS BIGINT)
-                 ELSE raw END""").as("est"))
       val row = regs.agg(sum(changedCol).as("ch"), sum("m").as("ck"))
-        .crossJoin(nodeEst.agg(sum("est").as("nf"))).head()
+        .crossJoin(ballEstimates(regs).agg(sum("est").as("nf"))).head()
       (row.getLong(0), row.getLong(1), row.getLong(2))
     }
     var rows = Vector.empty[(Int, (Long, Long, Long))]
@@ -1453,19 +1441,8 @@ object Graph extends QueryModule {
     val (_, dirs) = hyperBallArtifacts(s, d)
     val lastRound = dirs.length - 1
     val perRound = dirs.zipWithIndex.map { case (dir, r) =>
-      graft.Scratch.read(s, dir).groupBy("node")
-        .agg(count(lit(1)).as("n_present"),
-          sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_present"))
-        .select(col("node"), lit(r).as("round"),
-          floor(lit(0.709) * lit(4096.0) * lit(8589934592.0) /
-            (col("s_present") +
-              (lit(64L) - col("n_present")) * lit(8589934592L))
-              .cast("double")).cast("long").as("raw"),
-          (lit(64L) - col("n_present")).as("n_empty"))
-        .select(col("node"), col("round"),
-          expr("""CASE WHEN raw <= 160 AND n_empty > 0
-               THEN CAST(round(64 * ln(CAST(64 AS DOUBLE) / n_empty)) AS BIGINT)
-               ELSE raw END""").as("est"))
+      ballEstimates(graft.Scratch.read(s, dir))
+        .select(col("node"), lit(r).as("round"), col("est"))
     }.reduce(_ unionByName _)
     val byNode = Window.partitionBy("node").orderBy("round")
     perRound

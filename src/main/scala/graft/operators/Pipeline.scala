@@ -492,16 +492,8 @@ object Pipeline extends QueryModule {
     ceScoredCache(d) {
       val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
       val terms = docs.select(col("doc_id"), explode(toks).as("term"))
-      val freq = terms.groupBy("term").agg(count(lit(1)).as("cnt"))
-      val tot = freq.agg(sum("cnt").as("t"))
-      val mu = terms.join(freq, "term").crossJoin(broadcast(tot))
-        .select(col("doc_id"),
-          round(log(col("t").cast("double") / col("cnt")) * 1e6).cast("long")
-            .as("mu"))
-      val per = mu.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("mu").as("sum_mu"))
       graft.Scratch.write("graft_ce_scored",
-        docs.select("doc_id", "source").join(per, Seq("doc_id"))
+        docs.select("doc_id", "source").join(Text.docSurprisal(terms), Seq("doc_id"))
           .select(col("doc_id"), col("source"),
             expr("sum_mu div n_tokens").as("ce_micro")))
     }

@@ -105,14 +105,30 @@ object Similarity extends QueryModule {
     * recall/cost knob. The DuckDB oracle runs the identical blocked
     * algorithm, so the check is exact.
     */
-  val embedNearDup: Q = (s, d) => {
-    val b = base(s, d)
+  val embedNearDup: Q = (s, d) =>
+    bandedScoredPairs(s, d)
+      .filter(col("sim9") >= 0.4)
+      .select(col("v1").as("vec_id_1"), col("v2").as("vec_id_2"),
+        round(col("sim9"), 4).as("sim"))
+      .orderBy("vec_id_1", "vec_id_2")
+
+  /** Each vector's 8 (band, bucket) sign-LSH keys: (vec_id, band, bucket). */
+  private def bandKeys(b: DataFrame): DataFrame = {
     val bandCols = (0 until 8).map { band =>
       struct(lit(band).as("band"), bandBucket(band).as("bucket"))
     }
-    val banded = b
-      .select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+    b.select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("vec_id"), col("bb.band").as("band"),
+        col("bb.bucket").as("bucket"))
+  }
+
+  /** q36's blocked candidates, scored: every distinct pair (v1 < v2) that
+    * shares a (band, bucket) key, with its cosine rounded to 9 dp as
+    * `sim9` (q36 and the q189 kNN-graph build both rank on it). */
+  private def bandedScoredPairs(s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame = {
+    val b = base(s, d)
+    val banded = bandKeys(b)
     val cand = banded.alias("cl").join(banded.alias("cr"),
         col("cl.band") === col("cr.band") &&
           col("cl.bucket") === col("cr.bucket") &&
@@ -130,10 +146,6 @@ object Similarity extends QueryModule {
     // SHJ build side is one id-partitioned embedding slice.
     cand.join(e1.hint("shuffle_hash"), "v1").join(e2.hint("shuffle_hash"), "v2")
       .withColumn("sim9", round(sim, 9))
-      .filter(col("sim9") >= 0.4)
-      .select(col("v1").as("vec_id_1"), col("v2").as("vec_id_2"),
-        round(col("sim9"), 4).as("sim"))
-      .orderBy("vec_id_1", "vec_id_2")
   }
 
   /** q189 — MUTUAL k-NN GRAPH construction: the ANN-graph build step
@@ -167,30 +179,7 @@ object Similarity extends QueryModule {
     * plans q189/q246 execute. */
   private[graft] def knnGraphBuild(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val b = base(s, d)
-    val bandCols = (0 until 8).map { band =>
-      struct(lit(band).as("band"), bandBucket(band).as("bucket"))
-    }
-    val banded = b
-      .select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
-    val cand = banded.alias("cl").join(banded.alias("cr"),
-        col("cl.band") === col("cr.band") &&
-          col("cl.bucket") === col("cr.bucket") &&
-          col("cl.vec_id") < col("cr.vec_id"))
-      .select(col("cl.vec_id").as("v1"), col("cr.vec_id").as("v2"))
-      .distinct()
-    val e1 = b.select(col("vec_id").as("v1"),
-      col("embedding").as("emb1"), col("sq").as("sq1"))
-    val e2 = b.select(col("vec_id").as("v2"),
-      col("embedding").as("emb2"), col("sq").as("sq2"))
-    val sim = cosineWithNorms(dotD(col("emb1"), col("emb2")),
-      col("sq1"), col("sq2"))
-    val scored = cand
-      .join(e1.hint("shuffle_hash"), "v1")
-      .join(e2.hint("shuffle_hash"), "v2")
-      .select(col("v1"), col("v2"), round(sim, 9).as("sim9"))
+    val scored = bandedScoredPairs(s, d).select("v1", "v2", "sim9")
     val directed = scored
       .select(col("v1").as("src"), col("v2").as("dst"), col("sim9"))
       .unionByName(scored
@@ -220,6 +209,42 @@ object Similarity extends QueryModule {
       .orderBy("mutual_degree")
   }
 
+  /** The deterministic head-of-corpus pivot table: the first 64 vectors by
+    * vec_id as (pivot_id, p_emb, p_sq). */
+  private def headPivots(corpus: DataFrame): DataFrame =
+    corpus.filter(col("vec_id") < 64).select(
+      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
+      col("sq").as("p_sq"))
+
+  /** The IVF cell assignment every index here shares: each (vec_id,
+    * embedding, sq) row of `batch` ranked against the broadcast `pivots`
+    * by rounded cosine (`psim9` desc, pivot_id), kept for its `probes`
+    * nearest cells as (vec_id, embedding, sq, cell_id, arn). arn = 1 is
+    * the home cell; `probes` = 1 keeps only it (filtered `arn = 1`). It is
+    * O(n·C) map-side work against a broadcast pivot table, so a caller
+    * that needs it on two sides of a join recomputes it rather than
+    * persisting n·(dim+ids) through a cache.
+    */
+  private[graft] def cellRanks(batch: DataFrame, pivots: DataFrame,
+      probes: Int): DataFrame = {
+    val psim = cosineWithNorms(
+      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
+    val wAssign = Window.partitionBy("vec_id")
+      .orderBy(col("psim9").desc, col("pivot_id"))
+    batch.crossJoin(broadcast(pivots))
+      .withColumn("psim9", round(psim, 9))
+      .withColumn("arn", row_number().over(wAssign))
+      .filter(if (probes == 1) col("arn") === 1 else col("arn") <= probes)
+      .select(col("vec_id"), col("embedding"), col("sq"),
+        col("pivot_id").as("cell_id"), col("arn"))
+  }
+
+  /** [[cellRanks]] for `probes` = 1 without the rank: (vec_id, embedding,
+    * sq, cell_id), one row per vector. */
+  private def homeCells(batch: DataFrame, pivots: DataFrame): DataFrame =
+    cellRanks(batch, pivots, 1)
+      .select(col("vec_id"), col("embedding"), col("sq"), col("cell_id"))
+
   /** IVF core, pivot-source-agnostic: `pivots` is any (pivot_id, p_emb,
     * p_sq) table — the deterministic head-of-corpus pivots q47 uses, or
     * k-means centroids from graft.ml (SimilaritySpec exercises that swap)
@@ -235,21 +260,21 @@ object Similarity extends QueryModule {
   def ivfIndex(corpus: org.apache.spark.sql.DataFrame,
       pivots: org.apache.spark.sql.DataFrame,
       probes: Int,
-      queryIds: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    // arn=1 → home cell (corpus side); arn≤probes → probed cells (query
-    // side). The assignment subtree is recomputed on each side of the
-    // self-join — it is O(n·C) map-side work against a broadcast pivot
-    // table, cheaper than persisting n·(dim+ids) through a cache at scale.
-    val assigned = corpus.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= probes)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"), col("arn"))
+      queryIds: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame =
+    cellNeighbours(corpus, pivots, probes, queryIds, "rn")
+      .filter(col("rn") === 1)
+      .select(col("l.vec_id").as("vec_id"),
+        col("l.cell_id").cast("int").as("cell_id"),
+        col("r.vec_id").as("neighbor_id"), round(col("sim9"), 4).as("sim"))
+      .orderBy("vec_id")
+
+  /** The IVF probe behind [[ivfIndex]] and [[ivfProbeTopK]]: every query
+    * vector's probed cells (l) joined to the corpus vectors homed in them
+    * (r), each candidate with its rounded cosine `sim9` and its rank
+    * (named `rank`) by (sim9 desc, r.vec_id) per query vector. */
+  private def cellNeighbours(corpus: DataFrame, pivots: DataFrame,
+      probes: Int, queryIds: Option[DataFrame], rank: String): DataFrame = {
+    val assigned = cellRanks(corpus, pivots, probes)
     // An optional query-side restriction (q72's audit sample) must land
     // HERE, below the ranking window: no optimizer rule pushes a join
     // through a Window, so a semi-join placed on the RESULT would rank
@@ -268,12 +293,7 @@ object Similarity extends QueryModule {
     l.join(r,
         col("l.cell_id") === col("r.cell_id") && col("l.vec_id") =!= col("r.vec_id"))
       .withColumn("sim9", round(sim, 9))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("l.vec_id").as("vec_id"),
-        col("l.cell_id").cast("int").as("cell_id"),
-        col("r.vec_id").as("neighbor_id"), round(col("sim9"), 4).as("sim"))
-      .orderBy("vec_id")
+      .withColumn(rank, row_number().over(w))
   }
 
   /** q259's dense leg — [[ivfIndex]]'s probe generalized to TOP-K for an
@@ -283,36 +303,12 @@ object Similarity extends QueryModule {
     * ranking, cut at rank ≤ k per query instead of the top-1 neighbor.
     * Returns (q_id, doc_id, rank_dense) — the rank list RRF fusion
     * consumes (it needs RANKS, not scores, so the sim column stays
-    * internal). Kept beside ivfIndex rather than parameterizing it: the
-    * top-1 surface's output schema is oracle-pinned for q47/q72. */
+    * internal). */
   private[graft] def ivfProbeTopK(s: org.apache.spark.sql.SparkSession,
       d: String, queryIds: org.apache.spark.sql.DataFrame,
       k: Int): org.apache.spark.sql.DataFrame = {
     val corpus = base(s, d)
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val assigned = corpus.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= 2)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"), col("arn"))
-    val l = assigned.join(broadcast(queryIds.select(col("q_id"))),
-      col("vec_id") === col("q_id"), "left_semi").alias("l")
-    val r = assigned.filter(col("arn") === 1).alias("r")
-    val sim = cosineWithNorms(
-      dotD(col("l.embedding"), col("r.embedding")), col("l.sq"), col("r.sq"))
-    val w = Window.partitionBy(col("l.vec_id"))
-      .orderBy(col("sim9").desc, col("r.vec_id"))
-    l.join(r,
-        col("l.cell_id") === col("r.cell_id") && col("l.vec_id") =!= col("r.vec_id"))
-      .withColumn("sim9", round(sim, 9))
-      .withColumn("rank_dense", row_number().over(w))
+    cellNeighbours(corpus, headPivots(corpus), 2, Some(queryIds), "rank_dense")
       .filter(col("rank_dense") <= k)
       .select(col("l.vec_id").as("q_id"), col("r.vec_id").as("doc_id"),
         col("rank_dense"))
@@ -325,10 +321,7 @@ object Similarity extends QueryModule {
     */
   val ivfAnn: Q = (s, d) => {
     val corpus = base(s, d)
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    ivfIndex(corpus, pivots, probes = 2)
+    ivfIndex(corpus, headPivots(corpus), probes = 2)
   }
 
   /** Micro-nat log of the q215 cell count: round(10⁶·ln 64). */
@@ -348,18 +341,8 @@ object Similarity extends QueryModule {
     */
   val ivfCoverage: Q = (s, d) => {
     val corpus = base(s, d)
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val home = corpus.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("pivot_id").as("cell_id"))
+    val home = cellRanks(corpus, headPivots(corpus), 1)
+      .select(col("vec_id"), col("cell_id"))
     val occ = home.groupBy("cell_id").agg(count(lit(1)).as("c"))
     // the unpartitioned window runs over the 64-row histogram, never the
     // corpus — cell-bounded by construction
@@ -432,27 +415,39 @@ object Similarity extends QueryModule {
     */
   val annRecall: Q = (s, d) => {
     val corpus = base(s, d)
+    val (sampleIds, sample) = recallSample(corpus)
+    // sample restriction threaded INTO the index below its ranking window
+    // (see ivfIndex) — a semi-join on ivfAnn's output would rank the whole
+    // corpus first
+    val ivf = ivfIndex(corpus, headPivots(corpus), probes = 2,
+        queryIds = Some(sampleIds))
+      .select(col("vec_id").as("q_id"), col("sim").as("ivf_sim"))
+    recallReport(corpus, sample, ivf, "ivf_sim")
+  }
+
+  /** The q72/q246 audit sample: the first [[recallSampleN]] vec_ids by
+    * md5(vec_id) as `q_id`, and those vectors as (q_id, q_emb, q_sq). */
+  private def recallSample(corpus: DataFrame): (DataFrame, DataFrame) = {
     val sampleIds = corpus
       .select(col("vec_id"), md5(col("vec_id").cast("string")).as("rk"))
       .orderBy(col("rk"), col("vec_id")).limit(recallSampleN)
       .select(col("vec_id").as("q_id"))
-    val sample = corpus.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
-      .select(col("q_id"), col("embedding").as("q_emb"), col("sq").as("q_sq"))
+    (sampleIds, corpus.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
+      .select(col("q_id"), col("embedding").as("q_emb"), col("sq").as("q_sq")))
+  }
+
+  /** The q72/q246 recall row: `found` holds each sampled query's top-1
+    * similarity at 4 dp in column `foundSim`; a hit is one at least as
+    * similar as the query's brute-force top-1 over `corpus`. */
+  private def recallReport(corpus: DataFrame, sample: DataFrame,
+      found: DataFrame, foundSim: String): DataFrame = {
     val sim = cosineWithNorms(
       dotD(col("q_emb"), col("embedding")), col("q_sq"), col("sq"))
     val brute = corpus.join(broadcast(sample), col("vec_id") =!= col("q_id"))
       .groupBy("q_id").agg(max(round(sim, 9)).as("bsim9"))
-    // sample restriction threaded INTO the index below its ranking window
-    // (see ivfIndex) — a semi-join on ivfAnn's output would rank the whole
-    // corpus first
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    val ivf = ivfIndex(corpus, pivots, probes = 2, queryIds = Some(sampleIds))
-      .select(col("vec_id").as("q_id"), col("sim").as("ivf_sim"))
-    ivf.join(brute, "q_id")
+    found.join(brute, "q_id")
       .agg(count(lit(1)).as("n_eval"),
-        sum(when(col("ivf_sim") >= round(col("bsim9"), 4), 1L).otherwise(0L))
+        sum(when(col(foundSim) >= round(col("bsim9"), 4), 1L).otherwise(0L))
           .as("n_hits"))
       .select(col("n_eval"), col("n_hits"),
         round(col("n_hits").cast("double") / col("n_eval"), 4).as("recall"))
@@ -562,12 +557,7 @@ object Similarity extends QueryModule {
     */
   val graphAnnRecall: Q = (s, d) => {
     val corpus = base(s, d)
-    val sampleIds = corpus
-      .select(col("vec_id"), md5(col("vec_id").cast("string")).as("rk"))
-      .orderBy(col("rk"), col("vec_id")).limit(recallSampleN)
-      .select(col("vec_id").as("q_id"))
-    val sample = corpus.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
-      .select(col("q_id"), col("embedding").as("q_emb"), col("sq").as("q_sq"))
+    val (sampleIds, sample) = recallSample(corpus)
     val mutual = graft.Scratch.read(s, knnGraphDir(s, d))
     val ed = mutual.select(col("u"), col("v"))
       .unionByName(mutual.select(col("v").as("u"), col("u").as("v")))
@@ -581,13 +571,7 @@ object Similarity extends QueryModule {
       .join(broadcast(sample), "q_id")
       .select(col("q_id"), col("node"), round(qsim, 9).as("sim9"))
     val w = Window.partitionBy("q_id").orderBy(col("sim9").desc, col("node"))
-    val bandCols = (0 until 8).map { band =>
-      struct(lit(band).as("band"), bandBucket(band).as("bucket"))
-    }
-    val bandedC = corpus
-      .select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
+    val bandedC = bandKeys(corpus)
     val qb = bandedC.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
       .select(col("q_id"), col("band"), col("bucket"))
     val routed = bandedC.alias("cb").join(broadcast(qb).alias("qq"),
@@ -621,16 +605,7 @@ object Similarity extends QueryModule {
     val top1 = beam.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("q_id"), round(col("sim9"), 4).as("graph_sim"))
-    val bsim = cosineWithNorms(
-      dotD(col("q_emb"), col("embedding")), col("q_sq"), col("sq"))
-    val brute = corpus.join(broadcast(sample), col("vec_id") =!= col("q_id"))
-      .groupBy("q_id").agg(max(round(bsim, 9)).as("bsim9"))
-    top1.join(brute, "q_id")
-      .agg(count(lit(1)).as("n_eval"),
-        sum(when(col("graph_sim") >= round(col("bsim9"), 4), 1L).otherwise(0L))
-          .as("n_hits"))
-      .select(col("n_eval"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_eval"), 4).as("recall"))
+    recallReport(corpus, sample, top1, "graph_sim")
   }
 
   private val projDims = 8
@@ -725,19 +700,7 @@ object Similarity extends QueryModule {
     */
   val semanticDedup: Q = (s, d) => {
     val corpus = base(s, d)
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val assigned = corpus.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"))
+    val assigned = homeCells(corpus, headPivots(corpus))
     val l = assigned.alias("l")
     val r = assigned.alias("r")
     val sim = cosineWithNorms(
@@ -779,21 +742,9 @@ object Similarity extends QueryModule {
   private def embCorpusIndex(s: org.apache.spark.sql.SparkSession, d: String) = {
     val (pivDir, homeDir) = embIndexCache(d) {
       val corpus = base(s, d).filter(!isDeltaVec)
-      val pp = graft.Scratch.write("graft_ivf_pivots",
-        corpus.filter(col("vec_id") < 64).select(
-          col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-          col("sq").as("p_sq")))
-      val pivots = graft.Scratch.read(s, pp)
-      val psim = cosineWithNorms(
-        dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-      val wAssign = Window.partitionBy("vec_id")
-        .orderBy(col("psim9").desc, col("pivot_id"))
-      (pp, graft.Scratch.write("graft_ivf_cells", corpus.crossJoin(broadcast(pivots))
-        .withColumn("psim9", round(psim, 9))
-        .withColumn("arn", row_number().over(wAssign))
-        .filter(col("arn") === 1)
-        .select(col("vec_id"), col("embedding"), col("sq"),
-          col("pivot_id").as("cell_id"))))
+      val pp = graft.Scratch.write("graft_ivf_pivots", headPivots(corpus))
+      (pp, graft.Scratch.write("graft_ivf_cells",
+        homeCells(corpus, graft.Scratch.read(s, pp))))
     }
     (graft.Scratch.read(s, pivDir), graft.Scratch.read(s, homeDir))
   }
@@ -818,16 +769,7 @@ object Similarity extends QueryModule {
       pivots: org.apache.spark.sql.DataFrame,
       home: org.apache.spark.sql.DataFrame,
       probes: Int): org.apache.spark.sql.DataFrame = {
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val probed = batch.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= probes)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"), col("arn"))
+    val probed = cellRanks(batch, pivots, probes)
     val l = probed.alias("l")
     val r = home.alias("r")
     val sim = cosineWithNorms(
@@ -886,17 +828,8 @@ object Similarity extends QueryModule {
     */
   val semanticDecontam: Q = (s, d) => {
     val (pivots, home) = embCorpusIndex(s, d)
-    val evalQ = base(s, d).filter(isDeltaVec)
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val probed = evalQ.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= 2)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"))
+    val probed = cellRanks(base(s, d).filter(isDeltaVec), pivots, 2)
+      .select(col("vec_id"), col("embedding"), col("sq"), col("cell_id"))
     val l = probed.alias("l")
     val r = home.alias("r")
     val sim = cosineWithNorms(
@@ -961,16 +894,8 @@ object Similarity extends QueryModule {
     */
   val ivfDrift: Q = (s, d) => {
     val (pivots, home) = embCorpusIndex(s, d)
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val deltaHome = base(s, d).filter(isDeltaVec)
-      .crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding"), col("pivot_id").as("cell_id"))
+    val deltaHome = cellRanks(base(s, d).filter(isDeltaVec), pivots, 1)
+      .select(col("vec_id"), col("embedding"), col("cell_id"))
     def cellStats(df: org.apache.spark.sql.DataFrame) = df
       .select(col("cell_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
       .select(col("cell_id"), col("dim"),
@@ -1017,19 +942,7 @@ object Similarity extends QueryModule {
     */
   val semanticClusters: Q = (s, d) => {
     val corpus = base(s, d)
-    val pivots = corpus.filter(col("vec_id") < 64).select(
-      col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-      col("sq").as("p_sq"))
-    val psim = cosineWithNorms(
-      dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-    val wAssign = Window.partitionBy("vec_id")
-      .orderBy(col("psim9").desc, col("pivot_id"))
-    val assigned = corpus.crossJoin(broadcast(pivots))
-      .withColumn("psim9", round(psim, 9))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("embedding"), col("sq"),
-        col("pivot_id").as("cell_id"))
+    val assigned = homeCells(corpus, headPivots(corpus))
     val l = assigned.alias("l")
     val r = assigned.alias("r")
     val sim = cosineWithNorms(
@@ -1261,19 +1174,7 @@ object Similarity extends QueryModule {
       d: String): String =
     homeCellsCache(d) {
       val corpus = base(s, d)
-      val pivots = corpus.filter(col("vec_id") < 64).select(
-        col("vec_id").as("pivot_id"), col("embedding").as("p_emb"),
-        col("sq").as("p_sq"))
-      val psim = cosineWithNorms(
-        dotD(col("embedding"), col("p_emb")), col("sq"), col("p_sq"))
-      val wAssign = Window.partitionBy("vec_id")
-        .orderBy(col("psim9").desc, col("pivot_id"))
-      graft.Scratch.write("graft_home_cells", corpus.crossJoin(broadcast(pivots))
-        .withColumn("psim9", round(psim, 9))
-        .withColumn("arn", row_number().over(wAssign))
-        .filter(col("arn") === 1)
-        .select(col("vec_id"), col("embedding"), col("sq"),
-          col("pivot_id").as("cell_id")))
+      graft.Scratch.write("graft_home_cells", homeCells(corpus, headPivots(corpus)))
     }
 
   val tripletMining: Q = (s, d) => {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OracleSql, Q, QueryModule}
+import graft.functions.Hashing.{hllBuckets, hllEstimate, hllNEmpty, hllRanks, hllSInv, hllSmallRange}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -90,8 +91,6 @@ object Stats extends QueryModule {
       .orderBy(col("n").desc, col("key"))
   }
 
-  private val hllBuckets = 64
-
   /** q105 — deterministic HyperLogLog distinct-count sketch (the second
     * mergeable sketch next to q80's count-min: CMS answers "how often",
     * HLL answers "how many distinct" in O(m) space no matter how many keys
@@ -108,28 +107,17 @@ object Stats extends QueryModule {
     */
   val hllDistinct: Q = (s, d) => {
     val keyed = Tables.orders(s, d).select(col("o_custkey").cast("string").as("k"))
-    val hashed = keyed.select(
-      pmod(conv(substring(md5(col("k")), 1, 8), 16, 10).cast("long"),
-        lit(hllBuckets.toLong)).as("bucket"),
-      conv(substring(md5(col("k")), 9, 8), 16, 10).cast("long").as("w"))
-    val rho = when(col("w") === 0, lit(33))
-      .otherwise(lit(33) - length(bin(col("w"))))
-    val regs = hashed.withColumn("rho", rho)
+    val regs = hllRanks(keyed, col("k"))
       .groupBy("bucket").agg(max("rho").as("m"))
     // empty buckets carry register 0 — materialize all m of them
     val full = s.range(0, hllBuckets).select(col("id").as("bucket"))
       .join(regs, Seq("bucket"), "left")
       .select(coalesce(col("m"), lit(0)).as("m"))
-    val sketch = full.agg(
-      // sum(2^(33-m)) as exact integers: m ≤ 33 so every term is integral
-      sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
-      sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
+    val sketch = full.agg(hllSInv, hllNEmpty)
     val exact = keyed.agg(countDistinct("k").as("n_exact"))
     exact.crossJoin(broadcast(sketch))
       .select(col("n_exact"), col("n_empty"),
-        // alpha_64 = 0.709; numerator = alpha * m^2 * 2^33
-        floor(lit(0.709) * lit(4096.0) * lit(8589934592.0)
-          / col("s_inv").cast("double")).cast("long").as("hll_est"))
+        hllEstimate(col("s_inv")).as("hll_est"))
   }
 
   private val qsBins = 256L
@@ -262,7 +250,19 @@ object Stats extends QueryModule {
     * group, and the exact group count rides along from one map-side-
     * combining aggregate.
     */
-  val groupedRankSketch: Q = (s, d) => {
+  val groupedRankSketch: Q = (s, d) =>
+    groupedSampleRanks(s, d)
+      .groupBy("lang").agg(
+        max("n_docs").as("n_docs"),
+        min(when(col("r") === expr("(m + 1) div 2"), col("v"))).as("est_p50"),
+        min(when(col("r") === expr("(m * 9 + 9) div 10"), col("v"))).as("est_p90"))
+      .orderBy("lang")
+
+  /** The q133/q140 per-language bottom-k sample, ranked: each sampled
+    * (lang, v) with its rank r by v, the language's n_docs, and the
+    * sample size m = least(k, n_docs). */
+  private def groupedSampleRanks(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val rows = Tables.documents(s, d).select(
       col("lang"),
@@ -277,11 +277,6 @@ object Stats extends QueryModule {
     val sizes = rows.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     ranked.join(broadcast(sizes), "lang")
       .withColumn("m", least(lit(grkK.toLong), col("n_docs")))
-      .groupBy("lang").agg(
-        max("n_docs").as("n_docs"),
-        min(when(col("r") === expr("(m + 1) div 2"), col("v"))).as("est_p50"),
-        min(when(col("r") === expr("(m * 9 + 9) div 10"), col("v"))).as("est_p90"))
-      .orderBy("lang")
   }
 
   /** q137 — q133 through the native [[graft.functions.BottomKSorted]]
@@ -324,20 +319,7 @@ object Stats extends QueryModule {
     * map-side against broadcast thresholds, no shuffle of the corpus.
     */
   val sketchThresholdFilter: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val rows = Tables.documents(s, d).select(
-      col("lang"),
-      col("n_chars").cast("long").as("v"),
-      md5(concat_ws("_", col("lang"), col("doc_id"))).as("hh"))
-    val samp = rows
-      .withColumn("sn", row_number().over(Window.partitionBy("lang").orderBy("hh", "v")))
-      .filter(col("sn") <= grkK)
-    val ranked = samp.select(col("lang"), col("v"))
-      .withColumn("r",
-        row_number().over(Window.partitionBy("lang").orderBy("v")).cast("long"))
-    val sizes = rows.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-    val thresholds = ranked.join(broadcast(sizes), "lang")
-      .withColumn("m", least(lit(grkK.toLong), col("n_docs")))
+    val thresholds = groupedSampleRanks(s, d)
       .groupBy("lang").agg(
         min(when(col("r") === expr("(m + 3) div 4"), col("v"))).as("p25"))
     Tables.documents(s, d)
@@ -364,22 +346,14 @@ object Stats extends QueryModule {
   val groupedHll: Q = (s, d) => {
     val keyed = Tables.events(s, d)
       .select(col("event_type").as("g"), col("user_id").cast("string").as("k"))
-    val hashed = keyed.select(col("g"),
-      pmod(conv(substring(md5(col("k")), 1, 8), 16, 10).cast("long"),
-        lit(hllBuckets.toLong)).as("bucket"),
-      conv(substring(md5(col("k")), 9, 8), 16, 10).cast("long").as("w"))
-    val rho = when(col("w") === 0, lit(33))
-      .otherwise(lit(33) - length(bin(col("w"))))
-    val regs = hashed.withColumn("rho", rho)
+    val regs = hllRanks(keyed, col("k"), "g")
       .groupBy("g", "bucket").agg(max("rho").as("m"))
     val groups = keyed.select("g").distinct()
     val full = groups
       .crossJoin(broadcast(s.range(0, hllBuckets).select(col("id").as("bucket"))))
       .join(regs, Seq("g", "bucket"), "left")
       .select(col("g"), coalesce(col("m"), lit(0)).as("m"))
-    val sketch = full.groupBy("g").agg(
-      sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
-      sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
+    val sketch = full.groupBy("g").agg(hllSInv, hllNEmpty)
     val exact = keyed.groupBy("g").agg(countDistinct("k").as("n_exact"))
     // n_empty rides along because per-group cardinalities can sit in HLL's
     // small range (n ≲ 2.5m), where the harmonic estimate is biased and a
@@ -389,8 +363,7 @@ object Stats extends QueryModule {
     // lives with the reader (AnalyticsSpec applies and band-checks it)
     exact.join(sketch, "g")
       .select(col("g").as("event_type"), col("n_exact"), col("n_empty"),
-        floor(lit(0.709) * lit(4096.0) * lit(8589934592.0)
-          / col("s_inv").cast("double")).cast("long").as("hll_est"))
+        hllEstimate(col("s_inv")).as("hll_est"))
       .orderBy("event_type")
   }
 
@@ -454,14 +427,8 @@ object Stats extends QueryModule {
       to_date(col("ts")).as("day"),
       date_trunc("month", col("ts")).cast("date").as("month"),
       col("user_id").cast("string").as("k"))
-    val hashed = e.select(col("day"), col("month"),
-      pmod(conv(substring(md5(col("k")), 1, 8), 16, 10).cast("long"),
-        lit(hllBuckets.toLong)).as("bucket"),
-      conv(substring(md5(col("k")), 9, 8), 16, 10).cast("long").as("w"))
-    val rho = when(col("w") === 0, lit(33))
-      .otherwise(lit(33) - length(bin(col("w"))))
     // the stored artifact: one register bank per (month, day)
-    val daily = hashed.withColumn("rho", rho)
+    val daily = hllRanks(e, col("k"), "day", "month")
       .groupBy("month", "day", "bucket").agg(max("rho").as("m"))
     // the rollup: months re-aggregate from daily partials alone
     val monthly = daily.groupBy("month", "bucket").agg(max("m").as("m"))
@@ -470,15 +437,12 @@ object Stats extends QueryModule {
       .crossJoin(broadcast(s.range(0, hllBuckets).select(col("id").as("bucket"))))
       .join(monthly, Seq("month", "bucket"), "left")
       .select(col("month"), coalesce(col("m"), lit(0)).as("m"))
-    val sketch = full.groupBy("month").agg(
-      sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
-      sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
+    val sketch = full.groupBy("month").agg(hllSInv, hllNEmpty)
     val exact = e.groupBy("month").agg(
       countDistinct("day").as("n_days"), countDistinct("k").as("n_exact"))
     exact.join(sketch, "month")
       .select(col("month"), col("n_days"), col("n_exact"), col("n_empty"),
-        floor(lit(0.709) * lit(4096.0) * lit(8589934592.0)
-          / col("s_inv").cast("double")).cast("long").as("hll_est"))
+        hllEstimate(col("s_inv")).as("hll_est"))
       .orderBy("month")
   }
 
@@ -502,10 +466,9 @@ object Stats extends QueryModule {
     exact.crossJoin(broadcast(regs))
       .select(col("n_exact"),
         size(filter(col("regs"), r => r === 0)).cast("long").as("n_empty"),
-        floor(lit(0.709) * lit(4096.0) * lit(8589934592.0) /
-          expr("aggregate(regs, 0L, (acc, r) -> acc + shiftleft(1L, 33 - r))")
-            .cast("double"))
-          .cast("long").as("hll_est"))
+        hllEstimate(
+          expr("aggregate(regs, 0L, (acc, r) -> acc + shiftleft(1L, 33 - r))"))
+          .as("hll_est"))
   }
 
   /** The deterministically skewed key stream q142 mines: two hot keys
@@ -701,13 +664,7 @@ object Stats extends QueryModule {
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type").as("st"), col("user_id").cast("string").as("k"))
-    val hashed = ev.select(col("st"),
-      pmod(conv(substring(md5(col("k")), 1, 8), 16, 10).cast("long"),
-        lit(hllBuckets.toLong)).as("bucket"),
-      conv(substring(md5(col("k")), 9, 8), 16, 10).cast("long").as("w"))
-    val rho = when(col("w") === 0, lit(33))
-      .otherwise(lit(33) - length(bin(col("w"))))
-    val regs = hashed.withColumn("rho", rho)
+    val regs = hllRanks(ev, col("k"), "st")
       .groupBy("st", "bucket").agg(max("rho").as("m"))
     val unionRegs = regs.groupBy("bucket").agg(max("m").as("m"))
       .select(lit("union").as("st"), col("bucket"), col("m"))
@@ -717,20 +674,12 @@ object Stats extends QueryModule {
       .join(regs.select("st", "bucket", "m").union(unionRegs),
         Seq("st", "bucket"), "left")
       .select(col("st"), coalesce(col("m"), lit(0)).as("m"))
-    val ests = banks.groupBy("st")
-      .agg(sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
-        sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
-      .select(col("st"),
-        floor(lit(0.709) * lit(4096.0) * lit(8589934592.0)
-          / col("s_inv").cast("double")).cast("long").as("raw"),
-        col("n_empty"))
+    val ests = banks.groupBy("st").agg(hllSInv, hllNEmpty)
+      .select(col("st"), hllEstimate(col("s_inv")).as("raw"), col("n_empty"))
       // small-range (linear counting) correction — the standard HLL
       // regime switch: below 2.5m the raw harmonic estimator is biased
       // high and the empty-register count carries the information
-      .select(col("st"),
-        expr("""CASE WHEN raw <= 160 AND n_empty > 0
-                 THEN CAST(round(64 * ln(CAST(64 AS DOUBLE) / n_empty)) AS BIGINT)
-                 ELSE raw END""").as("est"))
+      .select(col("st"), hllSmallRange.as("est"))
       .groupBy()
       .agg(max(when(col("st") === "click", col("est"))).as("est_click"),
         max(when(col("st") === "purchase", col("est"))).as("est_purchase"),
@@ -1335,8 +1284,15 @@ object Stats extends QueryModule {
     * string so the ALL row needs no date sentinel (ASCII 'A' sorts
     * after digits identically in both engines).
     */
-  val srmAudit: Q = (s, d) => {
-    cupedLeaf(s, d).rollup("d0")
+  val srmAudit: Q = (s, d) => srmReport(cupedLeaf(s, d))
+
+  /** The q331/q340 report over (user, arm, d0 = assignment day) rows: the
+    * per-day split with its χ² in micro-units, the ALL rollup row, and the
+    * `srm` flag. q340's stream folds into this same tail, so its parity
+    * with q331 is built, not asserted. */
+  private[graft] def srmReport(assigned: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    assigned.rollup("d0")
       .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_control"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_treat"))
       .select(coalesce(col("d0").cast("string"), lit("ALL")).as("day"),
@@ -1346,7 +1302,6 @@ object Stats extends QueryModule {
                 div (n_control + n_treat) AS BIGINT)""").as("chi2_micro"))
       .withColumn("srm", col("chi2_micro") > chiCritMicro)
       .orderBy("day")
-  }
 
   /** Sign-safe toward-zero BigInt division (Spark's `div` and DuckDB's
     * `//` truncate toward zero only for non-negative operands in the
@@ -4460,6 +4415,26 @@ object Stats extends QueryModule {
     * q306 (a mean-reverting series is forecast best by its mean). */
   private[graft] val arBandZSq = 4L
 
+  /** The sample ACF the AR, MA and ARMA passes share (the q307 integer
+    * formula): the series values c, μ = Σc div n, the deviations c − μ,
+    * and ρ_1..ρ_min(acfMaxLag, n−1) in ppm (sign-safe toward-zero; empty
+    * for a constant series). */
+  private def acfPpm(series: Array[(Long, Long)])
+      : (Array[Long], Long, Array[Long], IndexedSeq[Long]) = {
+    val n = series.length
+    val c = series.map(_._2)
+    val mu = (c.map(BigInt(_)).sum / n).toLong
+    val dv = c.map(_ - mu)
+    val den = dv.map(x => BigInt(x) * x).sum
+    val rho: IndexedSeq[Long] =
+      if (den <= 0) IndexedSeq.empty
+      else (1 to math.min(acfMaxLag, n - 1)).map { k =>
+        val num = (0 until n - k).map(t => BigInt(dv(t)) * dv(t + k)).sum
+        ((num * 1000000) / den).toLong // BigInt / truncates toward zero
+      }
+    (c, mu, dv, rho)
+  }
+
   /** The q319 AR fit + forecasts as ONE shared pass (q306's backtest
     * replays it — the holtPass/hwPass no-drift discipline): sample ACF
     * in ppm (the q307 integer formula: μ = Σc div n, deviation
@@ -4478,16 +4453,7 @@ object Stats extends QueryModule {
       : (Int, Vector[Long], Vector[(Long, Long, Long, Long)],
          Vector[Long]) = {
     val n = series.length
-    val c = series.map(_._2)
-    val mu = (c.map(BigInt(_)).sum / n).toLong
-    val dv = c.map(_ - mu)
-    val den = dv.map(x => BigInt(x) * x).sum
-    val rho: IndexedSeq[Long] =
-      if (den <= 0) IndexedSeq.empty
-      else (1 to math.min(acfMaxLag, n - 1)).map { k =>
-        val num = (0 until n - k).map(t => BigInt(dv(t)) * dv(t + k)).sum
-        ((num * 1000000) / den).toLong // BigInt / truncates toward zero
-      }
+    val (c, mu, dv, rho) = acfPpm(series)
     val steps = durbinLevinson(rho)
     val sel = steps.collect { case (k, phi, _)
       if BigInt(phi.last) * phi.last * n >= BigInt(arBandZSq) *
@@ -4592,16 +4558,7 @@ object Stats extends QueryModule {
       : (Int, Vector[Long], Vector[(Long, Long, Long, Long)],
          Vector[Long]) = {
     val n = series.length
-    val c = series.map(_._2)
-    val mu = (c.map(BigInt(_)).sum / n).toLong
-    val dv = c.map(_ - mu)
-    val den = dv.map(x => BigInt(x) * x).sum
-    val rho: IndexedSeq[Long] =
-      if (den <= 0) IndexedSeq.empty
-      else (1 to math.min(acfMaxLag, n - 1)).map { k =>
-        val num = (0 until n - k).map(t => BigInt(dv(t)) * dv(t + k)).sum
-        ((num * 1000000) / den).toLong
-      }
+    val (c, mu, _, rho) = acfPpm(series)
     val sel = (1 to rho.length).filter(k =>
       BigInt(rho(k - 1)) * rho(k - 1) * n >= BigInt(arBandZSq) *
         BigInt(1000000L) * 1000000L)
@@ -4731,16 +4688,7 @@ object Stats extends QueryModule {
       : Either[Int, (Int, (Long, Long, Long),
          IndexedSeq[(Long, Long, Long, Long)], IndexedSeq[Long])] = {
     val n = series.length
-    val c = series.map(_._2)
-    val mu = (c.map(BigInt(_)).sum / n).toLong
-    val dv = c.map(_ - mu)
-    val den = dv.map(x => BigInt(x) * x).sum
-    val rho: IndexedSeq[Long] =
-      if (den <= 0) IndexedSeq.empty
-      else (1 to math.min(acfMaxLag, n - 1)).map { k =>
-        val num = (0 until n - k).map(t => BigInt(dv(t)) * dv(t + k)).sum
-        ((num * 1000000) / den).toLong
-      }
+    val (c, mu, dv, rho) = acfPpm(series)
     val steps = durbinLevinson(rho)
     if (steps.isEmpty)
       // constant/degenerate series: no AR stage exists — the loud
@@ -5641,35 +5589,8 @@ object Stats extends QueryModule {
       // the q319 AR chain (a-prefixed to keep CTE names disjoint from
       // the smoother recursions): ACF -> Durbin-Levinson -> PACF-cutoff
       // order -> in-sample residuals for the shared scored window
-      val apk = OracleSql.arPacfStep
-      s"""WITH RECURSIVE ${OracleSql.hwMonthlySeries},
-         |${OracleSql.arAcfInputs},
-         |aacf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
-         |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
-         |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM aden)
-         |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
-         |        // (SELECT dn FROM aden))
-         |      END AS BIGINT) AS acf_ppm
-         |  FROM adev a JOIN adev b
-         |    ON b.m > a.m AND b.m <= a.m + $acfMaxLag
-         |  WHERE (SELECT dn FROM aden) > 0
-         |  GROUP BY 1),
-         |arr AS MATERIALIZED (SELECT
-         |    list(CAST(acf_ppm AS HUGEINT) ORDER BY lag) AS rho,
-         |    count(*) AS nl FROM aacf),
-         |ait(k, phi, v) AS (
-         |  SELECT 1, [arr.rho[1]],
-         |    CAST(1000000 AS HUGEINT) - (arr.rho[1] * arr.rho[1]) // 1000000
-         |  FROM arr WHERE arr.nl >= 1
-         |  UNION ALL
-         |  SELECT ait.k + 1,
-         |    list_transform(range(1, ait.k + 1),
-         |      j -> ait.phi[j] - ($apk * ait.phi[ait.k + 1 - j]) // 1000000)
-         |      || [$apk],
-         |    (ait.v * (1000000 - ($apk * $apk) // 1000000)) // 1000000
-         |  FROM ait, arr
-         |  WHERE ait.k < $acfMaxLag AND ait.v > 0 AND ait.k < arr.nl),
-         |${OracleSql.arOrderPhis},
+      s"""WITH RECURSIVE ${OracleSql.monthlySeries},
+         |${OracleSql.arFit},
          |ainss AS (SELECT x.m AS m, sum(p2.ph * l.dv) AS ss
          |  FROM monthly x
          |  JOIN aphis p2 ON TRUE
@@ -5758,7 +5679,7 @@ object Stats extends QueryModule {
       // the level update, spliced where b'/seas' reference it — SQL has
       // no let-binding inside a recursive step
       val l1 = OracleSql.hwLevelUpdate
-      s"""WITH RECURSIVE ${OracleSql.hwMonthlySeries},
+      s"""WITH RECURSIVE ${OracleSql.monthlySeries},
          |${OracleSql.hwSeasonInit},
          |it(t, s, b, q, sh, f) AS (
          |  SELECT CAST(${hwPeriod - 1} AS BIGINT), init.l0, init.b0,
@@ -6080,37 +6001,11 @@ object Stats extends QueryModule {
     // the residual ACF in the same sign-safe ppm, each Q term truncated
     // once, the chi-square criticals as the identical literal CASE
     "q323_ljung_box" -> {
-      val apk = OracleSql.arPacfStep
       val critCase = (1 to 12)
         .map(d => s"WHEN $d THEN ${chi2Crit95Micro(d)}")
         .mkString(" ")
       s"""WITH RECURSIVE ${OracleSql.monthlySeries},
-         |${OracleSql.arAcfInputs},
-         |aacf AS (SELECT CAST(b.m - a.m AS INT) AS lag,
-         |    CAST(CASE WHEN sum(a.dv * b.dv) >= 0
-         |      THEN (sum(a.dv * b.dv) * 1000000) // (SELECT dn FROM aden)
-         |      ELSE -(((-sum(a.dv * b.dv)) * 1000000)
-         |        // (SELECT dn FROM aden))
-         |      END AS BIGINT) AS acf_ppm
-         |  FROM adev a JOIN adev b
-         |    ON b.m > a.m AND b.m <= a.m + $acfMaxLag
-         |  WHERE (SELECT dn FROM aden) > 0 GROUP BY 1),
-         |arr AS MATERIALIZED (SELECT
-         |    list(CAST(acf_ppm AS HUGEINT) ORDER BY lag) AS rho,
-         |    count(*) AS nl FROM aacf),
-         |ait(k, phi, v) AS (
-         |  SELECT 1, [arr.rho[1]],
-         |    CAST(1000000 AS HUGEINT) - (arr.rho[1] * arr.rho[1]) // 1000000
-         |  FROM arr WHERE arr.nl >= 1
-         |  UNION ALL
-         |  SELECT ait.k + 1,
-         |    list_transform(range(1, ait.k + 1),
-         |      j -> ait.phi[j] - ($apk * ait.phi[ait.k + 1 - j]) // 1000000)
-         |      || [$apk],
-         |    (ait.v * (1000000 - ($apk * $apk) // 1000000)) // 1000000
-         |  FROM ait, arr
-         |  WHERE ait.k < $acfMaxLag AND ait.v > 0 AND ait.k < arr.nl),
-         |${OracleSql.arOrderPhis},
+         |${OracleSql.arFit},
          |ainss AS (SELECT x.m AS m, sum(p2.ph * l.dv) AS ss
          |  FROM monthly x JOIN aphis p2 ON TRUE
          |  JOIN adev l ON l.m = x.m - p2.j GROUP BY x.m),
@@ -6637,7 +6532,7 @@ object Stats extends QueryModule {
     // the same per-user diffs, arm moments, micro means, and corrected
     // floor-sqrt z — per-user differencing in BOTH engines
     "q347_diff_in_diff" ->
-      s"""WITH ${OracleSql.purchaseSplitEventsWrapped},
+      s"""WITH ${OracleSql.purchaseSplitEvents},
          |${OracleSql.cupedUsers},
          |pa AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
          |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -7269,7 +7164,7 @@ object Stats extends QueryModule {
     // the same per-arm conditional cumulatives on the one ordered
     // histogram and the identical nearest-rank inequality per decile
     "q345_quantile_effects" ->
-      s"""WITH ${OracleSql.purchaseSplitEventsWrapped},
+      s"""WITH ${OracleSql.purchaseSplitEvents},
          |${OracleSql.postPeriodUsers},
          |h AS (SELECT y,
          |    CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)

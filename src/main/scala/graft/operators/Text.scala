@@ -258,15 +258,30 @@ object Text extends QueryModule {
     */
   val skipgramLift: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val tok = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"),
-        posexplode(filter(toks, x => length(x) > 0)).as(Seq("pos", "t")))
+    val tok = positionedTokens(s, d)
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val pairs = tok
       .select(col("t").as("a"), array(
         (1 to skipWindow).map(k => lead("t", k).over(w)): _*).as("bs"))
       .select(col("a"), explode(col("bs")).as("b"))
       .filter(col("b").isNotNull)
+    pairLift(tok, pairs).limit(30)
+  }
+
+  /** Every document's non-empty tokens with their positions: (doc_id,
+    * pos, t). */
+  private def positionedTokens(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.fanOut(Tables.documents(s, d), "doc_id")
+      .select(col("doc_id"),
+        posexplode(filter(toks, x => length(x) > 0)).as(Seq("pos", "t")))
+
+  /** The q146/q230 association lift: each token pair (a, b) of `pairs`
+    * seen at least 5 times, with its integer-ppm lift c_ab·N / (c_a·c_b)
+    * against the unigram counts of `tok` (N = the pair count; DECIMAL(38)
+    * products), ordered by lift desc, a, b. */
+  private def pairLift(tok: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val cab = pairs.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
       .filter(col("c_ab") >= 5)
     val un = tok.groupBy("t").agg(count(lit(1)).as("c"))
@@ -280,7 +295,6 @@ object Text extends QueryModule {
                  div (CAST(c_a AS DECIMAL(38,0)) * c_b) AS BIGINT)""")
           .as("lift_ppm"))
       .orderBy(col("lift_ppm").desc, col("a"), col("b"))
-      .limit(30)
   }
 
   /** q231 — per-source KL DIVERGENCE from the corpus unigram model: the
@@ -870,16 +884,24 @@ object Text extends QueryModule {
     * the standard n-gram-overlap contamination pass, linear in corpus
     * size. Window of 8 tokens ≈ the 8–13-gram range used in practice.
     */
-  val decontaminate: Q = (s, d) => {
+  /** Every document's 8-token windows of non-empty tokens, md5-hashed, as
+    * (doc_id, sh): q74/q99/q240's shingles, and q120/q181/q199's shingle
+    * sets once made distinct. */
+  private def shingleHashes(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame = {
     val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
     // guard: sequence(1, n) DESCENDS for n < 1 ([1, 0]), it is not empty —
     // a document with < 8 tokens must yield zero shingles, not garbage
     val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
       .otherwise(array().cast("array<int>"))
-    val shingled = t.select(col("doc_id"),
+    t.select(col("doc_id"),
       explode(transform(idx,
         i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
+  }
+
+  val decontaminate: Q = (s, d) => {
+    val shingled = shingleHashes(s, d)
     val bench = shingled.filter(col("doc_id") < 10)
       .select(col("sh")).distinct()
     val hits = shingled.filter(col("doc_id") >= 10).alias("c")
@@ -918,13 +940,7 @@ object Text extends QueryModule {
     * extra md5 walks over every corpus shingle, the dominant CPU term.
     */
   val bloomFilter: Q = (s, d) => {
-    val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
-    val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
-      .otherwise(array().cast("array<int>"))
-    val shingled = t.select(col("doc_id"),
-      explode(transform(idx,
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
+    val shingled = shingleHashes(s, d)
     def positions(sh: org.apache.spark.sql.Column) =
       array((0 until bloomK).map(j =>
         conv(substring(sh, j * 4 + 1, 4), 16, 10).cast("long")): _*)
@@ -983,14 +999,7 @@ object Text extends QueryModule {
     */
   val prefixJoin: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
-    val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
-      .otherwise(array().cast("array<int>"))
-    val shingles = t.select(col("doc_id"),
-      explode(transform(idx,
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
-      .distinct()
+    val shingles = shingleHashes(s, d).distinct()
     val freq = shingles.groupBy("sh").agg(count(lit(1)).as("f"))
     val wN = Window.partitionBy("doc_id")
     val wRk = Window.partitionBy("doc_id").orderBy(col("f"), col("sh"))
@@ -1063,16 +1072,7 @@ object Text extends QueryModule {
     val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
     val terms = docs.select(col("doc_id"),
       explode(filter(toks, t => length(t) > 0)).as("term"))
-    val freq = terms.groupBy("term").agg(count(lit(1)).as("cnt"))
-    // total tokens = Σ cnt over the (vocabulary-sized) frequency table —
-    // NOT a third tokenization pass over the corpus
-    val tot = freq.agg(sum("cnt").as("t"))
-    val mu = terms.join(freq, "term").crossJoin(broadcast(tot))
-      .select(col("doc_id"),
-        round(log(col("t").cast("double") / col("cnt")) * 1e6).cast("long")
-          .as("mu"))
-    val per = mu.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"), sum("mu").as("sum_mu"))
+    val per = docSurprisal(terms)
     docs.select(col("doc_id")).join(per, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -1080,6 +1080,23 @@ object Text extends QueryModule {
           greatest(coalesce(col("n_tokens"), lit(0L)), lit(1L)).cast("double"), 6)
           .as("cross_entropy"))
       .orderBy("doc_id")
+  }
+
+  /** Per-document unigram surprisal under the corpus model that `terms`
+    * (doc_id, term) itself defines: (doc_id, n_tokens, sum_mu), each
+    * token's −ln p rounded to integer micro-nats (q94's discipline). */
+  private[graft] def docSurprisal(terms: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val freq = terms.groupBy("term").agg(count(lit(1)).as("cnt"))
+    // total tokens = Σ cnt over the (vocabulary-sized) frequency table —
+    // NOT a third tokenization pass over the corpus
+    val tot = freq.agg(sum("cnt").as("t"))
+    terms.join(freq, "term").crossJoin(broadcast(tot))
+      .select(col("doc_id"),
+        round(log(col("t").cast("double") / col("cnt")) * 1e6).cast("long")
+          .as("mu"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tokens"), sum("mu").as("sum_mu"))
   }
 
   /** q205 df-cutoff: terms in more documents than this carry near-zero
@@ -1208,27 +1225,12 @@ object Text extends QueryModule {
     */
   val collocations: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val tok = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"),
-        posexplode(filter(toks, x => length(x) > 0)).as(Seq("pos", "t")))
+    val tok = positionedTokens(s, d)
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val bg = tok
       .select(col("t").as("a"), lead("t", 1).over(w).as("b"))
       .filter(col("b").isNotNull)
-    val cab = bg.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= 5)
-    val un = tok.groupBy("t").agg(count(lit(1)).as("c"))
-    val n = bg.agg(count(lit(1)).as("nn"))
-    cab
-      .join(un.select(col("t").as("a"), col("c").as("c_a")), "a")
-      .join(un.select(col("t").as("b"), col("c").as("c_b")), "b")
-      .crossJoin(broadcast(n))
-      .select(col("a"), col("b"), col("c_ab"),
-        expr("""CAST((CAST(c_ab AS DECIMAL(38,0)) * 1000000 * nn)
-                 div (CAST(c_a AS DECIMAL(38,0)) * c_b) AS BIGINT)""")
-          .as("lift_ppm"))
-      .orderBy(col("lift_ppm").desc, col("a"), col("b"))
-      .limit(50)
+    pairLift(tok, bg).limit(50)
   }
 
   /** q149 — BM25 ranked retrieval (k1=1.2, b=0.75): the scoring layer on
@@ -2210,14 +2212,8 @@ object Text extends QueryModule {
     val fpHits = fps.filter(col("doc_id") >= 10)
       .join(broadcast(benchFp), Seq("fh"))
       .groupBy("doc_id").agg(countDistinct("fh").as("n_fp_hits"))
-    // q74's exact leg, verbatim: 8-token shingle hashes vs the bench set
-    val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
-    val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
-      .otherwise(array().cast("array<int>"))
-    val shingled = t.select(col("doc_id"),
-      explode(transform(idx,
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
+    // q74's exact leg: 8-token shingle hashes vs the bench set
+    val shingled = shingleHashes(s, d)
     val bench = shingled.filter(col("doc_id") < 10).select("sh").distinct()
     val exHits = shingled.filter(col("doc_id") >= 10)
       .join(broadcast(bench), Seq("sh"))
@@ -2398,15 +2394,7 @@ object Text extends QueryModule {
     * comparisons anywhere, so cost is linear in corpus size at 100 TB.
     */
   val ngramNovelty: Q = (s, d) => {
-    val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
-    // sequence(1, n) DESCENDS for n < 1 — same guard as q74
-    val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
-      .otherwise(array().cast("array<int>"))
-    val sh = t.select(col("doc_id"),
-      explode(transform(idx,
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
-      .distinct()
+    val sh = shingleHashes(s, d).distinct()
     val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     val per = sh.join(df, "sh").groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
@@ -2437,15 +2425,7 @@ object Text extends QueryModule {
     val docs = Tables.fanOut(Tables.documents(s, d), "doc_id")
     val terms = docs.select(col("doc_id"),
       explode(filter(toks, t => length(t) > 0)).as("term"))
-    val freq = terms.groupBy("term").agg(count(lit(1)).as("cnt"))
-    val tot = freq.agg(sum("cnt").as("t"))
-    val mu = terms.join(freq, "term").crossJoin(broadcast(tot))
-      .select(col("doc_id"),
-        round(log(col("t").cast("double") / col("cnt")) * 1e6).cast("long")
-          .as("mu"))
-    val per = mu.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"), sum("mu").as("sum_mu"))
-    val scored = docs.select("doc_id", "lang").join(per, Seq("doc_id"))
+    val scored = docs.select("doc_id", "lang").join(docSurprisal(terms), Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
         expr("sum_mu div n_tokens").as("ce_micro"))
     val w = Window.partitionBy("lang").orderBy(col("ce_micro"), col("doc_id"))
@@ -2554,14 +2534,7 @@ object Text extends QueryModule {
     * shared shingles to suppress single-collision noise.
     */
   val containmentPairs: Q = (s, d) => {
-    val t = Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), filter(toks, tok => length(tok) > 0).as("tk"))
-    val idx = when(size(col("tk")) >= 8, sequence(lit(1), size(col("tk")) - 7))
-      .otherwise(array().cast("array<int>"))
-    val sh = t.select(col("doc_id"),
-      explode(transform(idx,
-        i => md5(concat_ws(" ", slice(col("tk"), i, lit(8)))))).as("sh"))
-      .distinct()
+    val sh = shingleHashes(s, d).distinct()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = sh.alias("a").join(sh.alias("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))

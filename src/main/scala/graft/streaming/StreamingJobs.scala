@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import graft.{OracleSql, Q, QueryModule}
 import graft.functions.Exact._
+import graft.functions.Hashing.{hllBuckets, hllNEmpty, hllRanks, hllSInv}
 import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -325,7 +326,14 @@ object StreamingJobs extends QueryModule {
     * than the declared bound. Backfills must either cluster input files by
     * event time or widen the watermark to their disorder bound.
     */
-  val streamStreamJoin: Q = (s, d) => {
+  val streamStreamJoin: Q = (s, d) => viewPurchaseJoin(s, d, "inner")
+
+  /** q68/q104's stream-stream join of the watermarked view and purchase
+    * streams: a purchase matches a view of the same user within the
+    * following hour, joined as `joinType`; drained, ordered by (view_id,
+    * purchase_id). */
+  private def viewPurchaseJoin(s: SparkSession, d: String,
+      joinType: String): DataFrame = {
     val views = eventsStream(s, d)
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id").as("view_id"),
@@ -339,7 +347,8 @@ object StreamingJobs extends QueryModule {
     val joined = views.join(purchases,
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") >= col("view_ts") &&
-          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"))
+          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
+        joinType)
       .select(col("view_id"), col("purchase_id"), col("user_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts"))).as("gap_us"))
     drainToLocal(joined, "append")(_.orderBy("view_id", "purchase_id"))._1
@@ -359,26 +368,7 @@ object StreamingJobs extends QueryModule {
     * to `matched OR view_ts + 1 h < final watermark` — engine-exact
     * because event times are microsecond-precise on both sides.
     */
-  val streamOuterJoin: Q = (s, d) => {
-    val views = eventsStream(s, d)
-      .filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("view_id"),
-        col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = eventsStream(s, d)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    val joined = views.join(purchases,
-        col("user_id") === col("p_user_id") &&
-          col("purchase_ts") >= col("view_ts") &&
-          col("purchase_ts") <= col("view_ts") + expr("INTERVAL 1 HOUR"),
-        "leftOuter")
-      .select(col("view_id"), col("purchase_id"), col("user_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("view_ts"))).as("gap_us"))
-    drainToLocal(joined, "append")(_.orderBy("view_id", "purchase_id"))._1
-  }
+  val streamOuterJoin: Q = (s, d) => viewPurchaseJoin(s, d, "leftOuter")
 
   /** Streaming sessionizer via `flatMapGroupsWithState` — the custom-state
     * API whose batch twin is q46. Honest streaming semantics: a session
@@ -612,29 +602,19 @@ object StreamingJobs extends QueryModule {
       : (DataFrame, Long, Long) = {
     val root = graft.Scratch.dir("graft_stream_hll")
     val src = stage(root, Tables.events(s, d).repartition(8))
-    def regsOf(df: DataFrame): DataFrame = {
-      val k = col("user_id").cast("string")
-      df.select(
-          pmod(conv(substring(md5(k), 1, 8), 16, 10).cast("long"), lit(64L))
-            .as("bucket"),
-          conv(substring(md5(k), 9, 8), 16, 10).cast("long").as("w"))
-        .select(col("bucket"),
-          when(col("w") === 0, lit(33))
-            .otherwise(lit(33) - length(bin(col("w")))).as("m"))
-        .groupBy("bucket").agg(max("m").as("m"))
-    }
+    def regsOf(df: DataFrame): DataFrame =
+      hllRanks(df, col("user_id").cast("string"))
+        .groupBy("bucket").agg(max("rho").as("m"))
     val (state, batches) = foldVersions(root, src.stream(s, 2)) { (batch, prev) =>
       val incoming = regsOf(batch)
       prev.fold(incoming)(_.unionByName(incoming))
         .groupBy("bucket").agg(max("m").as("m"))
     }
     val maxState = versions(s, root).map(s.read.parquet(_).count()).max
-    val full = s.range(0, 64).select(col("id").as("bucket"))
+    val full = s.range(0, hllBuckets).select(col("id").as("bucket"))
       .join(state, Seq("bucket"), "left")
       .select(coalesce(col("m"), lit(0)).as("m"))
-    val sketch = full.agg(
-      sum(pow(lit(2.0), lit(33) - col("m")).cast("long")).as("s_inv"),
-      sum(when(col("m") === 0, 1).otherwise(0)).cast("long").as("n_empty"))
+    val sketch = full.agg(hllSInv, hllNEmpty)
     val exact = src.read(s)
       .agg(countDistinct(col("user_id")).as("n_exact"))
     val out = exact.crossJoin(broadcast(sketch))
@@ -877,18 +857,7 @@ object StreamingJobs extends QueryModule {
         .crossJoin(adv.filter(col("step") === 3)
           .agg(count(lit(1)).as("n3"),
             sum((col("t") - col("t_prev")).cast("decimal(38,0)")).as("l3")))
-      def row(step: Int, nm: String, n: String, prev: String, lat: String) =
-        j.select(lit(step).as("step"), lit(nm).as("event_type"),
-          col(n).as("n_users"),
-          expr(s"CASE WHEN $prev > 0 THEN $n * 1000000 div $prev ELSE 0 END")
-            .as("conv_from_prev_ppm"),
-          expr(if (lat.isEmpty) "CAST(-1 AS BIGINT)"
-            else s"CASE WHEN $n > 0 THEN CAST($lat div $n AS BIGINT) ELSE -1 END")
-            .as("mean_latency_us"))
-      row(1, "view", "n1", "n1", "")
-        .unionByName(row(2, "click", "n2", "n1", "l2"))
-        .unionByName(row(3, "purchase", "n3", "n2", "l3"))
-        .orderBy("step")
+      graft.operators.Events.funnelReport(j)
     }
   }
 
@@ -985,12 +954,7 @@ object StreamingJobs extends QueryModule {
       }
     drainToLocal(credits.toDF("channel", "n_ch", "first_ppm", "last_ppm",
         "linear_ppm", "ushape_ppm"), "append") {
-      _.groupBy("channel")
-        .agg(count(lit(1)).as("n_convs"), sum("n_ch").as("n_touches"),
-          sum("first_ppm").as("first_ppm"), sum("last_ppm").as("last_ppm"),
-          sum("linear_ppm").as("linear_ppm"),
-          sum("ushape_ppm").as("ushape_ppm"))
-        .orderBy("channel")
+      graft.operators.Events.creditLedger(_, col("channel"))
     }
   }
 
@@ -1103,21 +1067,10 @@ object StreamingJobs extends QueryModule {
             Iterator((u, first._2))
           }
       }
-    drainToLocal(firsts.toDF("user_id", "t_first"), "append") {
-      _.select(
-          graft.functions.Hashing.md5Bucket(col("user_id"), 2).as("arm"),
-          expr("to_date(timestamp_micros(t_first))").as("d0"))
-        .rollup("d0")
-        .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_control"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_treat"))
-        .select(coalesce(col("d0").cast("string"), lit("ALL")).as("day"),
-          col("n_control"), col("n_treat"),
-          expr("""CAST((CAST(n_control - n_treat AS DECIMAL(38,0))
-                  * (n_control - n_treat) * 1000000)
-                  div (n_control + n_treat) AS BIGINT)""").as("chi2_micro"))
-        .withColumn("srm",
-          col("chi2_micro") > graft.operators.Stats.chiCritMicro)
-        .orderBy("day")
+    drainToLocal(firsts.toDF("user_id", "t_first"), "append") { firstSeen =>
+      graft.operators.Stats.srmReport(firstSeen.select(
+        graft.functions.Hashing.md5Bucket(col("user_id"), 2).as("arm"),
+        expr("to_date(timestamp_micros(t_first))").as("d0")))
     }
   }
 

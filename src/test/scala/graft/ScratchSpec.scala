@@ -123,6 +123,17 @@ class ScratchSpec extends SparkSpec {
     intercept[Exception](lazyRound0.collect())
   }
 
+  test("drop: a state loop leaves only its last two rounds registered") {
+    def live = Scratch.created.synchronized(Scratch.created.length)
+    val before = live
+    val (last, prev) = Scratch.iterate(spark, "graft_spec_forget",
+        spark.range(3).toDF("x"), Scratch.Depth(20)) { (_, prev) => prev }
+    // 21 rounds written, 19 dropped: only the final two stay registered
+    assert(live - before === 2)
+    val paths = Set(last, prev).map(java.nio.file.Paths.get(_))
+    assert(Scratch.created.synchronized(Scratch.created.takeRight(2).toSet) === paths)
+  }
+
   test("iterate: a convergent loop that never settles fails at cap + 1, naming the loop") {
     var steps = 0
     val e = intercept[IllegalArgumentException] {
@@ -189,5 +200,17 @@ class ScratchSpec extends SparkSpec {
     assertConcurrentMatchesSequential(Seq("q59_dup_clusters",
       "q131_entity_clusters", "q243_semantic_clusters", "q245_scc_converged",
       "q255_incremental_cc", "q262_hits"))
+  }
+
+  test("shared IVF, HLL and report-tail fragments: 4 sessions at once match a sequential run") {
+    // the IVF cell assignment (both staged indexes: embCorpusIndex behind
+    // q235/q241/q254, homeCellsDir behind q286/q287), the HLL register
+    // sketch, and the batch/stream report tails
+    assertConcurrentMatchesSequential(Seq("q47_ivf_ann", "q72_ann_recall",
+      "q101_semantic_dedup", "q215_ivf_coverage", "q235_delta_semdedup",
+      "q241_ivf_drift", "q254_semantic_decontam", "q286_triplet_mining",
+      "q287_silhouette_sampled", "q105_hll_distinct", "q118_grouped_hll",
+      "q122_hll_rollup", "q156_hll_set_algebra", "q282_funnel_steps",
+      "q292_multi_touch", "q331_srm_audit", "q340_stream_srm"))
   }
 }
