@@ -18,6 +18,25 @@ object Hashing {
     pmod(conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long"),
       lit(n.toLong))
 
+  /** The index of the lowest band whose keys collide, over the per-band
+    * key pairs `keys` = (left key, right key), band 0 first: `CASE WHEN
+    * a0 = b0 THEN 0 WHEN a1 = b1 THEN 1 … ELSE n−1 END`. A banded pair
+    * join that also requires `band = firstCollision(keys)` emits each pair
+    * once, from its lowest colliding band, so it needs no `distinct`.
+    * Equality is `=`, not `<=>`: a null key never collides, exactly as in
+    * the band equi-join itself.
+    */
+  def firstCollision(keys: Seq[(Column, Column)]): Column = {
+    val last = lit(keys.size - 1)
+    keys.init.zipWithIndex match {
+      case Seq() => last
+      case ((a, b), _) +: more =>
+        more.foldLeft(when(a === b, 0)) { case (c, ((x, y), i)) =>
+          c.when(x === y, i)
+        }.otherwise(last)
+    }
+  }
+
   /** The HLL register count m every HLL sketch here uses (alpha_64 =
     * 0.709 in [[hllEstimate]]). */
   val hllBuckets = 64

@@ -92,7 +92,9 @@ object Dedup extends QueryModule {
     lit(1.0) - isect / (size(col("hs1")) + size(col("hs2")) - isect)
   }
 
-  /** (doc_id, band, sig) rows — the LSH bucket keys, explicitly
+  /** (doc_id, sigs, band, sig) rows — the LSH bucket keys, with each
+    * document's whole band-signature array `sigs` (band i at index i) for
+    * [[bandMatch]], explicitly
     * co-partitioned on the join key: a band join's input stage is
     * byte-light (one sig string per doc per band) but its OUTPUT is the
     * Σ|bucket|² candidate mass, so AQE's size-based coalescing would
@@ -104,16 +106,26 @@ object Dedup extends QueryModule {
       t: org.apache.spark.sql.DataFrame) = {
     val withMh = t.select(col("doc_id") +:
       (0 until numHashes).map(i => minhash(i).as(s"mh$i")): _*)
-    val bandStructs = (0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("-", (0 until rowsPerBand)
-          .map(r => col(s"mh${b * rowsPerBand + r}")): _*).as("sig"))
+    val sigs = (0 until numBands).map { b =>
+      concat_ws("-", (0 until rowsPerBand)
+        .map(r => col(s"mh${b * rowsPerBand + r}")): _*)
     }
     withMh
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+      .select(col("doc_id"), array(sigs: _*).as("sigs"))
+      .select(col("doc_id"), col("sigs"),
+        posexplode(col("sigs")).as(Seq("band", "sig")))
       .repartition(s.sparkContext.defaultParallelism, col("band"), col("sig"))
   }
+
+  /** The band-join condition between two [[bandSigs]] tables aliased `a`
+    * and `b`: equal (band, sig), kept only in the pair's lowest colliding
+    * band ([[graft.functions.Hashing.firstCollision]]), so a pair that
+    * collides in several bands joins once and needs no `distinct`.
+    */
+  private def bandMatch: Column =
+    col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+      col("a.band") === graft.functions.Hashing.firstCollision(
+        (0 until numBands).map(i => (col("a.sigs")(i), col("b.sigs")(i))))
 
   /** Verified near-dup edges (d1 < d2): minhash → band → bucket equi-join
     * candidates, then exact-Jaccard verification. Shared by the per-document
@@ -130,9 +142,10 @@ object Dedup extends QueryModule {
   private val candCache = new graft.Scratch.PerDir[String]
 
   /** The unstaged candidate band-join — bucket-join: equi-join on (band,
-    * signature); a pair colliding in several bands appears once thanks to
-    * the distinct. The shuffle_hash hint pins the plan that holds at
-    * 100 TB: BOTH band-sig sides are corpus-sized, so broadcast is
+    * signature); a pair colliding in several bands appears once, from its
+    * lowest colliding band ([[bandMatch]]). The shuffle_hash hint pins
+    * the plan that holds at 100 TB: BOTH band-sig sides are corpus-sized,
+    * so broadcast is
     * impossible at scale — and at fixture scale AQE's broadcast would
     * fuse scan→minhash→join→verify into ONE task (the single-row-group
     * file gives one input split), leaving the expensive candidate stage
@@ -145,10 +158,8 @@ object Dedup extends QueryModule {
     val sigs = bandSigs(s, tokenSets(s, d))
     sigs.alias("a")
       .join(sigs.alias("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
+        bandMatch && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
   }
 
   private def stagedCands(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -540,10 +551,8 @@ object Dedup extends QueryModule {
       // shuffle_hash as in verifiedPairs: both sig tables are corpus-scale
       // in general (broadcast impossible at 100 TB), and sort-merge would
       // sort the collision mass; the index side hash-builds per partition
-      .join(ixSigs.alias("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
+      .join(ixSigs.alias("b").hint("shuffle_hash"), bandMatch)
       .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
-      .distinct()
     val x = hashedSets(deltaT).select(col("doc_id").as("did"), col("hs").as("hs1"))
     val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
     val matches = cand
@@ -694,10 +703,8 @@ object Dedup extends QueryModule {
       val t = batch.select(col("doc_id"),
         array_distinct(split(col("text"), "\\s+")).as("tokset"))
       val cand = bandSigs(s, t).alias("a")
-        .join(ixSigs.alias("b").hint("shuffle_hash"),
-          col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
+        .join(ixSigs.alias("b").hint("shuffle_hash"), bandMatch)
         .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
-        .distinct()
       val x = hashedSets(t).select(col("doc_id").as("did"), col("hs").as("hs1"))
       val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
       val matches = cand

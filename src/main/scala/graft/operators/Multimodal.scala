@@ -213,7 +213,9 @@ object Multimodal extends QueryModule {
     *
     * Plan shape: hash + band table staged once (expression-only, whole-
     * stage codegen — no UDFs), candidate generation is the (band, byte)
-    * equi-join with d1 < d2, verification is one codegen'd
+    * equi-join with d1 < d2, each pair emitted only from its lowest
+    * colliding band ([[graft.functions.Hashing.firstCollision]] over the
+    * staged band array, so no dedup aggregate), verification is one codegen'd
     * bit_count(xor) ≤ τ filter, verdicts aggregate per document (mate
     * count, least mate id — the q37 readout). Scale posture: byte bands
     * have 256 buckets/band — the declared fixed-block-space family
@@ -235,17 +237,19 @@ object Multimodal extends QueryModule {
         array((0 until phashSlices).map(i =>
           struct(lit(i).as("band"), col(s"b$i").as("byte_v"))): _*).as("bands"))
     val h = graft.Scratch.stage("graft_phash", hashed)
-    val banded = h.select(col("doc_id"), col("phash"),
+    val banded = h.select(col("doc_id"), col("phash"), col("bands"),
       explode(col("bands")).as("bb"))
-      .select(col("doc_id"), col("phash"),
+      .select(col("doc_id"), col("phash"), col("bands"),
         col("bb.band").as("band"), col("bb.byte_v").as("byte_v"))
+    val first = graft.functions.Hashing.firstCollision(
+      (0 until phashSlices).map(i => (col("l.bands")(i)("byte_v"),
+        col("r.bands")(i)("byte_v"))))
     val cand = banded.alias("l").join(banded.alias("r"),
         col("l.band") === col("r.band") &&
           col("l.byte_v") === col("r.byte_v") &&
-          col("l.doc_id") < col("r.doc_id"))
+          col("l.doc_id") < col("r.doc_id") && col("l.band") === first)
       .select(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"),
         col("l.phash").as("p1"), col("r.phash").as("p2"))
-      .distinct()
     val pairs = cand.filter(expr(s"bit_count(p1 ^ p2) <= $phashTau"))
     val mates = pairs.select(col("d1").as("doc_id"), col("d2").as("mate"))
       .unionByName(pairs.select(col("d2").as("doc_id"), col("d1").as("mate")))

@@ -94,7 +94,8 @@ object Similarity extends QueryModule {
     * (band, bucket) keys — band b hashes dims 8b+1..8b+8 by sign, so every
     * dimension contributes to exactly one band — candidates are a self
     * EQUI-join on (band, bucket) (shuffle-partitioned by key, never n²),
-    * deduped, then verified against the exact cosine threshold.
+    * each pair kept only in its lowest colliding band, then verified
+    * against the exact cosine threshold.
     *
     * Candidate volume is ~3% of all pairs (8 bands × 2⁻⁸ random collision
     * rate), linear in corpus size for a fixed density. Recall at a 0.40
@@ -112,29 +113,30 @@ object Similarity extends QueryModule {
         round(col("sim9"), 4).as("sim"))
       .orderBy("vec_id_1", "vec_id_2")
 
-  /** Each vector's 8 (band, bucket) sign-LSH keys: (vec_id, band, bucket). */
-  private def bandKeys(b: DataFrame): DataFrame = {
-    val bandCols = (0 until 8).map { band =>
-      struct(lit(band).as("band"), bandBucket(band).as("bucket"))
-    }
-    b.select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band").as("band"),
-        col("bb.bucket").as("bucket"))
-  }
+  /** Each vector's 8 (band, bucket) sign-LSH keys: (vec_id, buckets,
+    * band, bucket), where `buckets` is the vector's whole bucket array
+    * (band i at index i). */
+  private def bandKeys(b: DataFrame): DataFrame =
+    b.select(col("vec_id"), array((0 until 8).map(bandBucket): _*).as("buckets"))
+      .select(col("vec_id"), col("buckets"),
+        posexplode(col("buckets")).as(Seq("band", "bucket")))
 
-  /** q36's blocked candidates, scored: every distinct pair (v1 < v2) that
-    * shares a (band, bucket) key, with its cosine rounded to 9 dp as
-    * `sim9` (q36 and the q189 kNN-graph build both rank on it). */
+  /** q36's blocked candidates, scored: every pair (v1 < v2) that shares a
+    * (band, bucket) key, once — the join keeps a pair only in its lowest
+    * colliding band ([[graft.functions.Hashing.firstCollision]]) — with
+    * its cosine rounded to 9 dp as `sim9` (q36 and the q189 kNN-graph
+    * build both rank on it). */
   private def bandedScoredPairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val b = base(s, d)
     val banded = bandKeys(b)
+    val first = graft.functions.Hashing.firstCollision((0 until 8).map(i =>
+      (col("cl.buckets")(i), col("cr.buckets")(i))))
     val cand = banded.alias("cl").join(banded.alias("cr"),
         col("cl.band") === col("cr.band") &&
           col("cl.bucket") === col("cr.bucket") &&
-          col("cl.vec_id") < col("cr.vec_id"))
+          col("cl.vec_id") < col("cr.vec_id") && col("cl.band") === first)
       .select(col("cl.vec_id").as("v1"), col("cr.vec_id").as("v2"))
-      .distinct()
     val e1 = b.select(col("vec_id").as("v1"),
       col("embedding").as("emb1"), col("sq").as("sq1"))
     val e2 = b.select(col("vec_id").as("v2"),
@@ -221,9 +223,8 @@ object Similarity extends QueryModule {
     * by rounded cosine (`psim9` desc, pivot_id), kept for its `probes`
     * nearest cells as (vec_id, embedding, sq, cell_id, arn). arn = 1 is
     * the home cell; `probes` = 1 keeps only it (filtered `arn = 1`). It is
-    * O(n·C) map-side work against a broadcast pivot table, so a caller
-    * that needs it on two sides of a join recomputes it rather than
-    * persisting n·(dim+ids) through a cache.
+    * O(n·C) map-side work against a broadcast pivot table; the corpus
+    * home cells are staged once per input dir ([[homeCellsDir]]).
     */
   private[graft] def cellRanks(batch: DataFrame, pivots: DataFrame,
       probes: Int): DataFrame = {
@@ -331,17 +332,17 @@ object Similarity extends QueryModule {
     * partitioned-ANN family — an inverted-file index is only as good as
     * its cell balance (a hot cell degrades probes to brute force, empty
     * cells waste probe budget, and a skewed occupancy histogram is the
-    * signal to re-train pivots). One home-cell assignment pass (the same
-    * O(n·C) map-side rank against the broadcast pivot table ivfIndex
-    * runs), then everything reduces to the 64-row occupancy histogram:
+    * signal to re-train pivots). One read of the staged home-cell
+    * assignment ([[homeCellsDir]], the O(n·C) map-side rank against the
+    * broadcast pivot table ivfIndex runs, built once per input dir), then
+    * everything reduces to the 64-row occupancy histogram:
     * vector count, occupied/empty cells, min/max occupancy, occupancy
     * ENTROPY in integer micro-nats (q94's per-term rounding — ln(64)
     * would be the uniform ideal) and the balance ratio entropy/ln(64) in
     * ppm. All divisions positive and final.
     */
   val ivfCoverage: Q = (s, d) => {
-    val corpus = base(s, d)
-    val home = cellRanks(corpus, headPivots(corpus), 1)
+    val home = graft.Scratch.read(s, homeCellsDir(s, d))
       .select(col("vec_id"), col("cell_id"))
     val occ = home.groupBy("cell_id").agg(count(lit(1)).as("c"))
     // the unpartitioned window runs over the 64-row histogram, never the
@@ -699,17 +700,16 @@ object Similarity extends QueryModule {
     * filters on `kept`.
     */
   val semanticDedup: Q = (s, d) => {
-    val corpus = base(s, d)
-    val assigned = homeCells(corpus, headPivots(corpus))
+    val assigned = graft.Scratch.read(s, homeCellsDir(s, d))
     val l = assigned.alias("l")
     val r = assigned.alias("r")
     val sim = cosineWithNorms(
       dotD(col("l.embedding"), col("r.embedding")), col("l.sq"), col("r.sq"))
     // ONE left-outer pair join carries the whole verdict: the threshold
     // sits in the join condition so unmatched vectors survive as kept
-    // rows, and no third reference to the assignment subtree is needed
-    // (each reference recomputes the O(n·C) broadcast cross — two sides
-    // is the budget, as in ivfIndex). Hash-probe, not sort-merge: same
+    // rows. Both sides read the staged home-cell assignment
+    // ([[homeCellsDir]]), so the O(n·C) broadcast cross runs once per
+    // input dir, not once per side. Hash-probe, not sort-merge: same
     // lesson as q36's verify joins.
     r.join(l.hint("shuffle_hash"),
         col("l.cell_id") === col("r.cell_id") &&
@@ -942,7 +942,7 @@ object Similarity extends QueryModule {
     */
   val semanticClusters: Q = (s, d) => {
     val corpus = base(s, d)
-    val assigned = homeCells(corpus, headPivots(corpus))
+    val assigned = graft.Scratch.read(s, homeCellsDir(s, d))
     val l = assigned.alias("l")
     val r = assigned.alias("r")
     val sim = cosineWithNorms(
@@ -1162,12 +1162,12 @@ object Similarity extends QueryModule {
     */
   /** The q47 home-cell assignment STAGED to a parquet leaf (vec_id,
     * embedding, sq, cell_id) — q286 reads it three times (anchors,
-    * same-cell candidates, complement) and q287 twice; without staging
-    * each consumer re-runs the O(n·64) broadcast assignment cross
-    * (observed: 6 redundant nested-loop subtrees in q286's plan).
-    * Memoized per input dir ([[graft.Scratch.PerDir]]) so q286 and q287
-    * genuinely read the SAME leaf — one assignment cross
-    * per run, not one per consumer query. */
+    * same-cell candidates, complement), q287, q101 and q243 twice (both
+    * sides of a pair join) and q215 once; without staging each consumer
+    * re-runs the O(n·64) broadcast assignment cross (observed: 6
+    * redundant nested-loop subtrees in q286's plan). Memoized per input
+    * dir ([[graft.Scratch.PerDir]]) so all five genuinely read the SAME
+    * leaf — one assignment cross per run, not one per consumer query. */
   private val homeCellsCache = new graft.Scratch.PerDir[String]
 
   private def homeCellsDir(s: org.apache.spark.sql.SparkSession,

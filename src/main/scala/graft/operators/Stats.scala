@@ -4463,8 +4463,9 @@ object Stats extends QueryModule {
     def predict(devs: IndexedSeq[Long], t: Int): Long =
       mu + ((1 to p).map(j => BigInt(phiP(j - 1)) * devs(t - j)).sum
         / 1000000).toLong
+    val dvSeq = scala.collection.immutable.ArraySeq.unsafeWrapArray(dv)
     val inSample = (p until n).map { t =>
-      val f = predict(dv, t)
+      val f = predict(dvSeq, t)
       (series(t)._1, c(t), f, (c(t) - f).abs)
     }.toVector
     var ring = dv.toVector

@@ -393,31 +393,34 @@ object Text extends QueryModule {
     * EQUI-join on (band, nibble) — by pigeonhole, two signatures within
     * Hamming 2 differ in at most 2 bands, so at least 2 bands still match
     * and recall at the threshold is EXACT (unlike minhash banding's
-    * probabilistic recall). Verification is one codegen'd
-    * `bit_count(s1 XOR s2)` per candidate. Per (band, nibble) bucket the
-    * join is local after one shuffle on the band key — never n². The
-    * nibble width is the skew knob: wider bands → fewer, cheaper
-    * collisions but a lower guaranteed-recall threshold.
+    * probabilistic recall). A pair is emitted only from its lowest
+    * colliding band ([[graft.functions.Hashing.firstCollision]]), so each
+    * candidate comes out once and no dedup aggregate runs. Verification
+    * is one codegen'd `bit_count(s1 XOR s2)` per candidate. The band rows
+    * are repartitioned on (band, nibble) at the default parallelism and
+    * one side is hash-built, so both sides read one exchange and the
+    * corpus is hashed once. Per (band, nibble) bucket the join is local —
+    * never n². The nibble width is the skew knob: wider bands → fewer,
+    * cheaper collisions but a lower guaranteed-recall threshold.
     */
   val simhashNearDup: Q = (s, d) => {
-    val sh = simhashes(s, d)
-    val bands = sh.select(col("doc_id"), col("simhash"),
+    def nib(sh: org.apache.spark.sql.Column, b: Int) = shiftright(sh, b * 4).bitwiseAND(lit(15))
+    val bands = simhashes(s, d).select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"),
-          shiftright(col("simhash"), b * 4).bitwiseAND(lit(15)).as("nib"))
+        struct(lit(b).as("band"), nib(col("simhash"), b).as("nib"))
       }: _*)).as("bb"))
       .select(col("doc_id"), col("simhash"),
         col("bb.band").as("band"), col("bb.nib").as("nib"))
-    val cand = bands.alias("a").join(bands.alias("b"),
+      .repartition(s.sparkContext.defaultParallelism, col("band"), col("nib"))
+    val first = graft.functions.Hashing.firstCollision((0 until 4).map(b =>
+      (nib(col("a.simhash"), b), nib(col("b.simhash"), b))))
+    bands.alias("a").join(bands.alias("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.nib") === col("b.nib") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("a.simhash").as("s1"),
-        col("b.doc_id").as("d2"), col("b.simhash").as("s2"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))).cast("int"))
+          col("a.doc_id") < col("b.doc_id") && col("a.band") === first)
+      .select(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("int")
+          .as("hamming"))
       .filter(col("hamming") <= 2)
-      .select(col("d1").as("doc_id_1"), col("d2").as("doc_id_2"), col("hamming"))
       .orderBy("doc_id_1", "doc_id_2")
   }
 

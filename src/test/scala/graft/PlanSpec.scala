@@ -22,6 +22,30 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
+  test("q65 SimHash near-dup: each pair from its lowest colliding band, no dedup aggregate, the band exchange built once") {
+    val df = q("q65_simhash_neardup")
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("HashAggregate"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // the final adaptive plan, read after execution: the second join side
+    // reuses the first side's (band, nib) exchange, so the corpus is
+    // tokenized and SimHashed by one projection
+    df.collect()
+    val fin = df.queryExecution.executedPlan
+      .asInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec]
+      .executedPlan.toString
+    assert(fin.contains("ReusedExchange"), fin)
+    assert(fin.linesIterator.count(l => l.contains("Project [") && l.contains("simhash16(")) === 1, fin)
+  }
+
+  test("q256 pHash dedup: the band join emits each pair once; only the mates aggregate remains") {
+    val p = plan("q256_phash_dedup")
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    // the mates groupBy's partial and final aggregate; the pair distinct's
+    // two are gone
+    assert(count(p, "HashAggregate") === 2, p)
+  }
+
   test("q47 IVF: only the broadcast pivot assignment may nest-loop; neighbor join is equi") {
     val p = plan("q47_ivf_ann")
     assert(!p.contains("CartesianProduct"), p)

@@ -718,6 +718,51 @@ class PropertySpec extends SparkSpec {
     }, "bitmap distinct == exact distinct")
   }
 
+  test("first-collision law: a banded join kept at its lowest colliding band equals the banded join plus distinct, on ANY keys") {
+    // the rule behind q65 (nibbles), q256 (bytes), q36/q189 (int buckets)
+    // and the minhash band joins (strings): per shape, random keys with
+    // nulls (a null never collides), then the all-collide and no-collide
+    // extremes; both a self-join (id < id) and a two-table probe (q114's
+    // delta-vs-index shape)
+    import org.apache.spark.sql.{Column, DataFrame}
+    def law(df: DataFrame, n: Int): Boolean = {
+      val banded = df.select(col("id"), col("ks"),
+        posexplode(col("ks")).as(Seq("band", "k")))
+      val first = graft.functions.Hashing.firstCollision(
+        (0 until n).map(i => (col("a.ks")(i), col("b.ks")(i))))
+      def pairs(l: DataFrame, r: DataFrame, on: Column, once: Boolean) = {
+        val cond = col("a.band") === col("b.band") && col("a.k") === col("b.k") && on
+        val j = l.alias("a").join(r.alias("b"),
+            if (once) cond && col("a.band") === first else cond)
+          .select(col("a.id"), col("b.id"))
+        (if (once) j else j.distinct()).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      }
+      def same(l: DataFrame, r: DataFrame, on: Column) =
+        pairs(l, r, on, once = true) == pairs(l, r, on, once = false)
+      same(banded, banded, col("a.id") < col("b.id")) &&
+        same(banded.filter(col("id") % 3 === 0), banded.filter(col("id") % 3 =!= 0), lit(true))
+    }
+    def shape[A](tag: String, n: Int, key: Gen[A], unique: Int => A,
+        toDf: List[(Long, List[Option[A]])] => DataFrame): Unit = {
+      def df(rows: List[List[Option[A]]]) =
+        toDf(rows.zipWithIndex.map { case (ks, i) => (i.toLong, ks) })
+      val row = Gen.listOfN(n,
+        Gen.frequency(1 -> Gen.const(Option.empty[A]), 5 -> key.map(Option(_))))
+      check(Prop.forAll(Gen.listOfN(30, row))(rows => law(df(rows), n)),
+        s"first-collision law, $tag")
+      val collide = List.tabulate(n)(b => Option(unique(b)))
+      assert(law(df(List.fill(12)(collide)), n), s"$tag: all collide")
+      assert(law(df(List.tabulate(12)(i => List.fill(n)(Option(unique(i))))), n),
+        s"$tag: none collide")
+    }
+    shape[Int]("nibbles", 4, Gen.choose(0, 15), identity, _.toDF("id", "ks"))
+    shape[Long]("bytes", 7, Gen.choose(0L, 3L), _.toLong, _.toDF("id", "ks"))
+    shape[Int]("int buckets", 8, Gen.choose(0, 5), identity, _.toDF("id", "ks"))
+    shape[String]("strings", 3, Gen.oneOf("a-b", "c-d", "e-f"), i => s"$i-$i",
+      _.toDF("id", "ks"))
+  }
+
   test("skyline law: the level-reduction plan equals brute-force dominance on ANY point set") {
     val ptsGen = Gen.listOfN(25, for {
       p <- Gen.choose(1, 8)

@@ -213,4 +213,13 @@ class ScratchSpec extends SparkSpec {
       "q122_hll_rollup", "q156_hll_set_algebra", "q282_funnel_steps",
       "q292_multi_touch", "q331_srm_audit", "q340_stream_srm"))
   }
+
+  test("banded pair joins: 4 sessions at once match a sequential run") {
+    // every banded join keeps a pair only at its lowest colliding band;
+    // q37 and q204 share the staged minhash candidates, q114 probes the
+    // staged corpus index
+    assertConcurrentMatchesSequential(Seq("q65_simhash_neardup",
+      "q256_phash_dedup", "q36_embed_neardup", "q37_minhash_neardup",
+      "q204_lsh_recall", "q114_delta_neardup"))
+  }
 }
