@@ -50,26 +50,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[BottomKSorted].getName, "bottomk_sorted"),
       (args: Seq[Expression]) => {
         require(args.length == 3, "bottomk_sorted(stringHash, doubleValue, kLiteral)")
-        require(args(2).foldable, "bottomk_sorted: k must be a literal")
-        val k = args(2).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => sys.error(s"bottomk_sorted: integer k expected, got $other")
-        }
-        BottomKSorted(args.head, args(1), k)
+        BottomKSorted(args.head, args(1), intLiteral("bottomk_sorted", args(2)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("mg_candidates"),
       new ExpressionInfo(classOf[MgCandidates].getName, "mg_candidates"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "mg_candidates(stringKey, kLiteral)")
-        require(args(1).foldable, "mg_candidates: k must be a literal")
-        val k = args(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => sys.error(s"mg_candidates: integer k expected, got $other")
-        }
-        MgCandidates(args.head, k)
+        MgCandidates(args.head, intLiteral("mg_candidates", args(1)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("vec_sqnorm"),
@@ -78,5 +66,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 1, "vec_sqnorm(arrayOfFloat)")
         FloatVecSqNorm(args.head)
       }))
+  }
+
+  /** The integer literal argument `k` of function `fn`. */
+  private def intLiteral(fn: String, k: Expression): Int = {
+    require(k.foldable, s"$fn: k must be a literal")
+    k.eval() match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => sys.error(s"$fn: integer k expected, got $other")
+    }
   }
 }

@@ -2,11 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MetadataBuilder
 
-/** Deterministic hash-bucket expressions shared by the sampling/split
-  * operators (q75 hash split, q89 stratified sample), with the DuckDB
-  * mirror kept next to the Spark form — the two must evolve together or
-  * the engines silently diverge on bucket membership.
+/** Deterministic hash expressions and the operators built on them: the
+  * md5 bucket behind the split and sampling queries (q75, q89), the HLL
+  * register sketch, the driver-side md5 constants, and the banded LSH
+  * pair join ([[bandRows]] + [[bandJoin]]) that every near-dup and
+  * blocking query runs. Where a DuckDB mirror exists it sits next to the
+  * Spark form — the two must evolve together or the engines silently
+  * diverge on bucket membership.
   */
 object Hashing {
 
@@ -26,7 +30,7 @@ object Hashing {
     * Equality is `=`, not `<=>`: a null key never collides, exactly as in
     * the band equi-join itself.
     */
-  def firstCollision(keys: Seq[(Column, Column)]): Column = {
+  private def firstCollision(keys: Seq[(Column, Column)]): Column = {
     val last = lit(keys.size - 1)
     keys.init.zipWithIndex match {
       case Seq() => last
@@ -35,6 +39,62 @@ object Hashing {
           c.when(x === y, i)
         }.otherwise(last)
     }
+  }
+
+  /** The [[bandRows]] metadata key on the `keys` column holding the band
+    * count, so [[bandJoin]] builds its [[firstCollision]] over exactly
+    * the bands the rows were made with (it survives a [[graft.Scratch]]
+    * round trip: the bound read uses the written frame's schema). */
+  private val bandsMeta = "graft.bands"
+
+  /** The band rows of a banded LSH pair join: `keys` holds one hash key
+    * per band (band i's key first at index i), and each row of `df`
+    * becomes one row per band, (keep…, keys, band, key), with the whole
+    * key array kept for [[bandJoin]]'s first-collision test. The rows are
+    * repartitioned on (band, key) at the default parallelism: the input
+    * is byte-light but the join's OUTPUT is the Σ|bucket|² candidate
+    * mass, so AQE's size-based coalescing would collapse the probe stage
+    * to one task; a partition count given by the user is respected, and
+    * the one exchange is reused by both sides of a self-join.
+    *
+    * The explode is `posexplode_outer`: `keys` is never null or empty, so
+    * its rows are posexplode's, but for an inner explode of a column
+    * Catalyst infers `size(keys) > 0` and pushes it below the projection
+    * that computes the keys, evaluating every key (and what it reads, such
+    * as q65's SimHash) once more per row.
+    */
+  def bandRows(df: DataFrame, keys: Seq[Column], keep: String*): DataFrame = {
+    val meta = new MetadataBuilder().putLong(bandsMeta, keys.size.toLong).build()
+    df.select(keep.map(col) :+ array(keys: _*).as("keys", meta): _*)
+      .select(col("*"), posexplode_outer(col("keys")).as(Seq("band", "key")))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism,
+        col("band"), col("key"))
+  }
+
+  /** The banded LSH pair join of two [[bandRows]] frames, aliased `l` and
+    * `r`: a pair is a candidate when it shares a key in some band, and it
+    * is kept only from its lowest colliding band (`band =`
+    * [[firstCollision]]), so each candidate comes out once and no
+    * `distinct` runs. The right side is hash-built (`shuffle_hash`): both
+    * sides are corpus-sized in general, so broadcast dies at scale and a
+    * sort-merge join would sort the collision mass. Per (band, key)
+    * bucket the join is local — never n².
+    */
+  def bandJoin(l: DataFrame, r: DataFrame): DataFrame =
+    bandJoin(l, r, lit(true))
+
+  /** The [[bandJoin]] of a frame with itself, each unordered pair once:
+    * `l.id < r.id`. */
+  def bandSelfJoin(rows: DataFrame, id: String): DataFrame =
+    bandJoin(rows, rows, col(s"l.$id") < col(s"r.$id"))
+
+  private def bandJoin(l: DataFrame, r: DataFrame, on: Column): DataFrame = {
+    val n = l.schema("keys").metadata.getLong(bandsMeta).toInt
+    val first = firstCollision((0 until n).map(i =>
+      (col("l.keys")(i), col("r.keys")(i))))
+    l.alias("l").join(r.alias("r").hint("shuffle_hash"),
+      col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
+        on && col("l.band") === first)
   }
 
   /** The HLL register count m every HLL sketch here uses (alpha_64 =

@@ -43,7 +43,7 @@ object Pipelines extends QueryModule {
       .withColumn("ship_month", month(col("l_shipdate")).cast("double"))
     val tsCols = withDerived.schema.fields
       .filter(_.dataType == org.apache.spark.sql.types.TimestampType).map(_.name)
-    withDerived.drop(tsCols: _*).select(
+    withDerived.drop(tsCols.toIndexedSeq: _*).select(
       col("label"), col("l_quantity"), col("l_extendedprice"),
       col("l_discount"), col("l_tax"), col("ship_month"), col("l_linestatus"))
   }

@@ -65,8 +65,11 @@ object Dedup extends QueryModule {
   /** Distinct token set per document — the input every minhash stage
     * shares. */
   private def tokenSets(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.fanOut(Tables.documents(s, d), "doc_id")
-      .select(col("doc_id"), array_distinct(split(col("text"), "\\s+")).as("tokset"))
+    Tables.fanOut(Tables.documents(s, d), "doc_id").select(col("doc_id"), tokset)
+
+  /** A document's distinct whitespace tokens, from its `text`. */
+  private def tokset: Column =
+    array_distinct(split(col("text"), "\\s+")).as("tokset")
 
   /** Verification operand: the token set HASHED to sorted 64-bit ints
     * (first 15 md5 hex digits — same family as the minhashes, evaluable
@@ -92,40 +95,17 @@ object Dedup extends QueryModule {
     lit(1.0) - isect / (size(col("hs1")) + size(col("hs2")) - isect)
   }
 
-  /** (doc_id, sigs, band, sig) rows — the LSH bucket keys, with each
-    * document's whole band-signature array `sigs` (band i at index i) for
-    * [[bandMatch]], explicitly
-    * co-partitioned on the join key: a band join's input stage is
-    * byte-light (one sig string per doc per band) but its OUTPUT is the
-    * Σ|bucket|² candidate mass, so AQE's size-based coalescing would
-    * collapse the probe stage to one task; a user-origin repartition is
-    * respected, and the single exchange is reused by both sides of a
-    * self-join.
-    */
-  private def bandSigs(s: org.apache.spark.sql.SparkSession,
-      t: org.apache.spark.sql.DataFrame) = {
+  /** The minhash band rows ([[graft.functions.Hashing.bandRows]]) of a
+    * token-set frame: band b's key is its [[rowsPerBand]] minhashes joined
+    * with "-". */
+  private def bandSigs(t: org.apache.spark.sql.DataFrame) = {
     val withMh = t.select(col("doc_id") +:
       (0 until numHashes).map(i => minhash(i).as(s"mh$i")): _*)
-    val sigs = (0 until numBands).map { b =>
+    graft.functions.Hashing.bandRows(withMh, (0 until numBands).map { b =>
       concat_ws("-", (0 until rowsPerBand)
         .map(r => col(s"mh${b * rowsPerBand + r}")): _*)
-    }
-    withMh
-      .select(col("doc_id"), array(sigs: _*).as("sigs"))
-      .select(col("doc_id"), col("sigs"),
-        posexplode(col("sigs")).as(Seq("band", "sig")))
-      .repartition(s.sparkContext.defaultParallelism, col("band"), col("sig"))
+    }, "doc_id")
   }
-
-  /** The band-join condition between two [[bandSigs]] tables aliased `a`
-    * and `b`: equal (band, sig), kept only in the pair's lowest colliding
-    * band ([[graft.functions.Hashing.firstCollision]]), so a pair that
-    * collides in several bands joins once and needs no `distinct`.
-    */
-  private def bandMatch: Column =
-    col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-      col("a.band") === graft.functions.Hashing.firstCollision(
-        (0 until numBands).map(i => (col("a.sigs")(i), col("b.sigs")(i))))
 
   /** Verified near-dup edges (d1 < d2): minhash → band → bucket equi-join
     * candidates, then exact-Jaccard verification. Shared by the per-document
@@ -141,26 +121,19 @@ object Dedup extends QueryModule {
     */
   private val candCache = new graft.Scratch.PerDir[String]
 
-  /** The unstaged candidate band-join — bucket-join: equi-join on (band,
-    * signature); a pair colliding in several bands appears once, from its
-    * lowest colliding band ([[bandMatch]]). The shuffle_hash hint pins
-    * the plan that holds at 100 TB: BOTH band-sig sides are corpus-sized,
-    * so broadcast is
-    * impossible at scale — and at fixture scale AQE's broadcast would
-    * fuse scan→minhash→join→verify into ONE task (the single-row-group
-    * file gives one input split), leaving the expensive candidate stage
-    * single-threaded (measured 6.3s of an 11s total in one task). The
-    * exchange on (band, sig) is the partition strategy the Scaladoc
-    * promises AND what fans the work out. `private[graft]` so PlanSpec
-    * pins the generator plan (the staged artifact hides it).
+  /** The unstaged candidate join: the banded pair join
+    * ([[graft.functions.Hashing.bandJoin]]) of the corpus's minhash band
+    * rows with themselves. Its hash-built (band, sig) exchange is what fans
+    * the work out: at fixture scale AQE's broadcast would fuse
+    * scan→minhash→join→verify into ONE task (the single-row-group file
+    * gives one input split), leaving the expensive candidate stage
+    * single-threaded (measured 6.3s of an 11s total in one task).
+    * `private[graft]` so PlanSpec pins the generator plan (the staged
+    * artifact hides it).
     */
-  private[graft] def candJoin(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val sigs = bandSigs(s, tokenSets(s, d))
-    sigs.alias("a")
-      .join(sigs.alias("b").hint("shuffle_hash"),
-        bandMatch && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-  }
+  private[graft] def candJoin(s: org.apache.spark.sql.SparkSession, d: String) =
+    graft.functions.Hashing.bandSelfJoin(bandSigs(tokenSets(s, d)), "doc_id")
+      .select(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"))
 
   private def stagedCands(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.Scratch.read(s, candCache(d)(graft.Scratch.write("graft_mh_cands", candJoin(s, d))))
@@ -524,7 +497,7 @@ object Dedup extends QueryModule {
   private def corpusIndex(s: org.apache.spark.sql.SparkSession, d: String) = {
     val (sigDir, setDir) = indexCache(d) {
       val t = tokenSets(s, d).filter(!isDelta)
-      (graft.Scratch.write("graft_mh_index_sigs", bandSigs(s, t)),
+      (graft.Scratch.write("graft_mh_index_sigs", bandSigs(t)),
         graft.Scratch.write("graft_mh_index_sets", hashedSets(t)))
     }
     (graft.Scratch.read(s, sigDir), graft.Scratch.read(s, setDir))
@@ -544,16 +517,23 @@ object Dedup extends QueryModule {
     * incoming copy, keep the ingested one" decision), and the is_new bit
     * that admits the document into the corpus.
     */
-  val deltaNearDup: Q = (s, d) => {
+  val deltaNearDup: Q = (s, d) =>
+    deltaVerdicts(s, d, Tables.fanOut(Tables.documents(s, d), "doc_id")
+      .filter(isDelta)).orderBy("doc_id")
+
+  /** The q114/q244 verdict for each delta document of `delta` (doc_id,
+    * text): its minhash band rows probe the staged [[corpusIndex]] by the
+    * banded pair join ([[graft.functions.Hashing.bandJoin]], the index side
+    * hash-built), only the candidates pay the exact-Jaccard verify, and
+    * each document gets (n_dup, dup_of, is_new).
+    */
+  private def deltaVerdicts(s: org.apache.spark.sql.SparkSession, d: String,
+      delta: org.apache.spark.sql.DataFrame) = {
     val (ixSigs, ixSets) = corpusIndex(s, d)
-    val deltaT = tokenSets(s, d).filter(isDelta)
-    val cand = bandSigs(s, deltaT).alias("a")
-      // shuffle_hash as in verifiedPairs: both sig tables are corpus-scale
-      // in general (broadcast impossible at 100 TB), and sort-merge would
-      // sort the collision mass; the index side hash-builds per partition
-      .join(ixSigs.alias("b").hint("shuffle_hash"), bandMatch)
-      .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
-    val x = hashedSets(deltaT).select(col("doc_id").as("did"), col("hs").as("hs1"))
+    val t = delta.select(col("doc_id"), tokset)
+    val cand = graft.functions.Hashing.bandJoin(bandSigs(t), ixSigs)
+      .select(col("l.doc_id").as("did"), col("r.doc_id").as("cid"))
+    val x = hashedSets(t).select(col("doc_id").as("did"), col("hs").as("hs1"))
     val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
     val matches = cand
       .join(x.hint("shuffle_hash"), "did")
@@ -561,13 +541,12 @@ object Dedup extends QueryModule {
       .filter(jaccardDist <= maxDist)
       .groupBy("did")
       .agg(count(lit(1)).as("n_dup"), min("cid").as("dup_of"))
-    Tables.documents(s, d).select(col("doc_id")).filter(isDelta)
+    delta.select(col("doc_id"))
       .join(matches, col("doc_id") === col("did"), "left")
       .select(col("doc_id"),
         coalesce(col("n_dup"), lit(0L)).as("n_dup"),
         coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
         (coalesce(col("n_dup"), lit(0L)) === 0).as("is_new"))
-      .orderBy("doc_id")
   }
 
   /** q242 — CROSS-SOURCE duplication matrix: WHICH sources duplicate
@@ -694,31 +673,12 @@ object Dedup extends QueryModule {
     * the index probe stays the same shuffle_hash equi-join per batch.
     */
   val streamDeltaDedup: Q = (s, d) => {
-    val (ixSigs, ixSets) = corpusIndex(s, d)
     val schema = Tables.documents(s, d).schema
     val delta = s.readStream.schema(schema).parquet(s"$d/documents.*")
       .filter(isDelta)
     graft.streaming.StreamingJobs.sinkBatches(
         graft.Scratch.dir("graft_stream_deltadedup"), delta) { batch =>
-      val t = batch.select(col("doc_id"),
-        array_distinct(split(col("text"), "\\s+")).as("tokset"))
-      val cand = bandSigs(s, t).alias("a")
-        .join(ixSigs.alias("b").hint("shuffle_hash"), bandMatch)
-        .select(col("a.doc_id").as("did"), col("b.doc_id").as("cid"))
-      val x = hashedSets(t).select(col("doc_id").as("did"), col("hs").as("hs1"))
-      val y = ixSets.select(col("doc_id").as("cid"), col("hs").as("hs2"))
-      val matches = cand
-        .join(x.hint("shuffle_hash"), "did")
-        .join(y.hint("shuffle_hash"), "cid")
-        .filter(jaccardDist <= maxDist)
-        .groupBy("did")
-        .agg(count(lit(1)).as("n_dup"), min("cid").as("dup_of"))
-      batch.select(col("doc_id"))
-        .join(matches, col("doc_id") === col("did"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_dup"), lit(0L)).as("n_dup"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
-          (coalesce(col("n_dup"), lit(0L)) === 0).as("is_new"))
+      deltaVerdicts(s, d, batch)
     }._1.orderBy("doc_id")
   }
 

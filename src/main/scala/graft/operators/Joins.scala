@@ -93,7 +93,7 @@ object Joins extends QueryModule {
       leftKey: String, rightKey: String, salts: Int): org.apache.spark.sql.DataFrame = {
     require(salts > 0, s"salts must be positive: $salts")
     val l = left.withColumn("__lsalt",
-      pmod(hash(left.columns.map(col): _*), lit(salts)))
+      pmod(hash(left.columns.toIndexedSeq.map(col): _*), lit(salts)))
     val r = right.withColumn("__rsalt",
       explode(array((0 until salts).map(lit): _*)))
     l.join(r, l(leftKey) === r(rightKey) && l("__lsalt") === r("__rsalt"))

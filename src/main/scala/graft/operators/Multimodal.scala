@@ -211,11 +211,10 @@ object Multimodal extends QueryModule {
     * in as one expression/mapPartitions producing the same BIGINT
     * column; every downstream plan node is unchanged.
     *
-    * Plan shape: hash + band table staged once (expression-only, whole-
-    * stage codegen — no UDFs), candidate generation is the (band, byte)
-    * equi-join with d1 < d2, each pair emitted only from its lowest
-    * colliding band ([[graft.functions.Hashing.firstCollision]] over the
-    * staged band array, so no dedup aggregate), verification is one codegen'd
+    * Plan shape: the hash staged once (expression-only, whole-stage
+    * codegen — no UDFs), candidates from the banded pair join
+    * ([[graft.functions.Hashing.bandJoin]]) on (band, byte) — byte i is
+    * read back off the staged hash — verification is one codegen'd
     * bit_count(xor) ≤ τ filter, verdicts aggregate per document (mate
     * count, least mate id — the q37 readout). Scale posture: byte bands
     * have 256 buckets/band — the declared fixed-block-space family
@@ -230,24 +229,15 @@ object Multimodal extends QueryModule {
       expr(s"cast(conv(substring(md5(substring(text, 1 + $i * l8, l8)), 1, 2), 16, 10) as bigint)")
         .as(s"b$i")
     }
-    val hashed = docs.select((col("doc_id") +: byteCols): _*)
-      .select(col("doc_id"),
-        (0 until phashSlices).map(i => col(s"b$i") * lit(1L << (8 * i)))
-          .reduce(_ + _).as("phash"),
-        array((0 until phashSlices).map(i =>
-          struct(lit(i).as("band"), col(s"b$i").as("byte_v"))): _*).as("bands"))
-    val h = graft.Scratch.stage("graft_phash", hashed)
-    val banded = h.select(col("doc_id"), col("phash"), col("bands"),
-      explode(col("bands")).as("bb"))
-      .select(col("doc_id"), col("phash"), col("bands"),
-        col("bb.band").as("band"), col("bb.byte_v").as("byte_v"))
-    val first = graft.functions.Hashing.firstCollision(
-      (0 until phashSlices).map(i => (col("l.bands")(i)("byte_v"),
-        col("r.bands")(i)("byte_v"))))
-    val cand = banded.alias("l").join(banded.alias("r"),
-        col("l.band") === col("r.band") &&
-          col("l.byte_v") === col("r.byte_v") &&
-          col("l.doc_id") < col("r.doc_id") && col("l.band") === first)
+    val h = graft.Scratch.stage("graft_phash",
+      docs.select((col("doc_id") +: byteCols): _*)
+        .select(col("doc_id"),
+          (0 until phashSlices).map(i => col(s"b$i") * lit(1L << (8 * i)))
+            .reduce(_ + _).as("phash")))
+    val banded = graft.functions.Hashing.bandRows(h,
+      (0 until phashSlices).map(i => shiftright(col("phash"), 8 * i).bitwiseAND(lit(255L))),
+      "doc_id", "phash")
+    val cand = graft.functions.Hashing.bandSelfJoin(banded, "doc_id")
       .select(col("l.doc_id").as("d1"), col("r.doc_id").as("d2"),
         col("l.phash").as("p1"), col("r.phash").as("p2"))
     val pairs = cand.filter(expr(s"bit_count(p1 ^ p2) <= $phashTau"))
@@ -255,8 +245,7 @@ object Multimodal extends QueryModule {
       .unionByName(pairs.select(col("d2").as("doc_id"), col("d1").as("mate")))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_mates"), min("mate").as("least_mate"))
-    h.select(col("doc_id"), col("phash"))
-      .join(mates, Seq("doc_id"), "left")
+    h.join(mates, Seq("doc_id"), "left")
       .select(col("doc_id"), col("phash"),
         coalesce(col("n_mates"), lit(0L)).as("n_mates"),
         coalesce(col("least_mate"), lit(-1L)).as("dup_of"),

@@ -42,7 +42,7 @@ object Relational extends QueryModule {
   /** q02 — per-column null tally in one pass (Dataset.py:79, §2.2 P6). */
   val nullCounts: Q = (s, d) => {
     val li = Tables.lineitem(s, d)
-    li.select(li.columns.map(c => sum(col(c).isNull.cast("long")).as(c)): _*)
+    li.select(li.columns.toIndexedSeq.map(c => sum(col(c).isNull.cast("long")).as(c)): _*)
   }
 
   /** q03 — cleaning pipeline: na.drop + dropDuplicates + count

@@ -90,12 +90,11 @@ object Similarity extends QueryModule {
   }
 
   /** q36 — embedding-cosine near-dup pairs (threshold 0.4), LSH-blocked:
-    * the scale path, not an all-pairs join. Each vector explodes into 8
-    * (band, bucket) keys — band b hashes dims 8b+1..8b+8 by sign, so every
-    * dimension contributes to exactly one band — candidates are a self
-    * EQUI-join on (band, bucket) (shuffle-partitioned by key, never n²),
-    * each pair kept only in its lowest colliding band, then verified
-    * against the exact cosine threshold.
+    * the scale path, not an all-pairs join. Each vector has 8 (band,
+    * bucket) keys — band b hashes dims 8b+1..8b+8 by sign, so every
+    * dimension contributes to exactly one band — candidates come from the
+    * banded pair join ([[graft.functions.Hashing.bandJoin]]), then are
+    * verified against the exact cosine threshold.
     *
     * Candidate volume is ~3% of all pairs (8 bands × 2⁻⁸ random collision
     * rate), linear in corpus size for a fixed density. Recall at a 0.40
@@ -113,30 +112,20 @@ object Similarity extends QueryModule {
         round(col("sim9"), 4).as("sim"))
       .orderBy("vec_id_1", "vec_id_2")
 
-  /** Each vector's 8 (band, bucket) sign-LSH keys: (vec_id, buckets,
-    * band, bucket), where `buckets` is the vector's whole bucket array
-    * (band i at index i). */
-  private def bandKeys(b: DataFrame): DataFrame =
-    b.select(col("vec_id"), array((0 until 8).map(bandBucket): _*).as("buckets"))
-      .select(col("vec_id"), col("buckets"),
-        posexplode(col("buckets")).as(Seq("band", "bucket")))
+  /** Each vector's 8 sign-LSH band rows ([[graft.functions.Hashing.bandRows]],
+    * key = [[bandBucket]]). */
+  private def bandRows(b: DataFrame): DataFrame =
+    graft.functions.Hashing.bandRows(b, (0 until 8).map(bandBucket), "vec_id")
 
   /** q36's blocked candidates, scored: every pair (v1 < v2) that shares a
-    * (band, bucket) key, once — the join keeps a pair only in its lowest
-    * colliding band ([[graft.functions.Hashing.firstCollision]]) — with
-    * its cosine rounded to 9 dp as `sim9` (q36 and the q189 kNN-graph
-    * build both rank on it). */
+    * (band, bucket) key, once ([[graft.functions.Hashing.bandJoin]]) —
+    * with its cosine rounded to 9 dp as `sim9` (q36 and the q189
+    * kNN-graph build both rank on it). */
   private def bandedScoredPairs(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
     val b = base(s, d)
-    val banded = bandKeys(b)
-    val first = graft.functions.Hashing.firstCollision((0 until 8).map(i =>
-      (col("cl.buckets")(i), col("cr.buckets")(i))))
-    val cand = banded.alias("cl").join(banded.alias("cr"),
-        col("cl.band") === col("cr.band") &&
-          col("cl.bucket") === col("cr.bucket") &&
-          col("cl.vec_id") < col("cr.vec_id") && col("cl.band") === first)
-      .select(col("cl.vec_id").as("v1"), col("cr.vec_id").as("v2"))
+    val cand = graft.functions.Hashing.bandSelfJoin(bandRows(b), "vec_id")
+      .select(col("l.vec_id").as("v1"), col("r.vec_id").as("v2"))
     val e1 = b.select(col("vec_id").as("v1"),
       col("embedding").as("emb1"), col("sq").as("sq1"))
     val e2 = b.select(col("vec_id").as("v2"),
@@ -572,12 +561,12 @@ object Similarity extends QueryModule {
       .join(broadcast(sample), "q_id")
       .select(col("q_id"), col("node"), round(qsim, 9).as("sim9"))
     val w = Window.partitionBy("q_id").orderBy(col("sim9").desc, col("node"))
-    val bandedC = bandKeys(corpus)
+    val bandedC = bandRows(corpus)
     val qb = bandedC.join(broadcast(sampleIds), col("vec_id") === col("q_id"))
-      .select(col("q_id"), col("band"), col("bucket"))
+      .select(col("q_id"), col("band"), col("key"))
     val routed = bandedC.alias("cb").join(broadcast(qb).alias("qq"),
         col("cb.band") === col("qq.band") &&
-          col("cb.bucket") === col("qq.bucket") &&
+          col("cb.key") === col("qq.key") &&
           col("cb.vec_id") =!= col("qq.q_id"))
       .select(col("qq.q_id").as("q_id"), col("cb.vec_id").as("node"))
     val floor = sampleIds.crossJoin(
@@ -1356,7 +1345,7 @@ object Similarity extends QueryModule {
       .sortBy { case (id, rel) => (-rel, id) }
     val sim = pairs.collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getLong(2)).toMap
-    val remaining = scala.collection.mutable.LinkedHashMap(rels: _*)
+    val remaining = scala.collection.mutable.LinkedHashMap(rels.toIndexedSeq: _*)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, Long, Long, Long, Long)]
     while (out.size < mmrK && remaining.nonEmpty) {

@@ -951,7 +951,6 @@ object Stats extends QueryModule {
     * supplier-count-sized driver state.
     */
   val ebShrinkage: Q = (s, d) => {
-    import s.implicits._
     val seg = Tables.lineitem(s, d)
       .groupBy(col("l_suppkey").as("suppkey"))
       .agg(count(lit(1)).as("n"),

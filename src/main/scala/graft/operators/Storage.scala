@@ -165,6 +165,25 @@ object Storage extends QueryModule {
       .orderBy("o_orderpriority")
   }
 
+  /** The `*.parquet` files directly under `dir`, sorted. Listed through
+    * the Hadoop FileSystem API, not java.io.File: a manifest writer must
+    * list whatever filesystem the table lives on (HDFS/S3/local alike),
+    * same as Memo's existence probe. */
+  private def dataFiles(s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath.toString).sorted
+  }
+
+  /** Manifest snapshot `v` of the table at `root`/data: its data file list,
+    * written as the one-column (path) table `root`/manifests/v`v`. */
+  private def snapshot(s: org.apache.spark.sql.SparkSession, root: String, v: Int): Unit = {
+    import s.implicits._
+    dataFiles(s, s"$root/data").toDF("path")
+      .write.mode("overwrite").parquet(s"$root/manifests/v$v")
+  }
+
   /** q124 — manifest-based INCREMENTAL read: the snapshot/changed-files
     * primitive of every table format (Iceberg incremental scan, Delta
     * change feed, Hive ACID originals) built explicitly on plain parquet.
@@ -180,31 +199,19 @@ object Storage extends QueryModule {
     * manifest math must equal the logical delta.
     */
   val incrementalRead: Q = (s, d) => {
-    import s.implicits._
     val root = graft.Scratch.dir("graft_manifest")
     val dataDir = s"$root/data"
     val o = Tables.orders(s, d)
-    def snapshot(v: Int): Unit = {
-      // Hadoop FileSystem API, not java.io.File — the manifest writer must
-      // list whatever filesystem the table lives on (HDFS/S3/local alike),
-      // same as Memo's existence probe.
-      val dataPath = new org.apache.hadoop.fs.Path(dataDir)
-      val fs = dataPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(dataPath)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      files.toDF("path").write.mode("overwrite").parquet(s"$root/manifests/v$v")
-    }
     o.filter(col("o_orderdate") < "1997-01-01")
       .write.mode("overwrite").parquet(dataDir)
-    snapshot(1)
+    snapshot(s, root, 1)
     o.filter(col("o_orderdate") >= "1997-01-01")
       .write.mode("append").parquet(dataDir)
-    snapshot(2)
+    snapshot(s, root, 2)
     val added = s.read.parquet(s"$root/manifests/v2")
       .except(s.read.parquet(s"$root/manifests/v1"))
       .collect().map(_.getString(0)).sorted
-    s.read.parquet(added: _*)
+    s.read.parquet(added.toIndexedSeq: _*)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
       .orderBy("o_orderpriority")
@@ -226,32 +233,23 @@ object Storage extends QueryModule {
     * assert the version isolation lives in the manifest, not the layout. */
   private[graft] def timeTravelRun(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame, String) = {
-    import s.implicits._
     val root = graft.Scratch.dir("graft_timetravel")
     val dataDir = s"$root/data"
     val o = Tables.orders(s, d)
-    val fs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def snapshot(v: Int): Unit = {
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      files.toDF("path").write.mode("overwrite").parquet(s"$root/manifests/v$v")
-    }
     o.filter(col("o_orderdate") < "1996-01-01")
       .write.mode("overwrite").parquet(dataDir)
-    snapshot(1)
+    snapshot(s, root, 1)
     o.filter(col("o_orderdate") >= "1996-01-01" && col("o_orderdate") < "1997-01-01")
       .write.mode("append").parquet(dataDir)
-    snapshot(2)
+    snapshot(s, root, 2)
     o.filter(col("o_orderdate") >= "1997-01-01")
       .write.mode("append").parquet(dataDir)
-    snapshot(3)
+    snapshot(s, root, 3)
     // AS OF v2: the live dir now holds all three batches; the version's
     // file list IS the isolation (metadata-bounded collect, as q124)
     val asOf = s.read.parquet(s"$root/manifests/v2")
       .collect().map(_.getString(0)).sorted
-    val out = s.read.parquet(asOf: _*)
+    val out = s.read.parquet(asOf.toIndexedSeq: _*)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
       .orderBy("o_orderpriority")
@@ -310,18 +308,9 @@ object Storage extends QueryModule {
     * read time (it does not merge; q108's rule).
     */
   val incrementalRefresh: Q = (s, d) => {
-    import s.implicits._
     val root = graft.Scratch.dir("graft_increfresh")
     val dataDir = s"$root/data"
     val o = Tables.orders(s, d)
-    val fs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def snapshot(v: Int): Unit = {
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq
-      files.toDF("path").write.mode("overwrite").parquet(s"$root/manifests/v$v")
-    }
     def partials(df: DataFrame) = df.groupBy("o_orderpriority").agg(
       count(lit(1)).as("n"),
       sum(dec2(col("o_totalprice"))).as("total"),
@@ -330,18 +319,18 @@ object Storage extends QueryModule {
     // base load + materialized base partials
     o.filter(col("o_orderdate") < "1997-01-01")
       .write.mode("overwrite").parquet(dataDir)
-    snapshot(1)
+    snapshot(s, root, 1)
     partials(s.read.parquet(dataDir))
       .write.mode("overwrite").parquet(s"$root/agg_v1")
     // a new batch lands
     o.filter(col("o_orderdate") >= "1997-01-01")
       .write.mode("append").parquet(dataDir)
-    snapshot(2)
+    snapshot(s, root, 2)
     // the refresh: added files only → delta partials → mergeable fold
     val added = s.read.parquet(s"$root/manifests/v2")
       .except(s.read.parquet(s"$root/manifests/v1"))
       .collect().map(_.getString(0)).sorted
-    val delta = partials(s.read.parquet(added: _*))
+    val delta = partials(s.read.parquet(added.toIndexedSeq: _*))
     s.read.parquet(s"$root/agg_v1").unionByName(delta)
       .groupBy("o_orderpriority").agg(
         sum("n").as("n"),
@@ -378,27 +367,21 @@ object Storage extends QueryModule {
     val root = graft.Scratch.dir("graft_gc")
     val dataDir = s"$root/data"
     val o = Tables.orders(s, d)
-    val fs = new org.apache.hadoop.fs.Path(dataDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def list(): Seq[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString).toSeq.sorted
     // repartition, not coalesce: the single-row-group fixture scan yields
     // ONE split, and coalesce can only shrink — the pinned 2-file batches
     // need a real exchange
     o.filter(col("o_orderdate") < "1997-01-01").repartition(2)
       .write.mode("overwrite").parquet(dataDir)
-    val batch1 = list() // 2 files
+    val batch1 = dataFiles(s, dataDir) // 2 files
     o.filter(col("o_orderdate") >= "1997-01-01").repartition(2)
       .write.mode("append").parquet(dataDir)
-    val batch2 = list().diff(batch1) // 2 files
+    val batch2 = dataFiles(s, dataDir).diff(batch1) // 2 files
     // compaction commit: rewrite batch1's two small files as ONE file in
     // the same dir; the new live manifest = compacted + batch2 (the
     // rewrite's inputs drop out — they are now garbage on disk)
     s.read.parquet(batch1: _*).repartition(1)
       .write.mode("append").parquet(dataDir)
-    val all = list()
+    val all = dataFiles(s, dataDir)
     val compacted = all.diff(batch1 ++ batch2) // 1 file
     (compacted ++ batch2).toDF("path")
       .write.mode("overwrite").parquet(s"$root/manifests/live")
@@ -408,9 +391,9 @@ object Storage extends QueryModule {
     val disk = all.toDF("path")
     val live = s.read.parquet(s"$root/manifests/live")
     val orphans = disk.except(live).collect().map(_.getString(0)).sorted
-    val nLive = s.read.parquet(live.collect().map(_.getString(0)).sorted: _*)
+    val nLive = s.read.parquet(live.collect().map(_.getString(0)).sorted.toIndexedSeq: _*)
       .agg(count(lit(1))).head().getLong(0)
-    val nOrph = s.read.parquet(orphans: _*)
+    val nOrph = s.read.parquet(orphans.toIndexedSeq: _*)
       .agg(count(lit(1))).head().getLong(0)
     s.range(1).select(
       lit(all.size.toLong).as("n_files_disk"),
@@ -453,7 +436,7 @@ object Storage extends QueryModule {
     val files = stats
       .filter(col("hi") >= qlo && col("lo") <= qhi)
       .collect().map(_.getString(0)).sorted
-    val out = s.read.parquet(files: _*)
+    val out = s.read.parquet(files.toIndexedSeq: _*)
       .filter(col("o_orderdate") >= qlo && col("o_orderdate") <= qhi)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -831,7 +814,7 @@ object Storage extends QueryModule {
     withZ
       .repartitionByRange(16, col("z"))
       .sortWithinPartitions("z")
-      .select(li.columns.map(col): _*)
+      .select(li.columns.toIndexedSeq.map(col): _*)
       .write.mode("overwrite").parquet(dir)
     dir
   }

@@ -389,36 +389,23 @@ object Text extends QueryModule {
   val simhash16: Q = (s, d) => simhashes(s, d).orderBy("doc_id")
 
   /** q65 — SimHash near-dup pairs at Hamming distance ≤ 2, banded: the
-    * 16-bit signature splits into 4 nibble bands; candidates are a self
-    * EQUI-join on (band, nibble) — by pigeonhole, two signatures within
-    * Hamming 2 differ in at most 2 bands, so at least 2 bands still match
-    * and recall at the threshold is EXACT (unlike minhash banding's
-    * probabilistic recall). A pair is emitted only from its lowest
-    * colliding band ([[graft.functions.Hashing.firstCollision]]), so each
-    * candidate comes out once and no dedup aggregate runs. Verification
-    * is one codegen'd `bit_count(s1 XOR s2)` per candidate. The band rows
-    * are repartitioned on (band, nibble) at the default parallelism and
-    * one side is hash-built, so both sides read one exchange and the
-    * corpus is hashed once. Per (band, nibble) bucket the join is local —
-    * never n². The nibble width is the skew knob: wider bands → fewer,
-    * cheaper collisions but a lower guaranteed-recall threshold.
+    * 16-bit signature splits into 4 nibble bands, and candidates come from
+    * the banded pair join ([[graft.functions.Hashing.bandJoin]]) on
+    * (band, nibble) — by pigeonhole, two signatures within Hamming 2
+    * differ in at most 2 bands, so at least 2 bands still match and
+    * recall at the threshold is EXACT (unlike minhash banding's
+    * probabilistic recall). Verification is one codegen'd
+    * `bit_count(s1 XOR s2)` per candidate. The nibble width is the skew
+    * knob: wider bands → fewer, cheaper collisions but a lower
+    * guaranteed-recall threshold.
     */
   val simhashNearDup: Q = (s, d) => {
-    def nib(sh: org.apache.spark.sql.Column, b: Int) = shiftright(sh, b * 4).bitwiseAND(lit(15))
-    val bands = simhashes(s, d).select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map { b =>
-        struct(lit(b).as("band"), nib(col("simhash"), b).as("nib"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.band").as("band"), col("bb.nib").as("nib"))
-      .repartition(s.sparkContext.defaultParallelism, col("band"), col("nib"))
-    val first = graft.functions.Hashing.firstCollision((0 until 4).map(b =>
-      (nib(col("a.simhash"), b), nib(col("b.simhash"), b))))
-    bands.alias("a").join(bands.alias("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.nib") === col("b.nib") &&
-          col("a.doc_id") < col("b.doc_id") && col("a.band") === first)
-      .select(col("a.doc_id").as("doc_id_1"), col("b.doc_id").as("doc_id_2"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("int")
+    val bands = graft.functions.Hashing.bandRows(simhashes(s, d),
+      (0 until 4).map(b => shiftright(col("simhash"), b * 4).bitwiseAND(lit(15))),
+      "doc_id", "simhash")
+    graft.functions.Hashing.bandSelfJoin(bands, "doc_id")
+      .select(col("l.doc_id").as("doc_id_1"), col("r.doc_id").as("doc_id_2"),
+        bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).cast("int")
           .as("hamming"))
       .filter(col("hamming") <= 2)
       .orderBy("doc_id_1", "doc_id_2")
@@ -531,9 +518,6 @@ object Text extends QueryModule {
       .orderBy("doc_id")
   }
 
-  /** q358 conformal miscoverage α in percent (coverage target 90%). */
-  private[graft] val nbConfAlphaPct = 10
-
   /** q358 — SPLIT-CONFORMAL PREDICTION SETS for the NB classifier
     * (Vovk, Gammerman & Shafer 2005; Angelopoulos & Bates 2023 for the
     * modern recipe): the distribution-free guarantee above q356's
@@ -565,7 +549,6 @@ object Text extends QueryModule {
     * histogram is taxonomy-bounded.
     */
   val nbConformal: Q = (s, d) => {
-    import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val scored = nbScored(s, d, foldLo = 80)
     val perDoc = scored.groupBy("doc_id", "true_lang", "bk")
@@ -645,7 +628,6 @@ object Text extends QueryModule {
     * table is taxonomy-bounded and broadcast.
     */
   val nbMondrian: Q = (s, d) => {
-    import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val scored = nbScored(s, d, foldLo = 80)
     val perDoc = scored.groupBy("doc_id", "true_lang", "bk")
@@ -919,13 +901,12 @@ object Text extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private val bloomBits = 65536
   private val bloomK = 4
 
   /** q99 — Bloom-filter contamination pre-filter: the sketch-sized stand-in
     * for q74's exact shingle join when the benchmark set is too large to
     * broadcast as raw hashes. The benchmark's 8-token shingles are folded
-    * into a [[bloomBits]]-bit / [[bloomK]]-hash Bloom filter (here the
+    * into a 65,536-bit / [[bloomK]]-hash Bloom filter (here the
     * distinct-set-bit table, ≤ 16384 rows no matter how many shingles feed
     * it — the whole point of the sketch); corpus shingles probe it
     * map-side against the broadcast bit set, flagged only when all

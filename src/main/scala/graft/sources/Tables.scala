@@ -50,9 +50,14 @@ object Tables {
     *     the one type (window ranges, watermarks) they were built against.
     *   - TIMESTAMP → pass through.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsTs(s, table(s, d, "events"))
+
+  /** [[events]]' adaptation of `ts`, for any frame over the events file —
+    * the batch table above, and the streaming read of q39 and its family,
+    * whose schema is the batch read's. */
+  def eventsTs(s: SparkSession, raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType =>
         require(

@@ -227,28 +227,18 @@ object StreamingJobs extends QueryModule {
     Staged(src, slices.head.schema.toNullable)
   }
 
-  /** Streaming read of the events table, schema-adaptive on `ts` exactly
-    * like the batch [[graft.sources.Tables.events]] (long nanos →
-    * `timestamp_micros`, TIMESTAMP_NTZ → cast, TIMESTAMP → pass-through) —
-    * the stored schema is probed once at plan time via a batch read, never
+  /** Streaming read of the events table, its `ts` adapted by
+    * [[graft.sources.Tables.eventsTs]] exactly like the batch table — the
+    * stored schema is probed once at plan time via a batch read, never
     * per micro-batch. The file is streamed directly via a glob pattern — a
     * `pathGlobFilter` over the whole sf dir would re-list every sibling
     * table on each micro-batch. The pattern must be a real glob:
     * FileStreamSource passes a non-glob path through as `basePath`, which
     * must be a directory (a bare file path throws in getBatch).
     */
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val schema = Tables.table(s, d, "events").schema
-    val raw = s.readStream.schema(schema).parquet(s"$d/events.*")
-    schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      case other => throw new IllegalArgumentException(
-        s"events.ts: unsupported physical type $other")
-    }
-  }
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
+    Tables.eventsTs(s, s.readStream.schema(Tables.table(s, d, "events").schema)
+      .parquet(s"$d/events.*"))
 
   /** q39 — tumbling 1-hour event-time window over a streaming read of the
     * events table; result identical to the batch q22.

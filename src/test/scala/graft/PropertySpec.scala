@@ -719,29 +719,24 @@ class PropertySpec extends SparkSpec {
   }
 
   test("first-collision law: a banded join kept at its lowest colliding band equals the banded join plus distinct, on ANY keys") {
-    // the rule behind q65 (nibbles), q256 (bytes), q36/q189 (int buckets)
-    // and the minhash band joins (strings): per shape, random keys with
-    // nulls (a null never collides), then the all-collide and no-collide
-    // extremes; both a self-join (id < id) and a two-table probe (q114's
-    // delta-vs-index shape)
+    // Hashing.bandJoin, the join behind q65 (nibbles), q256 (bytes),
+    // q36/q189 (int buckets) and the minhash band joins (strings): per
+    // shape, random keys with nulls (a null never collides), then the
+    // all-collide and no-collide extremes; both a self-join (id < id) and
+    // a two-table probe (q114's delta-vs-index shape)
     import org.apache.spark.sql.{Column, DataFrame}
+    import graft.functions.Hashing.{bandJoin, bandRows, bandSelfJoin}
     def law(df: DataFrame, n: Int): Boolean = {
-      val banded = df.select(col("id"), col("ks"),
-        posexplode(col("ks")).as(Seq("band", "k")))
-      val first = graft.functions.Hashing.firstCollision(
-        (0 until n).map(i => (col("a.ks")(i), col("b.ks")(i))))
-      def pairs(l: DataFrame, r: DataFrame, on: Column, once: Boolean) = {
-        val cond = col("a.band") === col("b.band") && col("a.k") === col("b.k") && on
-        val j = l.alias("a").join(r.alias("b"),
-            if (once) cond && col("a.band") === first else cond)
-          .select(col("a.id"), col("b.id"))
-        (if (once) j else j.distinct()).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      }
-      def same(l: DataFrame, r: DataFrame, on: Column) =
-        pairs(l, r, on, once = true) == pairs(l, r, on, once = false)
-      same(banded, banded, col("a.id") < col("b.id")) &&
-        same(banded.filter(col("id") % 3 === 0), banded.filter(col("id") % 3 =!= 0), lit(true))
+      val rows = bandRows(df, (0 until n).map(i => col("ks")(i)), "id")
+      def ids(j: DataFrame) = j.select(col("l.id"), col("r.id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      // the reference: every (band, key) match, deduplicated
+      def reference(l: DataFrame, r: DataFrame, on: Column) =
+        ids(l.alias("l").join(r.alias("r"), col("l.band") === col("r.band") &&
+          col("l.key") === col("r.key") && on).select(col("l.id"), col("r.id")).distinct())
+      val (a, b) = (rows.filter(col("id") % 3 === 0), rows.filter(col("id") % 3 =!= 0))
+      ids(bandSelfJoin(rows, "id")) == reference(rows, rows, col("l.id") < col("r.id")) &&
+        ids(bandJoin(a, b)) == reference(a, b, lit(true))
     }
     def shape[A](tag: String, n: Int, key: Gen[A], unique: Int => A,
         toDf: List[(Long, List[Option[A]])] => DataFrame): Unit = {

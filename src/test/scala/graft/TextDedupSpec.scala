@@ -501,6 +501,16 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
+  test("q244 streamed verdicts equal q114 batch verdicts, row for row") {
+    // one verdict body probes the staged corpus index; a verdict depends
+    // only on (document, index), so the micro-batch cut cannot move it
+    val batch = q("q114_delta_neardup").collect().toSeq
+    val stream = q("q244_stream_delta_dedup").collect().toSeq
+    assert(batch.nonEmpty)
+    assert(batch.exists(_.getLong(1) > 0), "the fixture must hold a delta near-dup")
+    assert(stream === batch)
+  }
+
   test("q120 prefix-filter join is LOSSLESS: degrees equal the brute-force all-pairs verify") {
     // brute force the exact Jaccard >= 0.5 pair set over the full fixture
     // corpus driver-side (500 docs) and compare per-doc degrees — the
